@@ -33,8 +33,6 @@ object SparkEntry {
   // one shared BFS run per JVM: docs/visits/entry queries read the same
   // committed snapshots instead of re-crawling
   @volatile private var sharedRun: String = null
-  /** Diagnostic accessor for the shared crawl's run dir (probe mains). */
-  private[graft] def debugRunDir: String = sharedRun
 
   private def runCrawl(spark: SparkSession, tag: String,
                        cfg: CrawlConfig = crawlCfg): String =

@@ -4,7 +4,7 @@ import graft.core._
 import graft.functions.Scorers
 import graft.politeness.Robots
 import graft.scrape.Scrape
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -28,9 +28,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * Snapshot protocol (Iceberg-style semantics on plain parquet — SURVEY.md
   * §7.3): every epoch writes frontier/seen/docs/visits/metrics dirs, then an
   * atomically-renamed `manifest_<epoch>.json` carrying per-partition lineage
-  * (row counts per written file) + fetch metrics. A killed job resumes from
-  * `max(committed epoch)` with an identical URL-seen set: nothing below a
-  * manifest is ever visible to a reader (commit-then-advance, §7.4.6).
+  * (rows and words per scraped partition) + fetch metrics. A killed job
+  * resumes from `max(committed epoch)` with an identical URL-seen set:
+  * nothing below a manifest is ever visible to a reader (commit-then-advance,
+  * §7.4.6).
   *
   * Ordering spec (deterministic; reference stream-mode completion order is
   * nondeterministic so equality is defined on batch semantics, SURVEY.md
@@ -199,22 +200,25 @@ object Crawl {
 
     val start = lastCommittedEpoch(runDir)
     if (start < 0) {
-      val f0 = seedFrontier(spark, seeds)
-      f0.write.mode(SaveMode.Overwrite).parquet(dir(runDir, 0, "frontier"))
+      // one seedFrontier pass, cached: the frontier write observes the seed
+      // count, and seen/epoch=0 and its filter read the same cache
+      val f0 = seedFrontier(spark, seeds).cache()
+      val seedObs = Observation()
+      f0.observe(seedObs, count(lit(1)).as("n"))
+        .write.mode(SaveMode.Overwrite).parquet(dir(runDir, 0, "frontier"))
+      val seedCount = seedObs.get("n").asInstanceOf[Long]
       // seen is a DELTA log: seen/epoch=k holds only the hashes first seen at
       // epoch k (epoch 0 = the seeds — delta AND full set at once). Readers
       // union deltas from the last compaction point; nothing ever rewrites
-      // history (O(delta) commit I/O per epoch, not O(seen)).
-      val s0 = f0.select("url_hash").distinct()
+      // history (O(delta) commit I/O per epoch, not O(seen)). No distinct:
+      // url_hash is unique after seedFrontier's first-wins dedup.
+      val s0 = f0.select("url_hash")
       s0.write.mode(SaveMode.Overwrite).parquet(dir(runDir, 0, "seen"))
-      val seedCount = spark.read.parquet(dir(runDir, 0, "seen")).count()
-      store.save(
-        store.build(spark, spark.read.parquet(dir(runDir, 0, "seen")),
-          "url_hash", seedCount),
-        store.path(runDir, 0))
+      store.save(store.build(spark, s0, "url_hash", seedCount), store.path(runDir, 0))
+      f0.unpersist()
       commitManifest(runDir, 0,
         s"""{"epoch":0,"kind":"bootstrap","strategy":"${jsonEsc(cfg.strategy)}",""" +
-        s""""seen_base":0,"seen_total":$seedCount,""" +
+        s""""seen_base":0,"seen_total":$seedCount,"frontier_queued":$seedCount,""" +
         s""""frontier":"${jsonEsc(dir(runDir, 0, "frontier"))}"}""")
     }
 
@@ -222,8 +226,8 @@ object Crawl {
     var totalFetched = sumManifests(runDir, "fetched")
     var totals = (0L, 0L, 0L) // failed, skippedRobots, placeholder
     var done = false
-    // incremental counters (avoid a count job per epoch; re-derived from the
-    // last manifest on resume, bootstrap-counted on a fresh run)
+    // incremental counters (avoid a count job per epoch; read from the last
+    // manifest, counted only for a bootstrap manifest without frontier_queued)
     var queuedCount = manifestField(runDir, epoch, "frontier_queued").getOrElse(-1L)
     var seenCount = manifestField(runDir, epoch, "seen_total").getOrElse(-1L)
     // compaction base: first epoch of the current delta run (deltas base..k
@@ -263,7 +267,7 @@ object Crawl {
       if (Files.isDirectory(Paths.get(headDir))) {
         val queued0 = spark.read.schema(frontierSchema).parquet(headDir)
           .where(col("status") === CrawlStatus.Queued).select("url_hash")
-        val nQueued = queued0.count()
+        val nQueued = if (queuedCount >= 0) queuedCount else queued0.count()
         if (nQueued > 0)
           filters = filters :+ store.build(spark, queued0, "url_hash", nQueued)
       }
@@ -293,7 +297,9 @@ object Crawl {
           row_number().over(Window.partitionBy("host").orderBy(ord: _*)))
         // effective budget: static cap, tightened per host by evolved
         // politeness state (throttled hosts shrink, aborted hosts go to 0)
-        val budgeted = domainState match {
+        // cached: the window runs once, and both the admitted and the
+        // deferred rows are filters over it
+        val budgeted = (domainState match {
           case Some(st) =>
             val perHost = graft.politeness.DomainState
               .hostBudget(st, cfg.epochSeconds)
@@ -303,9 +309,9 @@ object Crawl {
                 least(lit(cfg.hostBudget), coalesce(col("state_budget"), lit(cfg.hostBudget))))
               .drop("state_budget")
           case None => ranked.withColumn("eff_budget", lit(cfg.hostBudget))
-        }
-        var admitted = budgeted.where(col("host_rank") <= col("eff_budget"))
-          .drop("host_rank", "wait", "eff_budget")
+        }).cache()
+        val rankCols = Seq("host_rank", "wait", "eff_budget")
+        val inBudget = budgeted.where(col("host_rank") <= col("eff_budget")).drop(rankCols: _*)
         // global capacity cut ONLY when a cap is configured AND binding this
         // epoch: with the default (uncapped) config every epoch must stay a
         // partitioned plan — no global TakeOrdered over the admitted set. A
@@ -314,14 +320,18 @@ object Crawl {
         // silently clamped.
         val capConfigured = cfg.maxPages != Long.MaxValue || cfg.globalBatch != Long.MaxValue
         val capacity = math.min(cfg.globalBatch, cfg.maxPages - totalFetched)
-        if (capConfigured && capacity < Int.MaxValue)
-          admitted = admitted.orderBy(ord: _*).limit(capacity.toInt)
-        admitted = admitted.cache()
+        val capped = capConfigured && capacity < Int.MaxValue
+        val admitted =
+          if (capped) inBudget.orderBy(ord: _*).limit(capacity.toInt).cache() else inBudget
 
-        // deferred = everything queued but not admitted (over-budget rows AND
-        // rows cut by the global capacity limit — neither may be lost)
-        val deferred = aged.drop("wait")
-          .join(admitted.select("url_hash"), Seq("url_hash"), "left_anti")
+        // deferred = everything queued but not admitted. Uncapped, that is the
+        // over-budget side of the window; a binding cap also cuts in-budget
+        // rows, which only the anti-join against the admitted set recovers
+        // (neither kind may be lost)
+        val deferred =
+          if (capped) budgeted.drop(rankCols: _*)
+            .join(admitted.select("url_hash"), Seq("url_hash"), "left_anti")
+          else budgeted.where(col("host_rank") > col("eff_budget")).drop(rankCols: _*)
 
         // ---- robots gate: tiny dimension → broadcast join, fail-open
         val canFetchU = udf((rules: String, u: String) =>
@@ -330,7 +340,6 @@ object Crawl {
             broadcast(robots.select(col("host"), col("rules"))), Seq("host"), "left")
           .withColumn("robots_ok", coalesce(canFetchU(col("rules"), col("url")), lit(true)))
         val allowed = gated.where(col("robots_ok")).drop("rules", "robots_ok")
-        val robotsBlocked = gated.where(!col("robots_ok")).drop("rules", "robots_ok")
 
         // ---- fetch: salted repartition defuses hot-host skew BEFORE the
         // (CPU-heavy) scrape map; the join key stays url_hash so the page
@@ -358,24 +367,28 @@ object Crawl {
           .cache()
 
         // ---- phase A: ALL consumers of the scraped cache — the lineage
-        // aggregation, docs write, visits write, robots-blocked count,
-        // politeness evolution — launch as CONCURRENT Spark jobs. The
-        // BlockManager's per-partition cache locks make the concurrent jobs
-        // co-materialize the cache (different partitions in parallel, each
-        // computed exactly once); they write disjoint outputs, so overlapping
-        // hides the fixed per-job latency that dominates small epochs and
-        // costs nothing on a real cluster (concurrent jobs share the
-        // scheduler).
+        // pass, docs write, visits write, politeness evolution — launch as
+        // CONCURRENT Spark jobs. The BlockManager's per-partition cache locks
+        // make the concurrent jobs co-materialize the cache (different
+        // partitions in parallel, each computed exactly once); they write
+        // disjoint outputs, so overlapping hides the fixed per-job latency
+        // that dominates small epochs and costs nothing on a real cluster
+        // (concurrent jobs share the scheduler). No count job runs: the
+        // fetched/failed counts are the lineage rows summed, and the
+        // robots-blocked count is observed on the visits write.
         import scala.concurrent.{Await, Future}
         import scala.concurrent.duration.Duration
         implicit val ec: scala.concurrent.ExecutionContext = Crawl.epochEc
-        val tPlan = System.currentTimeMillis()
+        // lineage: (pid, fetch_ok, rows, words) per scraped-cache partition,
+        // one partition-local pass (no shuffle)
         val fLineage = Future {
-          scraped.groupBy(spark_partition_id().as("pid"), col("fetch_ok"))
-            .agg(count(lit(1)).as("rows"), sum(col("n_words")).as("words"))
-            .collect()
+          scraped.select("fetch_ok", "n_words").as[(Boolean, Int)].mapPartitions { it =>
+            val rows, words = new Array[Long](2) // index 1 = fetch_ok
+            it.foreach { case (ok, w) => val i = if (ok) 1 else 0; rows(i) += 1; words(i) += w }
+            val pid = org.apache.spark.TaskContext.getPartitionId()
+            Iterator(1, 0).filter(rows(_) > 0).map(i => (pid, i == 1, rows(i), words(i)))
+          }.collect()
         }
-        val tLineage = System.currentTimeMillis()
 
         val fDocs = Future {
           scraped.where(col("fetch_ok"))
@@ -387,13 +400,15 @@ object Crawl {
         // NO materialized rank: visit order is fully determined by the key,
         // so `Crawl.visits` derives ranks at read time — the epoch loop never
         // runs a partitionless global-order window.
+        val blockedObs = Observation()
         val fVisits = Future {
-          allowed
+          gated.observe(blockedObs, count(when(!col("robots_ok"), true)).as("n"))
+            .where(col("robots_ok"))
             .select(col("url"), col("depth"), col("score"), col("priority"),
               col("path"), lit(epoch).as("epoch"))
             .write.mode(SaveMode.Overwrite).parquet(dir(runDir, epoch, "visits"))
+          blockedObs.get("n").asInstanceOf[Long]
         }
-        val fBlocked = Future { robotsBlocked.count() }
         // politeness state evolution (deterministic backoff per epoch)
         val fState = if (!cfg.dynamicPoliteness) Future.successful(()) else Future {
           val st0 = domainState.getOrElse(
@@ -514,18 +529,16 @@ object Crawl {
             concat(col("parent_path"), format_string("%04x", col("link_index"))).as("path"),
             lit(epoch + 1).as("enqueue_epoch"), lit(0).as("retry_count"),
             lit(epoch + 1).as("epoch"), lit(CrawlStatus.Queued).as("status"))
-          .cache() // reused by frontier write, count, seen delta, delta bloom
+          .cache() // reused by frontier write, seen delta, delta filter
 
-        // ---- phase B: the newEntries count, the frontier(t+1) write, and the
-        // seen commit all launch CONCURRENTLY (with phase A still in flight).
-        // All three consume the same cached newEntries plan; the BlockManager's
-        // per-partition cache locks serialize materialization, so the plan is
-        // computed once no matter which job wins — no duplicated expansion
-        // work at any scale. Reference adds to seen on DISCOVERY,
-        // bfs_strategy.py:153.
-        val tA = System.currentTimeMillis()
+        // ---- phase B: the frontier(t+1) write and the seen commit launch
+        // CONCURRENTLY (with phase A still in flight). Both consume the same
+        // cached newEntries plan; the BlockManager's per-partition cache locks
+        // serialize materialization, so the plan is computed once no matter
+        // which job wins — no duplicated expansion work at any scale. The
+        // new-entry count is observed on the seen write. Reference adds to
+        // seen on DISCOVERY, bfs_strategy.py:153.
         val nextEpoch = epoch + 1
-        val fNew = Future { newEntries.count() }
         val fFrontier = Future {
           deferred
             .select(newEntries.columns.map(col): _*)
@@ -540,16 +553,17 @@ object Crawl {
         // full set + one right-sized bloom, bounding reader fan-in and the
         // bloom vector (the ONLY full-set pass, amortized 1/K per epoch).
         val compacting = nextEpoch - seenBase >= cfg.seenCompactEvery
-        val fSeenWrite = Future {
-          val out =
-            if (compacting) seen.unionByName(newEntries.select("url_hash"))
-            else newEntries.select("url_hash")
+        val newObs = Observation()
+        val fNew = Future {
+          val delta = newEntries.select("url_hash").observe(newObs, count(lit(1)).as("n"))
+          val out = if (compacting) seen.unionByName(delta) else delta
           out.write.mode(SaveMode.Overwrite).parquet(dir(runDir, nextEpoch, "seen"))
+          newObs.get("n").asInstanceOf[Long]
         }
-        // the filter needs the exact delta count for sizing → chains on fNew
-        // (and, when compacting, on the full-set write it re-reads)
+        // the filter needs the exact delta count for sizing → chains on the
+        // seen write that observes it (and, when compacting, re-reads it)
         val fSeen: Future[(Int, Vector[SeenDelta])] =
-          fNew.zip(fSeenWrite).map { case (nNew, _) =>
+          fNew.map { nNew =>
             if (compacting) {
               val full = spark.read.schema(seenSchema).parquet(dir(runDir, nextEpoch, "seen"))
               val compactFilter = store.build(spark, full, "url_hash", seenCount + nNew)
@@ -579,29 +593,25 @@ object Crawl {
         // ---- join all concurrent jobs, then the atomic commit
         val lineageRows = Await.result(fLineage, Duration.Inf)
         val nNew = Await.result(fNew, Duration.Inf)
-        val tB = System.currentTimeMillis()
-        val nBlocked = Await.result(fBlocked, Duration.Inf)
+        val nBlocked = Await.result(fVisits, Duration.Inf)
         val (newSeenBase, newFilters) = Await.result(fSeen, Duration.Inf)
         Await.result(fDocs, Duration.Inf)
-        Await.result(fVisits, Duration.Inf)
         Await.result(fState, Duration.Inf)
         Await.result(fPreview, Duration.Inf)
         Await.result(fFrontier, Duration.Inf)
-        if (sys.env.contains("GRAFT_EPOCH_TIMING"))
-          System.err.println(s"[epoch $epoch] plan=${tPlan - t0}ms lineage=${tLineage - tPlan}ms " +
-            s"phaseA+expand=${tA - tLineage}ms nNew=${tB - tA}ms joinAll=${System.currentTimeMillis() - tB}ms")
         seenBase = newSeenBase
         filters = newFilters
-        val nFetched = lineageRows.filter(_.getBoolean(1)).map(_.getLong(2)).sum
-        val nFailed = lineageRows.filterNot(_.getBoolean(1)).map(_.getLong(2)).sum
+        val nFetched = lineageRows.filter(_._2).map(_._3).sum
+        val nFailed = lineageRows.filterNot(_._2).map(_._3).sum
         // derived, no extra jobs: admitted = allowed + blocked; deferred =
         // queued − admitted; seen grows only by the (disjoint) new entries
         val admittedCount = nFetched + nFailed + nBlocked
         val deferredCount = queuedCount - admittedCount
         seenCount += nNew
         queuedCount = deferredCount + nNew
-        val partLineage = lineageRows.sortBy(_.getInt(0))
-          .map(r => s"""{"pid":${r.getInt(0)},"fetch_ok":${r.getBoolean(1)},"rows":${r.getLong(2)},"words":${Option(r.get(3)).getOrElse(0)}}""")
+        val partLineage = lineageRows.sortBy(_._1)
+          .map { case (pid, ok, rows, words) =>
+            s"""{"pid":$pid,"fetch_ok":$ok,"rows":$rows,"words":$words}""" }
           .mkString("[", ",", "]")
         totalFetched += nFetched
         totals = (totals._1 + nFailed, totals._2 + nBlocked, 0L)
@@ -612,7 +622,7 @@ object Crawl {
           s""""frontier_queued":$queuedCount,"seen_base":$seenBase,""" +
           s""""strategy":"${jsonEsc(cfg.strategy)}","wall_ms":$wall,"partitions":$partLineage}""")
 
-        scraped.unpersist(); admitted.unpersist(); newEntries.unpersist()
+        scraped.unpersist(); budgeted.unpersist(); admitted.unpersist(); newEntries.unpersist()
         // all consumers of this epoch's filter broadcast have completed and
         // their outputs are on disk — free it (one vector per epoch would
         // otherwise accumulate for the crawl's lifetime)
@@ -621,7 +631,8 @@ object Crawl {
         epoch += 1
       }
     }
-    val seenFinal = seenSet(spark, runDir).count()
+    // seenCount is the exact seen_total of the head manifest
+    val seenFinal = if (seenCount >= 0) seenCount else seenSet(spark, runDir).count()
     CrawlSummary(epoch, totalFetched, totals._1, totals._2, seenFinal)
   }
 
@@ -750,17 +761,8 @@ object Crawl {
       .map(_.group(1))
   }
 
-  private def sumManifests(runDir: String, field: String): Long = {
-    val last = lastCommittedEpoch(runDir)
-    (1 to last).map { e =>
-      val p = manifestPath(runDir, e)
-      if (Files.exists(p)) {
-        val s = Files.readString(p)
-        val m = ("\"" + field + "\":(\\d+)").r.findFirstMatchIn(s)
-        m.map(_.group(1).toLong).getOrElse(0L)
-      } else 0L
-    }.sum
-  }
+  private def sumManifests(runDir: String, field: String): Long =
+    (1 to lastCommittedEpoch(runDir)).flatMap(manifestField(runDir, _, field)).sum
 
   /** All docs produced by a run (doc_id, spans, links, title, n_words, epoch).
     * `asOf` (an epoch with a committed manifest) time-travels the read to
@@ -846,17 +848,10 @@ object Crawl {
     */
   def metrics(spark: SparkSession, runDir: String): DataFrame = {
     import spark.implicits._
-    val last = lastCommittedEpoch(runDir)
-    (1 to last).flatMap { e =>
-      val p = manifestPath(runDir, e)
-      if (!Files.exists(p)) None
-      else {
-        val s = Files.readString(p)
-        def f(k: String): Long = ("\"" + k + "\":(-?\\d+)").r
-          .findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(-1L)
-        Some((e, f("fetched"), f("failed"), f("skipped_robots"),
-          f("new_frontier"), f("seen_total"), f("wall_ms")))
-      }
+    (1 to lastCommittedEpoch(runDir)).filter(e => Files.exists(manifestPath(runDir, e))).map { e =>
+      def f(k: String): Long = manifestField(runDir, e, k).getOrElse(-1L)
+      (e, f("fetched"), f("failed"), f("skipped_robots"), f("new_frontier"), f("seen_total"),
+        f("wall_ms"))
     }.toDF("epoch", "fetched", "failed", "skipped_robots",
       "new_frontier", "seen_total", "wall_ms")
   }

@@ -71,7 +71,8 @@ object Warc {
     * one segment file per partition, written straight through the Hadoop
     * filesystem on the executor — a range reader can split the archive at
     * member boundaries without decompressing the whole segment, which is
-    * the property that makes the format work at 100 TB.
+    * the property that makes the format work at 100 TB. Executors resolve
+    * the filesystem from the session's Hadoop configuration.
     */
   def writeWarcGz(df: DataFrame, uriCol: String, payloadCol: String,
                   path: String, date: String = "2026-01-01T00:00:00Z"): Unit = {
@@ -81,6 +82,7 @@ object Warc {
       .getFileSystem(hconf)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
     fs.mkdirs(new org.apache.hadoop.fs.Path(path))
+    val conf = new org.apache.spark.util.SerializableConfiguration(hconf)
     import spark.implicits._
     df.select(recordCol(col(uriCol), col(payloadCol), date).as("value"))
       .as[String]
@@ -88,12 +90,16 @@ object Warc {
         if (it.hasNext) {
           val pid = org.apache.spark.TaskContext.getPartitionId()
           val p = new org.apache.hadoop.fs.Path(path, f"part-$pid%05d.warc.gz")
-          val pfs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-          val out = pfs.create(p, true)
+          val out = p.getFileSystem(conf.value).create(p, true)
+          // closing a member's stream must end its native Deflater but not
+          // the segment stream the next member goes to
+          val segment = new java.io.FilterOutputStream(out) {
+            override def write(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
+            override def close(): Unit = flush()
+          }
           try it.foreach { rec =>
-            val gz = new java.util.zip.GZIPOutputStream(out)
-            gz.write((rec + "\r\n\r\n").getBytes(UTF_8))
-            gz.finish() // closes the MEMBER, leaves the segment stream open
+            val gz = new java.util.zip.GZIPOutputStream(segment)
+            try gz.write((rec + "\r\n\r\n").getBytes(UTF_8)) finally gz.close()
           } finally out.close()
         }
       }

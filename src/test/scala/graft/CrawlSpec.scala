@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.core._
-import graft.frontier.{Crawl, CrawlConfig}
+import graft.frontier.{Crawl, CrawlConfig, CrawlSummary}
 import graft.politeness.Robots
 import graft.scrape.Scrape
 import java.nio.file.Files
@@ -37,6 +37,39 @@ class CrawlSpec extends AnyFunSuite {
 
   private def freshDir(tag: String): String =
     Files.createTempDirectory(s"crawl-$tag").toString
+
+  private def manifestLong(runDir: String, e: Int, field: String): Long = {
+    val p = java.nio.file.Paths.get(f"$runDir/manifest_$e%04d.json")
+    ("\"" + field + "\":(-?\\d+)").r.findFirstMatchIn(Files.readString(p))
+      .map(_.group(1).toLong).getOrElse(-1L)
+  }
+
+  /** Every manifest's counts equal recounts from the committed snapshot dirs
+    * (epoch k's crawl is committed by manifest k+1). */
+  private def assertManifestsMatchSnapshots(runDir: String, summary: CrawlSummary): Unit = {
+    def snap(what: String, e: Int) = spark.read.parquet(f"$runDir/$what/epoch=$e%04d")
+    def queuedUrls(e: Int): Set[String] = snap("frontier", e)
+      .where(col("status") === CrawlStatus.Queued).select("url").as[String].collect().toSet
+    val rules = robotsDF.select("host", "rules").as[(String, String)].collect().toMap
+    val last = Crawl.lastCommittedEpoch(runDir)
+    assert(last >= 2)
+    (0 to last).foreach { k =>
+      assert(manifestLong(runDir, k, "frontier_queued") == queuedUrls(k).size, s"frontier_queued@$k")
+      assert(manifestLong(runDir, k, "seen_total") ==
+        Crawl.seenSet(spark, runDir, asOf = k).count(), s"seen_total@$k")
+    }
+    (1 to last).foreach { k =>
+      val admitted = queuedUrls(k - 1) -- snap("frontier", k).select("url").as[String].collect()
+      val blocked = admitted.count(u => !rules.get(Urls.host(u)).forall(Robots.canFetch(_, u)))
+      assert(manifestLong(runDir, k, "skipped_robots") == blocked, s"skipped_robots@$k")
+      assert(manifestLong(runDir, k, "fetched") == snap("docs", k - 1).count(), s"fetched@$k")
+      assert(manifestLong(runDir, k, "fetched") + manifestLong(runDir, k, "failed") ==
+        admitted.size - blocked, s"visited@$k")
+      assert(manifestLong(runDir, k, "seen_base") < k, s"epoch $k compacted; use a shorter crawl")
+      assert(manifestLong(runDir, k, "new_frontier") == snap("seen", k).count(), s"new_frontier@$k")
+    }
+    assert(summary.seen == Crawl.seenSet(spark, runDir).count())
+  }
 
   // ---- tests ---------------------------------------------------------------
 
@@ -394,6 +427,65 @@ class CrawlSpec extends AnyFunSuite {
     val runDir = freshDir("cap")
     val s = Crawl.run(spark, seedsDF, pagesDF, robotsDF, runDir, cfg)
     assert(s.fetched <= 7)
+    assertManifestsMatchSnapshots(runDir, s)
+  }
+
+  test("epoch fan-out: no count action in a crawl; manifest counts equal snapshot recounts") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val marker = "crawl_spec_fanout_marker"
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var markerSeen = false
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == marker)) markerSeen = true
+        else actions.add(funcName)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        actions.add(funcName)
+    }
+    val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40)
+    val runDir = freshDir("fanout")
+    spark.listenerManager.register(listener)
+    val summary =
+      try {
+        val s = Crawl.run(spark, seedsDF, pagesDF, robotsDF, runDir, cfg)
+        // listener events arrive asynchronously, in order: once the marker
+        // query is seen, every event of the crawl has been delivered
+        spark.range(1).toDF(marker).collect()
+        val deadline = System.currentTimeMillis() + 60000
+        while (!markerSeen && System.currentTimeMillis() < deadline) Thread.sleep(10)
+        s
+      } finally spark.listenerManager.unregister(listener)
+    assert(markerSeen, "listener bus did not drain")
+    import scala.jdk.CollectionConverters._
+    val seen = actions.asScala.toSeq
+    assert(seen.nonEmpty)
+    assert(!seen.contains("count"), s"count actions in the crawl: ${seen.groupBy(identity).view.mapValues(_.size).toMap}")
+    assertManifestsMatchSnapshots(runDir, summary)
+  }
+
+  test("resume from a bootstrap manifest without frontier_queued matches an uninterrupted run") {
+    val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40)
+    val full = freshDir("oldboot-full")
+    Crawl.run(spark, seedsDF, pagesDF, robotsDF, full, cfg)
+
+    val resumed = freshDir("oldboot-resumed")
+    Crawl.run(spark, seedsDF, pagesDF, robotsDF, resumed, cfg.copy(maxEpochs = 0))
+    val m0 = java.nio.file.Paths.get(s"$resumed/manifest_0000.json")
+    val json = Files.readString(m0)
+    assert(json.contains("\"frontier_queued\":"))
+    Files.writeString(m0, json.replaceAll("\"frontier_queued\":\\d+,", ""))
+    assert(manifestLong(resumed, 0, "frontier_queued") == -1L)
+    val summary = Crawl.run(spark, seedsDF, pagesDF, robotsDF, resumed, cfg)
+
+    def seenHashes(d: String): Set[Long] =
+      Crawl.seenSet(spark, d).as[Long].collect().toSet
+    assert(seenHashes(resumed) == seenHashes(full))
+    def vs(d: String) = Crawl.visits(spark, d).select("epoch", "visit_rank", "url")
+      .orderBy("epoch", "visit_rank").collect().map(r => (r.getInt(0), r.getString(2))).toSeq
+    assert(vs(resumed) == vs(full))
+    assert(summary.seen == seenHashes(full).size)
+    assert(manifestLong(resumed, 1, "frontier_queued") == manifestLong(full, 1, "frontier_queued"))
   }
 
   test("epoch commits touch only the seen DELTA; no rank is materialized at write") {
@@ -409,16 +501,11 @@ class CrawlSpec extends AnyFunSuite {
       else scala.util.Try(
         spark.read.parquet(d).as[Long].collect().toSet).getOrElse(Set.empty)
     }
-    def manifestLong(e: Int, field: String): Long = {
-      val p = java.nio.file.Paths.get(f"$runDir/manifest_$e%04d.json")
-      ("\"" + field + "\":(-?\\d+)").r.findFirstMatchIn(Files.readString(p))
-        .map(_.group(1).toLong).getOrElse(-1L)
-    }
 
     // (a) each post-bootstrap seen dir holds EXACTLY that epoch's new
     // frontier rows — the commit is O(delta), never a history rewrite
     (1 to last).foreach { e =>
-      assert(deltaHashes(e).size == manifestLong(e, "new_frontier"),
+      assert(deltaHashes(e).size == manifestLong(runDir, e, "new_frontier"),
         s"epoch $e seen dir is not the delta")
     }
     // (b) deltas are pairwise disjoint and union to the full seen set

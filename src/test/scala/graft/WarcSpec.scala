@@ -93,4 +93,39 @@ class WarcSpec extends AnyFunSuite {
     corrupt(12) = (corrupt(12) ^ 0x55).toByte
     assert(Warc.parseSegment(corrupt).isEmpty)
   }
+
+  test("writeWarcGz: many records over many partitions through a session-only filesystem") {
+    // the `warcgz-test` scheme exists only in the session's Hadoop
+    // configuration, and is never cached: executors that built a fresh
+    // Configuration could not resolve it
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.warcgz-test.impl", classOf[SessionOnlyFs].getName)
+    hconf.setBoolean("fs.warcgz-test.impl.disable.cache", true)
+    val rows = (0 until 240).map(i => (s"https://m.example/$i", s"record $i " + "body " * (i % 7)))
+      .toDF("uri", "payload")
+    val local = java.nio.file.Files.createTempDirectory("warcgz-many").toString
+    try Warc.writeWarcGz(rows.repartition(4), "uri", "payload", s"warcgz-test://$local/out")
+    finally Seq("fs.warcgz-test.impl", "fs.warcgz-test.impl.disable.cache").foreach(hconf.unset)
+    val files = new java.io.File(s"$local/out").listFiles().filter(_.getName.endsWith(".warc.gz"))
+    assert(files.length == 4)
+    // every record is its own member (magic, CM = deflate, FLG = 0), and
+    // every segment parses in full
+    val bytes = files.map(f => java.nio.file.Files.readAllBytes(f.toPath))
+    val members = bytes.map(b => (0 until b.length - 3).count(i =>
+      (b(i) & 0xff) == 0x1f && (b(i + 1) & 0xff) == 0x8b && b(i + 2) == 8 && b(i + 3) == 0)).sum
+    assert(members == 240, s"expected 240 gzip members, saw $members")
+    val perSegment = bytes.map(Warc.parseSegment)
+    assert(perSegment.forall(_.size > 1))
+    val back = Warc.readWarc(spark, s"$local/out")
+      .select("target_uri", "payload").as[(String, String)].collect().sortBy(_._1).toSeq
+    assert(back == rows.as[(String, String)].collect().sortBy(_._1).toSeq)
+    assert(perSegment.map(_.size).sum == 240)
+  }
+}
+
+/** The local filesystem under a scheme that only a configuration naming
+  * `fs.warcgz-test.impl` can resolve. */
+class SessionOnlyFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("warcgz-test:///")
+  override def getScheme: String = "warcgz-test"
 }
