@@ -41,10 +41,6 @@ object Bench {
     s
   }
 
-  /** Diagnostic hook for SparkProbe. */
-  private[graft] def probeEpoch(spark: SparkSession, nPages: Long): (Long, Long) =
-    epochJob(spark, nPages)
-
   /** One crawl epoch over nPages synthetic pages: fetch (generate) → scrape
     * (spans+links) → link canonical-hash dedup. Returns (docs, uniqueLinks).
     */
@@ -118,15 +114,32 @@ object Bench {
     * silently borrows free cores for GC/JIT/daemon threads (measured ~2.6
     * cores of process CPU), inflating the N baseline and understating
     * efficiency; with it, both levels are measured on the same terms.
-    * Returns whether pinning actually took effect (taskset present AND exited
-    * 0) — the emitted JSON reflects this instead of asserting it. */
+    * Returns whether pinning actually took effect: taskset exited 0 AND the
+    * affinity read back is exactly cpus 0..n-1. taskset clamps a request
+    * for more cpus than the host has and still exits 0, so its exit code
+    * alone would report a 4-cpu affinity as an 8-core pin. The emitted JSON
+    * reflects this instead of asserting it. */
   private[graft] def pinCpus(n: Int): Boolean =
     try {
       val pid = ProcessHandle.current().pid().toString
       val p = new ProcessBuilder("taskset", "-a", "-p", "-c", s"0-${n - 1}", pid)
         .redirectErrorStream(true).start()
-      p.waitFor() == 0
+      p.waitFor() == 0 && pinnedTo(allowedCpus(), n)
     } catch { case _: Throwable => false }
+
+  /** This process's `Cpus_allowed_list` from /proc/self/status. */
+  private def allowedCpus(): String = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.readAllLines(java.nio.file.Paths.get("/proc/self/status")).asScala
+      .collectFirst { case l if l.startsWith("Cpus_allowed_list:") =>
+        l.stripPrefix("Cpus_allowed_list:").trim }
+      .getOrElse("")
+  }
+
+  /** Whether a `Cpus_allowed_list` value (the kernel prints ranges, e.g.
+    * "0-3") names exactly cpus 0..n-1. */
+  private[graft] def pinnedTo(allowedList: String, n: Int): Boolean =
+    allowedList.trim == (if (n == 1) "0" else s"0-${n - 1}")
 
   /** Wait (bounded) for a quiet window; returns the last busy reading. */
   private def waitForQuiet(maxWaitSec: Int, maxOtherCores: Double): Double = {
@@ -289,7 +302,7 @@ object Bench {
     val total = results.map(_._2).sum
     val pinNote =
       if (pinnedOk) "JVM taskset-pinned to exactly N cores per trial (cgroup-executor emulation)"
-      else "UNPINNED (taskset unavailable/failed) — scaling numbers measured without core confinement"
+      else "UNPINNED (taskset unavailable/failed, or affinity read back is not exactly 0..N-1) — scaling numbers measured without core confinement"
     val ratiosJson = pairResults
       .map(p => f"""{"ratio":${p.ratio}%.3f,"delivered_gap":${p.deliveredGap}%.3f}""")
       .mkString("[", ",", "]")

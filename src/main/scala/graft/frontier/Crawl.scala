@@ -7,7 +7,7 @@ import graft.scrape.Scrape
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** The crawl engine: an epoch-batch frontier loop, each epoch one Catalyst
   * plan (SURVEY.md §3.3 — the reference's BFS/DFS/BestFirst strategies,
@@ -113,8 +113,19 @@ object Crawl {
   private def dir(runDir: String, epoch: Int, what: String) =
     f"$runDir/$what/epoch=$epoch%04d"
 
-  private def manifestPath(runDir: String, epoch: Int) =
-    Paths.get(f"$runDir/manifest_$epoch%04d.json")
+  /** Epochs `from..to` whose `what` snapshot dir exists. */
+  private def epochsWith(runDir: String, what: String, from: Int, to: Int): Seq[Int] =
+    (from to to).filter(e => Files.isDirectory(Paths.get(dir(runDir, e, what))))
+
+  // explicit schemas for the snapshot readbacks: skips footer-based schema
+  // inference in the planning phase of every epoch
+  private val frontierSchema = org.apache.spark.sql.Encoders.product[FrontierEntry].schema
+  private val seenSchema = org.apache.spark.sql.types.StructType.fromDDL("url_hash BIGINT")
+
+  /** The URL-seen set as the union of the seen deltas `base..upTo`. */
+  private def readSeen(spark: SparkSession, runDir: String, base: Int, upTo: Int): DataFrame =
+    spark.read.schema(seenSchema)
+      .parquet(epochsWith(runDir, "seen", base, upTo).map(dir(runDir, _, "seen")): _*)
 
   /** The admission/visit sort key per traversal strategy (the ONLY ordering
     * spec in the engine; `Crawl.visits` re-derives ranks from it at read
@@ -139,17 +150,6 @@ object Crawl {
         .foldLeft(-1)(math.max)
     } finally it.close()
   }
-
-  /** Atomic manifest commit: write temp, fsync-free rename (same dir). */
-  private def commitManifest(runDir: String, epoch: Int, json: String): Unit = {
-    val tmp = Paths.get(s"$runDir/.manifest_tmp_$epoch.json")
-    Files.writeString(tmp, json)
-    Files.move(tmp, manifestPath(runDir, epoch), StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private def jsonEsc(s: String): String =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-                case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
 
   // ---- seed bootstrap -------------------------------------------------------
 
@@ -216,33 +216,25 @@ object Crawl {
       s0.write.mode(SaveMode.Overwrite).parquet(dir(runDir, 0, "seen"))
       store.save(store.build(spark, s0, "url_hash", seedCount), store.path(runDir, 0))
       f0.unpersist()
-      commitManifest(runDir, 0,
-        s"""{"epoch":0,"kind":"bootstrap","strategy":"${jsonEsc(cfg.strategy)}",""" +
-        s""""seen_base":0,"seen_total":$seedCount,"frontier_queued":$seedCount,""" +
-        s""""frontier":"${jsonEsc(dir(runDir, 0, "frontier"))}"}""")
+      EpochManifest.commit(runDir, EpochManifest(0, cfg.strategy, seenBase = 0,
+        seenTotal = seedCount, frontierQueued = Some(seedCount), kind = Some("bootstrap"),
+        frontier = Some(dir(runDir, 0, "frontier"))))
     }
 
-    var epoch = math.max(lastCommittedEpoch(runDir), 0)
-    var totalFetched = sumManifests(runDir, "fetched")
-    var totals = (0L, 0L, 0L) // failed, skippedRobots, placeholder
+    // every committed manifest, oldest first (each epoch appends the one it
+    // commits): the run's totals and the head's counters come from here
+    var manifests =
+      (0 to lastCommittedEpoch(runDir)).flatMap(EpochManifest.read(runDir, _)).toVector
+    def total(count: EpochManifest => Option[Long]): Long = manifests.flatMap(count).sum
+    var epoch = manifests.last.epoch
     var done = false
     // incremental counters (avoid a count job per epoch; read from the last
     // manifest, counted only for a bootstrap manifest without frontier_queued)
-    var queuedCount = manifestField(runDir, epoch, "frontier_queued").getOrElse(-1L)
-    var seenCount = manifestField(runDir, epoch, "seen_total").getOrElse(-1L)
+    var queuedCount = manifests.last.frontierQueued.getOrElse(-1L)
+    var seenCount = manifests.last.seenTotal
     // compaction base: first epoch of the current delta run (deltas base..k
     // union to the full seen set; their blooms form the pre-filter vector)
-    var seenBase = manifestField(runDir, epoch, "seen_base").map(_.toInt).getOrElse(0)
-    // explicit schemas for the per-epoch readbacks: skips footer-based schema
-    // inference in the planning phase of every epoch
-    val frontierSchema = org.apache.spark.sql.Encoders.product[FrontierEntry].schema
-    val seenSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("url_hash", org.apache.spark.sql.types.LongType)))
-    def readSeen(upTo: Int): DataFrame = {
-      val dirs = (seenBase to upTo).map(e => dir(runDir, e, "seen"))
-        .filter(d => Files.isDirectory(Paths.get(d)))
-      spark.read.schema(seenSchema).parquet(dirs: _*)
-    }
+    var seenBase = manifests.last.seenBase
     // per-epoch delta filters, loaded from persisted files (rebuilt from the
     // delta dir — delta-sized, cheap — if a file is missing or the run is
     // resumed under the other filter family)
@@ -275,7 +267,7 @@ object Crawl {
     while (!done && epoch < cfg.maxEpochs) {
       val t0 = System.currentTimeMillis()
       val frontier = spark.read.schema(frontierSchema).parquet(dir(runDir, epoch, "frontier"))
-      val seen = readSeen(epoch)
+      val seen = readSeen(spark, runDir, seenBase, epoch)
       val domainStatePath = dir(runDir, epoch, "domain_state")
       val domainState: Option[DataFrame] =
         if (cfg.dynamicPoliteness && Files.isDirectory(Paths.get(domainStatePath)))
@@ -283,9 +275,8 @@ object Crawl {
         else None
       val queued = frontier.where(col("status") === CrawlStatus.Queued)
       if (queuedCount < 0) queuedCount = queued.count()
-      if (seenCount < 0) seenCount = seen.count()
 
-      if (queuedCount == 0 || totalFetched >= cfg.maxPages) { done = true }
+      if (queuedCount == 0 || total(_.fetched) >= cfg.maxPages) { done = true }
       else {
         // ---- admission: politeness budget + fairness aging + strategy order
         val aged = queued.withColumn("wait", lit(epoch) - col("enqueue_epoch"))
@@ -319,7 +310,7 @@ object Crawl {
         // many rows through per-host budgets), so it is skipped, never
         // silently clamped.
         val capConfigured = cfg.maxPages != Long.MaxValue || cfg.globalBatch != Long.MaxValue
-        val capacity = math.min(cfg.globalBatch, cfg.maxPages - totalFetched)
+        val capacity = math.min(cfg.globalBatch, cfg.maxPages - total(_.fetched))
         val capped = capConfigured && capacity < Int.MaxValue
         val admitted =
           if (capped) inBudget.orderBy(ord: _*).limit(capacity.toInt).cache() else inBudget
@@ -379,14 +370,14 @@ object Crawl {
         import scala.concurrent.{Await, Future}
         import scala.concurrent.duration.Duration
         implicit val ec: scala.concurrent.ExecutionContext = Crawl.epochEc
-        // lineage: (pid, fetch_ok, rows, words) per scraped-cache partition,
-        // one partition-local pass (no shuffle)
+        // lineage per scraped-cache partition: one partition-local pass
         val fLineage = Future {
           scraped.select("fetch_ok", "n_words").as[(Boolean, Int)].mapPartitions { it =>
             val rows, words = new Array[Long](2) // index 1 = fetch_ok
             it.foreach { case (ok, w) => val i = if (ok) 1 else 0; rows(i) += 1; words(i) += w }
             val pid = org.apache.spark.TaskContext.getPartitionId()
-            Iterator(1, 0).filter(rows(_) > 0).map(i => (pid, i == 1, rows(i), words(i)))
+            Iterator(1, 0).filter(rows(_) > 0)
+              .map(i => PartitionLineage(pid, i == 1, rows(i), words(i)))
           }.collect()
         }
 
@@ -601,26 +592,20 @@ object Crawl {
         Await.result(fFrontier, Duration.Inf)
         seenBase = newSeenBase
         filters = newFilters
-        val nFetched = lineageRows.filter(_._2).map(_._3).sum
-        val nFailed = lineageRows.filterNot(_._2).map(_._3).sum
+        val nFetched = lineageRows.filter(_.fetchOk).map(_.rows).sum
+        val nFailed = lineageRows.filterNot(_.fetchOk).map(_.rows).sum
         // derived, no extra jobs: admitted = allowed + blocked; deferred =
         // queued − admitted; seen grows only by the (disjoint) new entries
         val admittedCount = nFetched + nFailed + nBlocked
         val deferredCount = queuedCount - admittedCount
         seenCount += nNew
         queuedCount = deferredCount + nNew
-        val partLineage = lineageRows.sortBy(_._1)
-          .map { case (pid, ok, rows, words) =>
-            s"""{"pid":$pid,"fetch_ok":$ok,"rows":$rows,"words":$words}""" }
-          .mkString("[", ",", "]")
-        totalFetched += nFetched
-        totals = (totals._1 + nFailed, totals._2 + nBlocked, 0L)
-        val wall = System.currentTimeMillis() - t0
-        commitManifest(runDir, epoch + 1,
-          s"""{"epoch":${epoch + 1},"fetched":$nFetched,"failed":$nFailed,""" +
-          s""""skipped_robots":$nBlocked,"new_frontier":$nNew,"seen_total":$seenCount,""" +
-          s""""frontier_queued":$queuedCount,"seen_base":$seenBase,""" +
-          s""""strategy":"${jsonEsc(cfg.strategy)}","wall_ms":$wall,"partitions":$partLineage}""")
+        val m = EpochManifest(nextEpoch, cfg.strategy, seenBase, seenCount, Some(queuedCount),
+          fetched = Some(nFetched), failed = Some(nFailed), skippedRobots = Some(nBlocked),
+          newFrontier = Some(nNew), wallMs = Some(System.currentTimeMillis() - t0),
+          partitions = Some(lineageRows.sortBy(_.pid).toSeq))
+        EpochManifest.commit(runDir, m)
+        manifests :+= m
 
         scraped.unpersist(); budgeted.unpersist(); admitted.unpersist(); newEntries.unpersist()
         // all consumers of this epoch's filter broadcast have completed and
@@ -631,9 +616,7 @@ object Crawl {
         epoch += 1
       }
     }
-    // seenCount is the exact seen_total of the head manifest
-    val seenFinal = if (seenCount >= 0) seenCount else seenSet(spark, runDir).count()
-    CrawlSummary(epoch, totalFetched, totals._1, totals._2, seenFinal)
+    CrawlSummary(epoch, total(_.fetched), total(_.failed), total(_.skippedRobots), seenCount)
   }
 
   /** TTL-expire epoch `expired`: every URL FIRST ENQUEUED at that epoch is
@@ -670,9 +653,9 @@ object Crawl {
   def expireEpoch(spark: SparkSession, runDir: String, expired: Int): Long = {
     val last = lastCommittedEpoch(runDir)
     require(last >= 0, s"no committed crawl under $runDir")
-    require(Files.exists(manifestPath(runDir, expired)),
+    require(Files.exists(EpochManifest.path(runDir, expired)),
       s"epoch $expired was never committed")
-    val frontierSchema = org.apache.spark.sql.Encoders.product[FrontierEntry].schema
+    val head = EpochManifest.read(runDir, last).get
     val fdir = dir(runDir, expired, "frontier")
     require(Files.isDirectory(Paths.get(fdir)), s"no frontier snapshot at epoch $expired")
     val nextEpoch = last + 1
@@ -703,7 +686,6 @@ object Crawl {
     merged.write.mode(SaveMode.Overwrite).parquet(dir(runDir, nextEpoch, "frontier"))
     val n = spark.read.schema(frontierSchema)
       .parquet(dir(runDir, nextEpoch, "frontier")).count()
-    val base = manifestField(runDir, last, "seen_base").getOrElse(0L)
     // empty seen delta for the new epoch (nothing newly seen by expiry)
     requeue.limit(0).select("url_hash")
       .write.mode(SaveMode.Overwrite).parquet(dir(runDir, nextEpoch, "seen"))
@@ -717,7 +699,7 @@ object Crawl {
     // insert set), so no absent-key delete can strip a collider.
     store match {
       case _: CuckooStore =>
-        val target = if (expired >= base) expired else base.toInt
+        val target = if (expired >= head.seenBase) expired else head.seenBase
         val p = store.path(runDir, target)
         // idempotency marker: the expired keys are in the target filter by
         // construction on the FIRST eviction only — a repeat delete of an
@@ -735,34 +717,13 @@ object Crawl {
         }
       case _ => // bloom: append-only; stale bits age out at compaction
     }
-    val seenTotal = manifestField(runDir, last, "seen_total").getOrElse(-1L)
-    val strategy = manifestStringField(runDir, last, "strategy").getOrElse("bfs")
-    commitManifest(runDir, nextEpoch,
-      s"""{"epoch":$nextEpoch,"kind":"recrawl","expired_epoch":$expired,""" +
-      s""""fetched":0,"failed":0,"skipped_robots":0,"new_frontier":0,""" +
-      s""""frontier_queued":$n,"seen_total":$seenTotal,"seen_base":$base,""" +
-      s""""strategy":"${jsonEsc(strategy)}"}""")
+    // strategy, seen_total and seen_base carry over from the head
+    EpochManifest.commit(runDir, head.copy(epoch = nextEpoch, frontierQueued = Some(n),
+      kind = Some("recrawl"), frontier = None, expiredEpoch = Some(expired),
+      fetched = Some(0), failed = Some(0), skippedRobots = Some(0), newFrontier = Some(0),
+      wallMs = None, partitions = None))
     n
   }
-
-  /** Numeric field of the manifest at `epoch`, if committed. */
-  private def manifestField(runDir: String, epoch: Int, field: String): Option[Long] = {
-    val p = manifestPath(runDir, epoch)
-    if (!Files.exists(p)) None
-    else ("\"" + field + "\":(-?\\d+)").r.findFirstMatchIn(Files.readString(p))
-      .map(_.group(1).toLong)
-  }
-
-  /** String field of the manifest at `epoch`, if committed. */
-  private def manifestStringField(runDir: String, epoch: Int, field: String): Option[String] = {
-    val p = manifestPath(runDir, epoch)
-    if (!Files.exists(p)) None
-    else ("\"" + field + "\":\"([^\"]*)\"").r.findFirstMatchIn(Files.readString(p))
-      .map(_.group(1))
-  }
-
-  private def sumManifests(runDir: String, field: String): Long =
-    (1 to lastCommittedEpoch(runDir)).flatMap(manifestField(runDir, _, field)).sum
 
   /** All docs produced by a run (doc_id, spans, links, title, n_words, epoch).
     * `asOf` (an epoch with a committed manifest) time-travels the read to
@@ -770,22 +731,19 @@ object Crawl {
     * exactly the state the epoch-k commit published, regardless of how far
     * the crawl has advanced since.
     */
-  def docs(spark: SparkSession, runDir: String, asOf: Int = Int.MaxValue): DataFrame = {
-    val last = snapshotEpoch(runDir, asOf)
-    val dirs = (0 until math.max(last, 0)).map(e => dir(runDir, e, "docs"))
-      .filter(d => Files.isDirectory(Paths.get(d)))
-    if (dirs.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(dirs: _*)
-  }
+  def docs(spark: SparkSession, runDir: String, asOf: Int = Int.MaxValue): DataFrame =
+    epochRows(spark, runDir, "docs", asOf)
 
   /** Enriched link rows (page_url, href, link_pos, is_internal,
     * intrinsic_score, head_status, head, contextual_score, total_score,
     * epoch) across committed epochs — written only when
     * [[CrawlConfig.linkPreview]] is configured. */
-  def links(spark: SparkSession, runDir: String, asOf: Int = Int.MaxValue): DataFrame = {
-    val last = snapshotEpoch(runDir, asOf)
-    val dirs = (0 until math.max(last, 0)).map(e => dir(runDir, e, "links"))
-      .filter(d => Files.isDirectory(Paths.get(d)))
+  def links(spark: SparkSession, runDir: String, asOf: Int = Int.MaxValue): DataFrame =
+    epochRows(spark, runDir, "links", asOf)
+
+  /** The rows of table `what` written by the epochs crawled before `asOf`. */
+  private def epochRows(spark: SparkSession, runDir: String, what: String, asOf: Int): DataFrame = {
+    val dirs = epochsWith(runDir, what, 0, snapshotEpoch(runDir, asOf) - 1).map(dir(runDir, _, what))
     if (dirs.isEmpty) spark.emptyDataFrame
     else spark.read.parquet(dirs: _*)
   }
@@ -797,7 +755,7 @@ object Crawl {
     val last = lastCommittedEpoch(runDir)
     if (asOf >= last) last
     else {
-      require(Files.exists(manifestPath(runDir, asOf)),
+      require(Files.exists(EpochManifest.path(runDir, asOf)),
         s"no committed snapshot at epoch $asOf under $runDir")
       asOf
     }
@@ -811,21 +769,18 @@ object Crawl {
     */
   def visits(spark: SparkSession, runDir: String, asOf: Int = Int.MaxValue): DataFrame = {
     val last = snapshotEpoch(runDir, asOf)
-    val epochs = (0 until math.max(last, 0))
-      .filter(e => Files.isDirectory(Paths.get(dir(runDir, e, "visits"))))
+    val epochs = epochsWith(runDir, "visits", 0, last - 1)
     if (epochs.isEmpty) return spark.emptyDataFrame
     // rank each epoch under ITS OWN strategy (manifest e+1 records epoch e's
     // crawl): a run resumed under a different strategy keeps the earlier
     // epochs' historical visit order intact
-    val perEpochStrategy = epochs.map { e =>
-      e -> manifestStringField(runDir, e + 1, "strategy")
-        .orElse(manifestStringField(runDir, math.max(last, 0), "strategy"))
-        .getOrElse("bfs")
-    }
-    perEpochStrategy.groupBy(_._2).map { case (strategy, es) =>
-      spark.read.parquet(es.map(x => dir(runDir, x._1, "visits")): _*)
-        .withColumn("visit_rank", row_number().over(
-          Window.partitionBy("epoch").orderBy(strategyOrder(strategy): _*)))
+    val strategies = (1 to last).flatMap(EpochManifest.read(runDir, _))
+      .map(m => m.epoch -> m.strategy).toMap
+    epochs.groupBy(e => strategies.getOrElse(e + 1, strategies.getOrElse(last, "bfs"))).map {
+      case (strategy, es) =>
+        spark.read.parquet(es.map(dir(runDir, _, "visits")): _*)
+          .withColumn("visit_rank", row_number().over(
+            Window.partitionBy("epoch").orderBy(strategyOrder(strategy): _*)))
     }.reduce(_ unionByName _)
       .select("url", "depth", "score", "path", "visit_rank", "epoch")
       .orderBy("epoch", "visit_rank")
@@ -836,10 +791,7 @@ object Crawl {
     */
   def seenSet(spark: SparkSession, runDir: String, asOf: Int = Int.MaxValue): DataFrame = {
     val last = math.max(snapshotEpoch(runDir, asOf), 0)
-    val base = manifestField(runDir, last, "seen_base").map(_.toInt).getOrElse(0)
-    val dirs = (base to last).map(e => dir(runDir, e, "seen"))
-      .filter(d => Files.isDirectory(Paths.get(d)))
-    spark.read.parquet(dirs: _*)
+    readSeen(spark, runDir, EpochManifest.read(runDir, last).map(_.seenBase).getOrElse(0), last)
   }
 
   /** Per-epoch metrics from the committed manifests: (epoch, fetched,
@@ -848,10 +800,10 @@ object Crawl {
     */
   def metrics(spark: SparkSession, runDir: String): DataFrame = {
     import spark.implicits._
-    (1 to lastCommittedEpoch(runDir)).filter(e => Files.exists(manifestPath(runDir, e))).map { e =>
-      def f(k: String): Long = manifestField(runDir, e, k).getOrElse(-1L)
-      (e, f("fetched"), f("failed"), f("skipped_robots"), f("new_frontier"), f("seen_total"),
-        f("wall_ms"))
+    (1 to lastCommittedEpoch(runDir)).flatMap(EpochManifest.read(runDir, _)).map { m =>
+      def f(count: Option[Long]): Long = count.getOrElse(-1L)
+      (m.epoch, f(m.fetched), f(m.failed), f(m.skippedRobots), f(m.newFrontier), m.seenTotal,
+        f(m.wallMs))
     }.toDF("epoch", "fetched", "failed", "skipped_robots",
       "new_frontier", "seen_total", "wall_ms")
   }
@@ -861,14 +813,7 @@ object Crawl {
     */
   def lineage(spark: SparkSession, runDir: String, epoch: Int): DataFrame = {
     import spark.implicits._
-    val p = manifestPath(runDir, epoch)
-    val entries =
-      if (!Files.exists(p)) Seq.empty
-      else "\\{\"pid\":(\\d+),\"fetch_ok\":(true|false),\"rows\":(\\d+),\"words\":(\\d+)\\}".r
-        .findAllMatchIn(Files.readString(p))
-        .map(m => (m.group(1).toInt, m.group(2).toBoolean,
-          m.group(3).toLong, m.group(4).toLong))
-        .toSeq
-    entries.toDF("pid", "fetch_ok", "rows", "words")
+    EpochManifest.read(runDir, epoch).flatMap(_.partitions).getOrElse(Nil)
+      .toDF("pid", "fetch_ok", "rows", "words")
   }
 }

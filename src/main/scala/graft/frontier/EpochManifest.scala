@@ -1,0 +1,53 @@
+package graft.frontier
+
+import org.json4s.{DefaultFormats, Extraction, Formats}
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
+/** Rows and words of one scraped partition, split by fetch outcome. */
+final case class PartitionLineage(pid: Int, fetchOk: Boolean, rows: Long, words: Long)
+
+/** The commit record of one crawl epoch, `manifest_<epoch>.json`: a bootstrap
+  * (`kind = "bootstrap"`, epoch 0, with the seed `frontier` dir), a crawl epoch
+  * (no `kind`; the counts, `wallMs` and lineage of the epoch it closes) or a
+  * TTL recrawl (`kind = "recrawl"`, with `expiredEpoch`). Fields a kind does
+  * not carry are `None` and absent from the JSON; bootstrap manifests written
+  * before `frontierQueued` was recorded lack it too. */
+final case class EpochManifest(
+    epoch: Int,
+    strategy: String,
+    seenBase: Int,
+    seenTotal: Long,
+    frontierQueued: Option[Long],
+    kind: Option[String] = None,
+    frontier: Option[String] = None,
+    expiredEpoch: Option[Int] = None,
+    fetched: Option[Long] = None,
+    failed: Option[Long] = None,
+    skippedRobots: Option[Long] = None,
+    newFrontier: Option[Long] = None,
+    wallMs: Option[Long] = None,
+    partitions: Option[Seq[PartitionLineage]] = None)
+
+/** The manifest codec: JSON with snake_case keys, one file per epoch. */
+object EpochManifest {
+  private implicit val formats: Formats = DefaultFormats
+
+  def encode(m: EpochManifest): String = compact(render(Extraction.decompose(m).snakizeKeys))
+
+  def decode(json: String): EpochManifest = parse(json).camelizeKeys.extract[EpochManifest]
+
+  def path(runDir: String, epoch: Int): Path = Paths.get(f"$runDir/manifest_$epoch%04d.json")
+
+  /** The manifest committed at `epoch`, if any. */
+  def read(runDir: String, epoch: Int): Option[EpochManifest] =
+    Some(path(runDir, epoch)).filter(Files.exists(_)).map(p => decode(Files.readString(p)))
+
+  /** Atomic commit: write a temp file, then rename it into place (same dir),
+    * so a reader never sees a partial manifest. */
+  def commit(runDir: String, m: EpochManifest): Unit = {
+    val tmp = Paths.get(s"$runDir/.manifest_tmp_${m.epoch}.json")
+    Files.writeString(tmp, encode(m))
+    Files.move(tmp, path(runDir, m.epoch), StandardCopyOption.ATOMIC_MOVE)
+  }
+}

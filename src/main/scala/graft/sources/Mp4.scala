@@ -85,11 +85,18 @@ object Mp4 {
       if (mvVer == 1) (u32(data, mvhdF + 20), u64(data, mvhdF + 24))
       else (u32(data, mvhdF + 12), u32(data, mvhdF + 16))
     if (mvTimescale <= 0) return None
+    val movieMs = toMs(mvDuration, mvTimescale).getOrElse(return None)
     val tracks = moov.filter(_._1 == "trak").flatMap { case (_, tf, tt) =>
       trackOf(data, tf, tt)
     }
-    Some(Movie(major, mvDuration * 1000 / mvTimescale, tracks))
+    Some(Movie(major, movieMs, tracks))
   }
+
+  /** A duration of `ticks` at `timescale` ticks per second, in ms; None for
+    * a 64-bit duration (unsigned on disk, so a negative Long here) whose
+    * `ticks * 1000` overflows. */
+  private def toMs(ticks: Long, timescale: Long): Option[Long] =
+    if (ticks < 0 || ticks > Long.MaxValue / 1000) None else Some(ticks * 1000 / timescale)
 
   private def trackOf(data: Array[Byte], from: Int, to: Int): Option[Track] = {
     val trak = boxes(data, from, to)
@@ -102,6 +109,7 @@ object Mp4 {
       if (ver == 1) (u32(data, mdhdF + 20), u64(data, mdhdF + 24))
       else (u32(data, mdhdF + 12), u32(data, mdhdF + 16))
     if (timescale <= 0) return None
+    val durationMs = toMs(duration, timescale).getOrElse(return None)
     val handler = find(mdia, "hdlr") match {
       case Some((f, t)) if t - f >= 12 => fourcc(data, f + 8)
       case _ => ""
@@ -153,14 +161,15 @@ object Mp4 {
         }
       }
     }
-    // stsz sample_count cross-checks stts when both are present
+    // stsz sample_count is the frame count only when stts gave none; the
+    // two are not cross-checked
     find(stbl, "stsz").foreach { case (f, t) =>
       if (t - f >= 12) {
         val n = u32(data, f + 8)
         if (nSamples == 0 && n <= 1000000) nSamples = n.toInt
       }
     }
-    Some(Track(handler, codec, width, height, duration * 1000 / timescale,
+    Some(Track(handler, codec, width, height, durationMs,
       nSamples, channels, sampleRate, deltas.toArray))
   }
 

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.core._
-import graft.frontier.{Crawl, CrawlConfig, CrawlSummary}
+import graft.frontier.{Crawl, CrawlConfig, CrawlSummary, EpochManifest, PartitionLineage}
 import graft.politeness.Robots
 import graft.scrape.Scrape
 import java.nio.file.Files
@@ -38,11 +38,13 @@ class CrawlSpec extends AnyFunSuite {
   private def freshDir(tag: String): String =
     Files.createTempDirectory(s"crawl-$tag").toString
 
-  private def manifestLong(runDir: String, e: Int, field: String): Long = {
-    val p = java.nio.file.Paths.get(f"$runDir/manifest_$e%04d.json")
-    ("\"" + field + "\":(-?\\d+)").r.findFirstMatchIn(Files.readString(p))
-      .map(_.group(1).toLong).getOrElse(-1L)
-  }
+  private def manifest(runDir: String, e: Int): EpochManifest =
+    EpochManifest.read(runDir, e).getOrElse(fail(s"no manifest $e under $runDir"))
+
+  /** A bootstrap manifest as the pre-codec writer committed it, before
+    * `frontier_queued` was recorded. */
+  private def oldBootstrapJson(runDir: String, seeds: Long): String =
+    s"""{"epoch":0,"kind":"bootstrap","strategy":"bfs","seen_base":0,"seen_total":$seeds,"frontier":"$runDir/frontier/epoch=0000"}"""
 
   /** Every manifest's counts equal recounts from the committed snapshot dirs
     * (epoch k's crawl is committed by manifest k+1). */
@@ -54,19 +56,19 @@ class CrawlSpec extends AnyFunSuite {
     val last = Crawl.lastCommittedEpoch(runDir)
     assert(last >= 2)
     (0 to last).foreach { k =>
-      assert(manifestLong(runDir, k, "frontier_queued") == queuedUrls(k).size, s"frontier_queued@$k")
-      assert(manifestLong(runDir, k, "seen_total") ==
-        Crawl.seenSet(spark, runDir, asOf = k).count(), s"seen_total@$k")
+      val m = manifest(runDir, k)
+      assert(m.frontierQueued.contains(queuedUrls(k).size.toLong), s"frontier_queued@$k")
+      assert(m.seenTotal == Crawl.seenSet(spark, runDir, asOf = k).count(), s"seen_total@$k")
     }
     (1 to last).foreach { k =>
+      val m = manifest(runDir, k)
       val admitted = queuedUrls(k - 1) -- snap("frontier", k).select("url").as[String].collect()
       val blocked = admitted.count(u => !rules.get(Urls.host(u)).forall(Robots.canFetch(_, u)))
-      assert(manifestLong(runDir, k, "skipped_robots") == blocked, s"skipped_robots@$k")
-      assert(manifestLong(runDir, k, "fetched") == snap("docs", k - 1).count(), s"fetched@$k")
-      assert(manifestLong(runDir, k, "fetched") + manifestLong(runDir, k, "failed") ==
-        admitted.size - blocked, s"visited@$k")
-      assert(manifestLong(runDir, k, "seen_base") < k, s"epoch $k compacted; use a shorter crawl")
-      assert(manifestLong(runDir, k, "new_frontier") == snap("seen", k).count(), s"new_frontier@$k")
+      assert(m.skippedRobots.contains(blocked.toLong), s"skipped_robots@$k")
+      assert(m.fetched.contains(snap("docs", k - 1).count()), s"fetched@$k")
+      assert(m.fetched.get + m.failed.get == admitted.size - blocked, s"visited@$k")
+      assert(m.seenBase < k, s"epoch $k compacted; use a shorter crawl")
+      assert(m.newFrontier.contains(snap("seen", k).count()), s"new_frontier@$k")
     }
     assert(summary.seen == Crawl.seenSet(spark, runDir).count())
   }
@@ -204,13 +206,16 @@ class CrawlSpec extends AnyFunSuite {
   test("kill/resume: seen set identical to an uninterrupted run") {
     val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40)
     val full = freshDir("full")
-    Crawl.run(spark, seedsDF, pagesDF, robotsDF, full, cfg)
+    val fullSummary = Crawl.run(spark, seedsDF, pagesDF, robotsDF, full, cfg)
 
     val partial = freshDir("partial")
     // killed after 2 epochs…
     Crawl.run(spark, seedsDF, pagesDF, robotsDF, partial, cfg.copy(maxEpochs = 2))
-    // …resumed from the last committed snapshot
-    Crawl.run(spark, seedsDF, pagesDF, robotsDF, partial, cfg)
+    // …resumed from the last committed snapshot: the summary covers the whole
+    // run, including the robots-blocked seed root of epoch 0
+    val resumedSummary = Crawl.run(spark, seedsDF, pagesDF, robotsDF, partial, cfg)
+    assert(fullSummary.skippedRobots > 0)
+    assert(resumedSummary == fullSummary)
 
     def seenHashes(d: String): Set[Long] =
       Crawl.seenSet(spark, d).as[Long].collect().toSet
@@ -433,21 +438,28 @@ class CrawlSpec extends AnyFunSuite {
   test("epoch fan-out: no count action in a crawl; manifest counts equal snapshot recounts") {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
+    val startMarker = "crawl_spec_fanout_start"
     val marker = "crawl_spec_fanout_marker"
     val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var started = false
     @volatile var markerSeen = false
+    // events of queries that ran before registration (an earlier test's
+    // count) can still be in flight on the bus; recording starts at the
+    // start marker, which the bus delivers after all of them
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (qe.analyzed.output.exists(_.name == marker)) markerSeen = true
-        else actions.add(funcName)
+        if (qe.analyzed.output.exists(_.name == startMarker)) started = true
+        else if (qe.analyzed.output.exists(_.name == marker)) markerSeen = true
+        else if (started) actions.add(funcName)
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
-        actions.add(funcName)
+        if (started) actions.add(funcName)
     }
     val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40)
     val runDir = freshDir("fanout")
     spark.listenerManager.register(listener)
     val summary =
       try {
+        spark.range(1).toDF(startMarker).collect()
         val s = Crawl.run(spark, seedsDF, pagesDF, robotsDF, runDir, cfg)
         // listener events arrive asynchronously, in order: once the marker
         // query is seen, every event of the crawl has been delivered
@@ -456,7 +468,7 @@ class CrawlSpec extends AnyFunSuite {
         while (!markerSeen && System.currentTimeMillis() < deadline) Thread.sleep(10)
         s
       } finally spark.listenerManager.unregister(listener)
-    assert(markerSeen, "listener bus did not drain")
+    assert(started && markerSeen, "listener bus did not drain")
     import scala.jdk.CollectionConverters._
     val seen = actions.asScala.toSeq
     assert(seen.nonEmpty)
@@ -471,11 +483,9 @@ class CrawlSpec extends AnyFunSuite {
 
     val resumed = freshDir("oldboot-resumed")
     Crawl.run(spark, seedsDF, pagesDF, robotsDF, resumed, cfg.copy(maxEpochs = 0))
-    val m0 = java.nio.file.Paths.get(s"$resumed/manifest_0000.json")
-    val json = Files.readString(m0)
-    assert(json.contains("\"frontier_queued\":"))
-    Files.writeString(m0, json.replaceAll("\"frontier_queued\":\\d+,", ""))
-    assert(manifestLong(resumed, 0, "frontier_queued") == -1L)
+    val seeds = manifest(resumed, 0).seenTotal
+    Files.writeString(EpochManifest.path(resumed, 0), oldBootstrapJson(resumed, seeds))
+    assert(manifest(resumed, 0).frontierQueued.isEmpty)
     val summary = Crawl.run(spark, seedsDF, pagesDF, robotsDF, resumed, cfg)
 
     def seenHashes(d: String): Set[Long] =
@@ -485,7 +495,53 @@ class CrawlSpec extends AnyFunSuite {
       .orderBy("epoch", "visit_rank").collect().map(r => (r.getInt(0), r.getString(2))).toSeq
     assert(vs(resumed) == vs(full))
     assert(summary.seen == seenHashes(full).size)
-    assert(manifestLong(resumed, 1, "frontier_queued") == manifestLong(full, 1, "frontier_queued"))
+    assert(manifest(resumed, 1).frontierQueued == manifest(full, 1).frontierQueued)
+  }
+
+  test("manifest codec reads pre-codec manifests; metrics and lineage rows unchanged") {
+    import org.json4s.JObject
+    import org.json4s.jackson.JsonMethods.parse
+    val runDir = freshDir("oldmanifests")
+    val frontier = s"$runDir/frontier/epoch=0000"
+    // the four shapes, byte for byte as the pre-codec writer committed them
+    // (plus oldBootstrapJson)
+    val bootstrap =
+      s"""{"epoch":0,"kind":"bootstrap","strategy":"bfs","seen_base":0,"seen_total":8,"frontier_queued":8,"frontier":"$frontier"}"""
+    val epoch =
+      """{"epoch":1,"fetched":5,"failed":1,"skipped_robots":1,"new_frontier":12,"seen_total":20,"frontier_queued":13,"seen_base":0,"strategy":"bfs","wall_ms":1534,"partitions":[{"pid":0,"fetch_ok":true,"rows":3,"words":120},{"pid":0,"fetch_ok":false,"rows":1,"words":0},{"pid":3,"fetch_ok":true,"rows":2,"words":75}]}"""
+    val recrawl =
+      """{"epoch":2,"kind":"recrawl","expired_epoch":1,"fetched":0,"failed":0,"skipped_robots":0,"new_frontier":0,"frontier_queued":4,"seen_total":20,"seen_base":0,"strategy":"bfs"}"""
+    val lineage1 = Seq(PartitionLineage(0, true, 3, 120), PartitionLineage(0, false, 1, 0),
+      PartitionLineage(3, true, 2, 75))
+    val cases = Seq(
+      bootstrap -> EpochManifest(0, "bfs", 0, 8, Some(8), kind = Some("bootstrap"),
+        frontier = Some(frontier)),
+      oldBootstrapJson(runDir, 8) -> EpochManifest(0, "bfs", 0, 8, None,
+        kind = Some("bootstrap"), frontier = Some(frontier)),
+      epoch -> EpochManifest(1, "bfs", 0, 20, Some(13), fetched = Some(5), failed = Some(1),
+        skippedRobots = Some(1), newFrontier = Some(12), wallMs = Some(1534),
+        partitions = Some(lineage1)),
+      recrawl -> EpochManifest(2, "bfs", 0, 20, Some(4), kind = Some("recrawl"),
+        expiredEpoch = Some(1), fetched = Some(0), failed = Some(0), skippedRobots = Some(0),
+        newFrontier = Some(0)))
+    def fields(json: String) = parse(json).asInstanceOf[JObject].obj.toMap
+    cases.foreach { case (json, expected) =>
+      val m = EpochManifest.decode(json)
+      assert(m == expected)
+      val again = EpochManifest.encode(m)
+      assert(fields(again) == fields(json), again)
+      assert(again.length == json.length, again)
+    }
+
+    Seq(bootstrap, epoch, recrawl).zipWithIndex.foreach { case (json, e) =>
+      Files.writeString(EpochManifest.path(runDir, e), json)
+    }
+    val metrics = Crawl.metrics(spark, runDir).as[(Int, Long, Long, Long, Long, Long, Long)]
+      .collect().toSeq
+    assert(metrics == Seq((1, 5L, 1L, 1L, 12L, 20L, 1534L), (2, 0L, 0L, 0L, 0L, 20L, -1L)))
+    assert(Crawl.lineage(spark, runDir, 1).as[(Int, Boolean, Long, Long)].collect().toSeq ==
+      lineage1.map(p => (p.pid, p.fetchOk, p.rows, p.words)))
+    assert(Crawl.lineage(spark, runDir, 2).isEmpty)
   }
 
   test("epoch commits touch only the seen DELTA; no rank is materialized at write") {
@@ -505,7 +561,7 @@ class CrawlSpec extends AnyFunSuite {
     // (a) each post-bootstrap seen dir holds EXACTLY that epoch's new
     // frontier rows — the commit is O(delta), never a history rewrite
     (1 to last).foreach { e =>
-      assert(deltaHashes(e).size == manifestLong(runDir, e, "new_frontier"),
+      assert(manifest(runDir, e).newFrontier.contains(deltaHashes(e).size.toLong),
         s"epoch $e seen dir is not the delta")
     }
     // (b) deltas are pairwise disjoint and union to the full seen set

@@ -46,6 +46,38 @@ class Mp4Spec extends AnyFunSuite {
     assert(Mp4.parse(hostile).flatMap(_.tracks.headOption).isEmpty)
   }
 
+  /** `ok` with its `typ` (mvhd or mdhd) box rewritten as version 1 with a
+    * 64-bit `duration`, keeping the timescale. The v1 head (flags 4,
+    * creation 8, modification 8, timescale 4, duration 8) is 12 bytes longer
+    * than the v0 one, so the box and every box enclosing it grow by 12. */
+  private def v1Duration(ok: Array[Byte], typ: String, duration: Long): Array[Byte] = {
+    def start(fourcc: String) = ok.indexOfSlice(fourcc.getBytes("US-ASCII")) - 4
+    val body = start(typ) + 8
+    val head = java.nio.ByteBuffer.allocate(32).putInt(0x01000000).putLong(0).putLong(0)
+      .put(ok, body + 12, 4).putLong(duration).array()
+    val out = ok.take(body) ++ head ++ ok.drop(body + 20)
+    val enclosing = if (typ == "mvhd") Seq("moov") else Seq("moov", "trak", "mdia")
+    (enclosing :+ typ).map(start).foreach { i =>
+      val b = java.nio.ByteBuffer.wrap(out)
+      b.putInt(i, b.getInt(i) + 12)
+    }
+    out
+  }
+
+  test("64-bit mvhd/mdhd durations whose ms value overflows fail closed") {
+    val ok = Mp4.encodeVideo(100, 80, 5, 40) // millisecond timescale
+    val hostile = Long.MaxValue / 999 // * 1000 wraps negative
+    // the v1 layout itself parses: 5000 ticks at 1000/s = 5000 ms
+    assert(Mp4.parse(v1Duration(ok, "mvhd", 5000)).map(_.durationMs).contains(5000L))
+    assert(Mp4.parse(v1Duration(ok, "mdhd", 5000)).flatMap(_.tracks.headOption)
+      .map(_.durationMs).contains(5000L))
+    // hostile movie duration: no movie; hostile track duration: no track
+    assert(Mp4.parse(v1Duration(ok, "mvhd", hostile)).isEmpty)
+    assert(Mp4.parse(v1Duration(ok, "mvhd", -1L)).isEmpty) // 2^64 - 1 unsigned
+    val m = Mp4.parse(v1Duration(ok, "mdhd", hostile))
+    assert(m.map(_.durationMs).contains(200L) && m.get.tracks.isEmpty)
+  }
+
   test("multimodal sniff: mp4 metadata is real, frame decode falls back") {
     val blob = Multimodal.syntheticMp4Blob("d1", "vid://mp4", 7)
     // id=7: w=55, h=53, frames=17, frameMs=60
