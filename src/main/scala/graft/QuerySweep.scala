@@ -13,8 +13,8 @@ import org.apache.spark.sql.SparkSession
   * site and ignore the dir argument entirely, so a "ratio" for them would
   * read ~1.0 by construction and bias the sweep median toward 1 while
   * claiming scale coverage the run does not have. The crawl loop's scale
-  * evidence is `graft.CrawlBench` (10× pages → ~2× wall, flat epochs — see
-  * BENCH.md).
+  * evidence is perfbench's `crawl_wide` workload (`perfbench/run.py
+  * --workload crawl_wide`; the historical CrawlBench table is in BENCH.md).
   *
   * The replica (SfSweep.buildReplica) spans all ten tables with per-replica
   * key offsets that keep joins replica-local, so a 10× run measures data
@@ -47,7 +47,7 @@ object QuerySweep {
     s.sparkContext.setLogLevel("ERROR")
     SfSweep.buildReplica(s, src, dst)
     val skipped = SparkEntry.queries.keys.filter(_.startsWith("crawl_")).toSeq.sorted
-    println(s"""{"skipped_dir_independent":${skipped.map(Verify.jsonStr).mkString("[", ",", "]")},"why":"fixed synthetic-site crawl, ignores the sf dir; scale evidence = CrawlBench"}""")
+    println(s"""{"skipped_dir_independent":${skipped.map(Verify.jsonStr).mkString("[", ",", "]")},"why":"fixed synthetic-site crawl, ignores the sf dir; scale evidence = perfbench crawl_wide"}""")
     val rows = SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (name, _) => name.startsWith("crawl_") }
       .filter { case (name, _) => only.forall(_.contains(name)) }

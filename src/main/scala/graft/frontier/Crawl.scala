@@ -4,8 +4,9 @@ import graft.core._
 import graft.functions.Scorers
 import graft.politeness.Robots
 import graft.scrape.Scrape
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -26,10 +27,14 @@ import java.nio.file.{Files, Paths}
   *     → first-wins per url_hash → frontier(t+1)     [snapshot committed]
   *
   * Snapshot protocol (Iceberg-style semantics on plain parquet — SURVEY.md
-  * §7.3): every epoch writes frontier/seen/docs/visits/metrics dirs, then an
+  * §7.3): every epoch writes frontier/seen/docs/visits dirs, then an
   * atomically-renamed `manifest_<epoch>.json` carrying per-partition lineage
-  * (rows and words per scraped partition) + fetch metrics. A killed job
-  * resumes from `max(committed epoch)` with an identical URL-seen set:
+  * (rows and words per scraped partition) + fetch metrics. The manifest is
+  * the only commit record: snapshot tables are written without Hadoop's
+  * `_SUCCESS` marker, each as a data-sized number of files (one per
+  * [[Crawl.RowsPerFile]] queued rows, so a small epoch writes one file per
+  * table), and the lineage is an `Observation` on the docs write. A killed
+  * job resumes from `max(committed epoch)` with an identical URL-seen set:
   * nothing below a manifest is ever visible to a reader (commit-then-advance,
   * §7.4.6).
   *
@@ -122,6 +127,61 @@ object Crawl {
   private val frontierSchema = org.apache.spark.sql.Encoders.product[FrontierEntry].schema
   private val seenSchema = org.apache.spark.sql.types.StructType.fromDDL("url_hash BIGINT")
 
+  /** Queued rows per snapshot file. A docs row (spans, links, title) is
+    * ~0.1-0.6 KB of snappy parquet on the synthetic sites, so ~10,000 rows
+    * keep a docs file at a few MB: one file per table for a small epoch, and
+    * a large one still writes in parallel. */
+  private[graft] val RowsPerFile = 10000L
+
+  /** Files per snapshot table for an epoch of `queued` rows:
+    * `ceil(queued / RowsPerFile)`, clamped to `1..maxParts`. */
+  private[graft] def snapshotParts(queued: Long, maxParts: Int): Int =
+    if (queued <= RowsPerFile) 1
+    else math.min((queued - 1) / RowsPerFile + 1, maxParts.toLong).toInt
+
+  /** The one snapshot writer: `parts` files, overwriting `path`, and no
+    * `_SUCCESS` marker (the manifest is the commit record; nothing reads the
+    * markers). The coalesce merges the write's tasks only: a cached plan
+    * upstream keeps its own partitioning, whichever job computes it. */
+  private def writeSnapshot(df: Dataset[_], parts: Int, path: String): Unit =
+    df.coalesce(parts).write.mode(SaveMode.Overwrite)
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .parquet(path)
+
+  /** Per-partition lineage as one aggregate an `Observation` can carry, over
+    * (pid, fetch_ok, n_words): partition `pid` owns slots `4 * pid` (rows,
+    * words of fetched pages) and `4 * pid + 2` (rows, words of failed ones). */
+  private object LineageAgg extends Aggregator[(Int, Boolean, Int), Array[Long], Array[Long]] {
+    def zero: Array[Long] = Array.emptyLongArray
+    private def grow(a: Array[Long], n: Int) =
+      if (a.length >= n) a else java.util.Arrays.copyOf(a, n)
+    def reduce(b: Array[Long], in: (Int, Boolean, Int)): Array[Long] = {
+      val (pid, ok, words) = in
+      val a = grow(b, 4 * (pid + 1))
+      val i = 4 * pid + (if (ok) 0 else 2)
+      a(i) += 1; a(i + 1) += words; a
+    }
+    def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
+      val a = grow(x, y.length)
+      y.indices.foreach(i => a(i) += y(i)); a
+    }
+    def finish(b: Array[Long]): Array[Long] = b
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+
+    val column: Column = udaf(this, Encoders.tuple(Encoders.scalaInt, Encoders.scalaBoolean,
+      Encoders.scalaInt))(col("pid"), col("fetch_ok"), col("n_words"))
+
+    /** The observed slots as manifest rows: by pid, fetched before failed,
+      * empty sides omitted. */
+    def rows(slots: scala.collection.Seq[Long]): Seq[PartitionLineage] =
+      for {
+        pid <- 0 until slots.length / 4
+        ok <- Seq(true, false)
+        i = 4 * pid + (if (ok) 0 else 2) if slots(i) > 0
+      } yield PartitionLineage(pid, ok, slots(i), slots(i + 1))
+  }
+
   /** The URL-seen set as the union of the seen deltas `base..upTo`. */
   private def readSeen(spark: SparkSession, runDir: String, base: Int, upTo: Int): DataFrame =
     spark.read.schema(seenSchema)
@@ -157,8 +217,9 @@ object Crawl {
     * first-wins dedup per url_hash (source order: sitemap < cc, then url —
     * the seeder's sequential-union-with-shared-set, async_url_seeder.py:
     * 328-359). Seed path = 4-hex rank in the deduped, url-sorted list.
+    * Returns the entries and their count.
     */
-  def seedFrontier(spark: SparkSession, seeds: DataFrame): Dataset[FrontierEntry] = {
+  def seedFrontier(spark: SparkSession, seeds: DataFrame): (Dataset[FrontierEntry], Long) = {
     import spark.implicits._
     val canon = udf((u: String) => Urls.canonicalizeDeep(u, ""))
     val valid = udf((u: String) => u != null && Urls.isValidCrawlUrl(u) && !Urls.isNonsense(u))
@@ -172,16 +233,19 @@ object Crawl {
       .where(col("rk") === 1)
     // seed ordering: dense url-sorted rank via the two-pass scheme (range
     // partition on the sort key, then per-partition index + partition-offset
-    // prefix sum = `zipWithIndex` over a sorted RDD) — a global dense rank
-    // with NO single-partition window, deterministic because the sort key is
-    // unique after the first-wins dedup.
-    base.select(col("url_hash"), col("curl")).orderBy("curl")
-      .as[(Long, String)].rdd.zipWithIndex()
-      .map { case ((h, u), i) =>
-        FrontierEntry(h, u, Urls.host(u), 0, 0.5, 0.0, "", f"$i%04x",
+    // prefix sum, as `zipWithIndex` over a sorted RDD does) — a global dense
+    // rank with NO single-partition window, deterministic because the sort
+    // key is unique after the first-wins dedup. The size pass also yields the
+    // seed count.
+    val sorted = base.select(col("url_hash"), col("curl")).orderBy("curl").as[(Long, String)].rdd
+    val offsets = sorted.mapPartitions(it => Iterator(it.size.toLong)).collect().scanLeft(0L)(_ + _)
+    val entries = sorted.mapPartitionsWithIndex { (p, it) =>
+      it.zipWithIndex.map { case ((h, u), i) =>
+        FrontierEntry(h, u, Urls.host(u), 0, 0.5, 0.0, "", f"${offsets(p) + i}%04x",
           0, 0, 0, CrawlStatus.Queued)
       }
-      .toDS()
+    }.toDS()
+    (entries, offsets.last)
   }
 
   // ---- the epoch loop -------------------------------------------------------
@@ -197,23 +261,23 @@ object Crawl {
     import spark.implicits._
     Files.createDirectories(Paths.get(runDir))
     val store = SeenStore.forConfig(cfg.seenFilter, cfg.bloomFpp, cfg.cuckooShards)
+    val maxParts = spark.sessionState.conf.numShufflePartitions
 
     val start = lastCommittedEpoch(runDir)
     if (start < 0) {
-      // one seedFrontier pass, cached: the frontier write observes the seed
-      // count, and seen/epoch=0 and its filter read the same cache
-      val f0 = seedFrontier(spark, seeds).cache()
-      val seedObs = Observation()
-      f0.observe(seedObs, count(lit(1)).as("n"))
-        .write.mode(SaveMode.Overwrite).parquet(dir(runDir, 0, "frontier"))
-      val seedCount = seedObs.get("n").asInstanceOf[Long]
+      // one seedFrontier pass, cached: the frontier write, seen/epoch=0 and
+      // its filter read the same cache, sized by the seed count it returns
+      val (seeded, seedCount) = seedFrontier(spark, seeds)
+      val f0 = seeded.cache()
+      val parts = snapshotParts(seedCount, maxParts)
+      writeSnapshot(f0, parts, dir(runDir, 0, "frontier"))
       // seen is a DELTA log: seen/epoch=k holds only the hashes first seen at
       // epoch k (epoch 0 = the seeds — delta AND full set at once). Readers
       // union deltas from the last compaction point; nothing ever rewrites
       // history (O(delta) commit I/O per epoch, not O(seen)). No distinct:
       // url_hash is unique after seedFrontier's first-wins dedup.
       val s0 = f0.select("url_hash")
-      s0.write.mode(SaveMode.Overwrite).parquet(dir(runDir, 0, "seen"))
+      writeSnapshot(s0, parts, dir(runDir, 0, "seen"))
       store.save(store.build(spark, s0, "url_hash", seedCount), store.path(runDir, 0))
       f0.unpersist()
       EpochManifest.commit(runDir, EpochManifest(0, cfg.strategy, seenBase = 0,
@@ -278,6 +342,9 @@ object Crawl {
 
       if (queuedCount == 0 || total(_.fetched) >= cfg.maxPages) { done = true }
       else {
+        // every snapshot table this epoch writes: one file per RowsPerFile
+        // queued rows
+        val parts = snapshotParts(queuedCount, maxParts)
         // ---- admission: politeness budget + fairness aging + strategy order
         val aged = queued.withColumn("wait", lit(epoch) - col("enqueue_epoch"))
           .withColumn("priority",
@@ -336,8 +403,7 @@ object Crawl {
         // (CPU-heavy) scrape map; the join key stays url_hash so the page
         // store join itself is a plain shuffled hash join.
         val salted = allowed.repartition(
-          spark.sessionState.conf.numShufflePartitions,
-          col("host"), pmod(col("url_hash"), lit(cfg.saltBuckets)))
+          maxParts, col("host"), pmod(col("url_hash"), lit(cfg.saltBuckets)))
         val fetched = salted.join(
           pages.select(col("url_hash"), col("html"), col("status_code")),
           Seq("url_hash"), "left")
@@ -355,37 +421,34 @@ object Crawl {
           }
           .toDF("url_hash", "url", "host", "depth", "score", "path",
             "fetch_ok", "status_code", "spans", "links", "title", "n_words")
+          // the lineage pid: the index of the scrape map's own partition,
+          // fixed in the cache whichever job (a coalesced write included)
+          // computes it
+          .withColumn("pid", spark_partition_id())
           .cache()
 
-        // ---- phase A: ALL consumers of the scraped cache — the lineage
-        // pass, docs write, visits write, politeness evolution — launch as
-        // CONCURRENT Spark jobs. The BlockManager's per-partition cache locks
-        // make the concurrent jobs co-materialize the cache (different
-        // partitions in parallel, each computed exactly once); they write
-        // disjoint outputs, so overlapping hides the fixed per-job latency
-        // that dominates small epochs and costs nothing on a real cluster
-        // (concurrent jobs share the scheduler). No count job runs: the
-        // fetched/failed counts are the lineage rows summed, and the
+        // ---- phase A: ALL consumers of the scraped cache — docs write,
+        // visits write, politeness evolution — launch as CONCURRENT Spark
+        // jobs. The BlockManager's per-partition cache locks make the
+        // concurrent jobs co-materialize the cache (different partitions in
+        // parallel, each computed exactly once); they write disjoint outputs,
+        // so overlapping hides the fixed per-job latency that dominates small
+        // epochs and costs nothing on a real cluster (concurrent jobs share
+        // the scheduler). No count or collect job runs: the lineage is
+        // observed on the docs write (before its fetch_ok filter, so failed
+        // pages count too), fetched/failed are its rows summed, and the
         // robots-blocked count is observed on the visits write.
         import scala.concurrent.{Await, Future}
         import scala.concurrent.duration.Duration
         implicit val ec: scala.concurrent.ExecutionContext = Crawl.epochEc
-        // lineage per scraped-cache partition: one partition-local pass
-        val fLineage = Future {
-          scraped.select("fetch_ok", "n_words").as[(Boolean, Int)].mapPartitions { it =>
-            val rows, words = new Array[Long](2) // index 1 = fetch_ok
-            it.foreach { case (ok, w) => val i = if (ok) 1 else 0; rows(i) += 1; words(i) += w }
-            val pid = org.apache.spark.TaskContext.getPartitionId()
-            Iterator(1, 0).filter(rows(_) > 0)
-              .map(i => PartitionLineage(pid, i == 1, rows(i), words(i)))
-          }.collect()
-        }
-
+        val lineageObs = Observation()
         val fDocs = Future {
-          scraped.where(col("fetch_ok"))
+          writeSnapshot(scraped.observe(lineageObs, LineageAgg.column.as("slots"))
+            .where(col("fetch_ok"))
             .select(col("url").as("doc_id"), col("spans"), col("links"),
-              col("title"), col("n_words"), lit(epoch).as("epoch"))
-            .write.mode(SaveMode.Overwrite).parquet(dir(runDir, epoch, "docs"))
+              col("title"), col("n_words"), lit(epoch).as("epoch")),
+            parts, dir(runDir, epoch, "docs"))
+          LineageAgg.rows(lineageObs.get("slots").asInstanceOf[scala.collection.Seq[Long]])
         }
         // visits carry the full sort key (priority, score, depth, path) but
         // NO materialized rank: visit order is fully determined by the key,
@@ -393,11 +456,11 @@ object Crawl {
         // runs a partitionless global-order window.
         val blockedObs = Observation()
         val fVisits = Future {
-          gated.observe(blockedObs, count(when(!col("robots_ok"), true)).as("n"))
+          writeSnapshot(gated.observe(blockedObs, count(when(!col("robots_ok"), true)).as("n"))
             .where(col("robots_ok"))
             .select(col("url"), col("depth"), col("score"), col("priority"),
-              col("path"), lit(epoch).as("epoch"))
-            .write.mode(SaveMode.Overwrite).parquet(dir(runDir, epoch, "visits"))
+              col("path"), lit(epoch).as("epoch")),
+            parts, dir(runDir, epoch, "visits"))
           blockedObs.get("n").asInstanceOf[Long]
         }
         // politeness state evolution (deterministic backoff per epoch)
@@ -409,10 +472,10 @@ object Crawl {
                 org.apache.spark.sql.types.StructField("host", org.apache.spark.sql.types.StringType),
                 org.apache.spark.sql.types.StructField("current_delay", org.apache.spark.sql.types.DoubleType),
                 org.apache.spark.sql.types.StructField("fail_count", org.apache.spark.sql.types.IntegerType)))))
-          graft.politeness.DomainState
+          writeSnapshot(graft.politeness.DomainState
             .evolve(st0.select("host", "current_delay", "fail_count"),
-              scraped.select(col("host"), col("status_code")))
-            .write.mode(SaveMode.Overwrite).parquet(dir(runDir, epoch + 1, "domain_state"))
+              scraped.select(col("host"), col("status_code"))),
+            parts, dir(runDir, epoch + 1, "domain_state"))
         }
 
         // ---- link-head enrichment (config-gated; a phase-A consumer of the
@@ -467,10 +530,9 @@ object Crawl {
                   .otherwise(lit("")).as("head"))
             val (enriched, newStore) =
               graft.sources.LinkPreview.enrich(lrows, store0, fetchHeads, lp)
-            enriched.withColumn("epoch", lit(epoch))
-              .write.mode(SaveMode.Overwrite).parquet(dir(runDir, epoch, "links"))
-            newStore.write.mode(SaveMode.Overwrite)
-              .parquet(dir(runDir, epoch + 1, "head_store"))
+            writeSnapshot(enriched.withColumn("epoch", lit(epoch)), parts,
+              dir(runDir, epoch, "links"))
+            writeSnapshot(newStore, parts, dir(runDir, epoch + 1, "head_store"))
           }
         }
 
@@ -531,11 +593,11 @@ object Crawl {
         // seen on DISCOVERY, bfs_strategy.py:153.
         val nextEpoch = epoch + 1
         val fFrontier = Future {
-          deferred
+          writeSnapshot(deferred
             .select(newEntries.columns.map(col): _*)
             .withColumn("epoch", lit(nextEpoch))
-            .unionByName(newEntries)
-            .write.mode(SaveMode.Overwrite).parquet(dir(runDir, nextEpoch, "frontier"))
+            .unionByName(newEntries),
+            parts, dir(runDir, nextEpoch, "frontier"))
         }
         // seen commit is a DELTA: only this epoch's first-seen hashes are
         // written (disjoint from history by construction — exact anti-join
@@ -548,7 +610,7 @@ object Crawl {
         val fNew = Future {
           val delta = newEntries.select("url_hash").observe(newObs, count(lit(1)).as("n"))
           val out = if (compacting) seen.unionByName(delta) else delta
-          out.write.mode(SaveMode.Overwrite).parquet(dir(runDir, nextEpoch, "seen"))
+          writeSnapshot(out, parts, dir(runDir, nextEpoch, "seen"))
           newObs.get("n").asInstanceOf[Long]
         }
         // the filter needs the exact delta count for sizing → chains on the
@@ -582,11 +644,10 @@ object Crawl {
           }
 
         // ---- join all concurrent jobs, then the atomic commit
-        val lineageRows = Await.result(fLineage, Duration.Inf)
+        val lineageRows = Await.result(fDocs, Duration.Inf)
         val nNew = Await.result(fNew, Duration.Inf)
         val nBlocked = Await.result(fVisits, Duration.Inf)
         val (newSeenBase, newFilters) = Await.result(fSeen, Duration.Inf)
-        Await.result(fDocs, Duration.Inf)
         Await.result(fState, Duration.Inf)
         Await.result(fPreview, Duration.Inf)
         Await.result(fFrontier, Duration.Inf)
@@ -603,7 +664,7 @@ object Crawl {
         val m = EpochManifest(nextEpoch, cfg.strategy, seenBase, seenCount, Some(queuedCount),
           fetched = Some(nFetched), failed = Some(nFailed), skippedRobots = Some(nBlocked),
           newFrontier = Some(nNew), wallMs = Some(System.currentTimeMillis() - t0),
-          partitions = Some(lineageRows.sortBy(_.pid).toSeq))
+          partitions = Some(lineageRows))
         EpochManifest.commit(runDir, m)
         manifests :+= m
 
@@ -653,8 +714,8 @@ object Crawl {
   def expireEpoch(spark: SparkSession, runDir: String, expired: Int): Long = {
     val last = lastCommittedEpoch(runDir)
     require(last >= 0, s"no committed crawl under $runDir")
-    require(Files.exists(EpochManifest.path(runDir, expired)),
-      s"epoch $expired was never committed")
+    val expiredManifest = EpochManifest.read(runDir, expired)
+    require(expiredManifest.nonEmpty, s"epoch $expired was never committed")
     val head = EpochManifest.read(runDir, last).get
     val fdir = dir(runDir, expired, "frontier")
     require(Files.isDirectory(Paths.get(fdir)), s"no frontier snapshot at epoch $expired")
@@ -683,12 +744,18 @@ object Crawl {
         Window.partitionBy("url_hash")
           .orderBy(col("enqueue_epoch"), col("retry_count"), col("path"))))
       .where(col("rk") === 1).drop("rk")
-    merged.write.mode(SaveMode.Overwrite).parquet(dir(runDir, nextEpoch, "frontier"))
-    val n = spark.read.schema(frontierSchema)
-      .parquet(dir(runDir, nextEpoch, "frontier")).count()
+    // sized by the rows the two frontier snapshots hold (every row of a
+    // frontier snapshot is queued; a bootstrap manifest without
+    // frontier_queued holds seen_total seeds)
+    def queuedAt(m: EpochManifest) = m.frontierQueued.getOrElse(m.seenTotal)
+    val parts = snapshotParts(queuedAt(expiredManifest.get) + queuedAt(head),
+      spark.sessionState.conf.numShufflePartitions)
+    val requeuedObs = Observation()
+    writeSnapshot(merged.observe(requeuedObs, count(lit(1)).as("n")), parts,
+      dir(runDir, nextEpoch, "frontier"))
+    val n = requeuedObs.get("n").asInstanceOf[Long]
     // empty seen delta for the new epoch (nothing newly seen by expiry)
-    requeue.limit(0).select("url_hash")
-      .write.mode(SaveMode.Overwrite).parquet(dir(runDir, nextEpoch, "seen"))
+    writeSnapshot(requeue.limit(0).select("url_hash"), 1, dir(runDir, nextEpoch, "seen"))
     val store = SeenStore.detect(runDir, last)
     store.save(store.empty(), store.path(runDir, nextEpoch))
     // deletable-filter path: evict the expired delta's hashes from the

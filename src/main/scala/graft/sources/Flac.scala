@@ -14,13 +14,15 @@ import scala.collection.mutable.ArrayBuffer
   * principles in-sandbox: the encoder twin generates the corpus forward
   * and losslessness makes decoded samples bit-exact.
   *
-  * Decoder scope: native FLAC streams, 1-8 independent channels or the
-  * three stereo decorrelations (left/side, right/side, mid/side), 4-32 bit
-  * samples, CONSTANT / VERBATIM / FIXED 0-4 / LPC subframes, both Rice
-  * methods incl. the escape-to-raw partition form, wasted bits. Out of
-  * scope (None, never a guess): Ogg-encapsulated FLAC, variable-blocksize
-  * strategy streams. CRC mismatches fail the frame rather than emitting
-  * wrong audio.
+  * Decoder scope: native FLAC streams, 1-8 independent channels at 4-32 bit
+  * samples or the three stereo decorrelations (left/side, right/side,
+  * mid/side) at 4-31 bit samples, CONSTANT / VERBATIM / FIXED 0-4 / LPC
+  * subframes, both Rice methods incl. the escape-to-raw partition form,
+  * wasted bits. A decorrelated side channel carries one bit more than the
+  * samples, and a 33-bit subframe does not fit the Int sample storage, so a
+  * 32-bit decorrelated frame is refused. Out of scope (None, never a guess):
+  * Ogg-encapsulated FLAC, variable-blocksize strategy streams. CRC
+  * mismatches fail the frame rather than emitting wrong audio.
   */
 object Flac {
 

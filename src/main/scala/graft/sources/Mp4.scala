@@ -81,6 +81,7 @@ object Mp4 {
     val (mvhdF, mvhdT) = find(moov, "mvhd").getOrElse(return None)
     if (mvhdT - mvhdF < 20) return None
     val mvVer = data(mvhdF) & 0xff
+    if (mvhdT - mvhdF < fullHeadBytes(mvVer)) return None
     val (mvTimescale, mvDuration) =
       if (mvVer == 1) (u32(data, mvhdF + 20), u64(data, mvhdF + 24))
       else (u32(data, mvhdF + 12), u32(data, mvhdF + 16))
@@ -91,6 +92,11 @@ object Mp4 {
     }
     Some(Movie(major, movieMs, tracks))
   }
+
+  /** Bytes of an `mvhd`/`mdhd` payload up to the end of its duration:
+    * version 0 ends a 32-bit duration at byte 20, version 1 a 64-bit one at
+    * byte 32. */
+  private def fullHeadBytes(version: Int): Int = if (version == 1) 32 else 20
 
   /** A duration of `ticks` at `timescale` ticks per second, in ms; None for
     * a 64-bit duration (unsigned on disk, so a negative Long here) whose
@@ -105,6 +111,7 @@ object Mp4 {
     val (mdhdF, mdhdT) = find(mdia, "mdhd").getOrElse(return None)
     if (mdhdT - mdhdF < 20) return None
     val ver = data(mdhdF) & 0xff
+    if (mdhdT - mdhdF < fullHeadBytes(ver)) return None
     val (timescale, duration) =
       if (ver == 1) (u32(data, mdhdF + 20), u64(data, mdhdF + 24))
       else (u32(data, mdhdF + 12), u32(data, mdhdF + 16))

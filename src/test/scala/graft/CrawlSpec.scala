@@ -6,7 +6,7 @@ import graft.core._
 import graft.frontier.{Crawl, CrawlConfig, CrawlSummary, EpochManifest, PartitionLineage}
 import graft.politeness.Robots
 import graft.scrape.Scrape
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 
 /** End-to-end frontier tests against a driver-side oracle implementing the
   * SAME deterministic ordering spec (SURVEY.md §5.3: the reference's stream
@@ -69,8 +69,37 @@ class CrawlSpec extends AnyFunSuite {
       assert(m.fetched.get + m.failed.get == admitted.size - blocked, s"visited@$k")
       assert(m.seenBase < k, s"epoch $k compacted; use a shorter crawl")
       assert(m.newFrontier.contains(snap("seen", k).count()), s"new_frontier@$k")
+      // the lineage observed on the docs write: its rows sum to the fetch
+      // counts, and its fetched words to the epoch's docs
+      val (ok, notOk) = m.partitions.getOrElse(fail(s"no lineage@$k")).partition(_.fetchOk)
+      assert(m.fetched.contains(ok.map(_.rows).sum), s"lineage fetched@$k")
+      assert(m.failed.contains(notOk.map(_.rows).sum), s"lineage failed@$k")
+      val docWords = snap("docs", k - 1).agg(coalesce(sum("n_words"), lit(0L))).as[Long].head()
+      assert(ok.map(_.words).sum == docWords, s"lineage words@$k")
     }
     assert(summary.seen == Crawl.seenSet(spark, runDir).count())
+  }
+
+  private def ls(dir: Path): Seq[Path] = {
+    val s = Files.list(dir)
+    try { import scala.jdk.CollectionConverters._; s.iterator().asScala.toSeq.sorted }
+    finally s.close()
+  }
+
+  /** `<table>/epoch=<k>` dirs of every snapshot table under `runDir`. */
+  private def tableDirs(runDir: String): Seq[Path] =
+    ls(Paths.get(runDir)).filter(Files.isDirectory(_)).flatMap(ls)
+
+  /** Every snapshot table dir of a small run holds one data file and no
+    * `_SUCCESS` marker. */
+  private def assertOneFilePerTable(runDir: String): Unit = {
+    val dirs = tableDirs(runDir)
+    assert(dirs.nonEmpty)
+    dirs.foreach { d =>
+      val names = ls(d).map(_.getFileName.toString)
+      assert(names.count(_.startsWith("part-")) == 1, s"$d: $names")
+      assert(!names.exists(_.contains("_SUCCESS")), s"$d: $names")
+    }
   }
 
   // ---- tests ---------------------------------------------------------------
@@ -146,6 +175,9 @@ class CrawlSpec extends AnyFunSuite {
     assert(lastStore.select("url").distinct().count() == lastStore.count(),
       "head store must stay url-unique")
     lastStore.unpersist()
+    assert(tableDirs(runDir).map(_.getParent.getFileName.toString).toSet ==
+      Set("frontier", "seen", "docs", "visits", "links", "head_store"))
+    assertOneFilePerTable(runDir)
   }
 
   test("politeness: per-(epoch, host) visits never exceed the budget") {
@@ -277,6 +309,7 @@ class CrawlSpec extends AnyFunSuite {
     // and no crawl growth beyond them (frontier drained again)
     assert(Crawl.visits(spark, runDir).count() ==
       Crawl.visits(spark, runDir, asOf = epochsBefore).count() + expectVisit.size)
+    assertOneFilePerTable(runDir)
   }
 
   test("custom linkScorer drives frontier scores inside the expansion plan") {
@@ -422,6 +455,8 @@ class CrawlSpec extends AnyFunSuite {
     }
     // healthy host unaffected: crawls its whole allowed tree
     assert(visits.count(v => hostU(v._2) == "site0.com") > 10)
+    assert(Files.isDirectory(Paths.get(s"$runDir/domain_state")))
+    assertOneFilePerTable(runDir)
     // aborted host never completes its site
     val site1Visited = visits.count(v => hostU(v._2) == "site1.com")
     assert(site1Visited < Synth.pagesPerHost(site))
@@ -472,8 +507,61 @@ class CrawlSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     val seen = actions.asScala.toSeq
     assert(seen.nonEmpty)
-    assert(!seen.contains("count"), s"count actions in the crawl: ${seen.groupBy(identity).view.mapValues(_.size).toMap}")
+    val byAction = seen.groupBy(identity).view.mapValues(_.size).toMap
+    assert(!seen.contains("count"), s"count actions in the crawl: $byAction")
+    assert(!seen.contains("collect"), s"collect actions in the crawl: $byAction")
     assertManifestsMatchSnapshots(runDir, summary)
+    assertOneFilePerTable(runDir)
+  }
+
+  test("snapshotParts: one file per RowsPerFile queued rows, clamped to the shuffle partitions") {
+    val r = Crawl.RowsPerFile
+    assert(Crawl.snapshotParts(0, 4) == 1)
+    assert(Crawl.snapshotParts(1, 4) == 1)
+    assert(Crawl.snapshotParts(r, 4) == 1)
+    assert(Crawl.snapshotParts(r + 1, 4) == 2)
+    assert(Crawl.snapshotParts(4 * r, 4) == 4)
+    assert(Crawl.snapshotParts(4 * r + 1, 4) == 4)
+    assert(Crawl.snapshotParts(Long.MaxValue, 200) == 200)
+  }
+
+  test("an epoch of more than RowsPerFile queued rows writes several files; equals the oracle") {
+    // one home-page seed per host: epoch 0 queues nHosts rows
+    val big = Synth.SiteCfg(seed = 11L, nHosts = Crawl.RowsPerFile.toInt + 40, cats = 1,
+      subs = 1, prods = 1)
+    val cfg = CrawlConfig(strategy = "bfs", hostBudget = 1, maxEpochs = 1)
+    val pages = spark.range(Synth.pageCount(big)).map(i => Synth.pageRecAt(big, i)).toDF()
+    val runDir = freshDir("parts")
+    val summary = Crawl.run(spark, Synth.seeds(big).toDF(), pages, Synth.robots(big).toDF(),
+      runDir, cfg)
+
+    val oracle = graft.oracle.SeqOracle.crawl(big, cfg)
+    val visits = Crawl.visits(spark, runDir).select("epoch", "visit_rank", "url", "depth")
+      .as[(Int, Int, String, Int)].collect().toSeq
+    assert(visits == oracle.visits)
+    assert(summary.fetched == oracle.crawledDocs.size)
+    assert(summary.seen == oracle.seen.size)
+    assert(Crawl.seenSet(spark, runDir).count() == oracle.seen.size)
+
+    val parts = Crawl.snapshotParts(manifest(runDir, 0).frontierQueued.get,
+      spark.sessionState.conf.numShufflePartitions)
+    assert(parts == 2)
+    // the crawl epoch's tables; the bootstrap tables may hold fewer files
+    // when the seed sort's output has fewer partitions than that
+    def files(what: String, e: Int) =
+      ls(Paths.get(f"$runDir/$what/epoch=$e%04d")).map(_.getFileName.toString)
+        .count(_.startsWith("part-"))
+    Seq("docs" -> 0, "visits" -> 0, "frontier" -> 1, "seen" -> 1).foreach { case (what, e) =>
+      assert(files(what, e) == parts, s"$what@$e")
+    }
+    Seq("frontier", "seen").foreach(what => assert(files(what, 0) <= parts, s"$what@0"))
+    // the writes coalesce, the scrape does not: one lineage row per scraped
+    // partition, summing to the epoch's counts
+    val m = manifest(runDir, 1)
+    val lineage = m.partitions.get
+    assert(lineage.map(_.pid).distinct.size > parts, lineage)
+    assert(lineage.filter(_.fetchOk).map(_.rows).sum == m.fetched.get)
+    assert(lineage.filterNot(_.fetchOk).map(_.rows).sum == m.failed.get)
   }
 
   test("resume from a bootstrap manifest without frontier_queued matches an uninterrupted run") {

@@ -64,6 +64,32 @@ class Mp4Spec extends AnyFunSuite {
     out
   }
 
+  /** `v1Duration(ok, typ, 5000)` with the `typ` box cut to 24 payload
+    * bytes: the 64-bit duration (bytes 24-32) is gone, and the next sibling
+    * box's header stands where it was. */
+  private def truncatedV1(ok: Array[Byte], typ: String): Array[Byte] = {
+    val v1 = v1Duration(ok, typ, 5000)
+    def start(b: Array[Byte], fourcc: String) = b.indexOfSlice(fourcc.getBytes("US-ASCII")) - 4
+    val at = start(v1, typ)
+    val size = java.nio.ByteBuffer.wrap(v1).getInt(at)
+    val cut = size - (8 + 24)
+    val out = v1.take(at + 8 + 24) ++ v1.drop(at + size)
+    val b = java.nio.ByteBuffer.wrap(out)
+    b.putInt(at, 8 + 24)
+    val enclosing = if (typ == "mvhd") Seq("moov") else Seq("moov", "trak", "mdia")
+    enclosing.map(start(out, _)).foreach(i => b.putInt(i, b.getInt(i) - cut))
+    out
+  }
+
+  test("truncated v1 mvhd/mdhd boxes fail closed instead of reading the next box") {
+    val ok = Mp4.encodeVideo(100, 80, 5, 40)
+    // no movie: a v1 mvhd must hold its duration
+    assert(Mp4.parse(truncatedV1(ok, "mvhd")).isEmpty)
+    // no track: the movie parses, the track with the short mdhd does not
+    val m = Mp4.parse(truncatedV1(ok, "mdhd"))
+    assert(m.map(_.durationMs).contains(200L) && m.get.tracks.isEmpty)
+  }
+
   test("64-bit mvhd/mdhd durations whose ms value overflows fail closed") {
     val ok = Mp4.encodeVideo(100, 80, 5, 40) // millisecond timescale
     val hostile = Long.MaxValue / 999 // * 1000 wraps negative
