@@ -74,13 +74,6 @@ object Urls {
   def host(url: String): String =
     if (url == null) "" else parse(url).netloc.toLowerCase
 
-  /** Hostname without port. */
-  def hostname(url: String): String = {
-    val h = host(url)
-    val c = h.indexOf(':')
-    if (c >= 0) h.substring(0, c) else h
-  }
-
   private val twoLevelTlds = Set("co", "com", "org", "gov", "edu", "net",
     "mil", "int", "ac", "ad", "ae", "af", "ag")
 

@@ -81,10 +81,6 @@ object Xxh64 {
     fmix(hash)
   }
 
-  /** Deterministic double in [0, 1) from (seed, ordinal) — replaces RNG. */
-  def unitDouble(seed: Long, ordinal: Long): Double =
-    ((hashLong(ordinal, seed) >>> 11).toDouble) / (1L << 53).toDouble
-
   /** Deterministic int in [0, n) from (seed, ordinal). */
   def intBelow(seed: Long, ordinal: Long, n: Int): Int =
     ((hashLong(ordinal, seed) >>> 1) % n).toInt

@@ -9,10 +9,13 @@ import java.nio.file.{Files, Path}
   * frontier, /root/reference/crawl4ai/deep_crawling/crazy.py:102-165,
   * re-expressed on Spark's sketch library).
   *
-  * Exact dedup stays a `left_anti` join on `url_hash`; the bloom filter's job
-  * is to keep DEFINITELY-NEW candidates out of that join's shuffle: at
-  * 10^10-URL scale most discovered links are new, so the anti-join only
-  * shuffles the (small) maybe-seen fraction plus false positives (~fpp).
+  * Exact dedup stays equal to a `left_anti` join on `url_hash`; the bloom
+  * filter's job is to shrink the set of keys the exact probe looks up: at
+  * 10^10-URL scale most discovered links are new, so only the (small)
+  * maybe-seen fraction plus false positives (~fpp) is probed. That slice is
+  * broadcast into a semi-join over the seen files, so the seen set is scanned
+  * map-side and never exchanged; only its hits move (see
+  * [[SeenFilters.antiJoinTracked]]).
   *
   * Blooms are INCREMENTAL: each epoch builds a bloom over that epoch's seen
   * DELTA only (never re-aggregating history), and the check consults the
@@ -20,7 +23,7 @@ import java.nio.file.{Files, Path}
   * compacts the deltas and replaces the vector with one full-set bloom, which
   * bounds both the vector length and the effective false-positive rate
   * (k deltas at fpp each ≈ k·fpp combined — acceptable for a pre-filter whose
-  * misses only cost anti-join shuffle volume, never correctness).
+  * misses only cost exact-probe volume, never correctness).
   */
 object BloomSeen {
 
@@ -60,8 +63,9 @@ object BloomSeen {
   }
 
   /** Bloom-accelerated anti-join: rows of `candidates` whose `hashCol` is not
-    * present in `seen` — equivalent to a plain left_anti join, but only the
-    * maybe-seen slice shuffles. Delegates to [[SeenFilters.antiJoinTracked]].
+    * present in `seen` — equivalent to a plain left_anti join, but `seen` is
+    * only probed for the maybe-seen keys and never shuffled. Delegates to
+    * [[SeenFilters.antiJoinTracked]].
     */
   def antiJoin(spark: SparkSession, candidates: DataFrame, seen: DataFrame,
                hashCol: String, blooms: Seq[BloomFilter]): DataFrame =

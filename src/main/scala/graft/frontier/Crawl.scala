@@ -23,7 +23,8 @@ import java.nio.file.{Files, Paths}
   *     → fetch-join against the page store on url_hash
   *     → scrape map (HTML → spans + links)           [docs written]
   *     → explode(links) → validity/nonsense filters → score
-  *     → bloom pre-filter + left_anti(seen)          [dedup]
+  *     → bloom pre-filter → seen ⋉ maybe-seen (broadcast; seen scanned,
+  *       never exchanged) → left_anti(hits)          [dedup]
   *     → first-wins per url_hash → frontier(t+1)     [snapshot committed]
   *
   * Snapshot protocol (Iceberg-style semantics on plain parquet — SURVEY.md

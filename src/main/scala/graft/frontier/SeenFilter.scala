@@ -7,8 +7,9 @@ import java.nio.file.{Files, Path, Paths}
 
 /** One probabilistic membership pre-filter over url-hash keys — the thing the
   * crawl loop consults BEFORE the exact anti-join so definitely-new candidates
-  * never shuffle. Implementations: [[BloomDelta]] (append-only, smallest) and
-  * [[ShardedCuckoo]] (deletable — supports TTL eviction without rebuild).
+  * are never looked up in the seen set. Implementations: [[BloomDelta]]
+  * (append-only, smallest) and [[ShardedCuckoo]] (deletable — supports TTL
+  * eviction without rebuild).
   * Correctness never depends on the filter: a false positive only routes a row
   * into the exact anti-join; the no-false-negative contract is what makes the
   * definitely-new fast path sound.
@@ -49,15 +50,23 @@ object SeenFilters {
       bc)
   }
 
-  /** Filter-accelerated anti-join (equivalent to a plain left_anti on
-    * `hashCol`; only the maybe-seen slice shuffles), plus the broadcast
-    * handle for end-of-epoch destroy.
+  /** Filter-accelerated anti-join, equivalent to a plain left_anti on
+    * `hashCol`, plus the broadcast handle for end-of-epoch destroy.
+    *
+    * A semi-join reduction: `hits` are the seen rows whose hash is among the
+    * maybe-seen keys. The maybe-seen side is the small one, so the planner
+    * broadcasts it and `seen` is only scanned and probed map-side — never
+    * exchanged; only the hits move into the final anti-join. Definitely-new
+    * rows are in no hit (no false negatives), so the anti-join against the
+    * hits needs no separate definitely-new branch. A maybe-seen side over the
+    * broadcast threshold falls back to a shuffle join.
     */
   def antiJoinTracked(spark: SparkSession, candidates: DataFrame, seen: DataFrame,
                       hashCol: String, filters: Seq[SeenDelta])
       : (DataFrame, org.apache.spark.broadcast.Broadcast[Array[SeenDelta]]) = {
-    val (definitelyNew, maybeSeen, bc) = splitTracked(spark, candidates, hashCol, filters)
-    (definitelyNew.unionByName(maybeSeen.join(seen, Seq(hashCol), "left_anti")), bc)
+    val (_, maybeSeen, bc) = splitTracked(spark, candidates, hashCol, filters)
+    val hits = seen.join(maybeSeen.select(hashCol), Seq(hashCol), "left_semi")
+    (candidates.join(hits, Seq(hashCol), "left_anti"), bc)
   }
 }
 

@@ -607,19 +607,4 @@ object Similarity {
                       model: IvfPqModel, idCol: String, query: Seq[Float],
                       k: Int, nProbe: Int = 4): DataFrame =
     adcProbe(spark.read.parquet(path), model, idCol, query, k, nProbe)
-
-  /** All-pairs exact cosine above a threshold for a bounded id range —
-    * the oracle-checkable form (cross-join guarded by the range filter).
-    */
-  def pairwiseCosine(df: DataFrame, idCol: String, vecCol: String,
-                     maxId: Long, minCosine: Double): DataFrame = {
-    val sub = df.where(col(idCol) < maxId)
-      .select(col(idCol).as("id"), col(vecCol).as("v"))
-    val a = sub.select(col("id").as("id_a"), col("v").as("v_a"))
-    val b = sub.select(col("id").as("id_b"), col("v").as("v_b"))
-    a.crossJoin(b).where(col("id_a") < col("id_b"))
-      .withColumn("cosine", cosine(col("v_a"), col("v_b")))
-      .where(col("cosine") >= minCosine)
-      .select(col("id_a"), col("id_b"), col("cosine"))
-  }
 }

@@ -30,7 +30,6 @@ object Flac {
 
   final class BitReader(data: Array[Byte], var bytePos: Int = 0) {
     private var bitPos = 0
-    def atEnd: Boolean = bytePos >= data.length
     def bit(): Int = {
       if (bytePos >= data.length) throw new IllegalStateException("EOF")
       val b = (data(bytePos) >> (7 - bitPos)) & 1

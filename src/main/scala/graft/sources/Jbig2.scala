@@ -628,8 +628,15 @@ object Jbig2 {
     val newSyms = new ArrayBuffer[Bitmap](numNew)
     var hcHeight = 0
     var area = 0L
+    // The decoder pads a truncated stream with marker bytes and never throws,
+    // so a hostile stream can repeat an empty height class (dh = 0, then OOB)
+    // or a zero export run forever: both loops are bounded, and running out
+    // of rounds fails closed.
+    var hcRounds = numNew + 8
     try {
       while (newSyms.length < numNew) {
+        hcRounds -= 1
+        if (hcRounds < 0) return None
         hcHeight += decodeInt(dec, iadh).getOrElse(return None)
         if (hcHeight <= 0 || hcHeight > 4096) return None
         var symWidth = 0
@@ -654,7 +661,10 @@ object Jbig2 {
       val exported = new ArrayBuffer[Bitmap](numEx)
       var i = 0
       var curFlag = false
+      var exRounds = 2 * (all.length + 1)
       while (exported.length < numEx) {
+        exRounds -= 1
+        if (exRounds < 0) return None
         val run = decodeInt(dec, iaex).getOrElse(return None)
         if (run < 0 || i + run > all.length) return None
         if (curFlag) exported ++= all.slice(i, i + run)

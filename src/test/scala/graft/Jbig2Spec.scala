@@ -378,4 +378,42 @@ class Jbig2Spec extends AnyFunSuite {
     thuff(12 + 17 + 1) = (thuff(12 + 17 + 1) | 1).toByte
     assert(Jbig2.decodeEmbedded(Array.emptyByteArray, page ++ dict ++ thuff).isEmpty)
   }
+
+  test("symbol dictionaries that never progress fail closed within a wall budget") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    def be32(v: Int) = Array((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
+    // template-0 symbol dictionary payload: flags, nominal AT bytes, SDNUMEXSYMS,
+    // SDNUMNEWSYMS, then the arithmetic-coded body `code` writes
+    def dictPayload(numEx: Int, numNew: Int)(
+        code: (Jbig2.MqEncoder, Jbig2.Contexts, Jbig2.Contexts, Jbig2.Contexts) => Unit) = {
+      val enc = new Jbig2.MqEncoder
+      code(enc, new Jbig2.Contexts(512), new Jbig2.Contexts(512), new Jbig2.Contexts(512))
+      Array[Byte](0, 0) ++ Array(3, -1, -3, -1, 2, -2, -2, -2).map(_.toByte) ++
+        be32(numEx) ++ be32(numNew) ++ enc.finish()
+    }
+    // every height class after the first is empty (dh = 0, then OOB): no
+    // symbol is ever added, and the decoder's marker padding keeps repeating it
+    val emptyClasses = dictPayload(numEx = 1, numNew = 1) { (enc, iadh, iadw, _) =>
+      Jbig2.encodeInt(enc, iadh, Some(1))
+      Jbig2.encodeInt(enc, iadw, None)
+      for (_ <- 0 until 200) {
+        Jbig2.encodeInt(enc, iadh, Some(0))
+        Jbig2.encodeInt(enc, iadw, None)
+      }
+    }
+    // an export-flag run of zero never advances over the referred symbol
+    val (page, dict, _) = Jbig2.encodeTextSegments(randomBitmap(8, 6, seed = 9))
+    val zeroRuns = dictPayload(numEx = 1, numNew = 0) { (enc, _, _, iaex) =>
+      for (_ <- 0 until 200) Jbig2.encodeInt(enc, iaex, Some(0))
+    }
+    val streams = Seq(
+      "empty height classes" -> (page ++ Jbig2.segmentBytes(1, 0, 1, emptyClasses)),
+      "zero export runs" -> (page ++ dict ++ Jbig2.segmentBytes(2, 0, 1, zeroRuns, refs = Seq(1L))))
+    for ((name, stream) <- streams) {
+      val decoded = Future(Jbig2.decodeEmbedded(Array.emptyByteArray, stream))
+      assert(Await.result(decoded, 20.seconds).isEmpty, name)
+    }
+  }
 }

@@ -175,6 +175,108 @@ class PropertySpec extends AnyFunSuite {
     assert((0L until 1200L).forall(i => f1.contains(key(i))))
   }
 
+  test("seen probe over a parquet seen set above the broadcast threshold: equals left_anti, seen never exchanged") {
+    import SparkTestSession.spark
+    import spark.implicits._
+    import graft.frontier.{BloomDelta, CuckooSeen, SeenDelta, SeenFilters}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    def key(i: Long): Long = Xxh64.hashString(s"http://h${i % 89}.org/q/$i")
+    val tmp = java.nio.file.Files.createTempDirectory("seen-probe")
+    val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
+    val prevThreshold = spark.conf.getOption(thresholdKey)
+    try {
+      // the seen set as the crawl loop reads it: two delta dirs of ~120 KB of
+      // parquet each, both over the lowered threshold; candidate batches of a
+      // few thousand rows stay under it
+      spark.conf.set(thresholdKey, "65536")
+      val dirs = Seq(0L until 15000L, 15000L until 30000L).zipWithIndex.map { case (ids, d) =>
+        val out = tmp.resolve(s"seen_$d").toString
+        ids.map(key).toDF("url_hash").coalesce(1).write.parquet(out)
+        out
+      }
+      val emptyDir = tmp.resolve("seen_empty").toString
+      Seq.empty[Long].toDF("url_hash").write.parquet(emptyDir)
+      val seen = spark.read.schema("url_hash BIGINT").parquet(dirs: _*)
+      val emptySeen = spark.read.schema("url_hash BIGINT").parquet(emptyDir)
+      assert(seen.queryExecution.optimizedPlan.stats.sizeInBytes > 65536)
+      val seenKeys = (0L until 30000L).map(key).toSet
+      // keys the filters also admit without being seen: false positives by
+      // construction, for both families (the no-false-negative contract holds)
+      val fpKeys = (40000L until 41000L).map(key)
+      type Family = Seq[Long] => Seq[SeenDelta]
+      val bloom: Family = ks => ks.grouped(16000).map(g =>
+        new BloomDelta(BloomSeen.build(g.toDF("url_hash"), "url_hash", g.size, 0.03))
+          : SeenDelta).toSeq
+      val cuckoo: Family = ks => ks.grouped(16000).map(g =>
+        CuckooSeen.buildSharded(g.toDF("url_hash"), "url_hash", g.size, shards = 4): SeenDelta).toSeq
+      def rows(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+      def candidatesOf(ks: Seq[Long]) = ks.map(k => (k, s"u$k")).toDF("url_hash", "url")
+
+      object Plans extends AdaptiveSparkPlanHelper {
+        def scansSeen(p: SparkPlan): Boolean = p match {
+          case s: FileSourceScanExec =>
+            s.relation.location.rootPaths.exists(r => dirs.exists(d => r.toString.endsWith(d)))
+          case _ => false
+        }
+        /** Shuffle exchanges whose subtree reads a seen file not first reduced
+          * by a broadcast semi-join (seen rows themselves exchanged). */
+        def seenExchanges(plan: SparkPlan): Seq[SparkPlan] = collect(plan) {
+          case e: ShuffleExchangeLike if unreducedSeen(e.child) => e: SparkPlan
+        }
+        private def unreducedSeen(p: SparkPlan): Boolean = p match {
+          case j: BroadcastHashJoinExec if j.joinType == LeftSemi => false
+          case _ => scansSeen(p) || allChildren(p).exists(unreducedSeen)
+        }
+        def probesSeenMapSide(plan: SparkPlan): Boolean = find(plan) {
+          case j: BroadcastHashJoinExec => j.joinType == LeftSemi && find(j.left)(scansSeen).isDefined
+          case _ => false
+        }.isDefined
+      }
+
+      val newKeys = (30000L until 33000L).map(key)
+      val rediscovered = (20000L until 23000L).map(key)
+      for ((family, name) <- Seq(bloom -> "bloom", cuckoo -> "cuckoo")) {
+        val filters = family(seenKeys.toSeq.sorted ++ fpKeys)
+        val cleared = newKeys.filterNot(k => filters.exists(_.mightContain(k)))
+        assert(cleared.nonEmpty, name)
+        val cases = Seq(
+          // rediscovered + new + false positives, with duplicate hashes
+          ("mixed", seen, rediscovered ++ newKeys.take(1000) ++ fpKeys.take(500) ++
+            rediscovered.take(300) ++ newKeys.take(200) ++ fpKeys.take(50), filters),
+          ("all new", seen, newKeys ++ fpKeys.take(300), filters),
+          ("empty maybe-seen side", seen, cleared, filters),
+          ("empty seen set", emptySeen, newKeys.take(500) ++ fpKeys.take(200), family(fpKeys)))
+        for ((label, seenDf, ks, fs) <- cases) {
+          val candidates = candidatesOf(ks)
+          val (probed, bc) = SeenFilters.antiJoinTracked(spark, candidates, seenDf, "url_hash", fs)
+          val exact = candidates.join(seenDf, Seq("url_hash"), "left_anti")
+          assert(probed.columns.toSeq == exact.columns.toSeq, s"$name/$label")
+          assert(rows(probed) == rows(exact), s"$name/$label")
+          // the final adaptive plan (`rows` ran it); with no hits at all,
+          // AQE prunes the probe, so the plan is checked where hits exist
+          if (label == "mixed") {
+            val plan = probed.queryExecution.executedPlan
+            assert(Plans.seenExchanges(plan).isEmpty, s"$name/$label: seen rows exchanged\n$plan")
+            assert(Plans.probesSeenMapSide(plan), s"$name/$label: no map-side probe\n$plan")
+          }
+          bc.destroy()
+        }
+      }
+    } finally {
+      prevThreshold match {
+        case Some(v) => spark.conf.set(thresholdKey, v)
+        case None => spark.conf.unset(thresholdKey)
+      }
+      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    }
+  }
+
   test("Dom re-serialization round-trips: scrape(outerHtml(parse(h))) == scrape(h)") {
     import graft.scrape.{Dom, Scrape}
     // generated pages mix entity-bearing text ('&lt;b&gt;', '&amp;'),
