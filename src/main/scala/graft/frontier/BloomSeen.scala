@@ -13,9 +13,10 @@ import java.nio.file.{Files, Path}
   * filter's job is to shrink the set of keys the exact probe looks up: at
   * 10^10-URL scale most discovered links are new, so only the (small)
   * maybe-seen fraction plus false positives (~fpp) is probed. That slice is
-  * broadcast into a semi-join over the seen files, so the seen set is scanned
-  * map-side and never exchanged; only its hits move (see
-  * [[SeenFilters.antiJoinTracked]]).
+  * broadcast into a semi-join over the seen files when its size estimate is
+  * under the broadcast threshold, and then the seen set is scanned map-side
+  * and not exchanged; only its hits move (see [[SeenFilters.probe]], which
+  * also says when the estimate misses).
   *
   * Blooms are INCREMENTAL: each epoch builds a bloom over that epoch's seen
   * DELTA only (never re-aggregating history), and the check consults the
@@ -50,22 +51,11 @@ object BloomSeen {
     try BloomFilter.readFrom(is) finally is.close()
   }
 
-  /** Split `candidates` into (definitelyNew, maybeSeen) by a vector of
-    * per-epoch blooms — one implementation lives in [[SeenFilters]] (the
-    * broadcast/split/anti-join machinery is filter-family-agnostic); these
-    * delegating forms keep the bloom-typed surface for tests.
-    */
-  def split(spark: SparkSession, candidates: DataFrame, hashCol: String,
-            blooms: Seq[BloomFilter]): (DataFrame, DataFrame) = {
-    val (a, b, _) = SeenFilters.splitTracked(spark, candidates, hashCol,
-      blooms.map(new BloomDelta(_)))
-    (a, b)
-  }
-
   /** Bloom-accelerated anti-join: rows of `candidates` whose `hashCol` is not
     * present in `seen` — equivalent to a plain left_anti join, but `seen` is
-    * only probed for the maybe-seen keys and never shuffled. Delegates to
-    * [[SeenFilters.antiJoinTracked]].
+    * only probed for the maybe-seen keys. A bloom-typed form of
+    * [[SeenFilters.antiJoinTracked]] (the broadcast/anti-join machinery is
+    * filter-family-agnostic), kept for the property suite.
     */
   def antiJoin(spark: SparkSession, candidates: DataFrame, seen: DataFrame,
                hashCol: String, blooms: Seq[BloomFilter]): DataFrame =

@@ -23,8 +23,9 @@ import java.nio.file.{Files, Paths}
   *     → fetch-join against the page store on url_hash
   *     → scrape map (HTML → spans + links)           [docs written]
   *     → explode(links) → validity/nonsense filters → score
-  *     → bloom pre-filter → seen ⋉ maybe-seen (broadcast; seen scanned,
-  *       never exchanged) → left_anti(hits)          [dedup]
+  *     → candidates evaluated once → bloom pre-filter → seen ⋉ maybe-seen
+  *       (broadcast while the maybe-seen estimate is under the threshold:
+  *       seen scanned, not exchanged) → left_anti(hits)  [dedup]
   *     → first-wins per url_hash → frontier(t+1)     [snapshot committed]
   *
   * Snapshot protocol (Iceberg-style semantics on plain parquet — SURVEY.md
@@ -302,14 +303,19 @@ object Crawl {
     var seenBase = manifests.last.seenBase
     // per-epoch delta filters, loaded from persisted files (rebuilt from the
     // delta dir — delta-sized, cheap — if a file is missing or the run is
-    // resumed under the other filter family)
+    // resumed under the other filter family). Only an absent delta dir means
+    // an empty filter: an empty filter over a delta that has rows would let
+    // its URLs past the exact probe as new, so a delta that cannot be read
+    // fails the run instead.
     var filters: Vector[SeenDelta] = (seenBase to epoch).toVector.map { e =>
       val p = store.path(runDir, e)
+      val deltaDir = dir(runDir, e, "seen")
       if (Files.exists(p)) store.load(p)
-      else scala.util.Try {
-        val delta = spark.read.parquet(dir(runDir, e, "seen"))
+      else if (!Files.isDirectory(Paths.get(deltaDir))) store.empty()
+      else {
+        val delta = spark.read.schema(seenSchema).parquet(deltaDir)
         store.build(spark, delta, "url_hash", delta.count())
-      }.getOrElse(store.empty())
+      }
     }
     // cuckoo HEAL (soundness): TTL expiry evicts hashes from the persisted
     // filters while the exact seen ledger stays monotone — a filter false
@@ -557,9 +563,8 @@ object Crawl {
         // dedup: incremental filter vector pre-filter + exact anti-join, then
         // first-wins per hash (no full-history filter rebuild — the vector
         // holds one delta-sized filter per epoch since the last compaction)
-        val (fresh, filterBc) =
-          SeenFilters.antiJoinTracked(spark, candidates, seen, "url_hash", filters)
-        val firstWins = fresh.withColumn("rk", row_number().over(
+        val seenProbe = SeenFilters.probe(spark, candidates, seen, "url_hash", filters)
+        val firstWins = seenProbe.fresh.withColumn("rk", row_number().over(
             Window.partitionBy("url_hash")
               .orderBy(col("parent_path"), col("link_index"))))
           .where(col("rk") === 1).drop("rk")
@@ -670,10 +675,11 @@ object Crawl {
         manifests :+= m
 
         scraped.unpersist(); budgeted.unpersist(); admitted.unpersist(); newEntries.unpersist()
-        // all consumers of this epoch's filter broadcast have completed and
-        // their outputs are on disk — free it (one vector per epoch would
-        // otherwise accumulate for the crawl's lifetime)
-        filterBc.destroy()
+        // all consumers of this epoch's probe have completed and their
+        // outputs are on disk — free its filter broadcast and candidate rows
+        // (one of each per epoch would otherwise accumulate for the crawl's
+        // lifetime)
+        seenProbe.release()
         if (queuedCount == 0) done = true
         epoch += 1
       }

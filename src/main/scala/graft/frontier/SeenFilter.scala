@@ -1,7 +1,16 @@
 package graft.frontier
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession, classic}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Statistics}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.util.sketch.BloomFilter
 import java.nio.file.{Files, Path, Paths}
 
@@ -37,7 +46,7 @@ object SeenFilters {
     */
   def splitTracked(spark: SparkSession, candidates: DataFrame, hashCol: String,
                    filters: Seq[SeenDelta])
-      : (DataFrame, DataFrame, org.apache.spark.broadcast.Broadcast[Array[SeenDelta]]) = {
+      : (DataFrame, DataFrame, Broadcast[Array[SeenDelta]]) = {
     val bc = spark.sparkContext.broadcast(filters.toArray)
     val mightContain = udf { (h: Long) =>
       val fs = bc.value; var i = 0; var hit = false
@@ -51,22 +60,131 @@ object SeenFilters {
   }
 
   /** Filter-accelerated anti-join, equivalent to a plain left_anti on
-    * `hashCol`, plus the broadcast handle for end-of-epoch destroy.
-    *
-    * A semi-join reduction: `hits` are the seen rows whose hash is among the
-    * maybe-seen keys. The maybe-seen side is the small one, so the planner
-    * broadcasts it and `seen` is only scanned and probed map-side — never
-    * exchanged; only the hits move into the final anti-join. Definitely-new
-    * rows are in no hit (no false negatives), so the anti-join against the
-    * hits needs no separate definitely-new branch. A maybe-seen side over the
-    * broadcast threshold falls back to a shuffle join.
+    * `hashCol`, plus the broadcast handle for end-of-epoch destroy. The
+    * materialized candidate rows are left to Spark's ContextCleaner; a caller
+    * that can release them sooner uses [[probe]].
     */
   def antiJoinTracked(spark: SparkSession, candidates: DataFrame, seen: DataFrame,
                       hashCol: String, filters: Seq[SeenDelta])
-      : (DataFrame, org.apache.spark.broadcast.Broadcast[Array[SeenDelta]]) = {
-    val (_, maybeSeen, bc) = splitTracked(spark, candidates, hashCol, filters)
+      : (DataFrame, Broadcast[Array[SeenDelta]]) = {
+    val p = probe(spark, candidates, seen, hashCol, filters)
+    (p.fresh, p.filterBc)
+  }
+
+  /** The probe behind [[antiJoinTracked]], with a handle that releases what
+    * it holds.
+    *
+    * A semi-join reduction: `hits` are the seen rows whose hash is among the
+    * maybe-seen keys. The maybe-seen side is the small one, so the planner
+    * broadcasts it and `seen` is only scanned and probed map-side; only the
+    * hits move into the final anti-join. That holds when the maybe-seen
+    * side's size estimate is under the broadcast threshold at planning time;
+    * otherwise the semi-join is planned as a shuffle join and the seen rows
+    * are exchanged (AQE may still switch it to a broadcast at run time).
+    * Definitely-new rows are in no hit (no false negatives), so the
+    * anti-join against the hits needs no separate definitely-new branch.
+    *
+    * Both the maybe-seen broadcast and the anti-join's probe side read the
+    * candidates, so their plan is evaluated once per probe: its rows are
+    * persisted on first read and both consumers scan those blocks.
+    */
+  def probe(spark: SparkSession, candidates: DataFrame, seen: DataFrame,
+            hashCol: String, filters: Seq[SeenDelta]): SeenProbe = {
+    val (once, rows) = evaluatedOnce(candidates)
+    val (_, maybeSeen, bc) = splitTracked(spark, once, hashCol, filters)
     val hits = seen.join(maybeSeen.select(hashCol), Seq(hashCol), "left_semi")
-    (candidates.join(hits, Seq(hashCol), "left_anti"), bc)
+    SeenProbe(once.join(hits, Seq(hashCol), "left_anti"), bc, rows)
+  }
+
+  /** `df` evaluated once, and the persisted rows if that took any. A plan
+    * that optimizes to a local relation was already evaluated on the driver
+    * and is reused as it is. Any other plan is computed on its first read and
+    * persisted as [[RowPages]] (memory, spilling to disk); every later read
+    * scans the pages. The lineage stays, so a lost block is recomputed from
+    * `df`'s plan. The frame carries `df`'s size estimate, read after
+    * `toRdd`: under AQE that call has already materialized `df`'s cached and
+    * shuffled inputs, so the estimate sees their real sizes (in `Crawl.run`,
+    * the scraped cache's). A `Dataset.persist` would pin the rows in the
+    * CacheManager until an explicit unpersist; these blocks also go once the
+    * frame is unreachable.
+    */
+  private def evaluatedOnce(df: DataFrame): (DataFrame, Option[RDD[Array[Byte]]]) = {
+    val qe = df.queryExecution
+    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+    def over(plan: LogicalPlan) = new classic.Dataset[Row](session, plan, Encoders.row(df.schema))
+    qe.optimizedPlan match {
+      case local: LocalRelation => (over(local), None)
+      case opt =>
+        val schema = df.schema
+        val pages = qe.toRdd.mapPartitions(RowPages.pack(schema))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        val rows = pages.mapPartitions(RowPages.unpack(schema.length))
+        val est = Statistics(opt.stats.sizeInBytes, opt.stats.rowCount)
+        (over(LogicalRDD(opt.output, rows)(session, Some(est))), Some(pages))
+    }
+  }
+}
+
+/** A partition's rows as `UnsafeRow` bytes in a few large byte-array pages,
+  * each row an 8-byte length and its bytes. The block manager then stores
+  * one object per page instead of one per row: persisting deserialized rows
+  * costs about as much CPU as recomputing a canonicalize + hash plan, and
+  * pages cost a copy.
+  */
+private object RowPages {
+  private val PageBytes = 32 << 20
+
+  def pack(schema: StructType)(rows: Iterator[InternalRow]): Iterator[Array[Byte]] = {
+    lazy val toUnsafe = UnsafeProjection.create(schema)
+    new Iterator[Array[Byte]] {
+      def hasNext: Boolean = rows.hasNext
+      def next(): Array[Byte] = {
+        var page = new Array[Byte](1 << 16)
+        var used = 0
+        while (rows.hasNext && used < PageBytes) {
+          val row = rows.next() match {
+            case u: UnsafeRow => u
+            case other => toUnsafe(other)
+          }
+          val n = row.getSizeInBytes
+          if (used + 8 + n > page.length)
+            page = java.util.Arrays.copyOf(page, math.max(2 * page.length, used + 8 + n))
+          Platform.putLong(page, Platform.BYTE_ARRAY_OFFSET + used, n)
+          row.writeToMemory(page, Platform.BYTE_ARRAY_OFFSET + used + 8)
+          used += 8 + n
+        }
+        java.util.Arrays.copyOf(page, used)
+      }
+    }
+  }
+
+  /** The rows of `pages`; the returned row is reused from one call of
+    * `next` to the next, as Spark's own scans do. */
+  def unpack(numFields: Int)(pages: Iterator[Array[Byte]]): Iterator[InternalRow] =
+    pages.flatMap { page =>
+      val row = new UnsafeRow(numFields)
+      var off = 0
+      new Iterator[InternalRow] {
+        def hasNext: Boolean = off < page.length
+        def next(): InternalRow = {
+          val n = Platform.getLong(page, Platform.BYTE_ARRAY_OFFSET + off).toInt
+          row.pointTo(page, Platform.BYTE_ARRAY_OFFSET + off + 8, n)
+          off += 8 + n
+          row
+        }
+      }
+    }
+}
+
+/** One seen probe: the candidates not in the seen set, the filter-vector
+  * broadcast, and the candidate rows persisted for it. */
+final case class SeenProbe(fresh: DataFrame, filterBc: Broadcast[Array[SeenDelta]],
+                           candidateRows: Option[RDD[Array[Byte]]]) {
+  /** Destroy the broadcast and drop the persisted rows; call once every job
+    * that reads `fresh` has finished. */
+  def release(): Unit = {
+    filterBc.destroy()
+    candidateRows.foreach(_.unpersist(blocking = false))
   }
 }
 

@@ -717,6 +717,86 @@ class CrawlSpec extends AnyFunSuite {
     assert(vs(partial) == vs(full))
   }
 
+  /** The delta-filter files (`bloom_*.bin` / `cuckoo_*.bin`) of a run. */
+  private def filterFiles(runDir: String, family: String): Seq[Path] =
+    ls(Paths.get(runDir)).filter { p =>
+      val n = p.getFileName.toString
+      n.startsWith(s"${family}_") && n.endsWith(".bin")
+    }
+
+  test("resume rebuilds missing delta filters: seen set, visits and summary equal an uninterrupted run") {
+    for (family <- Seq("bloom", "cuckoo")) {
+      val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40,
+        seenFilter = family, cuckooShards = 4)
+      val full = freshDir(s"rebuild-full-$family")
+      val fullSummary = Crawl.run(spark, seedsDF, pagesDF, robotsDF, full, cfg)
+
+      val partial = freshDir(s"rebuild-part-$family")
+      Crawl.run(spark, seedsDF, pagesDF, robotsDF, partial, cfg.copy(maxEpochs = 2))
+      // every committed epoch's filter is gone: resume rebuilds each from its
+      // seen delta
+      val removed = filterFiles(partial, family)
+      assert(removed.size == Crawl.lastCommittedEpoch(partial) + 1, s"$family: $removed")
+      removed.foreach(Files.delete)
+      val resumedSummary = Crawl.run(spark, seedsDF, pagesDF, robotsDF, partial, cfg)
+      assert(resumedSummary == fullSummary, family)
+
+      def seenHashes(d: String): Set[Long] =
+        Crawl.seenSet(spark, d).as[Long].collect().toSet
+      assert(seenHashes(partial) == seenHashes(full), family)
+      def vs(d: String) = Crawl.visits(spark, d).select("epoch", "visit_rank", "url")
+        .orderBy("epoch", "visit_rank").collect().map(r => (r.getInt(0), r.getString(2))).toSeq
+      assert(vs(partial) == vs(full), family)
+    }
+  }
+
+  test("resume fails closed when a missing delta filter cannot be rebuilt") {
+    for (family <- Seq("bloom", "cuckoo")) {
+      val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40,
+        seenFilter = family, cuckooShards = 4)
+      val partial = freshDir(s"unreadable-$family")
+      Crawl.run(spark, seedsDF, pagesDF, robotsDF, partial, cfg.copy(maxEpochs = 2))
+      val last = Crawl.lastCommittedEpoch(partial)
+      // epoch 1's filter is gone and its seen delta (which has rows) cannot
+      // be read: an empty filter in its place would let its URLs past the
+      // exact probe as new
+      assert(manifest(partial, 1).seenTotal > manifest(partial, 0).seenTotal)
+      val lost = filterFiles(partial, family).filter(_.getFileName.toString.endsWith("_0001.bin"))
+      assert(lost.size == 1, family)
+      Files.delete(lost.head)
+      val delta = Paths.get(f"$partial/seen/epoch=0001")
+      ls(delta).foreach(Files.delete)
+      Files.writeString(delta.resolve("part-00000.snappy.parquet"), "not parquet")
+      val before = tableDirs(partial)
+
+      intercept[org.apache.spark.SparkException] {
+        Crawl.run(spark, seedsDF, pagesDF, robotsDF, partial, cfg)
+      }
+      assert(Crawl.lastCommittedEpoch(partial) == last, family)
+      assert(tableDirs(partial) == before, s"$family: the failed resume wrote snapshot dirs")
+    }
+  }
+
+  test("a finished crawl leaves no cached table or persisted RDD behind") {
+    val sc = spark.sparkContext
+    val cacheManager =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    // `numCachedEntries` is package-private in Scala, public in bytecode
+    def cachedEntries: Int =
+      cacheManager.getClass.getMethod("numCachedEntries").invoke(cacheManager).asInstanceOf[Int]
+    val rddsBefore = sc.getPersistentRDDs.keySet
+    val cachedBefore = cachedEntries
+    // a binding page cap (the admitted set is cached) and a compaction
+    val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxPages = 40, maxEpochs = 40,
+      seenCompactEvery = 2)
+    val runDir = freshDir("no-leak")
+    val s = Crawl.run(spark, seedsDF, pagesDF, robotsDF, runDir, cfg)
+    assert(s.fetched > 0 && Crawl.lastCommittedEpoch(runDir) > 2)
+    val leftover = sc.getPersistentRDDs.filter { case (id, _) => !rddsBefore(id) }
+    assert(leftover.isEmpty, s"persisted RDDs left by the run: ${leftover.values.mkString(", ")}")
+    assert(cachedEntries == cachedBefore, "cached tables left by the run")
+  }
+
   test("domain state: idle hosts carry delay/fail_count forward (no resurrection)") {
     import graft.politeness.DomainState
     val states = Seq(

@@ -217,6 +217,15 @@ class PropertySpec extends AnyFunSuite {
         CuckooSeen.buildSharded(g.toDF("url_hash"), "url_hash", g.size, shards = 4): SeenDelta).toSeq
       def rows(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
       def candidatesOf(ks: Seq[Long]) = ks.map(k => (k, s"u$k")).toDF("url_hash", "url")
+      // counts every evaluation of a candidate row, wherever it runs
+      val evals = spark.sparkContext.longAccumulator("candidate row evaluations")
+      val evaluated = org.apache.spark.sql.functions.udf { (h: Long) => evals.add(1); h }
+        .asNondeterministic()
+      // a local batch is evaluated where the optimizer folds it (on the
+      // driver); behind a repartition it is evaluated in executor tasks
+      def countedCandidatesOf(ks: Seq[Long], inTasks: Boolean) =
+        (if (inTasks) candidatesOf(ks).repartition(3) else candidatesOf(ks))
+          .withColumn("url_hash", evaluated(org.apache.spark.sql.functions.col("url_hash")))
 
       object Plans extends AdaptiveSparkPlanHelper {
         def scansSeen(p: SparkPlan): Boolean = p match {
@@ -245,16 +254,27 @@ class PropertySpec extends AnyFunSuite {
         val filters = family(seenKeys.toSeq.sorted ++ fpKeys)
         val cleared = newKeys.filterNot(k => filters.exists(_.mightContain(k)))
         assert(cleared.nonEmpty, name)
+        // rediscovered + new + false positives, with duplicate hashes
+        val mixed = rediscovered ++ newKeys.take(1000) ++ fpKeys.take(500) ++
+          rediscovered.take(300) ++ newKeys.take(200) ++ fpKeys.take(50)
         val cases = Seq(
-          // rediscovered + new + false positives, with duplicate hashes
-          ("mixed", seen, rediscovered ++ newKeys.take(1000) ++ fpKeys.take(500) ++
-            rediscovered.take(300) ++ newKeys.take(200) ++ fpKeys.take(50), filters),
+          ("mixed", seen, mixed, filters),
+          ("mixed, evaluated in tasks", seen, mixed, filters),
           ("all new", seen, newKeys ++ fpKeys.take(300), filters),
           ("empty maybe-seen side", seen, cleared, filters),
           ("empty seen set", emptySeen, newKeys.take(500) ++ fpKeys.take(200), family(fpKeys)))
         for ((label, seenDf, ks, fs) <- cases) {
-          val candidates = candidatesOf(ks)
+          evals.reset()
+          val counted = label.startsWith("mixed")
+          val candidates =
+            if (counted) countedCandidatesOf(ks, inTasks = label != "mixed") else candidatesOf(ks)
           val (probed, bc) = SeenFilters.antiJoinTracked(spark, candidates, seenDf, "url_hash", fs)
+          // the maybe-seen broadcast and the anti-join's probe side share one
+          // evaluation of the candidate plan
+          if (counted) {
+            probed.collect()
+            assert(evals.sum == ks.size, s"$name/$label: ${evals.sum} evaluations of ${ks.size} candidate rows")
+          }
           val exact = candidates.join(seenDf, Seq("url_hash"), "left_anti")
           assert(probed.columns.toSeq == exact.columns.toSeq, s"$name/$label")
           assert(rows(probed) == rows(exact), s"$name/$label")
