@@ -8,14 +8,15 @@ import org.apache.spark.sql.functions._
 /** Benchmark main. Two parts:
   *
   *  1. SCALING EVIDENCE (BASELINE.json north rule: ≥0.8 throughput scaling
-  *     efficiency from N to 4N executors, evidenced in-sandbox as local[8]
-  *     vs local[32] on identical input): one crawl epoch at scale — generate
+  *     efficiency from N to 4N executors, evidenced in-sandbox as local[2]
+  *     vs local[8], work scaled with cores): one crawl epoch at scale — generate
   *     pages → scrape to spans → explode links → canonicalize-hash dedup —
   *     i.e. URLs fetched+deduped, the north metric — timed at both
   *     parallelism levels in the same JVM.
   *
   *  2. Headline operator timings from SparkEntry.queries on
-  *     $SPARK_GRAFT_SF_DIR at local[$SPARK_GRAFT_CPUS]. The headline
+  *     $SPARK_GRAFT_SF_DIR at local[cpus], cpus from [[LocalSpark.cores]]
+  *     ($SPARK_GRAFT_CPUS, else the JVM's cores). The headline
   *     urls/sec value is the median of 3 gated bursts PINNED at the
   *     sustained-cap core count (min(cpus, 8)) — this host advertises 32
   *     vCPUs but sustains ~11, so an unpinned 32-thread burst measures
@@ -29,17 +30,8 @@ import org.apache.spark.sql.functions._
   */
 object Bench {
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", math.max(cores, 8))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private def session(cores: Int): SparkSession =
+    LocalSpark.session(cores, math.max(cores, 8), "ERROR")
 
   /** One crawl epoch over nPages synthetic pages: fetch (generate) → scrape
     * (spans+links) → link canonical-hash dedup. Returns (docs, uniqueLinks).
@@ -154,7 +146,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = LocalSpark.cores()
     val allCpus = Runtime.getRuntime.availableProcessors() // before any pinning
     val pagesPerCore = sys.env.getOrElse("SPARK_GRAFT_BENCH_PPC", "30000").toLong
     // fixed budget of interleaved pair rounds (was 3 + conditional repair
@@ -263,7 +255,7 @@ object Bench {
 
     // Headline throughput, measured at the SUSTAINED-CAP config: pinned
     // min(cpus, 8) cores. The hypervisor sustains only ~11 of 32 advertised
-    // vCPUs, so a local[32] burst measures oversubscription + credit drain,
+    // vCPUs, so a 32-thread burst measures oversubscription + credit drain,
     // not the engine (the r4 record's 32-thread burst read 25.9k urls/s
     // while the SAME record's pinned-8 median read 65.4k — VERDICT r4 #2).
     // Each burst gated like the scaling pairs; median of 3 bursts (best-of

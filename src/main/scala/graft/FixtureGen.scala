@@ -16,17 +16,6 @@ object FixtureGen {
     Synth.SiteCfg(seed = 42L, nHosts = 3, cats = 2, subs = 2, prods = 2), // CrawlSpec
     Synth.SiteCfg(seed = 42L, nHosts = 3, cats = 2, subs = 2, prods = 3)) // SparkEntry
 
-  private def jsonEsc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
   def main(args: Array[String]): Unit = args.toList match {
     case "pages" :: out :: Nil =>
       // list format: the same URL carries DIFFERENT html across site configs
@@ -36,8 +25,8 @@ object FixtureGen {
       siteCfgs.foreach { cfg =>
         (0L until Synth.pageCount(cfg)).foreach { i =>
           val p = Synth.pageAt(cfg, i)
-          recs += s"""{"name":"${jsonEsc(p.url)}#prods=${cfg.prods}",""" +
-            s""""url":"${jsonEsc(p.url)}","html":"${jsonEsc(p.html)}"}"""
+          recs += s"""{"name":${Verify.jsonStr(s"${p.url}#prods=${cfg.prods}")},""" +
+            s""""url":${Verify.jsonStr(p.url)},"html":${Verify.jsonStr(p.html)}}"""
           n += 1
         }
       }

@@ -1,6 +1,6 @@
 package graft.frontier
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 import java.nio.file.{Files, Path}
@@ -50,20 +50,4 @@ object BloomSeen {
     val is = Files.newInputStream(path)
     try BloomFilter.readFrom(is) finally is.close()
   }
-
-  /** Bloom-accelerated anti-join: rows of `candidates` whose `hashCol` is not
-    * present in `seen` — equivalent to a plain left_anti join, but `seen` is
-    * only probed for the maybe-seen keys. A bloom-typed form of
-    * [[SeenFilters.antiJoinTracked]] (the broadcast/anti-join machinery is
-    * filter-family-agnostic), kept for the property suite.
-    */
-  def antiJoin(spark: SparkSession, candidates: DataFrame, seen: DataFrame,
-               hashCol: String, blooms: Seq[BloomFilter]): DataFrame =
-    SeenFilters.antiJoinTracked(spark, candidates, seen, hashCol,
-      blooms.map(new BloomDelta(_)))._1
-
-  /** Single-bloom convenience overload (kept for the property suite). */
-  def antiJoin(candidates: DataFrame, seen: DataFrame, hashCol: String,
-               bloom: BloomFilter): DataFrame =
-    antiJoin(candidates.sparkSession, candidates, seen, hashCol, Seq(bloom))
 }

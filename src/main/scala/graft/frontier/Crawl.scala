@@ -53,15 +53,12 @@ final case class CrawlConfig(
     maxDepth: Int = 5,
     maxPages: Long = Long.MaxValue,
     hostBudget: Int = 100,
-    globalBatch: Long = Long.MaxValue,
     scoreThreshold: Double = Double.NegativeInfinity,
     keywords: Seq[String] = Nil,
     includeExternal: Boolean = false,
-    saltBuckets: Int = 8,
     fairnessEpochs: Int = 3,
     maxEpochs: Int = 64,
     userAgent: String = "*",
-    bloomFpp: Double = 0.03,
     scrapeMinWords: Int = 1,
     /** When set, per-host budgets evolve with fetch outcomes: throttling
       * hosts (429/503) get exponentially shrinking budgets and abort after
@@ -134,6 +131,10 @@ object Crawl {
     * keep a docs file at a few MB: one file per table for a small epoch, and
     * a large one still writes in parallel. */
   private[graft] val RowsPerFile = 10000L
+
+  /** Salt values per host in the pre-scrape repartition: a hot host's pages
+    * spread over up to this many partitions. */
+  private val SaltBuckets = 8
 
   /** Files per snapshot table for an epoch of `queued` rows:
     * `ceil(queued / RowsPerFile)`, clamped to `1..maxParts`. */
@@ -262,7 +263,7 @@ object Crawl {
       : CrawlSummary = {
     import spark.implicits._
     Files.createDirectories(Paths.get(runDir))
-    val store = SeenStore.forConfig(cfg.seenFilter, cfg.bloomFpp, cfg.cuckooShards)
+    val store = SeenStore.forConfig(cfg.seenFilter, cfg.cuckooShards)
     val maxParts = spark.sessionState.conf.numShufflePartitions
 
     val start = lastCommittedEpoch(runDir)
@@ -377,15 +378,14 @@ object Crawl {
         }).cache()
         val rankCols = Seq("host_rank", "wait", "eff_budget")
         val inBudget = budgeted.where(col("host_rank") <= col("eff_budget")).drop(rankCols: _*)
-        // global capacity cut ONLY when a cap is configured AND binding this
-        // epoch: with the default (uncapped) config every epoch must stay a
-        // partitioned plan — no global TakeOrdered over the admitted set. A
-        // remaining capacity ≥ Int.MaxValue cannot bind (no epoch admits that
-        // many rows through per-host budgets), so it is skipped, never
-        // silently clamped.
-        val capConfigured = cfg.maxPages != Long.MaxValue || cfg.globalBatch != Long.MaxValue
-        val capacity = math.min(cfg.globalBatch, cfg.maxPages - total(_.fetched))
-        val capped = capConfigured && capacity < Int.MaxValue
+        // global capacity cut ONLY when `maxPages` binds this epoch: with the
+        // default (uncapped) config every epoch must stay a partitioned plan —
+        // no global TakeOrdered over the admitted set. A remaining capacity
+        // ≥ Int.MaxValue (always so when `maxPages` is unset) cannot bind (no
+        // epoch admits that many rows through per-host budgets), so it is
+        // skipped, never silently clamped.
+        val capacity = cfg.maxPages - total(_.fetched)
+        val capped = capacity < Int.MaxValue
         val admitted =
           if (capped) inBudget.orderBy(ord: _*).limit(capacity.toInt).cache() else inBudget
 
@@ -410,7 +410,7 @@ object Crawl {
         // (CPU-heavy) scrape map; the join key stays url_hash so the page
         // store join itself is a plain shuffled hash join.
         val salted = allowed.repartition(
-          maxParts, col("host"), pmod(col("url_hash"), lit(cfg.saltBuckets)))
+          maxParts, col("host"), pmod(col("url_hash"), lit(SaltBuckets)))
         val fetched = salted.join(
           pages.select(col("url_hash"), col("html"), col("status_code")),
           Seq("url_hash"), "left")

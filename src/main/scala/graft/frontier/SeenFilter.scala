@@ -240,10 +240,14 @@ final class CuckooStore(shards: Int = 32) extends SeenStore {
 }
 
 object SeenStore {
-  def forConfig(seenFilter: String, fpp: Double, shards: Int = 32): SeenStore =
+  /** False-positive rate of every crawl's bloom filters. One value, so a
+    * store [[detect]]ed from a run dir builds the filters the run built. */
+  private val BloomFpp = 0.03
+
+  def forConfig(seenFilter: String, shards: Int = 32): SeenStore =
     seenFilter match {
       case "cuckoo" => new CuckooStore(shards)
-      case "bloom"  => new BloomStore(fpp)
+      case "bloom"  => new BloomStore(BloomFpp)
       case other    => throw new IllegalArgumentException(
         s"unknown seenFilter '$other' (expected bloom|cuckoo)")
     }
@@ -252,6 +256,6 @@ object SeenStore {
     * files exist) — lets `Crawl.expireEpoch` stay config-free. */
   def detect(runDir: String, epoch: Int): SeenStore = {
     val cuckoo = new CuckooStore()
-    if (Files.exists(cuckoo.path(runDir, epoch))) cuckoo else new BloomStore(0.03)
+    if (Files.exists(cuckoo.path(runDir, epoch))) cuckoo else new BloomStore(BloomFpp)
   }
 }

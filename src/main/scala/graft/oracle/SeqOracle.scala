@@ -74,7 +74,7 @@ object SeqOracle {
         if (ok) hostCount(e.host) += 1
         ok
       }
-      val capacity = math.min(cfg.globalBatch, cfg.maxPages - fetchedTotal)
+      val capacity = cfg.maxPages - fetchedTotal
       val admitted = admitted0.take(math.min(capacity, Int.MaxValue.toLong).toInt)
       val spill = admitted0.drop(admitted.size)
       val allowed = admitted.map(_._1).filter(e =>

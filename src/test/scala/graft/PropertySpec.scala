@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import graft.core.{Urls, Xxh64}
-import graft.frontier.BloomSeen
+import graft.frontier.{BloomDelta, BloomSeen, SeenFilters}
 
 /** ScalaCheck properties (SURVEY.md §5 rebuild test plan #4). */
 class PropertySpec extends AnyFunSuite {
@@ -90,8 +90,8 @@ class PropertySpec extends AnyFunSuite {
     assert(fps <= 10000 * 0.03 * 3, s"fp count $fps")
     // antiJoin equivalence with exact left_anti
     val candidates = (1500L until 2500L).toDF("url_hash")
-    val viaBloom = BloomSeen.antiJoin(candidates, seen, "url_hash", bloom)
-      .as[Long].collect().toSet
+    val viaBloom = SeenFilters.antiJoinTracked(spark, candidates, seen, "url_hash",
+      Seq(new BloomDelta(bloom)))._1.as[Long].collect().toSet
     val exact = candidates.join(seen, Seq("url_hash"), "left_anti")
       .as[Long].collect().toSet
     assert(viaBloom == exact)
@@ -104,8 +104,8 @@ class PropertySpec extends AnyFunSuite {
       BloomSeen.build(delta1, "url_hash", 700, 0.03),
       BloomSeen.build(delta2, "url_hash", 900, 0.03),
       BloomSeen.build(delta3, "url_hash", 400, 0.03))
-    val viaVector = BloomSeen.antiJoin(spark, candidates, seen, "url_hash", blooms)
-      .as[Long].collect().toSet
+    val viaVector = SeenFilters.antiJoinTracked(spark, candidates, seen, "url_hash",
+      blooms.map(new BloomDelta(_)))._1.as[Long].collect().toSet
     assert(viaVector == exact)
   }
 

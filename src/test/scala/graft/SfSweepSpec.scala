@@ -80,4 +80,16 @@ class SfSweepSpec extends AnyFunSuite {
       spark.read.parquet(s"$src/documents.parquet").count(),
       "replica token streams missing")
   }
+
+  test("the sweep list is the 16 ops, then every driver query but crawl_*") {
+    val ops = Seq("scan_gates", "exact_dedup", "minhash_lsh", "simhash_pairs",
+      "ngram_jaccard", "embedding_neardup", "bm25", "repetition", "ngram_lm",
+      "pagerank", "dsir_sample", "pack_sequences", "ann_brute_topk",
+      "sessionize", "lineitem_agg", "curate_e2e")
+    // building the list only makes closures: no dir is read, no job runs
+    val names = SfSweep.entries(spark, "/nonexistent", 1).map(_._1)
+    assert(names == ops ++
+      SparkEntry.queries.keys.filterNot(_.startsWith("crawl_")).toSeq.sorted)
+    assert(names.distinct == names, "entry names must be unique")
+  }
 }

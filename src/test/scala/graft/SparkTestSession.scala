@@ -2,17 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all Spark-touching specs. */
+/** One shared local session for all Spark-touching specs. Four cores and
+  * four shuffle partitions on every host: specs assert partition counts. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = LocalSpark.session(4, 4, "WARN")
 }
