@@ -50,10 +50,6 @@ final class Graft(val spark: SparkSession) {
   def extractCss(html: String, schema: CssExtract.Schema): String =
     CssExtract.toJson(CssExtract.extract(html, schema))
 
-  /** Schema-driven XPath extraction → JSON string (JsonXPathExtractionStrategy). */
-  def extractXPath(html: String, schema: CssExtract.Schema): String =
-    graft.scrape.XPathExtract.toJson(graft.scrape.XPathExtract.extract(html, schema))
-
   /** Semantic-cluster extraction over a page's text sections (CosineStrategy). */
   def extractClusters(sections: Seq[String],
                       cfg: graft.scrape.CosineExtract.Config = graft.scrape.CosineExtract.Config())
@@ -71,7 +67,7 @@ final class Graft(val spark: SparkSession) {
                headText: Option[DataFrame] = None,
                query: Seq[String] = Nil,
                maxUrls: Int = Int.MaxValue): DataFrame =
-    graft.sources.Seeder.seedPipeline(spark, sources, headText, query, maxUrls = maxUrls)
+    graft.sources.Seeder.seedPipeline(sources, headText, query, maxUrls = maxUrls)
 
   /** TTL-expire a committed crawl epoch: its URLs re-queue for refetch on
     * the next `crawl` over the same runDir (cuckoo-filter runs also evict
@@ -88,9 +84,9 @@ final class Graft(val spark: SparkSession) {
   /** Train corpus embeddings (windowed co-occurrence → PPMI → signed random
     * projection) and get back an [[graft.ops.Embedder]] usable by every
     * semantic operator (`extractClusters`, adaptive crawling, near-dup). */
-  def trainEmbedder(df: DataFrame, idCol: String, textCol: String,
+  def trainEmbedder(df: DataFrame, textCol: String,
                     dim: Int = 64): graft.ops.CorpusEmbed.TrainedEmbedder =
-    graft.ops.CorpusEmbed.train(df, idCol, textCol, dim)
+    graft.ops.CorpusEmbed.train(df, textCol, dim)
 
   /** End-to-end training-corpus curation: quality + repetition gates →
     * exact dedup → fuzzy dedup → optional span dedup → optional benchmark

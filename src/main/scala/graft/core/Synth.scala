@@ -36,8 +36,8 @@ object Synth {
 
   def pageCount(cfg: SiteCfg): Long = cfg.nHosts.toLong * pagesPerHost(cfg)
 
-  def hostName(cfg: SiteCfg, h: Int): String = s"site$h.com"
-  def hostRoot(cfg: SiteCfg, h: Int): String = s"http://${hostName(cfg, h)}"
+  def hostName(h: Int): String = s"site$h.com"
+  def hostRoot(h: Int): String = s"http://${hostName(h)}"
 
   private val loremWords = Array(
     "lorem", "ipsum", "dolor", "sit", "amet", "consectetur", "adipiscing",
@@ -87,8 +87,10 @@ object Synth {
     }
   }
 
-  def urlOf(cfg: SiteCfg, h: Int, role: Role): String = {
-    val root = hostRoot(cfg, h)
+  // `cfg` names no part of the URL; callers (perfbench among them) pass it
+  // as they pass it to every other per-page function here
+  def urlOf(@scala.annotation.unused cfg: SiteCfg, h: Int, role: Role): String = {
+    val root = hostRoot(h)
     role match {
       case Home() => root
       case Cat(c) => s"$root/cat$c"
@@ -147,7 +149,6 @@ object Synth {
     val local = (globalIdx % pph).toInt
     val role = roleOf(cfg, local)
     val url = urlOf(cfg, h, role)
-    val root = hostRoot(cfg, h)
     val title = titleOf(role)
     val seed = cfg.seed ^ Xxh64.hashString(url)
     val b = new Builder(url, Urls.baseDomain(url))
@@ -219,7 +220,7 @@ object Synth {
         b.expectLink("/robots.txt", "robots policy")
         b.expectLink("/favicon.ico", "icon")
         if (cfg.nHosts > 1) {
-          val partner = hostRoot(cfg, (h + 1) % cfg.nHosts)
+          val partner = hostRoot((h + 1) % cfg.nHosts)
           hb ++= s"""<p>Partner: <a href="$partner/cat0">partner site</a></p>\n"""
           b.textSpan("Partner: partner site")
           b.expectLink(s"$partner/cat0", "partner site")
@@ -293,7 +294,7 @@ object Synth {
     }
 
     hb ++= "</body>\n</html>\n"
-    GenPage(url, hostName(cfg, h), depthOf(role), hb.toString,
+    GenPage(url, hostName(h), depthOf(role), hb.toString,
       b.spansOut, b.links, title)
   }
 
@@ -307,7 +308,7 @@ object Synth {
     */
   def seeds(cfg: SiteCfg): Seq[SeedRec] =
     (0 until cfg.nHosts).flatMap { h =>
-      val root = hostRoot(cfg, h)
+      val root = hostRoot(h)
       Seq(
         SeedRec(s"$root/", "sitemap"),
         SeedRec(s"$root/?utm_campaign=launch", "cc"), // dup of home after canon
@@ -320,9 +321,9 @@ object Synth {
   def robots(cfg: SiteCfg): Seq[RobotsRec] = {
     val rules = scala.collection.mutable.ArrayBuffer.empty[RobotsRec]
     if (cfg.nHosts > 1)
-      rules += RobotsRec(hostName(cfg, 1), "User-agent: *\nDisallow: /cat1", 0L, "")
+      rules += RobotsRec(hostName(1), "User-agent: *\nDisallow: /cat1", 0L, "")
     if (cfg.nHosts > 2)
-      rules += RobotsRec(hostName(cfg, cfg.nHosts - 1), "User-agent: *\nDisallow: /", 0L, "")
+      rules += RobotsRec(hostName(cfg.nHosts - 1), "User-agent: *\nDisallow: /", 0L, "")
     rules.toSeq
   }
 }

@@ -1,7 +1,6 @@
 package graft.frontier
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 import java.nio.file.{Files, Path}
 

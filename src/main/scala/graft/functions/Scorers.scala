@@ -101,13 +101,6 @@ object Scorers {
     }
   }
 
-  /** Adaptive link-gain ranking (adaptive_crawler.py:391-416):
-    * relevance·w1 + novelty·w2 + authority·w3.
-    */
-  def linkGain(relevance: Column, novelty: Column, authority: Column,
-               wRel: Double = 0.5, wNov: Double = 0.3, wAuth: Double = 0.2): Column =
-    relevance * wRel + novelty * wNov + authority * wAuth
-
   /** Total link score = 0.7·intrinsic + 0.3·(contextual·10), neutral 5.0
     * fallback (utils.py:3238-3283).
     */

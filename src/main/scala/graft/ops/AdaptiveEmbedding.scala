@@ -180,7 +180,8 @@ object AdaptiveEmbedding {
     if (state.crawled.size >= cfg.maxPages) { state.stoppedReason = Some("max_pages"); return true }
     if (pendingLinks == 0) { state.stoppedReason = Some("exhausted"); return true }
     if (state.confidenceHistory.length < 2) return false
-    val diffs = state.confidenceHistory.sliding(2).map { case Vector(a, b) => math.abs(b - a) }.toSeq
+    val h = state.confidenceHistory
+    val diffs = h.zip(h.tail).map { case (a, b) => math.abs(b - a) }
     val avgImprovement = diffs.sum / diffs.length
     if (avgImprovement < cfg.minRelImprovement * conf) {
       val valScore = validateCoverage(state)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Corpus-level BM25 scoring as a relational pipeline (the reference scores
@@ -24,10 +24,6 @@ object Bm25 {
     df.select(col(idCol).as("doc_id"),
         explode(TextAnalysis.tokens(col(textCol))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-
-  /** (term, df) document frequencies. */
-  def docFreqs(termFreqs: DataFrame): DataFrame =
-    termFreqs.groupBy("term").agg(count(lit(1)).as("df"))
 
   /** BM25 Okapi scores of every document against one query.
     * Output: (doc_id, score) for docs matching ≥ 1 query term.

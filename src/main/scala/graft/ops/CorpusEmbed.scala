@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.core.Xxh64
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** CORPUS-TRAINED text embeddings, fully in-Spark — the in-sandbox answer to
@@ -42,7 +42,7 @@ object CorpusEmbed {
     * with exact integer counts — generated per row (no self-join), one
     * aggregation shuffle.
     */
-  def cooccurrence(df: DataFrame, idCol: String, textCol: String,
+  def cooccurrence(df: DataFrame, textCol: String,
                    window: Int = 3, minCount: Long = 1L): DataFrame = {
     val arr = TextAnalysis.tokens(col(textCol))
     val n = size(arr)
@@ -92,13 +92,13 @@ object CorpusEmbed {
     * terms (by symmetric co-occurrence marginal); pairs below `minCount` are
     * dropped before weighting (standard PPMI noise floor).
     */
-  def train(df: DataFrame, idCol: String, textCol: String,
+  def train(df: DataFrame, textCol: String,
             dim: Int = 64, window: Int = 3, vocabSize: Int = 4096,
             minCount: Long = 2L,
             fallback: Embedder = Embedder.default): TrainedEmbedder = {
     val spark = df.sparkSession
     import spark.implicits._
-    val co = cooccurrence(df, idCol, textCol, window, minCount)
+    val co = cooccurrence(df, textCol, window, minCount)
     // symmetric context counts: a window hit counts for both directions
     val sym = co.select(col("term_a"), col("term_b"), col("n"))
       .unionByName(co.select(col("term_b").as("term_a"),

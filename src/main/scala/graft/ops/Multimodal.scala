@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.core.Xxh64
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column handling: image/audio/video ride through the engine as

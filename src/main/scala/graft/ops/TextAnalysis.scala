@@ -114,12 +114,6 @@ object TextAnalysis {
   def fingerprint(text: Column, k: Int = 3): Column =
     array_min(transform(shingles(text, k), s => md5(s)))
 
-  /** Rolling-hash sketch: the s smallest md5 shingle hashes (a bottom-s
-    * MinHash over content shingles — near-dup docs share most of them).
-    */
-  def fingerprintSketch(text: Column, k: Int = 3, s: Int = 8): Column =
-    slice(array_sort(transform(shingles(text, k), x => md5(x))), 1, s)
-
   // ---- chunking strategies (chunking_strategy.py re-expressed) -------------
 
   /** RegexChunking: split on a pattern (default blank lines), drop empties. */

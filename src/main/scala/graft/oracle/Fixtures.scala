@@ -1,13 +1,13 @@
 package graft.oracle
 
 import graft.core.Synth
-import graft.ops.Multimodal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Expected-result fixtures for the driver's DuckDB compare (FIXTURES.md §5):
+/** Expected-result fixtures for the driver's DuckDB compare (FIXTURES.md §8):
   * each no-SQL-twin query gets a parquet fixture under [[dir]], computed by a
   * SEQUENTIAL independent implementation ([[SeqOracle]], generator intent, or
-  * the reference-derived markdown goldens), and its `oracleSql` entry is just
+  * the reference-derived markdown goldens), and its `SparkEntry.fixtureQ`
+  * registry entry's oracle is just
   * `SELECT * FROM parquet_scan('<fixture>')` — the expected-vs-actual compare
   * then runs through the exact same driver pipeline as the SQL twins.
   *

@@ -153,7 +153,6 @@ object Archive {
   /** Read archives under `path` into one row per member: (archive,
     * member_path, content, n_bytes). One task per archive file. */
   def readArchive(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
     val explodeUdf = udf((name: String, content: Array[Byte]) =>
       members(name.substring(name.lastIndexOf('/') + 1), content))
     spark.read.format("binaryFile").load(path)

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.core.Xxh64
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** PDF source — page-wise text/image/link extraction shaped after the
@@ -28,13 +28,6 @@ object Pdf {
       text: String,
       n_images: Int,
       links: Seq[String])
-
-  /** Read PDFs via Spark's binaryFile source (real path; not used in tests
-    * because the corpus is synthesized in-memory).
-    */
-  def readBinary(spark: SparkSession, path: String): DataFrame =
-    spark.read.format("binaryFile").load(path)
-      .select(col("path"), col("length"), col("content"))
 
   /** ===== STUB KERNEL ===== deterministic fake page extraction: page count
     * and per-page features derive from the content hash. A real build swaps

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.core.Urls
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -109,7 +109,7 @@ object Seeder {
     * invalid/nonsense, canonicalize, first-wins per url_hash, optional BM25
     * scoring over head text, max_urls cut. Mirrors :267-448.
     */
-  def seedPipeline(spark: SparkSession, sources: Seq[(String, DataFrame)],
+  def seedPipeline(sources: Seq[(String, DataFrame)],
                    headText: Option[DataFrame] = None,
                    query: Seq[String] = Nil,
                    scoreThreshold: Double = 0.0,

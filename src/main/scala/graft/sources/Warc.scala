@@ -90,17 +90,17 @@ object Warc {
         if (it.hasNext) {
           val pid = org.apache.spark.TaskContext.getPartitionId()
           val p = new org.apache.hadoop.fs.Path(path, f"part-$pid%05d.warc.gz")
-          val out = p.getFileSystem(conf.value).create(p, true)
+          val file = p.getFileSystem(conf.value).create(p, true)
           // closing a member's stream must end its native Deflater but not
           // the segment stream the next member goes to
-          val segment = new java.io.FilterOutputStream(out) {
-            override def write(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
+          val segment = new java.io.FilterOutputStream(file) {
+            override def write(b: Array[Byte], off: Int, len: Int): Unit = file.write(b, off, len)
             override def close(): Unit = flush()
           }
           try it.foreach { rec =>
             val gz = new java.util.zip.GZIPOutputStream(segment)
             try gz.write((rec + "\r\n\r\n").getBytes(UTF_8)) finally gz.close()
-          } finally out.close()
+          } finally file.close()
         }
       }
   }
@@ -191,7 +191,6 @@ object Warc {
     * segment file (binaryFile source) running the strict parser.
     */
   def readWarc(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
     val parse = udf((content: Array[Byte]) => parseSegment(content))
     spark.read.format("binaryFile").load(path)
       .select(explode(parse(col("content"))).as("rec"))

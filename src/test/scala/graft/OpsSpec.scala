@@ -1429,12 +1429,12 @@ class OpsSpec extends AnyFunSuite {
       val t = Embed.tokens(text)
       for (i <- t.indices; k <- 1 to 3 if i + k < t.length) yield (t(i), t(i + k))
     }.groupBy(identity).view.mapValues(_.size.toLong).toMap
-    val enginePairs = CorpusEmbed.cooccurrence(df, "doc_id", "text", window = 3)
+    val enginePairs = CorpusEmbed.cooccurrence(df, "text", window = 3)
       .as[(String, String, Long)].collect()
       .map { case (a, b, n) => ((a, b), n) }.toMap
     assert(enginePairs == seqPairs)
 
-    val emb = CorpusEmbed.train(df, "doc_id", "text",
+    val emb = CorpusEmbed.train(df, "text",
       dim = 32, window = 3, vocabSize = 64, minCount = 1)
     // term geometry: same-topic terms closer than cross-topic
     def tv(t: String) = emb.vectors(t)
@@ -1473,7 +1473,7 @@ class OpsSpec extends AnyFunSuite {
       (i.toLong, (0 until 11).map(k => w((i + 5 * k) % w.length)).mkString(" "))
     }
     val df = corpus.toDF("doc_id", "text")
-    val emb = CorpusEmbed.train(df, "doc_id", "text",
+    val emb = CorpusEmbed.train(df, "text",
       dim = 32, window = 3, vocabSize = 64, minCount = 1)
     // sanity: the trained kernel sees topic-mates as near-dups and
     // cross-topic docs as distinct at the threshold the pipeline will use

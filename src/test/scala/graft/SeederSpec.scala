@@ -39,7 +39,7 @@ class SeederSpec extends AnyFunSuite {
     val sitemap = Seq("http://a.com/x?utm_source=s", "http://a.com/robots.txt",
       "http://a.com/y").toDF("url")
     val cc = Seq("http://a.com/x", "http://a.com/z", "not a url").toDF("url")
-    val out = Seeder.seedPipeline(spark, Seq("sitemap" -> sitemap, "cc" -> cc))
+    val out = Seeder.seedPipeline(Seq("sitemap" -> sitemap, "cc" -> cc))
       .select("url", "source").as[(String, String)].collect().toMap
     // x deduped (tracking param stripped) with sitemap (rank 0) winning
     assert(out("http://a.com/x") == "sitemap")
@@ -48,7 +48,7 @@ class SeederSpec extends AnyFunSuite {
     assert(!out.contains("http://a.com/robots.txt")) // nonsense dropped
     assert(out.size == 3)
 
-    val capped = Seeder.seedPipeline(spark, Seq("sitemap" -> sitemap, "cc" -> cc),
+    val capped = Seeder.seedPipeline(Seq("sitemap" -> sitemap, "cc" -> cc),
       maxUrls = 2)
     assert(capped.count() == 2)
   }
@@ -60,7 +60,7 @@ class SeederSpec extends AnyFunSuite {
       ("http://a.com/spark", "spark streaming spark sql engine"),
       ("http://a.com/cooking", "pasta recipes and sauces"),
       ("http://a.com/mixed", "spark plugs for cars")).toDF("url", "head")
-    val out = Seeder.seedPipeline(spark, Seq("sitemap" -> urls),
+    val out = Seeder.seedPipeline(Seq("sitemap" -> urls),
         headText = Some(heads), query = Seq("spark"), scoreThreshold = 0.0001)
       .select("url", "score").as[(String, Double)].collect()
     assert(out.length == 2) // cooking scored 0 → below threshold
