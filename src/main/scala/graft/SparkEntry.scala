@@ -38,8 +38,7 @@ object SparkEntry {
   // committed snapshots instead of re-crawling
   @volatile private var sharedRun: String = null
 
-  private def runCrawl(spark: SparkSession, tag: String,
-                       cfg: CrawlConfig = crawlCfg): String =
+  private def runCrawl(spark: SparkSession, tag: String): String =
     synchronized {
       if (sharedRun == null) {
         import spark.implicits._
@@ -49,7 +48,7 @@ object SparkEntry {
           spark.conf.set("spark.sql.shuffle.partitions", "32")
         val runDir = java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
         Crawl.run(spark, Synth.seeds(siteCfg).toDF(), synthPages(spark),
-          Synth.robots(siteCfg).toDF(), runDir, cfg)
+          Synth.robots(siteCfg).toDF(), runDir, crawlCfg)
         sharedRun = runDir
       }
       sharedRun

@@ -56,10 +56,7 @@ final case class CrawlConfig(
     scoreThreshold: Double = Double.NegativeInfinity,
     keywords: Seq[String] = Nil,
     includeExternal: Boolean = false,
-    fairnessEpochs: Int = 3,
     maxEpochs: Int = 64,
-    userAgent: String = "*",
-    scrapeMinWords: Int = 1,
     /** When set, per-host budgets evolve with fetch outcomes: throttling
       * hosts (429/503) get exponentially shrinking budgets and abort after
       * repeated failures (DomainState semantics); the static `hostBudget`
@@ -76,9 +73,6 @@ final case class CrawlConfig(
       * [[Crawl.expireEpoch]]). Either way the exact anti-join gates
       * correctness; this only chooses the pre-filter. */
     seenFilter: String = "bloom",
-    /** Shards per cuckoo delta filter (each built inside one executor task;
-      * auto-scaled up for large deltas). */
-    cuckooShards: Int = 32,
     /** Optional custom frontier-candidate scorer over (url, anchorText) —
       * e.g. [[graft.ops.AdaptiveEmbedding.linkScorerFor]]'s gap-reduction
       * kernel. Overrides keyword scoring; runs inside the expansion plan as
@@ -136,6 +130,10 @@ object Crawl {
     * spread over up to this many partitions. */
   private val SaltBuckets = 8
 
+  /** Epochs a queued entry waits before fairness aging puts it ahead of
+    * every entry that has waited less (priority = -wait). */
+  private[graft] val FairnessEpochs = 3
+
   /** Files per snapshot table for an epoch of `queued` rows:
     * `ceil(queued / RowsPerFile)`, clamped to `1..maxParts`. */
   private[graft] def snapshotParts(queued: Long, maxParts: Int): Int =
@@ -184,6 +182,12 @@ object Crawl {
         i = 4 * pid + (if (ok) 0 else 2) if slots(i) > 0
       } yield PartitionLineage(pid, ok, slots(i), slots(i + 1))
   }
+
+  /** Snapshot table `what` of `epoch` under `schema`, if its dir exists. */
+  private def readIfPresent(spark: SparkSession, runDir: String, epoch: Int, what: String,
+                            schema: org.apache.spark.sql.types.StructType): Option[DataFrame] =
+    Some(dir(runDir, epoch, what)).filter(d => Files.isDirectory(Paths.get(d)))
+      .map(spark.read.schema(schema).parquet(_))
 
   /** The URL-seen set as the union of the seen deltas `base..upTo`. */
   private def readSeen(spark: SparkSession, runDir: String, base: Int, upTo: Int): DataFrame =
@@ -263,7 +267,7 @@ object Crawl {
       : CrawlSummary = {
     import spark.implicits._
     Files.createDirectories(Paths.get(runDir))
-    val store = SeenStore.forConfig(cfg.seenFilter, cfg.cuckooShards)
+    val store = SeenStore.forConfig(cfg.seenFilter)
     val maxParts = spark.sessionState.conf.numShufflePartitions
 
     val start = lastCommittedEpoch(runDir)
@@ -302,40 +306,15 @@ object Crawl {
     // compaction base: first epoch of the current delta run (deltas base..k
     // union to the full seen set; their blooms form the pre-filter vector)
     var seenBase = manifests.last.seenBase
-    // per-epoch delta filters, loaded from persisted files (rebuilt from the
-    // delta dir — delta-sized, cheap — if a file is missing or the run is
-    // resumed under the other filter family). Only an absent delta dir means
-    // an empty filter: an empty filter over a delta that has rows would let
-    // its URLs past the exact probe as new, so a delta that cannot be read
-    // fails the run instead.
+    // the filter vector: each delta's filter, loaded or rebuilt from its
+    // seen delta, and whatever filter the family adds over the queued head
+    // frontier (SeenStore.resume, SeenStore.heal)
     var filters: Vector[SeenDelta] = (seenBase to epoch).toVector.map { e =>
-      val p = store.path(runDir, e)
-      val deltaDir = dir(runDir, e, "seen")
-      if (Files.exists(p)) store.load(p)
-      else if (!Files.isDirectory(Paths.get(deltaDir))) store.empty()
-      else {
-        val delta = spark.read.schema(seenSchema).parquet(deltaDir)
-        store.build(spark, delta, "url_hash", delta.count())
-      }
-    }
-    // cuckoo HEAL (soundness): TTL expiry evicts hashes from the persisted
-    // filters while the exact seen ledger stays monotone — a filter false
-    // negative would let a REDISCOVERED requeued URL ride the definitely-new
-    // fast path past the exact anti-join and enter the frontier twice. The
-    // evicted set is exactly the re-queued set, so one extra filter over the
-    // current queued frontier restores the no-false-negative contract for
-    // the whole run (fetched requeues are covered from the next epoch on by
-    // the admitted-inclusive delta filters below).
-    if (store.name == "cuckoo") {
-      val headDir = dir(runDir, epoch, "frontier")
-      if (Files.isDirectory(Paths.get(headDir))) {
-        val queued0 = spark.read.schema(frontierSchema).parquet(headDir)
-          .where(col("status") === CrawlStatus.Queued).select("url_hash")
-        val nQueued = if (queuedCount >= 0) queuedCount else queued0.count()
-        if (nQueued > 0)
-          filters = filters :+ store.build(spark, queued0, "url_hash", nQueued)
-      }
-    }
+      store.resume(spark, runDir, e, readIfPresent(spark, runDir, e, "seen", seenSchema))
+    } ++ store.heal(spark,
+      readIfPresent(spark, runDir, epoch, "frontier", frontierSchema)
+        .map(_.where(col("status") === CrawlStatus.Queued).select("url_hash")),
+      queuedCount)
     while (!done && epoch < cfg.maxEpochs) {
       val t0 = System.currentTimeMillis()
       val frontier = spark.read.schema(frontierSchema).parquet(dir(runDir, epoch, "frontier"))
@@ -356,7 +335,7 @@ object Crawl {
         // ---- admission: politeness budget + fairness aging + strategy order
         val aged = queued.withColumn("wait", lit(epoch) - col("enqueue_epoch"))
           .withColumn("priority",
-            when(col("wait") > cfg.fairnessEpochs, -col("wait").cast("double"))
+            when(col("wait") > FairnessEpochs, -col("wait").cast("double"))
               .otherwise(col("retry_count").cast("double")))
         val ord = strategyOrder(cfg.strategy)
         val ranked = aged.withColumn("host_rank",
@@ -398,9 +377,9 @@ object Crawl {
             .join(admitted.select("url_hash"), Seq("url_hash"), "left_anti")
           else budgeted.where(col("host_rank") > col("eff_budget")).drop(rankCols: _*)
 
-        // ---- robots gate: tiny dimension → broadcast join, fail-open
-        val canFetchU = udf((rules: String, u: String) =>
-          Robots.canFetch(rules, u, cfg.userAgent))
+        // ---- robots gate: tiny dimension → broadcast join, fail-open; the
+        // crawler is robots.txt's `*` agent (canFetch's default)
+        val canFetchU = udf((rules: String, u: String) => Robots.canFetch(rules, u))
         val gated = admitted.join(
             broadcast(robots.select(col("host"), col("rules"))), Seq("host"), "left")
           .withColumn("robots_ok", coalesce(canFetchU(col("rules"), col("url")), lit(true)))
@@ -415,7 +394,9 @@ object Crawl {
           pages.select(col("url_hash"), col("html"), col("status_code")),
           Seq("url_hash"), "left")
 
-        val scrapeCfg = Scrape.Config(minWords = cfg.scrapeMinWords)
+        // the default scrape config (spans of at least one word), as the
+        // sequential oracle's
+        val scrapeCfg = Scrape.Config()
         val scraped = fetched
           .select("url_hash", "url", "host", "depth", "score", "path", "html", "status_code")
           .as[(Long, String, String, Int, Double, String, String, Option[Int])]
@@ -630,20 +611,9 @@ object Crawl {
               (nextEpoch, Vector(compactFilter))
             } else {
               // the PARQUET delta stays exactly the first-seen set (ledger
-              // semantics); the cuckoo FILTER additionally covers this
-              // epoch's admitted hashes so a refetched (previously evicted)
-              // URL is filter-covered from the next epoch on even across a
-              // crash/resume — always sound (admitted ⊆ seen; extra filter
-              // membership only costs exact-join traffic)
-              val filterInput =
-                if (store.name == "cuckoo")
-                  newEntries.select("url_hash")
-                    .unionByName(admitted.select("url_hash"))
-                else newEntries.select("url_hash")
-              val deltaFilter =
-                if (nNew == 0 && store.name != "cuckoo") store.empty()
-                else store.build(spark, filterInput, "url_hash",
-                  nNew + (if (store.name == "cuckoo") math.max(queuedCount, 0L) else 0L))
+              // semantics); the store decides what else its filter covers
+              val deltaFilter = store.deltaFilter(spark, newEntries.select("url_hash"),
+                admitted.select("url_hash"), nNew, queuedCount)
               store.save(deltaFilter, store.path(runDir, nextEpoch))
               (seenBase, filters :+ deltaFilter)
             }
@@ -701,17 +671,12 @@ object Crawl {
     * exact anti-join is what keeps a re-queued URL rediscovered via links
     * from entering the frontier twice (the reference keeps the same split —
     * the per-crawl visited set is monotone, only the TTL'd result CACHE is
-    * deletable). Under `seenFilter = "cuckoo"` the deletable half is real:
-    * the expired delta's hashes are EVICTED from the persisted sharded
-    * filter (executor-side, [[CuckooSeen.evictSharded]] — per-shard
-    * `mapGroups` deletes, only compact filters cross the driver), so the
-    * filter tracks the still-cached set. Because eviction deliberately
-    * creates filter false negatives against the monotone ledger,
-    * [[Crawl.run]] HEALS the fast path at load (one extra filter over the
-    * queued frontier — the evicted set is exactly the requeued set) and
-    * covers admitted hashes in each epoch's delta filter; eviction itself is
-    * idempotent via an on-disk marker (repeating a cuckoo delete for an
-    * already-evicted key could strip a colliding live fingerprint). Under
+    * deletable). The seen store evicts ([[SeenStore.evict]]): under
+    * `seenFilter = "cuckoo"` the expired delta's hashes leave the persisted
+    * sharded filter, so the filter tracks the still-cached set, and because
+    * eviction deliberately creates filter false negatives against the
+    * monotone ledger, the store HEALS the fast path when [[Crawl.run]]
+    * resumes and covers admitted hashes in each epoch's delta filter. Under
     * bloom the filter is append-only and the stale bits simply age out at
     * the next compaction.
     *
@@ -765,32 +730,7 @@ object Crawl {
     writeSnapshot(requeue.limit(0).select("url_hash"), 1, dir(runDir, nextEpoch, "seen"))
     val store = SeenStore.detect(runDir, last)
     store.save(store.empty(), store.path(runDir, nextEpoch))
-    // deletable-filter path: evict the expired delta's hashes from the
-    // persisted cuckoo filter that contains them — the delta's own filter
-    // when it is still in the live vector, else the compacted full-set
-    // filter at the base epoch. Safe for cuckoo delete semantics: those
-    // hashes are in that filter by construction (the delta parquet IS the
-    // insert set), so no absent-key delete can strip a collider.
-    store match {
-      case _: CuckooStore =>
-        val target = if (expired >= head.seenBase) expired else head.seenBase
-        val p = store.path(runDir, target)
-        // idempotency marker: the expired keys are in the target filter by
-        // construction on the FIRST eviction only — a repeat delete of an
-        // absent key can strip a colliding live fingerprint (cuckoo delete
-        // contract), so each (filter, expired-epoch) pair evicts once. A
-        // later compaction writes a fresh filter at a new epoch, moving
-        // `target`, so the new filter is evictable again.
-        val marker = Paths.get(f"$runDir/.evicted_$target%04d_$expired%04d")
-        if (Files.exists(p) && !Files.exists(marker)) {
-          val expiredHashes = spark.read.parquet(dir(runDir, expired, "seen"))
-          val (evicted, _) = CuckooSeen.evictSharded(
-            store.load(p).asInstanceOf[ShardedCuckoo], expiredHashes, "url_hash")
-          store.save(evicted, p)
-          Files.createFile(marker)
-        }
-      case _ => // bloom: append-only; stale bits age out at compaction
-    }
+    store.evict(runDir, head.seenBase, expired, spark.read.parquet(dir(runDir, expired, "seen")))
     // strategy, seen_total and seen_base carry over from the head
     EpochManifest.commit(runDir, head.copy(epoch = nextEpoch, frontierQueued = Some(n),
       kind = Some("recrawl"), frontier = None, expiredEpoch = Some(expired),

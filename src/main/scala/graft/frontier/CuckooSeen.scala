@@ -3,13 +3,12 @@ package graft.frontier
 import graft.core.Xxh64
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path}
 
-/** Cuckoo filter for the URL-seen set — the DELETABLE alternative to
-  * [[BloomSeen]] (the north-star names "bloom/cuckoo-filter URL-seen"; the
-  * reference's cache layer supports TTL-based invalidation, utils.py cache
-  * semantics + async_url_seeder.py TTL refresh, which a bloom cannot express
-  * without a rebuild).
+/** Cuckoo filter for the URL-seen set — the DELETABLE alternative to the
+  * bloom of [[BloomStore]] (the north-star names "bloom/cuckoo-filter
+  * URL-seen"; the reference's cache layer supports TTL-based invalidation,
+  * utils.py cache semantics + async_url_seeder.py TTL refresh, which a bloom
+  * cannot express without a rebuild).
   *
   * Standard partial-key cuckoo filter (Fan, Andersen, Kaminsky, Mitzenmacher,
   * "Cuckoo Filter: Practically Better Than Bloom", CoNEXT 2014 — public
@@ -20,7 +19,7 @@ import java.nio.file.{Files, Path}
   *  - no false negatives for present keys; FP rate ≈ 2·4/2^16 ≈ 1.2e-4
   *  - `delete` removes one copy of a fingerprint → TTL-expired URLs can be
   *    EVICTED so the crawler refetches them, with no full-filter rebuild
-  *  - the epoch protocol is the same as BloomSeen's: one filter per seen
+  *  - the epoch protocol is the same as the bloom's: one filter per seen
   *    DELTA, vector consulted at candidate time, compaction merges — plus
   *    delta-level eviction when a recrawl TTL expires an epoch.
   *
@@ -221,8 +220,8 @@ object ShardedCuckoo {
   }
 }
 
-/** Seen-set protocol over cuckoo filters — mirrors [[BloomSeen]]'s delta
-  * vector, adding eviction ([[evictSharded]]) for TTL-based recrawl. Every
+/** The sharded cuckoo algorithms behind [[CuckooStore]]: the distributed
+  * build, and eviction ([[evictSharded]]) for TTL-based recrawl. Every
   * operation here is executor-side over the hash-sharded form: only compact
   * serialized filters ever cross the driver boundary, never row data.
   */
@@ -266,7 +265,7 @@ object CuckooSeen {
     * rebuild of surviving epochs' state. Returns the updated filter (untouched
     * shards are shared, not copied) and the number of evicted keys.
     *
-    * Cuckoo caveat honored by the caller ([[Crawl.expireEpoch]]): only keys
+    * Cuckoo caveat honored by the caller ([[CuckooStore.evict]]): only keys
     * KNOWN to be in this filter may be deleted — deleting an absent key can
     * strip a colliding fingerprint of a different present key.
     */
@@ -290,14 +289,4 @@ object CuckooSeen {
     updated.foreach { case (s, bytes, _) => arr(s) = CuckooFilter.deserialize(bytes) }
     (new ShardedCuckoo(arr), updated.map(_._3).sum)
   }
-
-  def saveSharded(sc: ShardedCuckoo, path: Path): Unit = {
-    val tmp = path.resolveSibling("." + path.getFileName.toString + ".tmp")
-    Files.write(tmp, sc.serialize())
-    Files.move(tmp, path, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  def loadSharded(path: Path): ShardedCuckoo =
-    ShardedCuckoo.deserialize(Files.readAllBytes(path))
 }

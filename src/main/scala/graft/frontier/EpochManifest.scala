@@ -2,6 +2,8 @@ package graft.frontier
 
 import org.json4s.{DefaultFormats, Extraction, Formats}
 import org.json4s.jackson.JsonMethods.{compact, parse, render}
+import java.io.{BufferedOutputStream, OutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** Rows and words of one scraped partition, split by fetch outcome. */
@@ -43,11 +45,19 @@ object EpochManifest {
   def read(runDir: String, epoch: Int): Option[EpochManifest] =
     Some(path(runDir, epoch)).filter(Files.exists(_)).map(p => decode(Files.readString(p)))
 
-  /** Atomic commit: write a temp file, then rename it into place (same dir),
-    * so a reader never sees a partial manifest. */
-  def commit(runDir: String, m: EpochManifest): Unit = {
-    val tmp = Paths.get(s"$runDir/.manifest_tmp_${m.epoch}.json")
-    Files.writeString(tmp, encode(m))
-    Files.move(tmp, path(runDir, m.epoch), StandardCopyOption.ATOMIC_MOVE)
+  /** Atomic commit: a reader never sees a partial manifest. */
+  def commit(runDir: String, m: EpochManifest): Unit =
+    AtomicFile.write(path(runDir, m.epoch))(_.write(encode(m).getBytes(UTF_8)))
+}
+
+/** The one writer of the run dir's small files (manifests and seen-delta
+  * filters): the bytes go to a hidden temp file beside `path`, which is then
+  * renamed over `path`, so a reader sees the old file or the whole new one. */
+private[frontier] object AtomicFile {
+  def write(path: Path)(body: OutputStream => Unit): Unit = {
+    val tmp = path.resolveSibling("." + path.getFileName.toString + ".tmp")
+    val os = new BufferedOutputStream(Files.newOutputStream(tmp))
+    try body(os) finally os.close()
+    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 }

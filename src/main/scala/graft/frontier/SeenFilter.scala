@@ -12,6 +12,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.util.sketch.BloomFilter
+import java.io.BufferedInputStream
 import java.nio.file.{Files, Path, Paths}
 
 /** One probabilistic membership pre-filter over url-hash keys — the thing the
@@ -27,7 +28,7 @@ trait SeenDelta extends Serializable {
   def mightContain(key: Long): Boolean
 }
 
-/** Bloom-backed delta ([[BloomSeen]] builds these via the distributed
+/** Bloom-backed delta ([[BloomStore]] builds these via the distributed
   * `DataFrame.stat.bloomFilter` treeAggregate). */
 final class BloomDelta(val bloom: BloomFilter) extends SeenDelta {
   override def mightContain(key: Long): Boolean = bloom.mightContainLong(key)
@@ -188,55 +189,149 @@ final case class SeenProbe(fresh: DataFrame, filterBc: Broadcast[Array[SeenDelta
   }
 }
 
-/** Build/persist strategy for per-epoch seen-delta filters — the
-  * `CrawlConfig.seenFilter` seam. Filter files are DERIVED caches of the seen
-  * parquet deltas (minus any cuckoo evictions): a missing file is rebuilt
-  * from its delta; a rebuilt file conservatively loses evictions, which only
-  * costs exact-join traffic, never correctness.
+/** Build, persist and resume policy for the per-epoch seen-delta filters:
+  * the `CrawlConfig.seenFilter` seam, and the one place that knows what a
+  * filter family needs. `Crawl.run` and `Crawl.expireEpoch` call these
+  * methods and never branch on the family.
+  *
+  * Filter files are DERIVED caches of the seen parquet deltas (minus any
+  * cuckoo evictions): a missing file is rebuilt from its delta; a rebuilt
+  * file conservatively loses evictions, which only costs exact-join traffic,
+  * never correctness. The crawl's key column is `url_hash`.
   */
 sealed trait SeenStore {
+  /** The filter this family builds, saves and loads. */
+  type F <: SeenDelta
   def name: String
-  def path(runDir: String, epoch: Int): Path
+  def path(runDir: String, epoch: Int): Path = Paths.get(f"$runDir/${name}_$epoch%04d.bin")
   def build(spark: SparkSession, delta: DataFrame, colName: String,
-            expectedItems: Long): SeenDelta
-  def empty(): SeenDelta
-  def save(f: SeenDelta, p: Path): Unit
-  def load(p: Path): SeenDelta
+            expectedItems: Long): F
+  def empty(): F
+  def save(f: F, p: Path): Unit
+  def load(p: Path): F
+
+  /** Epoch `epoch`'s filter for a resumed run: its saved file, else rebuilt
+    * from the epoch's seen `delta` (also how a run resumed under the other
+    * family gets its filters). Only an absent delta means an empty filter:
+    * one over a delta that has rows would let its URLs past the exact probe
+    * as new, so a delta that cannot be read fails the run instead. */
+  def resume(spark: SparkSession, runDir: String, epoch: Int,
+             delta: => Option[DataFrame]): F = {
+    val p = path(runDir, epoch)
+    if (Files.exists(p)) load(p)
+    else delta.fold(empty())(d => build(spark, d, SeenStore.Key, d.count()))
+  }
+
+  /** The filter, if the family needs one, that a resumed run appends over
+    * the `queued` keys of its head frontier (`queuedCount`, -1 if unknown). */
+  def heal(spark: SparkSession, queued: => Option[DataFrame], queuedCount: Long): Option[F]
+
+  /** One epoch's delta filter over its `nNew` first-seen keys, plus what
+    * else the family covers of the epoch's admitted keys. */
+  def deltaFilter(spark: SparkSession, newKeys: DataFrame, admittedKeys: => DataFrame,
+                  nNew: Long, queuedCount: Long): F
+
+  /** TTL expiry of epoch `expired` in a run whose filter vector starts at
+    * `seenBase`. */
+  def evict(runDir: String, seenBase: Int, expired: Int, expiredKeys: => DataFrame): Unit
 }
 
+/** Bloom pre-filter for the URL-seen set (reference's experimental bloom
+  * frontier, /root/reference/crawl4ai/deep_crawling/crazy.py:102-165,
+  * re-expressed on Spark's sketch library): append-only and smallest.
+  *
+  * Blooms are INCREMENTAL: each epoch builds a bloom over that epoch's seen
+  * DELTA only (never re-aggregating history), and the check consults the
+  * vector of per-epoch blooms. Every `seenCompactEvery` epochs the crawl loop
+  * compacts the deltas and replaces the vector with one full-set bloom, which
+  * bounds both the vector length and the effective false-positive rate
+  * (k deltas at fpp each ≈ k·fpp combined — acceptable for a pre-filter whose
+  * misses only cost exact-probe volume, never correctness).
+  */
 final class BloomStore(fpp: Double) extends SeenStore {
+  type F = BloomDelta
   override def name = "bloom"
-  override def path(runDir: String, epoch: Int): Path =
-    Paths.get(f"$runDir/bloom_$epoch%04d.bin")
+  // a distributed treeAggregate: no driver-side row collection
   override def build(spark: SparkSession, delta: DataFrame, colName: String,
-                     expectedItems: Long): SeenDelta =
-    new BloomDelta(BloomSeen.build(delta, colName, expectedItems, fpp))
-  override def empty(): SeenDelta = new BloomDelta(BloomSeen.empty(fpp))
-  override def save(f: SeenDelta, p: Path): Unit =
-    BloomSeen.save(f.asInstanceOf[BloomDelta].bloom, p)
-  override def load(p: Path): SeenDelta = new BloomDelta(BloomSeen.load(p))
+                     expectedItems: Long): BloomDelta =
+    new BloomDelta(delta.stat.bloomFilter(colName, math.max(expectedItems, 64L), fpp))
+  override def empty(): BloomDelta = new BloomDelta(BloomFilter.create(64L, fpp))
+  override def save(f: BloomDelta, p: Path): Unit = AtomicFile.write(p)(f.bloom.writeTo(_))
+  override def load(p: Path): BloomDelta = {
+    val is = new BufferedInputStream(Files.newInputStream(p))
+    try new BloomDelta(BloomFilter.readFrom(is)) finally is.close()
+  }
+  // nothing is evicted from a bloom, so nothing needs healing
+  override def heal(spark: SparkSession, queued: => Option[DataFrame],
+                    queuedCount: Long): Option[BloomDelta] = None
+  override def deltaFilter(spark: SparkSession, newKeys: DataFrame, admittedKeys: => DataFrame,
+                           nNew: Long, queuedCount: Long): BloomDelta =
+    if (nNew == 0) empty() else build(spark, newKeys, SeenStore.Key, nNew)
+  // append-only: the stale bits age out at the next compaction
+  override def evict(runDir: String, seenBase: Int, expired: Int,
+                     expiredKeys: => DataFrame): Unit = ()
 }
 
-final class CuckooStore(shards: Int = 32) extends SeenStore {
+/** Sharded cuckoo filters ([[CuckooSeen]]): deletable, so TTL expiry evicts
+  * the expired delta's keys from the persisted filter instead of leaving
+  * them to age out. */
+final class CuckooStore extends SeenStore {
+  type F = ShardedCuckoo
   override def name = "cuckoo"
-  override def path(runDir: String, epoch: Int): Path =
-    Paths.get(f"$runDir/cuckoo_$epoch%04d.bin")
   // a shard is bounded (CuckooFilter.create caps at 2^27 want units ≈ 5×10^8
   // keys at 0.95 load); scale the shard count with the delta so a compacted
   // full set at 10^10 keys still builds — each shard's filter is assembled
   // inside one executor task. 2.5×10^8 keys/shard keeps the post-headroom
   // per-shard capacity comfortably inside the create() cap.
   private def shardsFor(expectedItems: Long): Int =
-    math.max(shards, ((expectedItems + 250000000L - 1) / 250000000L).toInt)
+    math.max(32, ((expectedItems + 250000000L - 1) / 250000000L).toInt)
   override def build(spark: SparkSession, delta: DataFrame, colName: String,
-                     expectedItems: Long): SeenDelta =
+                     expectedItems: Long): ShardedCuckoo =
     CuckooSeen.buildSharded(delta, colName, math.max(expectedItems, 64L),
       shardsFor(expectedItems))
-  override def empty(): SeenDelta =
-    new ShardedCuckoo(Array(CuckooFilter.create(64)))
-  override def save(f: SeenDelta, p: Path): Unit =
-    CuckooSeen.saveSharded(f.asInstanceOf[ShardedCuckoo], p)
-  override def load(p: Path): SeenDelta = CuckooSeen.loadSharded(p)
+  override def empty(): ShardedCuckoo = new ShardedCuckoo(Array(CuckooFilter.create(64)))
+  override def save(f: ShardedCuckoo, p: Path): Unit = AtomicFile.write(p)(_.write(f.serialize()))
+  override def load(p: Path): ShardedCuckoo = ShardedCuckoo.deserialize(Files.readAllBytes(p))
+
+  /** The HEAL (soundness): expiry evicts keys from the filters while the
+    * exact seen ledger stays monotone, so a REDISCOVERED requeued URL would
+    * ride the definitely-new fast path past the exact anti-join and enter
+    * the frontier twice. The evicted set is exactly the requeued set, so one
+    * filter over the queued frontier restores the no-false-negative
+    * contract (fetched requeues are covered by [[deltaFilter]]). */
+  override def heal(spark: SparkSession, queued: => Option[DataFrame],
+                    queuedCount: Long): Option[ShardedCuckoo] =
+    queued.flatMap { q =>
+      val n = if (queuedCount >= 0) queuedCount else q.count()
+      Option.when(n > 0)(build(spark, q, SeenStore.Key, n))
+    }
+
+  /** Over the new AND the admitted keys, so a refetched (previously
+    * evicted) URL is covered from the next epoch on, even across a resume.
+    * Sound: admitted ⊆ seen; extra membership only costs exact-join
+    * traffic. */
+  override def deltaFilter(spark: SparkSession, newKeys: DataFrame, admittedKeys: => DataFrame,
+                           nNew: Long, queuedCount: Long): ShardedCuckoo =
+    build(spark, newKeys.unionByName(admittedKeys), SeenStore.Key,
+      nNew + math.max(queuedCount, 0L))
+
+  /** Evict the expired keys ([[CuckooSeen.evictSharded]]) from the filter
+    * that holds them: the delta's own while it is in the live vector, else
+    * the compacted one at `seenBase`. They are in it by construction on the
+    * FIRST eviction only, and deleting an absent key can strip a colliding
+    * live fingerprint, so the marker `.evicted_<target>_<expired>` makes
+    * each (filter, expired epoch) pair evict once; a later compaction moves
+    * the target to a fresh filter. */
+  override def evict(runDir: String, seenBase: Int, expired: Int,
+                     expiredKeys: => DataFrame): Unit = {
+    val target = math.max(expired, seenBase)
+    val p = path(runDir, target)
+    val marker = Paths.get(f"$runDir/.evicted_$target%04d_$expired%04d")
+    if (Files.exists(p) && !Files.exists(marker)) {
+      save(CuckooSeen.evictSharded(load(p), expiredKeys, SeenStore.Key)._1, p)
+      Files.createFile(marker)
+    }
+  }
 }
 
 object SeenStore {
@@ -244,9 +339,12 @@ object SeenStore {
     * store [[detect]]ed from a run dir builds the filters the run built. */
   private val BloomFpp = 0.03
 
-  def forConfig(seenFilter: String, shards: Int = 32): SeenStore =
+  /** The key column of the crawl's seen frames. */
+  private[frontier] val Key = "url_hash"
+
+  def forConfig(seenFilter: String): SeenStore =
     seenFilter match {
-      case "cuckoo" => new CuckooStore(shards)
+      case "cuckoo" => new CuckooStore
       case "bloom"  => new BloomStore(BloomFpp)
       case other    => throw new IllegalArgumentException(
         s"unknown seenFilter '$other' (expected bloom|cuckoo)")
@@ -255,7 +353,7 @@ object SeenStore {
   /** Detect which filter family a committed run used (by which derived cache
     * files exist) — lets `Crawl.expireEpoch` stay config-free. */
   def detect(runDir: String, epoch: Int): SeenStore = {
-    val cuckoo = new CuckooStore()
+    val cuckoo = new CuckooStore
     if (Files.exists(cuckoo.path(runDir, epoch))) cuckoo else new BloomStore(BloomFpp)
   }
 }

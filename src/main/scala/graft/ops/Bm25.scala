@@ -19,12 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Bm25 {
 
-  /** (doc_id, term, tf) term frequencies. */
-  def termFreqs(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol).as("doc_id"),
-        explode(TextAnalysis.tokens(col(textCol))).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-
   /** BM25 Okapi scores of every document against one query.
     * Output: (doc_id, score) for docs matching ≥ 1 query term.
     *

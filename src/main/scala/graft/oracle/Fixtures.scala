@@ -469,8 +469,7 @@ object Fixtures {
     write("crawl_recrawl",
       trace.enqueued.filter(_._4 == 1)
         .filter { case (u, h, _, _) =>
-          graft.politeness.Robots.canFetch(
-            robotsMap.getOrElse(h, null), u, graft.SparkEntry.crawlCfg.userAgent) }
+          graft.politeness.Robots.canFetch(robotsMap.getOrElse(h, null), u) }
         .map { case (u, _, d, _) => (u, d) }
         .toDF("url", "depth"))
 

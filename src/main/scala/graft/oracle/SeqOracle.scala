@@ -1,7 +1,7 @@
 package graft.oracle
 
 import graft.core.{Synth, Urls}
-import graft.frontier.CrawlConfig
+import graft.frontier.{Crawl, CrawlConfig}
 import graft.politeness.Robots
 import graft.scrape.Scrape
 
@@ -60,7 +60,7 @@ object SeqOracle {
            fetchedTotal < cfg.maxPages) {
       val withPrio = frontier.map { e =>
         val wait = epoch - e.enqueueEpoch
-        val prio = if (wait > cfg.fairnessEpochs) -wait.toDouble else e.retry.toDouble
+        val prio = if (wait > Crawl.FairnessEpochs) -wait.toDouble else e.retry.toDouble
         (e, prio)
       }
       val ordered = cfg.strategy match {
@@ -78,7 +78,7 @@ object SeqOracle {
       val admitted = admitted0.take(math.min(capacity, Int.MaxValue.toLong).toInt)
       val spill = admitted0.drop(admitted.size)
       val allowed = admitted.map(_._1).filter(e =>
-        Robots.canFetch(robotsMap.getOrElse(e.host, null), e.url, cfg.userAgent))
+        Robots.canFetch(robotsMap.getOrElse(e.host, null), e.url))
       val skippedRobots = admitted.size - allowed.size
       allowed.zipWithIndex.foreach { case (e, i) =>
         visits += ((epoch, i + 1, e.url, e.depth))

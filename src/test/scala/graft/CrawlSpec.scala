@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import graft.core._
 import graft.frontier.{Crawl, CrawlConfig, CrawlSummary, EpochManifest, PartitionLineage}
 import graft.politeness.Robots
-import graft.scrape.Scrape
 import java.nio.file.{Files, Path, Paths}
 
 /** End-to-end frontier tests against a driver-side oracle implementing the
@@ -331,9 +330,9 @@ class CrawlSpec extends AnyFunSuite {
   }
 
   test("cuckoo seen-filter: crawl + TTL recrawl identical to bloom; expiry evicts from the filter") {
-    import graft.frontier.{CuckooSeen, SeenStore, ShardedCuckoo}
+    import graft.frontier.{SeenStore, ShardedCuckoo}
     val bloomCfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40)
-    val cuckooCfg = bloomCfg.copy(seenFilter = "cuckoo", cuckooShards = 4)
+    val cuckooCfg = bloomCfg.copy(seenFilter = "cuckoo")
     val bDir = freshDir("seen-bloom"); val cDir = freshDir("seen-cuckoo")
     Crawl.run(spark, seedsDF, pagesDF, robotsDF, bDir, bloomCfg)
     Crawl.run(spark, seedsDF, pagesDF, robotsDF, cDir, cuckooCfg)
@@ -405,8 +404,7 @@ class CrawlSpec extends AnyFunSuite {
     val miniPages = mini.map { case (u, h) => PageRec(u, 0L, "x.com", h, 200, 0) }.toDF()
       .withColumn("url_hash", xxhash64(col("url")))
     val miniSeeds = Seq(("http://x.com/", "sitemap")).toDF("url", "source")
-    val cfg = CrawlConfig(hostBudget = 10, maxEpochs = 20,
-      seenFilter = "cuckoo", cuckooShards = 2)
+    val cfg = CrawlConfig(hostBudget = 10, maxEpochs = 20, seenFilter = "cuckoo")
     val runDir = freshDir("cuckoo-sound")
     Crawl.run(spark, miniSeeds, miniPages, robotsDF.limit(0), runDir, cfg)
     val seenBefore = Crawl.seenSet(spark, runDir).as[Long].collect().sorted.toSeq
@@ -727,7 +725,7 @@ class CrawlSpec extends AnyFunSuite {
   test("resume rebuilds missing delta filters: seen set, visits and summary equal an uninterrupted run") {
     for (family <- Seq("bloom", "cuckoo")) {
       val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40,
-        seenFilter = family, cuckooShards = 4)
+        seenFilter = family)
       val full = freshDir(s"rebuild-full-$family")
       val fullSummary = Crawl.run(spark, seedsDF, pagesDF, robotsDF, full, cfg)
 
@@ -753,7 +751,7 @@ class CrawlSpec extends AnyFunSuite {
   test("resume fails closed when a missing delta filter cannot be rebuilt") {
     for (family <- Seq("bloom", "cuckoo")) {
       val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40,
-        seenFilter = family, cuckooShards = 4)
+        seenFilter = family)
       val partial = freshDir(s"unreadable-$family")
       Crawl.run(spark, seedsDF, pagesDF, robotsDF, partial, cfg.copy(maxEpochs = 2))
       val last = Crawl.lastCommittedEpoch(partial)

@@ -229,7 +229,6 @@ class ExtractSpec extends AnyFunSuite {
 
   test("bm25 chunk pipeline (relational form)") {
     import SparkTestSession.spark
-    import org.apache.spark.sql.functions._
     val df = spark.createDataFrame(Seq(
       (1L, Seq("spark is fast", "cooking pasta", "more spark tuning")),
       (2L, Seq("nothing relevant here", "just cooking")))).toDF("doc_id", "chunks")

@@ -46,7 +46,7 @@ class JpxSpec extends AnyFunSuite {
       (19, 11, (_, _) => 0),
       (19, 11, (_, _) => 255),
       (24, 17, (x, y) => if ((x + y) % 2 == 0) 0 else 255),
-      (31, 23, (x, y) => (x * 255) / 30))
+      (31, 23, (x, _) => (x * 255) / 30))
     for (((w, h, f), i) <- cases.zipWithIndex; levels <- Seq(0, 2)) {
       val img = pattern(w, h, f)
       val d = Jpx.decode(Jpx.encode(w, h, img, levels = levels)).get

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.scrape.{Html2Md, Markdown}
+import graft.scrape.Html2Md
 
 /** Behavioral pin for the markdown generator: every golden in
   * markdown_goldens.json was captured from the REFERENCE converter (the

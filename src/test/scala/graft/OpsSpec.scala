@@ -995,7 +995,7 @@ class OpsSpec extends AnyFunSuite {
       assert(flag == (hits > 0))
     }
     // the bench docs themselves must all be flagged (they share all grams)
-    expected.foreach { case (id, (n, hits)) =>
+    expected.foreach { case (id, (n, _)) =>
       if (id % 7 == 0 && n > 0) assert(got(id)._1 > 0, s"bench doc $id unflagged")
     }
   }
@@ -1555,7 +1555,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("adaptive embedding: gaps, gap-filling link selection, KB dedup") {
-    import graft.ops.{AdaptiveEmbedding => AE, Embed}
+    import graft.ops.{AdaptiveEmbedding => AE}
     val cfg = AE.Config()
     val state = AE.mapQuerySemanticSpace("spark shuffle partition",
       AE.expandQuery("spark shuffle partition", Seq("executor", "stage")))

@@ -12,7 +12,7 @@ import graft.sources.{PdfCrypt, PdfParse}
   */
 class PdfCryptSpec extends AnyFunSuite {
 
-  import PdfFixtures.{id0, encryptPdf}
+  import PdfFixtures.encryptPdf
 
   // a multi-feature plaintext: 2 pages, Flate content, image, link URI
   private def plainDoc: Array[Byte] = PdfFixtures.buildPdf(

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import graft.core.{Urls, Xxh64}
-import graft.frontier.{BloomDelta, BloomSeen, SeenFilters}
+import graft.frontier.{BloomDelta, BloomStore, SeenFilters}
 
 /** ScalaCheck properties (SURVEY.md §5 rebuild test plan #4). */
 class PropertySpec extends AnyFunSuite {
@@ -82,7 +82,8 @@ class PropertySpec extends AnyFunSuite {
     import SparkTestSession.spark
     import spark.implicits._
     val seen = (0L until 2000L).toDF("url_hash")
-    val bloom = BloomSeen.build(seen, "url_hash", 2000, fpp = 0.03)
+    val store = new BloomStore(0.03)
+    val bloom = store.build(spark, seen, "url_hash", 2000).bloom
     // no false negatives: every seen hash is maybe-seen
     (0L until 2000L).foreach(h => assert(bloom.mightContainLong(h)))
     // false-positive rate on 10k unseen hashes stays near fpp (≤ 3x slack)
@@ -101,9 +102,9 @@ class PropertySpec extends AnyFunSuite {
     val delta2 = (700L until 1600L).toDF("url_hash")
     val delta3 = (1600L until 2000L).toDF("url_hash")
     val blooms = Seq(
-      BloomSeen.build(delta1, "url_hash", 700, 0.03),
-      BloomSeen.build(delta2, "url_hash", 900, 0.03),
-      BloomSeen.build(delta3, "url_hash", 400, 0.03))
+      store.build(spark, delta1, "url_hash", 700).bloom,
+      store.build(spark, delta2, "url_hash", 900).bloom,
+      store.build(spark, delta3, "url_hash", 400).bloom)
     val viaVector = SeenFilters.antiJoinTracked(spark, candidates, seen, "url_hash",
       blooms.map(new BloomDelta(_)))._1.as[Long].collect().toSet
     assert(viaVector == exact)
@@ -175,10 +176,36 @@ class PropertySpec extends AnyFunSuite {
     assert((0L until 1200L).forall(i => f1.contains(key(i))))
   }
 
+  test("seen store save then load: every key still maybe-seen; the file is the filter's own serialization") {
+    import SparkTestSession.spark
+    import spark.implicits._
+    import graft.frontier.{SeenStore, ShardedCuckoo}
+    def key(i: Long): Long = Xxh64.hashString(s"http://h${i % 53}.net/s/$i")
+    val keys = (0L until 3000L).map(key)
+    val dir = java.nio.file.Files.createTempDirectory("seen-store").toString
+    for (family <- Seq("bloom", "cuckoo")) {
+      val store = SeenStore.forConfig(family)
+      val built = store.build(spark, keys.toDF("url_hash"), "url_hash", keys.size)
+      val p = store.path(dir, 1)
+      store.save(built, p)
+      // the bytes old run dirs resume from
+      val expected = built match {
+        case b: BloomDelta =>
+          val out = new java.io.ByteArrayOutputStream
+          b.bloom.writeTo(out)
+          out.toByteArray
+        case c: ShardedCuckoo => c.serialize()
+      }
+      assert(java.nio.file.Files.readAllBytes(p).sameElements(expected), family)
+      val loaded = store.load(p)
+      keys.foreach(k => assert(loaded.mightContain(k), s"$family: $k not maybe-seen after load"))
+    }
+  }
+
   test("seen probe over a parquet seen set above the broadcast threshold: equals left_anti, seen never exchanged") {
     import SparkTestSession.spark
     import spark.implicits._
-    import graft.frontier.{BloomDelta, CuckooSeen, SeenDelta, SeenFilters}
+    import graft.frontier.{BloomStore, CuckooSeen, SeenDelta, SeenFilters}
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -211,7 +238,7 @@ class PropertySpec extends AnyFunSuite {
       val fpKeys = (40000L until 41000L).map(key)
       type Family = Seq[Long] => Seq[SeenDelta]
       val bloom: Family = ks => ks.grouped(16000).map(g =>
-        new BloomDelta(BloomSeen.build(g.toDF("url_hash"), "url_hash", g.size, 0.03))
+        new BloomStore(0.03).build(spark, g.toDF("url_hash"), "url_hash", g.size)
           : SeenDelta).toSeq
       val cuckoo: Family = ks => ks.grouped(16000).map(g =>
         CuckooSeen.buildSharded(g.toDF("url_hash"), "url_hash", g.size, shards = 4): SeenDelta).toSeq

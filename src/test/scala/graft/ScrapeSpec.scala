@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.{Span, Synth, Urls}
+import graft.core.{Span, Synth}
 import graft.scrape.{HtmlTok, Scrape}
 
 /** Span-sequence equality: the scraper's (kind, text, media_ref, order) per

@@ -3,7 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.sources.Warc
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class WarcSpec extends AnyFunSuite {
