@@ -94,7 +94,7 @@ object SfSweep {
         // manifest as hash 0, not NPE the builder
         val row = base.agg(
           count(lit(1)).as("n"),
-          coalesce(sum(xxhash64(base.columns.map(col): _*)
+          coalesce(sum(xxhash64(base.columns.toSeq.map(col): _*)
             .cast(org.apache.spark.sql.types.DecimalType(38, 0))),
             lit(0).cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("h")).head()
         val h = row.getDecimal(1).toBigInteger

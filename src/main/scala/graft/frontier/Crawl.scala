@@ -9,6 +9,9 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import scala.collection.mutable.ArrayBuffer
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /** The crawl engine: an epoch-batch frontier loop, each epoch one Catalyst
   * plan (SURVEY.md §3.3 — the reference's BFS/DFS/BestFirst strategies,
@@ -100,8 +103,8 @@ object Crawl {
   /** Executor for the epoch loop's concurrent snapshot jobs (daemon threads;
     * Spark job submission is thread-safe and local/cluster schedulers both
     * interleave concurrent jobs). */
-  private lazy val epochEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
+  private lazy val epochEc: ExecutionContext =
+    ExecutionContext.fromExecutorService(
       java.util.concurrent.Executors.newFixedThreadPool(8, (r: Runnable) => {
         val t = new Thread(r, "graft-epoch-io"); t.setDaemon(true); t
       }))
@@ -119,6 +122,10 @@ object Crawl {
   // inference in the planning phase of every epoch
   private val frontierSchema = org.apache.spark.sql.Encoders.product[FrontierEntry].schema
   private val seenSchema = org.apache.spark.sql.types.StructType.fromDDL("url_hash BIGINT")
+  private val domainStateSchema = org.apache.spark.sql.types.StructType
+    .fromDDL("host STRING, current_delay DOUBLE, fail_count INT")
+  private val headStoreSchema = org.apache.spark.sql.types.StructType
+    .fromDDL("url STRING, status STRING, head STRING, fetched_at BIGINT")
 
   /** Queued rows per snapshot file. A docs row (spans, links, title) is
     * ~0.1-0.6 KB of snappy parquet on the synthetic sites, so ~10,000 rows
@@ -332,326 +339,324 @@ object Crawl {
         // every snapshot table this epoch writes: one file per RowsPerFile
         // queued rows
         val parts = snapshotParts(queuedCount, maxParts)
-        // ---- admission: politeness budget + fairness aging + strategy order
-        val aged = queued.withColumn("wait", lit(epoch) - col("enqueue_epoch"))
-          .withColumn("priority",
-            when(col("wait") > FairnessEpochs, -col("wait").cast("double"))
-              .otherwise(col("retry_count").cast("double")))
-        val ord = strategyOrder(cfg.strategy)
-        val ranked = aged.withColumn("host_rank",
-          row_number().over(Window.partitionBy("host").orderBy(ord: _*)))
-        // effective budget: static cap, tightened per host by evolved
-        // politeness state (throttled hosts shrink, aborted hosts go to 0)
-        // cached: the window runs once, and both the admitted and the
-        // deferred rows are filters over it
-        val budgeted = (domainState match {
-          case Some(st) =>
-            val perHost = graft.politeness.DomainState
-              .hostBudget(st, cfg.epochSeconds)
-              .withColumnRenamed("budget", "state_budget")
-            ranked.join(broadcast(perHost), Seq("host"), "left")
-              .withColumn("eff_budget",
-                least(lit(cfg.hostBudget), coalesce(col("state_budget"), lit(cfg.hostBudget))))
-              .drop("state_budget")
-          case None => ranked.withColumn("eff_budget", lit(cfg.hostBudget))
-        }).cache()
-        val rankCols = Seq("host_rank", "wait", "eff_budget")
-        val inBudget = budgeted.where(col("host_rank") <= col("eff_budget")).drop(rankCols: _*)
-        // global capacity cut ONLY when `maxPages` binds this epoch: with the
-        // default (uncapped) config every epoch must stay a partitioned plan —
-        // no global TakeOrdered over the admitted set. A remaining capacity
-        // ≥ Int.MaxValue (always so when `maxPages` is unset) cannot bind (no
-        // epoch admits that many rows through per-host budgets), so it is
-        // skipped, never silently clamped.
-        val capacity = cfg.maxPages - total(_.fetched)
-        val capped = capacity < Int.MaxValue
-        val admitted =
-          if (capped) inBudget.orderBy(ord: _*).limit(capacity.toInt).cache() else inBudget
+        // every future the epoch launches and every cache and probe it holds
+        // (one of each per epoch would otherwise accumulate for the crawl's
+        // lifetime). On success all futures are joined before the commit and
+        // everything held is freed after it. On a failure the epoch still waits
+        // for every future it launched and frees what it holds before the
+        // first error propagates: no sibling write runs on into the dirs a
+        // resumed run rewrites.
+        implicit val ec: ExecutionContext = Crawl.epochEc
+        val jobs = ArrayBuffer.empty[Future[_]]
+        val held = ArrayBuffer.empty[() => Unit]
+        def launch[T](body: => T): Future[T] = { val f = Future(body); jobs += f; f }
+        def hold[T](ds: Dataset[T]): Dataset[T] = { held += (() => ds.unpersist()); ds.cache() }
+        try {
+          // ---- admission: politeness budget + fairness aging + strategy order
+          val aged = queued.withColumn("wait", lit(epoch) - col("enqueue_epoch"))
+            .withColumn("priority",
+              when(col("wait") > FairnessEpochs, -col("wait").cast("double"))
+                .otherwise(col("retry_count").cast("double")))
+          val ord = strategyOrder(cfg.strategy)
+          val ranked = aged.withColumn("host_rank",
+            row_number().over(Window.partitionBy("host").orderBy(ord: _*)))
+          // effective budget: static cap, tightened per host by evolved
+          // politeness state (throttled hosts shrink, aborted hosts go to 0)
+          // cached: the window runs once, and both the admitted and the
+          // deferred rows are filters over it
+          val budgeted = hold(domainState match {
+            case Some(st) =>
+              val perHost = graft.politeness.DomainState
+                .hostBudget(st, cfg.epochSeconds)
+                .withColumnRenamed("budget", "state_budget")
+              ranked.join(broadcast(perHost), Seq("host"), "left")
+                .withColumn("eff_budget",
+                  least(lit(cfg.hostBudget), coalesce(col("state_budget"), lit(cfg.hostBudget))))
+                .drop("state_budget")
+            case None => ranked.withColumn("eff_budget", lit(cfg.hostBudget))
+          })
+          val rankCols = Seq("host_rank", "wait", "eff_budget")
+          val inBudget = budgeted.where(col("host_rank") <= col("eff_budget")).drop(rankCols: _*)
+          // global capacity cut ONLY when `maxPages` binds this epoch: with the
+          // default (uncapped) config every epoch must stay a partitioned plan —
+          // no global TakeOrdered over the admitted set. A remaining capacity
+          // ≥ Int.MaxValue (always so when `maxPages` is unset) cannot bind (no
+          // epoch admits that many rows through per-host budgets), so it is
+          // skipped, never silently clamped.
+          val capacity = cfg.maxPages - total(_.fetched)
+          val capped = capacity < Int.MaxValue
+          val admitted =
+            if (capped) hold(inBudget.orderBy(ord: _*).limit(capacity.toInt)) else inBudget
 
-        // deferred = everything queued but not admitted. Uncapped, that is the
-        // over-budget side of the window; a binding cap also cuts in-budget
-        // rows, which only the anti-join against the admitted set recovers
-        // (neither kind may be lost)
-        val deferred =
-          if (capped) budgeted.drop(rankCols: _*)
-            .join(admitted.select("url_hash"), Seq("url_hash"), "left_anti")
-          else budgeted.where(col("host_rank") > col("eff_budget")).drop(rankCols: _*)
+          // deferred = everything queued but not admitted. Uncapped, that is the
+          // over-budget side of the window; a binding cap also cuts in-budget
+          // rows, which only the anti-join against the admitted set recovers
+          // (neither kind may be lost)
+          val deferred =
+            if (capped) budgeted.drop(rankCols: _*)
+              .join(admitted.select("url_hash"), Seq("url_hash"), "left_anti")
+            else budgeted.where(col("host_rank") > col("eff_budget")).drop(rankCols: _*)
 
-        // ---- robots gate: tiny dimension → broadcast join, fail-open; the
-        // crawler is robots.txt's `*` agent (canFetch's default)
-        val canFetchU = udf((rules: String, u: String) => Robots.canFetch(rules, u))
-        val gated = admitted.join(
-            broadcast(robots.select(col("host"), col("rules"))), Seq("host"), "left")
-          .withColumn("robots_ok", coalesce(canFetchU(col("rules"), col("url")), lit(true)))
-        val allowed = gated.where(col("robots_ok")).drop("rules", "robots_ok")
+          // ---- robots gate: tiny dimension → broadcast join, fail-open; the
+          // crawler is robots.txt's `*` agent (canFetch's default)
+          val canFetchU = udf((rules: String, u: String) => Robots.canFetch(rules, u))
+          val gated = admitted.join(
+              broadcast(robots.select(col("host"), col("rules"))), Seq("host"), "left")
+            .withColumn("robots_ok", coalesce(canFetchU(col("rules"), col("url")), lit(true)))
+          val allowed = gated.where(col("robots_ok")).drop("rules", "robots_ok")
 
-        // ---- fetch: salted repartition defuses hot-host skew BEFORE the
-        // (CPU-heavy) scrape map; the join key stays url_hash so the page
-        // store join itself is a plain shuffled hash join.
-        val salted = allowed.repartition(
-          maxParts, col("host"), pmod(col("url_hash"), lit(SaltBuckets)))
-        val fetched = salted.join(
-          pages.select(col("url_hash"), col("html"), col("status_code")),
-          Seq("url_hash"), "left")
+          // ---- fetch: salted repartition defuses hot-host skew BEFORE the
+          // (CPU-heavy) scrape map; the join key stays url_hash so the page
+          // store join itself is a plain shuffled hash join.
+          val salted = allowed.repartition(
+            maxParts, col("host"), pmod(col("url_hash"), lit(SaltBuckets)))
+          val fetched = salted.join(
+            pages.select(col("url_hash"), col("html"), col("status_code")),
+            Seq("url_hash"), "left")
 
-        // the default scrape config (spans of at least one word), as the
-        // sequential oracle's
-        val scrapeCfg = Scrape.Config()
-        val scraped = fetched
-          .select("url_hash", "url", "host", "depth", "score", "path", "html", "status_code")
-          .as[(Long, String, String, Int, Double, String, String, Option[Int])]
-          .map { case (h, u, host, d, sc, p, html, status) =>
-            val code = status.getOrElse(404)
-            val ok = html != null && code == 200
-            val doc = if (ok) Scrape.scrape(u, html, scrapeCfg)
-                      else ScrapedDoc(u, u, Nil, Nil, "", 0)
-            (h, u, host, d, sc, p, ok, code, doc.spans, doc.links, doc.title, doc.nWords)
+          // the default scrape config (spans of at least one word), as the
+          // sequential oracle's
+          val scrapeCfg = Scrape.Config()
+          val scraped = hold(fetched
+            .select("url_hash", "url", "host", "depth", "score", "path", "html", "status_code")
+            .as[(Long, String, String, Int, Double, String, String, Option[Int])]
+            .map { case (h, u, host, d, sc, p, html, status) =>
+              val code = status.getOrElse(404)
+              val ok = html != null && code == 200
+              val doc = if (ok) Scrape.scrape(u, html, scrapeCfg)
+                        else ScrapedDoc(u, u, Nil, Nil, "", 0)
+              (h, u, host, d, sc, p, ok, code, doc.spans, doc.links, doc.title, doc.nWords)
+            }
+            .toDF("url_hash", "url", "host", "depth", "score", "path",
+              "fetch_ok", "status_code", "spans", "links", "title", "n_words")
+            // the lineage pid: the index of the scrape map's own partition,
+            // fixed in the cache whichever job (a coalesced write included)
+            // computes it
+            .withColumn("pid", spark_partition_id()))
+
+          // ---- phase A: ALL consumers of the scraped cache — docs write,
+          // visits write, politeness evolution — launch as CONCURRENT Spark
+          // jobs. The BlockManager's per-partition cache locks make the
+          // concurrent jobs co-materialize the cache (different partitions in
+          // parallel, each computed exactly once); they write disjoint outputs,
+          // so overlapping hides the fixed per-job latency that dominates small
+          // epochs and costs nothing on a real cluster (concurrent jobs share
+          // the scheduler). No count or collect job runs: the lineage is
+          // observed on the docs write (before its fetch_ok filter, so failed
+          // pages count too), fetched/failed are its rows summed, and the
+          // robots-blocked count is observed on the visits write.
+          val lineageObs = Observation()
+          val fDocs = launch {
+            writeSnapshot(scraped.observe(lineageObs, LineageAgg.column.as("slots"))
+              .where(col("fetch_ok"))
+              .select(col("url").as("doc_id"), col("spans"), col("links"),
+                col("title"), col("n_words"), lit(epoch).as("epoch")),
+              parts, dir(runDir, epoch, "docs"))
+            LineageAgg.rows(lineageObs.get("slots").asInstanceOf[scala.collection.Seq[Long]])
           }
-          .toDF("url_hash", "url", "host", "depth", "score", "path",
-            "fetch_ok", "status_code", "spans", "links", "title", "n_words")
-          // the lineage pid: the index of the scrape map's own partition,
-          // fixed in the cache whichever job (a coalesced write included)
-          // computes it
-          .withColumn("pid", spark_partition_id())
-          .cache()
-
-        // ---- phase A: ALL consumers of the scraped cache — docs write,
-        // visits write, politeness evolution — launch as CONCURRENT Spark
-        // jobs. The BlockManager's per-partition cache locks make the
-        // concurrent jobs co-materialize the cache (different partitions in
-        // parallel, each computed exactly once); they write disjoint outputs,
-        // so overlapping hides the fixed per-job latency that dominates small
-        // epochs and costs nothing on a real cluster (concurrent jobs share
-        // the scheduler). No count or collect job runs: the lineage is
-        // observed on the docs write (before its fetch_ok filter, so failed
-        // pages count too), fetched/failed are its rows summed, and the
-        // robots-blocked count is observed on the visits write.
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: scala.concurrent.ExecutionContext = Crawl.epochEc
-        val lineageObs = Observation()
-        val fDocs = Future {
-          writeSnapshot(scraped.observe(lineageObs, LineageAgg.column.as("slots"))
-            .where(col("fetch_ok"))
-            .select(col("url").as("doc_id"), col("spans"), col("links"),
-              col("title"), col("n_words"), lit(epoch).as("epoch")),
-            parts, dir(runDir, epoch, "docs"))
-          LineageAgg.rows(lineageObs.get("slots").asInstanceOf[scala.collection.Seq[Long]])
-        }
-        // visits carry the full sort key (priority, score, depth, path) but
-        // NO materialized rank: visit order is fully determined by the key,
-        // so `Crawl.visits` derives ranks at read time — the epoch loop never
-        // runs a partitionless global-order window.
-        val blockedObs = Observation()
-        val fVisits = Future {
-          writeSnapshot(gated.observe(blockedObs, count(when(!col("robots_ok"), true)).as("n"))
-            .where(col("robots_ok"))
-            .select(col("url"), col("depth"), col("score"), col("priority"),
-              col("path"), lit(epoch).as("epoch")),
-            parts, dir(runDir, epoch, "visits"))
-          blockedObs.get("n").asInstanceOf[Long]
-        }
-        // politeness state evolution (deterministic backoff per epoch)
-        val fState = if (!cfg.dynamicPoliteness) Future.successful(()) else Future {
-          val st0 = domainState.getOrElse(
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("host", org.apache.spark.sql.types.StringType),
-                org.apache.spark.sql.types.StructField("current_delay", org.apache.spark.sql.types.DoubleType),
-                org.apache.spark.sql.types.StructField("fail_count", org.apache.spark.sql.types.IntegerType)))))
-          writeSnapshot(graft.politeness.DomainState
-            .evolve(st0.select("host", "current_delay", "fail_count"),
-              scraped.select(col("host"), col("status_code"))),
-            parts, dir(runDir, epoch + 1, "domain_state"))
-        }
-
-        // ---- link-head enrichment (config-gated; a phase-A consumer of the
-        // scraped cache writing disjoint outputs). All joins inside
-        // LinkPreview.enrich are url-keyed equi-joins; the head store
-        // commit is O(delta) (only stale/missing rows rewrite).
-        val fPreview = cfg.linkPreview match {
-          case None => Future.successful(())
-          case Some(lp0) => Future {
-            val lp = lp0.copy(nowMs = (epoch * cfg.epochSeconds * 1000).toLong)
-            val lrows = scraped.where(col("fetch_ok"))
-              .select(col("url").as("page_url"),
-                posexplode_outer(col("links")).as(Seq("pos", "link")))
-              .where(col("link").isNotNull)
-              .select(col("page_url"), col("link.href").as("href"),
-                col("link.linkIndex").as("link_pos"),
-                col("link.internal").as("is_internal"),
-                // LinkOut keeps no title/class/rel attrs — intrinsic scores
-                // from anchor text + href shape, like a bare <a> in the ref
-                graft.functions.LinkScore.intrinsic(col("link.text"),
-                  col("link.href"), lit(""), lit(""), lit(""),
-                  typedLit(Seq.empty[String]), lit(false)).as("intrinsic_score"))
-            val storeSchema = org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("url", org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("status", org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("head", org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("fetched_at", org.apache.spark.sql.types.LongType)))
-            val headStorePath = dir(runDir, epoch, "head_store")
-            val store0 =
-              if (Files.isDirectory(Paths.get(headStorePath)))
-                spark.read.schema(storeSchema).parquet(headStorePath)
-              else spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], storeSchema)
-            // head "fetch" seam: the crawl's page store, keyed by the same
-            // xxhash64(deep-canonical href) the expansion uses. Head data is
-            // built ONLY for the urls enrich will actually consult the seam
-            // for — the config-filtered request set minus TTL-fresh store
-            // hits; parsing heads for filtered-out or cached links is
-            // O(all extracted links) of discarded work per epoch.
-            val headU = udf((html: String) => graft.scrape.Meta.headPeek(html))
-            val reqs = graft.sources.LinkPreview.requests(lrows, lp)
-            val fetchHeads = reqs
-              .join(graft.sources.LinkPreview.freshHits(reqs, store0, lp),
-                Seq("url"), "left_anti")
-              .withColumn("url_hash", xxhash64(col("url")))
-              .join(pages.select(col("url_hash"), col("html"), col("status_code")),
-                Seq("url_hash"), "left")
-              .select(col("url"),
-                when(col("status_code") === 200 && col("html").isNotNull, "valid")
-                  .otherwise("not_valid").as("status"),
-                when(col("html").isNotNull, headU(col("html")))
-                  .otherwise(lit("")).as("head"))
-            val (enriched, newStore) =
-              graft.sources.LinkPreview.enrich(lrows, store0, fetchHeads, lp)
-            writeSnapshot(enriched.withColumn("epoch", lit(epoch)), parts,
-              dir(runDir, epoch, "links"))
-            writeSnapshot(newStore, parts, dir(runDir, epoch + 1, "head_store"))
+          // visits carry the full sort key (priority, score, depth, path) but
+          // NO materialized rank: visit order is fully determined by the key,
+          // so `Crawl.visits` derives ranks at read time — the epoch loop never
+          // runs a partitionless global-order window.
+          val blockedObs = Observation()
+          val fVisits = launch {
+            writeSnapshot(gated.observe(blockedObs, count(when(!col("robots_ok"), true)).as("n"))
+              .where(col("robots_ok"))
+              .select(col("url"), col("depth"), col("score"), col("priority"),
+                col("path"), lit(epoch).as("epoch")),
+              parts, dir(runDir, epoch, "visits"))
+            blockedObs.get("n").asInstanceOf[Long]
           }
-        }
+          // politeness state evolution (deterministic backoff per epoch)
+          val fState = if (!cfg.dynamicPoliteness) Future.successful(()) else launch {
+            val st0 = domainState.getOrElse(
+              spark.createDataFrame(
+                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+                domainStateSchema))
+            writeSnapshot(graft.politeness.DomainState
+              .evolve(st0.select("host", "current_delay", "fail_count"),
+                scraped.select(col("host"), col("status_code"))),
+              parts, dir(runDir, epoch + 1, "domain_state"))
+          }
 
-        // ---- expansion: links are already deep-canonical (scrape map)
-        val linkRows = scraped.where(col("fetch_ok"))
-          .select(col("url").as("parent"), col("path").as("parent_path"),
-            col("depth"), posexplode_outer(col("links")).as(Seq("pos", "link")))
-          .where(col("link").isNotNull)
-          .select(col("parent"), col("parent_path"), col("depth"),
-            col("link.href").as("url"), col("link.internal").as("internal"),
-            col("link.linkIndex").as("link_index"),
-            col("link.text").as("anchor_text"))
-        val validU = udf((u: String) => u != null && Urls.isValidCrawlUrl(u) && !Urls.isNonsense(u))
-        val hostU = udf((u: String) => Urls.host(u))
-        val candidates = linkRows
-          .where(validU(col("url")))
-          .where(if (cfg.includeExternal) lit(true) else col("internal"))
-          .where(col("depth") + 1 <= cfg.maxDepth)
-          .withColumn("url_hash", xxhash64(col("url")))
-
-        // dedup: incremental filter vector pre-filter + exact anti-join, then
-        // first-wins per hash (no full-history filter rebuild — the vector
-        // holds one delta-sized filter per epoch since the last compaction)
-        val seenProbe = SeenFilters.probe(spark, candidates, seen, "url_hash", filters)
-        val firstWins = seenProbe.fresh.withColumn("rk", row_number().over(
-            Window.partitionBy("url_hash")
-              .orderBy(col("parent_path"), col("link_index"))))
-          .where(col("rk") === 1).drop("rk")
-
-        // scoring: custom scorer > keyword relevance > neutral 0.5
-        val scoreCol = cfg.linkScorer match {
-          case Some(f) =>
-            val scoreU = udf((u: String, t: String) => f(u, t))
-            scoreU(col("url"), col("anchor_text"))
-          case None if cfg.keywords.nonEmpty =>
-            Scorers.keywordRelevance(col("url"), cfg.keywords)
-          case None => lit(0.5)
-        }
-        val newEntries = firstWins
-          .withColumn("score", scoreCol)
-          .where(col("score") >= cfg.scoreThreshold)
-          .select(
-            col("url_hash"), col("url"), hostU(col("url")).as("host"),
-            (col("depth") + 1).as("depth"), col("score"),
-            lit(0.0).as("priority"), col("parent"),
-            concat(col("parent_path"), format_string("%04x", col("link_index"))).as("path"),
-            lit(epoch + 1).as("enqueue_epoch"), lit(0).as("retry_count"),
-            lit(epoch + 1).as("epoch"), lit(CrawlStatus.Queued).as("status"))
-          .cache() // reused by frontier write, seen delta, delta filter
-
-        // ---- phase B: the frontier(t+1) write and the seen commit launch
-        // CONCURRENTLY (with phase A still in flight). Both consume the same
-        // cached newEntries plan; the BlockManager's per-partition cache locks
-        // serialize materialization, so the plan is computed once no matter
-        // which job wins — no duplicated expansion work at any scale. The
-        // new-entry count is observed on the seen write. Reference adds to
-        // seen on DISCOVERY, bfs_strategy.py:153.
-        val nextEpoch = epoch + 1
-        val fFrontier = Future {
-          writeSnapshot(deferred
-            .select(newEntries.columns.map(col): _*)
-            .withColumn("epoch", lit(nextEpoch))
-            .unionByName(newEntries),
-            parts, dir(runDir, nextEpoch, "frontier"))
-        }
-        // seen commit is a DELTA: only this epoch's first-seen hashes are
-        // written (disjoint from history by construction — exact anti-join
-        // upstream; bloom has no false negatives). O(delta) I/O per epoch.
-        // Every seenCompactEvery epochs the delta run is compacted into one
-        // full set + one right-sized bloom, bounding reader fan-in and the
-        // bloom vector (the ONLY full-set pass, amortized 1/K per epoch).
-        val compacting = nextEpoch - seenBase >= cfg.seenCompactEvery
-        val newObs = Observation()
-        val fNew = Future {
-          val delta = newEntries.select("url_hash").observe(newObs, count(lit(1)).as("n"))
-          val out = if (compacting) seen.unionByName(delta) else delta
-          writeSnapshot(out, parts, dir(runDir, nextEpoch, "seen"))
-          newObs.get("n").asInstanceOf[Long]
-        }
-        // the filter needs the exact delta count for sizing → chains on the
-        // seen write that observes it (and, when compacting, re-reads it)
-        val fSeen: Future[(Int, Vector[SeenDelta])] =
-          fNew.map { nNew =>
-            if (compacting) {
-              val full = spark.read.schema(seenSchema).parquet(dir(runDir, nextEpoch, "seen"))
-              val compactFilter = store.build(spark, full, "url_hash", seenCount + nNew)
-              store.save(compactFilter, store.path(runDir, nextEpoch))
-              (nextEpoch, Vector(compactFilter))
-            } else {
-              // the PARQUET delta stays exactly the first-seen set (ledger
-              // semantics); the store decides what else its filter covers
-              val deltaFilter = store.deltaFilter(spark, newEntries.select("url_hash"),
-                admitted.select("url_hash"), nNew, queuedCount)
-              store.save(deltaFilter, store.path(runDir, nextEpoch))
-              (seenBase, filters :+ deltaFilter)
+          // ---- link-head enrichment (config-gated; a phase-A consumer of the
+          // scraped cache writing disjoint outputs). All joins inside
+          // LinkPreview.enrich are url-keyed equi-joins; the head store
+          // commit is O(delta) (only stale/missing rows rewrite).
+          val fPreview = cfg.linkPreview match {
+            case None => Future.successful(())
+            case Some(lp0) => launch {
+              val lp = lp0.copy(nowMs = (epoch * cfg.epochSeconds * 1000).toLong)
+              val lrows = scraped.where(col("fetch_ok"))
+                .select(col("url").as("page_url"),
+                  posexplode_outer(col("links")).as(Seq("pos", "link")))
+                .where(col("link").isNotNull)
+                .select(col("page_url"), col("link.href").as("href"),
+                  col("link.linkIndex").as("link_pos"),
+                  col("link.internal").as("is_internal"),
+                  // LinkOut keeps no title/class/rel attrs — intrinsic scores
+                  // from anchor text + href shape, like a bare <a> in the ref
+                  graft.functions.LinkScore.intrinsic(col("link.text"),
+                    col("link.href"), lit(""), lit(""), lit(""),
+                    typedLit(Seq.empty[String]), lit(false)).as("intrinsic_score"))
+              val store0 = readIfPresent(spark, runDir, epoch, "head_store", headStoreSchema)
+                .getOrElse(spark.createDataFrame(
+                  spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], headStoreSchema))
+              // head "fetch" seam: the crawl's page store, keyed by the same
+              // xxhash64(deep-canonical href) the expansion uses. Head data is
+              // built ONLY for the urls enrich will actually consult the seam
+              // for — the config-filtered request set minus TTL-fresh store
+              // hits; parsing heads for filtered-out or cached links is
+              // O(all extracted links) of discarded work per epoch.
+              val headU = udf((html: String) => graft.scrape.Meta.headPeek(html))
+              val reqs = graft.sources.LinkPreview.requests(lrows, lp)
+              val fetchHeads = reqs
+                .join(graft.sources.LinkPreview.freshHits(reqs, store0, lp),
+                  Seq("url"), "left_anti")
+                .withColumn("url_hash", xxhash64(col("url")))
+                .join(pages.select(col("url_hash"), col("html"), col("status_code")),
+                  Seq("url_hash"), "left")
+                .select(col("url"),
+                  when(col("status_code") === 200 && col("html").isNotNull, "valid")
+                    .otherwise("not_valid").as("status"),
+                  when(col("html").isNotNull, headU(col("html")))
+                    .otherwise(lit("")).as("head"))
+              val (enriched, newStore) =
+                graft.sources.LinkPreview.enrich(lrows, store0, fetchHeads, lp)
+              writeSnapshot(enriched.withColumn("epoch", lit(epoch)), parts,
+                dir(runDir, epoch, "links"))
+              writeSnapshot(newStore, parts, dir(runDir, epoch + 1, "head_store"))
             }
           }
 
-        // ---- join all concurrent jobs, then the atomic commit
-        val lineageRows = Await.result(fDocs, Duration.Inf)
-        val nNew = Await.result(fNew, Duration.Inf)
-        val nBlocked = Await.result(fVisits, Duration.Inf)
-        val (newSeenBase, newFilters) = Await.result(fSeen, Duration.Inf)
-        Await.result(fState, Duration.Inf)
-        Await.result(fPreview, Duration.Inf)
-        Await.result(fFrontier, Duration.Inf)
-        seenBase = newSeenBase
-        filters = newFilters
-        val nFetched = lineageRows.filter(_.fetchOk).map(_.rows).sum
-        val nFailed = lineageRows.filterNot(_.fetchOk).map(_.rows).sum
-        // derived, no extra jobs: admitted = allowed + blocked; deferred =
-        // queued − admitted; seen grows only by the (disjoint) new entries
-        val admittedCount = nFetched + nFailed + nBlocked
-        val deferredCount = queuedCount - admittedCount
-        seenCount += nNew
-        queuedCount = deferredCount + nNew
-        val m = EpochManifest(nextEpoch, cfg.strategy, seenBase, seenCount, Some(queuedCount),
-          fetched = Some(nFetched), failed = Some(nFailed), skippedRobots = Some(nBlocked),
-          newFrontier = Some(nNew), wallMs = Some(System.currentTimeMillis() - t0),
-          partitions = Some(lineageRows))
-        EpochManifest.commit(runDir, m)
-        manifests :+= m
+          // ---- expansion: links are already deep-canonical (scrape map)
+          val linkRows = scraped.where(col("fetch_ok"))
+            .select(col("url").as("parent"), col("path").as("parent_path"),
+              col("depth"), posexplode_outer(col("links")).as(Seq("pos", "link")))
+            .where(col("link").isNotNull)
+            .select(col("parent"), col("parent_path"), col("depth"),
+              col("link.href").as("url"), col("link.internal").as("internal"),
+              col("link.linkIndex").as("link_index"),
+              col("link.text").as("anchor_text"))
+          val validU = udf((u: String) => u != null && Urls.isValidCrawlUrl(u) && !Urls.isNonsense(u))
+          val hostU = udf((u: String) => Urls.host(u))
+          val candidates = linkRows
+            .where(validU(col("url")))
+            .where(if (cfg.includeExternal) lit(true) else col("internal"))
+            .where(col("depth") + 1 <= cfg.maxDepth)
+            .withColumn("url_hash", xxhash64(col("url")))
 
-        scraped.unpersist(); budgeted.unpersist(); admitted.unpersist(); newEntries.unpersist()
-        // all consumers of this epoch's probe have completed and their
-        // outputs are on disk — free its filter broadcast and candidate rows
-        // (one of each per epoch would otherwise accumulate for the crawl's
-        // lifetime)
-        seenProbe.release()
-        if (queuedCount == 0) done = true
-        epoch += 1
+          // dedup: incremental filter vector pre-filter + exact anti-join, then
+          // first-wins per hash (no full-history filter rebuild — the vector
+          // holds one delta-sized filter per epoch since the last compaction)
+          val seenProbe = SeenFilters.probe(spark, candidates, seen, "url_hash", filters)
+          held += (() => seenProbe.release())
+          val firstWins = seenProbe.fresh.withColumn("rk", row_number().over(
+              Window.partitionBy("url_hash")
+                .orderBy(col("parent_path"), col("link_index"))))
+            .where(col("rk") === 1).drop("rk")
+
+          // scoring: custom scorer > keyword relevance > neutral 0.5
+          val scoreCol = cfg.linkScorer match {
+            case Some(f) =>
+              val scoreU = udf((u: String, t: String) => f(u, t))
+              scoreU(col("url"), col("anchor_text"))
+            case None if cfg.keywords.nonEmpty =>
+              Scorers.keywordRelevance(col("url"), cfg.keywords)
+            case None => lit(0.5)
+          }
+          // cached: reused by frontier write, seen delta, delta filter
+          val newEntries = hold(firstWins
+            .withColumn("score", scoreCol)
+            .where(col("score") >= cfg.scoreThreshold)
+            .select(
+              col("url_hash"), col("url"), hostU(col("url")).as("host"),
+              (col("depth") + 1).as("depth"), col("score"),
+              lit(0.0).as("priority"), col("parent"),
+              concat(col("parent_path"), format_string("%04x", col("link_index"))).as("path"),
+              lit(epoch + 1).as("enqueue_epoch"), lit(0).as("retry_count"),
+              lit(epoch + 1).as("epoch"), lit(CrawlStatus.Queued).as("status")))
+
+          // ---- phase B: the frontier(t+1) write and the seen commit launch
+          // CONCURRENTLY (with phase A still in flight). Both consume the same
+          // cached newEntries plan; the BlockManager's per-partition cache locks
+          // serialize materialization, so the plan is computed once no matter
+          // which job wins — no duplicated expansion work at any scale. The
+          // new-entry count is observed on the seen write. Reference adds to
+          // seen on DISCOVERY, bfs_strategy.py:153.
+          val nextEpoch = epoch + 1
+          val fFrontier = launch {
+            writeSnapshot(deferred
+              .select(newEntries.columns.toSeq.map(col): _*)
+              .withColumn("epoch", lit(nextEpoch))
+              .unionByName(newEntries),
+              parts, dir(runDir, nextEpoch, "frontier"))
+          }
+          // seen commit is a DELTA: only this epoch's first-seen hashes are
+          // written (disjoint from history by construction — exact anti-join
+          // upstream; bloom has no false negatives). O(delta) I/O per epoch.
+          // Every seenCompactEvery epochs the delta run is compacted into one
+          // full set + one right-sized bloom, bounding reader fan-in and the
+          // bloom vector (the ONLY full-set pass, amortized 1/K per epoch).
+          val compacting = nextEpoch - seenBase >= cfg.seenCompactEvery
+          val newObs = Observation()
+          val fNew = launch {
+            val delta = newEntries.select("url_hash").observe(newObs, count(lit(1)).as("n"))
+            val out = if (compacting) seen.unionByName(delta) else delta
+            writeSnapshot(out, parts, dir(runDir, nextEpoch, "seen"))
+            newObs.get("n").asInstanceOf[Long]
+          }
+          // the filter needs the exact delta count for sizing → chains on the
+          // seen write that observes it (and, when compacting, re-reads it)
+          val fSeen: Future[(Int, Vector[SeenDelta])] =
+            fNew.map { nNew =>
+              if (compacting) {
+                val full = spark.read.schema(seenSchema).parquet(dir(runDir, nextEpoch, "seen"))
+                val compactFilter = store.build(spark, full, "url_hash", seenCount + nNew)
+                store.save(compactFilter, store.path(runDir, nextEpoch))
+                (nextEpoch, Vector(compactFilter))
+              } else {
+                // the PARQUET delta stays exactly the first-seen set (ledger
+                // semantics); the store decides what else its filter covers
+                val deltaFilter = store.deltaFilter(spark, newEntries.select("url_hash"),
+                  admitted.select("url_hash"), nNew, queuedCount)
+                store.save(deltaFilter, store.path(runDir, nextEpoch))
+                (seenBase, filters :+ deltaFilter)
+              }
+            }
+          jobs += fSeen
+
+          // ---- join all concurrent jobs, then the atomic commit
+          val lineageRows = Await.result(fDocs, Duration.Inf)
+          val nNew = Await.result(fNew, Duration.Inf)
+          val nBlocked = Await.result(fVisits, Duration.Inf)
+          val (newSeenBase, newFilters) = Await.result(fSeen, Duration.Inf)
+          Await.result(fState, Duration.Inf)
+          Await.result(fPreview, Duration.Inf)
+          Await.result(fFrontier, Duration.Inf)
+          seenBase = newSeenBase
+          filters = newFilters
+          val nFetched = lineageRows.filter(_.fetchOk).map(_.rows).sum
+          val nFailed = lineageRows.filterNot(_.fetchOk).map(_.rows).sum
+          // derived, no extra jobs: admitted = allowed + blocked; deferred =
+          // queued − admitted; seen grows only by the (disjoint) new entries
+          val admittedCount = nFetched + nFailed + nBlocked
+          val deferredCount = queuedCount - admittedCount
+          seenCount += nNew
+          queuedCount = deferredCount + nNew
+          val m = EpochManifest(nextEpoch, cfg.strategy, seenBase, seenCount, Some(queuedCount),
+            fetched = Some(nFetched), failed = Some(nFailed), skippedRobots = Some(nBlocked),
+            newFrontier = Some(nNew), wallMs = Some(System.currentTimeMillis() - t0),
+            partitions = Some(lineageRows))
+          EpochManifest.commit(runDir, m)
+          manifests :+= m
+
+          if (queuedCount == 0) done = true
+          epoch += 1
+        } catch { case e: Throwable =>
+          jobs.foreach(Await.ready(_, Duration.Inf))
+          throw e
+        } finally held.foreach(_())
       }
     }
     CrawlSummary(epoch, total(_.fetched), total(_.failed), total(_.skippedRobots), seenCount)

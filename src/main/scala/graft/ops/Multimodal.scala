@@ -237,38 +237,29 @@ object Multimodal {
       javax.imageio.ImageIO.write(hashFrame(seed, f, w, h), "jpg", bos)
       bos.toByteArray
     }
-    val out = new java.io.ByteArrayOutputStream()
-    def le32(v: Int): Array[Byte] =
-      Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-        ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
+    import graft.sources.Bytes.le
     def fourcc(s: String): Array[Byte] = s.getBytes("US-ASCII")
     def chunk(id: String, body: Array[Byte]): Array[Byte] = {
       val pad = if (body.length % 2 == 1) Array(0.toByte) else Array.empty[Byte]
-      fourcc(id) ++ le32(body.length) ++ body ++ pad
+      fourcc(id) ++ le(4)(body.length) ++ body ++ pad
     }
     def list(kind: String, body: Array[Byte]): Array[Byte] =
       chunk("LIST", fourcc(kind) ++ body)
     // avih: MainAVIHeader (56 bytes)
     val avih = chunk("avih",
-      le32(frameMs * 1000) ++ le32(0) ++ le32(0) ++ le32(0) ++
-      le32(nFrames) ++ le32(0) ++ le32(1) ++ le32(0) ++
-      le32(w) ++ le32(h) ++ le32(0) ++ le32(0) ++ le32(0) ++ le32(0))
+      le(4)(frameMs * 1000, 0, 0, 0, nFrames, 0, 1, 0, w, h, 0, 0, 0, 0))
     // strh: AVIStreamHeader for a 'vids'/'MJPG' stream (56 bytes)
     val strh = chunk("strh",
-      fourcc("vids") ++ fourcc("MJPG") ++ le32(0) ++ le32(0) ++ le32(0) ++
-      le32(frameMs) ++ le32(1000) ++ le32(0) ++ le32(nFrames) ++ le32(0) ++
-      le32(-1) ++ le32(0) ++
-      Array[Byte](0, 0, 0, 0) ++ le32((h << 16) | w)) // rcFrame
+      fourcc("vids") ++ fourcc("MJPG") ++
+      le(4)(0, 0, 0, frameMs, 1000, 0, nFrames, 0, -1, 0) ++ le(2)(0, 0, w, h)) // rcFrame
     // strf: BITMAPINFOHEADER with 'MJPG' compression (40 bytes)
     val strf = chunk("strf",
-      le32(40) ++ le32(w) ++ le32(h) ++
-      Array[Byte](1, 0, 24, 0) ++ fourcc("MJPG") ++
-      le32(w * h * 3) ++ le32(0) ++ le32(0) ++ le32(0) ++ le32(0))
+      le(4)(40, w, h) ++ le(2)(1, 24) ++ fourcc("MJPG") ++
+      le(4)(w * h * 3, 0, 0, 0, 0))
     val hdrl = list("hdrl", avih ++ list("strl", strh ++ strf))
     val movi = list("movi", jpegs.flatMap(j => chunk("00dc", j)))
     val riffBody = fourcc("AVI ") ++ hdrl ++ movi
-    out.write(fourcc("RIFF")); out.write(le32(riffBody.length)); out.write(riffBody)
-    val bytes = out.toByteArray
+    val bytes = fourcc("RIFF") ++ le(4)(riffBody.length) ++ riffBody
     MediaBlob(docId, ref, "video", bytes, Xxh64.hashBytes(bytes, 42L))
   }
 
@@ -334,9 +325,10 @@ object Multimodal {
     val f = new Array[Float](bins)
     if (nSamples == 0) return f
     val counts = new Array[Int](bins)
+    val samples = graft.sources.Bytes.view(pcm, le = true)
     var s = 0
     while (s < nSamples) {
-      val v = ((pcm(2 * s + 1) << 8) | (pcm(2 * s) & 0xff)).toShort / 32768.0
+      val v = samples.u16(2 * s).toShort / 32768.0
       val b = math.min(bins - 1, s * bins / nSamples)
       f(b) += (v * v).toFloat
       counts(b) += 1
@@ -410,11 +402,8 @@ object Multimodal {
     * the '00dc'/'00db' movi chunks]). Strict little-endian chunk arithmetic —
     * JPEG payloads containing 'LIST' bytes cannot desync it. */
   private def parseAvi(bytes: Array[Byte]): Option[(Int, Int, Int, IndexedSeq[(Int, Int)])] = {
-    def le32(off: Int): Int =
-      (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8) |
-      ((bytes(off + 2) & 0xff) << 16) | ((bytes(off + 3) & 0xff) << 24)
-    def tag(off: Int): String =
-      if (off + 4 <= bytes.length) new String(bytes, off, 4, "US-ASCII") else ""
+    val v = graft.sources.Bytes.view(bytes, le = true)
+    def tag(off: Int): String = if (off + 4 <= bytes.length) v.fourcc(off) else ""
     if (bytes.length < 12 || tag(0) != "RIFF" || tag(8) != "AVI ") return None
     var usecPerFrame = 0; var w = 0; var h = 0
     val frames = IndexedSeq.newBuilder[(Int, Int)]
@@ -422,17 +411,18 @@ object Multimodal {
       var off = start
       while (off + 8 <= end) {
         val id = tag(off)
-        val size = le32(off + 4)
-        if (size < 0 || off + 8 + size > end) return // truncated/corrupt: stop
-        if (id == "LIST") walk(off + 12, off + 8 + size) // skip the list type fourcc
+        val size = v.u32(off + 4)
+        if (off + 8 + size > end) return // truncated/corrupt: stop
+        val body = v.slice(off + 8, size.toInt)
+        if (id == "LIST") walk(off + 12, body.to) // skip the list type fourcc
         else if (id == "avih" && size >= 40) {
-          usecPerFrame = le32(off + 8)
-          w = le32(off + 8 + 32); h = le32(off + 8 + 36)
-        } else if (id == "00dc" || id == "00db") frames += ((off + 8, size))
-        off += 8 + size + (size & 1) // chunks are word-aligned
+          usecPerFrame = body.u32(0).toInt
+          w = body.u32(32).toInt; h = body.u32(36).toInt
+        } else if (id == "00dc" || id == "00db") frames += ((body.from, body.length))
+        off = body.to + (body.length & 1) // chunks are word-aligned
       }
     }
-    walk(12, math.min(bytes.length, 8 + le32(4)))
+    walk(12, math.min(bytes.length, 8 + v.u32(4).toInt))
     val fs = frames.result()
     if (w <= 0 || h <= 0 || fs.isEmpty) None
     else Some((w, h, math.max(1, usecPerFrame / 1000), fs))

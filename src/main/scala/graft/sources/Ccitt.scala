@@ -155,29 +155,16 @@ object Ccitt {
     * forward direction encodes — the plugin writes RowsPerStrip = height
     * well past them). */
   private def extractSingleStrip(tiff: Array[Byte]): Array[Byte] = {
-    val be = (tiff(0) & 0xff) == 0x4d
-    def u16(i: Int): Int =
-      if (be) ((tiff(i) & 0xff) << 8) | (tiff(i + 1) & 0xff)
-      else ((tiff(i + 1) & 0xff) << 8) | (tiff(i) & 0xff)
-    def u32(i: Int): Long =
-      if (be) ((tiff(i) & 0xffL) << 24) | ((tiff(i + 1) & 0xffL) << 16) |
-        ((tiff(i + 2) & 0xffL) << 8) | (tiff(i + 3) & 0xffL)
-      else ((tiff(i + 3) & 0xffL) << 24) | ((tiff(i + 2) & 0xffL) << 16) |
-        ((tiff(i + 1) & 0xffL) << 8) | (tiff(i) & 0xffL)
-    val ifd = u32(4).toInt
-    val n = u16(ifd)
+    val t = Bytes.tiff(Bytes.view(tiff))
+      .getOrElse(throw new IllegalArgumentException("ccitt encode: not a TIFF"))
     var off = -1L; var len = -1L; var strips = 1L
-    var e = 0
-    while (e < n) {
-      val base = ifd + 2 + e * 12
-      val t = u16(base); val typ = u16(base + 2); val cnt = u32(base + 4)
-      val v = if (typ == 3) u16(base + 8).toLong else u32(base + 8)
-      if (t == 273) { off = v; strips = cnt }
-      if (t == 279) len = v
-      e += 1
+    Bytes.ifd(t, t.u32(4)).foreach { e =>
+      val v = if (e.typ == 3) t.u16(e.valueAt).toLong else t.u32(e.valueAt)
+      if (e.tag == 273) { off = v; strips = e.count }
+      if (e.tag == 279) len = v
     }
     require(strips == 1 && off >= 0 && len >= 0,
       s"ccitt encode: expected a single-strip TIFF, got $strips strips")
-    java.util.Arrays.copyOfRange(tiff, off.toInt, (off + len).toInt)
+    t.bytes(off.toInt, len.toInt)
   }
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import scala.collection.mutable.ArrayBuffer
+import Bytes.be
 
 /** EXIF metadata (the TIFF 6.0 IFD structure inside a JPEG APP1 segment,
   * per JEITA CP-3451 / ISO 12234-2) — what an image-curation pipeline
@@ -28,40 +29,23 @@ object Exif {
   }
 
   private def parseImpl(jpeg: Array[Byte]): Option[Meta] = {
-    if (jpeg.length < 4 || (jpeg(0) & 0xff) != 0xff || (jpeg(1) & 0xff) != 0xd8)
-      return None // not a JPEG
+    val j = Bytes.view(jpeg)
+    if (jpeg.length < 4 || j.u16(0) != 0xffd8) return None // not a JPEG
     // marker walk to APP1 "Exif\0\0"
     var i = 2
-    var tiffAt = -1
-    var tiffEnd = -1
-    while (tiffAt < 0 && i + 4 <= jpeg.length) {
-      if ((jpeg(i) & 0xff) != 0xff) return None
-      val marker = jpeg(i + 1) & 0xff
+    var app1: Bytes.View = null
+    while (app1 == null && i + 4 <= jpeg.length) {
+      if (j.u8(i) != 0xff) return None
+      val marker = j.u8(i + 1)
       if (marker == 0xd9 || marker == 0xda) return None // EOI/SOS: no APP1
-      val len = ((jpeg(i + 2) & 0xff) << 8) | (jpeg(i + 3) & 0xff)
+      val len = j.u16(i + 2)
       if (len < 2 || i + 2 + len > jpeg.length) return None
-      if (marker == 0xe1 && len >= 8 + 6 &&
-          jpeg(i + 4) == 'E' && jpeg(i + 5) == 'x' && jpeg(i + 6) == 'i' &&
-          jpeg(i + 7) == 'f' && jpeg(i + 8) == 0 && jpeg(i + 9) == 0) {
-        tiffAt = i + 10
-        tiffEnd = i + 2 + len
-      }
+      if (marker == 0xe1 && len >= 8 + 6 && j.fourcc(i + 4) == "Exif" && j.u16(i + 8) == 0)
+        app1 = j.slice(i + 10, len - 8)
       i += 2 + len
     }
-    if (tiffAt < 0) return None
-    val t = java.util.Arrays.copyOfRange(jpeg, tiffAt, tiffEnd)
-    if (t.length < 8) return None
-    val le = t(0) == 'I' && t(1) == 'I'
-    if (!le && !(t(0) == 'M' && t(1) == 'M')) return None
-    def u16(p: Int): Int =
-      if (le) (t(p) & 0xff) | ((t(p + 1) & 0xff) << 8)
-      else ((t(p) & 0xff) << 8) | (t(p + 1) & 0xff)
-    def u32(p: Int): Long =
-      if (le) (t(p) & 0xffL) | ((t(p + 1) & 0xffL) << 8) |
-        ((t(p + 2) & 0xffL) << 16) | ((t(p + 3) & 0xffL) << 24)
-      else ((t(p) & 0xffL) << 24) | ((t(p + 1) & 0xffL) << 16) |
-        ((t(p + 2) & 0xffL) << 8) | (t(p + 3) & 0xffL)
-    if (u16(2) != 42) return None
+    if (app1 == null || app1.length < 8) return None
+    val t = Bytes.tiff(app1).getOrElse(return None)
     var orientation = 0
     var make = ""; var model = ""; var dateTime = ""; var dateTimeOriginal = ""
     var pixelX = 0; var pixelY = 0
@@ -69,50 +53,35 @@ object Exif {
 
     def str(p: Int, n: Int): String =
       if (p < 0 || n <= 0 || p + n > t.length) ""
-      else new String(t, p, n, java.nio.charset.StandardCharsets.US_ASCII)
-        .takeWhile(_ != '\u0000').trim
-
-    /** One IFD walk; `collect` receives (tag, type, count, valueField pos). */
-    def walkIfd(at: Long)(collect: (Int, Int, Long, Int) => Unit): Unit = {
-      if (at < 0 || at + 2 > t.length) return
-      val n = u16(at.toInt)
-      if (n > 512) return // hostile entry count
-      var k = 0
-      while (k < n) {
-        val e = at.toInt + 2 + 12 * k
-        if (e + 12 > t.length) return
-        collect(u16(e), u16(e + 2), u32(e + 4), e + 8)
-        k += 1
-      }
-    }
+      else t.ascii(p, n).takeWhile(_ != '\u0000').trim
 
     /** Inline SHORT/LONG value or its offset-resolved first element. */
-    def intValue(typ: Int, count: Long, vp: Int): Int =
-      if (typ == 3 && count >= 1) u16(vp) // SHORT stored inline
-      else if (typ == 4 && count >= 1) u32(vp).toInt // LONG inline
+    def intValue(e: Bytes.IfdEntry): Int =
+      if (e.typ == 3 && e.count >= 1) t.u16(e.valueAt) // SHORT stored inline
+      else if (e.typ == 4 && e.count >= 1) t.u32(e.valueAt).toInt // LONG inline
       else 0
 
     /** ASCII value: inline when count ≤ 4, via offset otherwise. */
-    def strValue(count: Long, vp: Int): String =
-      if (count <= 0 || count > 4096) ""
-      else if (count <= 4) str(vp, count.toInt)
-      else str(u32(vp).toInt, count.toInt)
+    def strValue(e: Bytes.IfdEntry): String =
+      if (e.count <= 0 || e.count > 4096) ""
+      else if (e.count <= 4) str(e.valueAt, e.count.toInt)
+      else str(t.u32(e.valueAt).toInt, e.count.toInt)
 
-    walkIfd(u32(4)) { (tag, typ, count, vp) =>
-      tag match {
-        case 0x0112 => orientation = intValue(typ, count, vp)
-        case 0x010F => make = strValue(count, vp)
-        case 0x0110 => model = strValue(count, vp)
-        case 0x0132 => dateTime = strValue(count, vp)
-        case 0x8769 => exifIfdAt = u32(vp)
+    Bytes.ifd(t, t.u32(4)).foreach { e =>
+      e.tag match {
+        case 0x0112 => orientation = intValue(e)
+        case 0x010F => make = strValue(e)
+        case 0x0110 => model = strValue(e)
+        case 0x0132 => dateTime = strValue(e)
+        case 0x8769 => exifIfdAt = t.u32(e.valueAt)
         case _ => ()
       }
     }
-    if (exifIfdAt >= 0) walkIfd(exifIfdAt) { (tag, typ, count, vp) =>
-      tag match {
-        case 0x9003 => dateTimeOriginal = strValue(count, vp)
-        case 0xA002 => pixelX = intValue(typ, count, vp)
-        case 0xA003 => pixelY = intValue(typ, count, vp)
+    if (exifIfdAt >= 0) Bytes.ifd(t, exifIfdAt).foreach { e =>
+      e.tag match {
+        case 0x9003 => dateTimeOriginal = strValue(e)
+        case 0xA002 => pixelX = intValue(e)
+        case 0xA003 => pixelY = intValue(e)
         case _ => ()
       }
     }
@@ -130,15 +99,12 @@ object Exif {
     * write. */
   def withExif(jpeg: Array[Byte], meta: Meta): Array[Byte] = {
     require(jpeg.length >= 2 && (jpeg(0) & 0xff) == 0xff && (jpeg(1) & 0xff) == 0xd8)
-    def be16(v: Int) = Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def be32(v: Long) = Array(((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
     // value area layout is computed as strings are appended
     val values = new ArrayBuffer[Byte]()
     def ascii(s: String): (Long, Array[Byte]) = {
       val b = (s + "\u0000").getBytes(java.nio.charset.StandardCharsets.US_ASCII)
       if (b.length <= 4) (b.length.toLong, java.util.Arrays.copyOf(b, 4))
-      else { val off = values.length; values ++= b; (b.length.toLong, be32(off.toLong)) } // patched later
+      else { val off = values.length; values ++= b; (b.length.toLong, be(4)(off)) } // patched later
     }
     final case class Entry(tag: Int, typ: Int, count: Long, value: Array[Byte])
     val makeE = ascii(meta.make); val modelE = ascii(meta.model)
@@ -152,34 +118,33 @@ object Exif {
     val ifd0 = Seq(
       Entry(0x010F, 2, makeE._1, makeE._2),
       Entry(0x0110, 2, modelE._1, modelE._2),
-      Entry(0x0112, 3, 1, be16(meta.orientation) ++ be16(0)),
+      Entry(0x0112, 3, 1, be(2)(meta.orientation, 0)),
       Entry(0x0132, 2, dtE._1, dtE._2),
-      Entry(0x8769, 4, 1, be32(exifAt)))
+      Entry(0x8769, 4, 1, be(4)(exifAt)))
     val exifIfd = Seq(
       Entry(0x9003, 2, dtoE._1, dtoE._2),
-      Entry(0xA002, 4, 1, be32(meta.pixelX.toLong)),
-      Entry(0xA003, 4, 1, be32(meta.pixelY.toLong)))
+      Entry(0xA002, 4, 1, be(4)(meta.pixelX)),
+      Entry(0xA003, 4, 1, be(4)(meta.pixelY)))
     def render(entries: Seq[Entry]): Array[Byte] = {
       val out = new ArrayBuffer[Byte]()
-      out ++= be16(entries.length)
+      out ++= be(2)(entries.length)
       entries.sortBy(_.tag).foreach { e =>
-        out ++= be16(e.tag); out ++= be16(e.typ); out ++= be32(e.count)
+        out ++= be(2)(e.tag, e.typ) ++ be(4)(e.count)
         // out-of-line ASCII values were stored as value-area offsets:
         // rebase them past both IFDs
         val v =
           if (e.typ == 2 && e.count > 4)
-            be32(valuesAt + (((e.value(0) & 0xffL) << 24) | ((e.value(1) & 0xffL) << 16) |
-              ((e.value(2) & 0xffL) << 8) | (e.value(3) & 0xffL)))
+            be(4)(valuesAt + Bytes.view(e.value).u32(0))
           else e.value
         out ++= v
       }
-      out ++= be32(0) // next-IFD pointer
+      out ++= be(4)(0) // next-IFD pointer
       out.toArray
     }
-    val tiff = "MM".getBytes("US-ASCII") ++ be16(42) ++ be32(ifd0At) ++
+    val tiff = "MM".getBytes("US-ASCII") ++ be(2)(42) ++ be(4)(ifd0At) ++
       render(ifd0) ++ render(exifIfd) ++ values.toArray
     val app1Body = "Exif".getBytes("US-ASCII") ++ Array(0.toByte, 0.toByte) ++ tiff
-    val app1 = Array(0xff.toByte, 0xe1.toByte) ++ be16(app1Body.length + 2) ++ app1Body
+    val app1 = Array(0xff.toByte, 0xe1.toByte) ++ be(2)(app1Body.length + 2) ++ app1Body
     jpeg.take(2) ++ app1 ++ jpeg.drop(2)
   }
 }

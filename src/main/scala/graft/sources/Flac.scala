@@ -310,21 +310,20 @@ object Flac {
   private def decodeImpl(data: Array[Byte]): Option[Decoded] = {
     if (data.length < 42 || data(0) != 'f' || data(1) != 'L' ||
         data(2) != 'a' || data(3) != 'C') return None
+    val v = Bytes.view(data)
     var p = 4
     var siRate = 0; var siChannels = 0; var siBps = 0; var siTotal = 0L
     var sawStreamInfo = false
     var last = false
     while (!last) {
-      if (p + 4 > data.length) return None
-      val hdr = data(p) & 0xff
+      // metadata block: last flag + type (1), 24-bit length, then the body
+      val hdr = v.u8(p)
       last = (hdr & 0x80) != 0
       val typ = hdr & 0x7f
-      val len = ((data(p + 1) & 0xff) << 16) | ((data(p + 2) & 0xff) << 8) | (data(p + 3) & 0xff)
-      p += 4
-      if (p + len > data.length) return None
+      val block = v.slice(p + 4, v.uint(p + 1, 3).toInt)
       if (typ == 0) { // STREAMINFO
-        if (len < 34) return None
-        val br = new BitReader(data, p)
+        if (block.length < 34) return None
+        val br = new BitReader(data, block.from)
         br.bits(16); br.bits(16) // min/max block size
         br.bits(24); br.bits(24) // min/max frame size
         siRate = br.bits(20).toInt
@@ -333,7 +332,7 @@ object Flac {
         siTotal = br.bits(36)
       } else if (typ == 127) return None // invalid
       sawStreamInfo |= typ == 0
-      p += len
+      p = block.to
     }
     if (!sawStreamInfo || siChannels < 1 || siChannels > 8 || siBps < 4) return None
     if (siTotal > 64L * 1024 * 1024) return None
@@ -364,8 +363,7 @@ object Flac {
       val bps = sampleSizeOf(ssCode, siBps).getOrElse(return None)
       if (bps != siBps) return None
       val headerEnd = br2.bytePos
-      if (headerEnd + 1 > data.length) return None
-      if (crc8(data, frameStart, headerEnd) != (data(headerEnd) & 0xff)) return None
+      if (crc8(data, frameStart, headerEnd) != v.u8(headerEnd)) return None
       val body = new BitReader(data, headerEnd + 1)
       // channel assignment: 0-7 independent; 8 L/S, 9 R/S, 10 M/S — the
       // SIDE channel carries one extra bit
@@ -386,9 +384,7 @@ object Flac {
       }
       body.alignToByte()
       val frameEnd = body.bytePos
-      if (frameEnd + 2 > data.length) return None
-      val want = ((data(frameEnd) & 0xff) << 8) | (data(frameEnd + 1) & 0xff)
-      if (crc16(data, frameStart, frameEnd) != want) return None
+      if (crc16(data, frameStart, frameEnd) != v.u16(frameEnd)) return None
       // un-decorrelate
       chCode match {
         case 8 => // left/side: R = L - side
@@ -453,9 +449,7 @@ object Flac {
     si.bits(n.toLong, 36)
     val siBytes = si.finish() ++ new Array[Byte](16)
     out += 0x80.toByte // last block, type 0
-    out += ((siBytes.length >> 16) & 0xff).toByte
-    out += ((siBytes.length >> 8) & 0xff).toByte
-    out += (siBytes.length & 0xff).toByte
+    out ++= Bytes.be(3)(siBytes.length)
     out ++= siBytes
     var pos = 0
     var frameNo = 0L
@@ -497,8 +491,7 @@ object Flac {
       for ((s, bps) <- planes) writeSubframe(bw, s, bps, fixedOrder)
       frame ++= bw.finish()
       val fcrc = crc16(frame.toArray, 0, frame.length)
-      frame += ((fcrc >> 8) & 0xff).toByte
-      frame += (fcrc & 0xff).toByte
+      frame ++= Bytes.be(2)(fcrc)
       out ++= frame
       pos += bs
       frameNo += 1

@@ -1,6 +1,7 @@
 package graft.sources
 
 import scala.collection.mutable.ArrayBuffer
+import Bytes.be
 
 /** JBIG2 (ITU-T T.88) — the bi-level image codec PDF embeds behind
   * /JBIG2Decode (ISO 32000 §7.4.7), which the reference consumes through
@@ -475,10 +476,6 @@ object Jbig2 {
   final case class Segment(number: Long, segType: Int, page: Long,
                            data: Array[Byte], refs: Seq[Long] = Nil)
 
-  private def be32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-      ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-
   /** Parse the embedded (no file header) segment stream. Returns None on a
     * malformed header or an unknown-length segment. Trailing CR/LF bytes
     * after the last segment are tolerated — a PDF scanner that delimits
@@ -486,48 +483,36 @@ object Jbig2 {
     * the explicit segment lengths make the padding unambiguous. */
   def parseSegments(data: Array[Byte]): Option[Seq[Segment]] = {
     val out = new ArrayBuffer[Segment]()
-    var i = 0
-    while (i < data.length) {
-      if (data.length - i <= 2 &&
-          (i until data.length).forall(k => data(k) == '\n' || data(k) == '\r'))
-        return Some(out.toSeq)
-      if (i + 11 > data.length) return None
-      val number = be32(data, i)
-      val flags = data(i + 4) & 0xff
-      val segType = flags & 0x3f
-      val pageAssoc4 = (flags & 0x40) != 0
-      var j = i + 5
-      val refHead = data(j) & 0xff
-      var refCount = refHead >>> 5
-      if (refCount == 7) {
-        if (j + 4 > data.length) return None
-        refCount = (be32(data, j) & 0x1FFFFFFFL).toInt
-        j += 4 + (refCount + 8) / 8 // long form: 4-byte count + retain bits
-      } else j += 1
-      // referred segment numbers: sized by THIS segment's number — a text
-      // region finds its symbol dictionaries through these
-      val refSize = if (number <= 256) 1 else if (number <= 65536) 2 else 4
-      if (j + refCount * refSize > data.length) return None
-      val refs = (0 until refCount).map { k =>
-        refSize match {
-          case 1 => data(j + k) & 0xffL
-          case 2 => ((data(j + 2 * k) & 0xffL) << 8) | (data(j + 2 * k + 1) & 0xffL)
-          case _ => be32(data, j + 4 * k)
+    val c = Bytes.view(data)
+    try {
+      while (c.pos < data.length) {
+        val i = c.pos
+        if (data.length - i <= 2 &&
+            (i until data.length).forall(k => data(k) == '\n' || data(k) == '\r'))
+          return Some(out.toSeq)
+        val number = c.readU32()
+        val flags = c.readU8()
+        val segType = flags & 0x3f
+        val pageAssoc4 = (flags & 0x40) != 0
+        var refCount = c.u8(c.pos) >>> 5
+        if (refCount == 7) { // long form: 4-byte count + retain bits
+          refCount = (c.readU32() & 0x1FFFFFFFL).toInt
+          c.skip((refCount + 8) / 8)
+        } else c.skip(1)
+        // referred segment numbers: sized by THIS segment's number — a text
+        // region finds its symbol dictionaries through these
+        val refs = Vector.fill(refCount) {
+          if (number <= 256) c.readU8().toLong
+          else if (number <= 65536) c.readU16().toLong
+          else c.readU32()
         }
+        val page = if (pageAssoc4) c.readU32() else c.readU8().toLong
+        val len = c.readU32()
+        if (len == 0xFFFFFFFFL) return None
+        out += Segment(number, segType, page, c.readBytes(len.toInt), refs)
       }
-      j += refCount * refSize
-      if (j + (if (pageAssoc4) 4 else 1) > data.length) return None
-      val page = if (pageAssoc4) { val p = be32(data, j); j += 4; p }
-                 else { val p = (data(j) & 0xffL); j += 1; p }
-      if (j + 4 > data.length) return None
-      val len = be32(data, j)
-      j += 4
-      if (len == 0xFFFFFFFFL || j + len > data.length) return None
-      out += Segment(number, segType, page,
-        java.util.Arrays.copyOfRange(data, j, j + len.toInt), refs)
-      i = j + len.toInt
-    }
-    Some(out.toSeq)
+      Some(out.toSeq)
+    } catch { case _: Bytes.Overrun => None }
   }
 
   /** A decoded generic region with its placement on the page. */
@@ -561,10 +546,11 @@ object Jbig2 {
   private def regionOfGenericSegment(seg: Segment): Option[(Region, Int)] = {
     val d = seg.data
     if (d.length < 18) return None
-    val w = be32(d, 0).toInt
-    val h = be32(d, 4).toInt
-    val x = be32(d, 8).toInt
-    val y = be32(d, 12).toInt
+    val v = Bytes.view(d)
+    val w = v.u32(0).toInt
+    val h = v.u32(4).toInt
+    val x = v.u32(8).toInt
+    val y = v.u32(12).toInt
     val combOp = d(16) & 7
     val flags = d(17) & 0xff
     val mmr = (flags & 1) != 0
@@ -601,7 +587,8 @@ object Jbig2 {
   private def decodeSymbolDict(data: Array[Byte],
                                inputs: IndexedSeq[Bitmap]): Option[IndexedSeq[Bitmap]] = {
     if (data.length < 2) return None
-    val flags = ((data(0) & 0xff) << 8) | (data(1) & 0xff)
+    val v = Bytes.view(data)
+    val flags = v.u16(0)
     val sdhuff = (flags & 1) != 0
     val refagg = (flags & 2) != 0
     val template = (flags >> 10) & 3
@@ -615,8 +602,8 @@ object Jbig2 {
           (data(p + 4), data(p + 5)), (data(p + 6), data(p + 7)))
       else AtPixels(a1 = (data(p), data(p + 1)))
     p += 2 * nAt
-    val numEx = be32(data, p).toInt
-    val numNew = be32(data, p + 4).toInt
+    val numEx = v.u32(p).toInt
+    val numNew = v.u32(p + 4).toInt
     p += 8
     if (numNew < 0 || numNew > 100000 || numEx < 0 ||
         numEx > inputs.length + numNew) return None
@@ -685,13 +672,14 @@ object Jbig2 {
   private def decodeTextRegion(data: Array[Byte],
                                syms: IndexedSeq[Bitmap]): Option[(Region, Int)] = {
     if (data.length < 17 + 2 + 4 || syms.isEmpty) return None
-    val w = be32(data, 0).toInt
-    val h = be32(data, 4).toInt
-    val x = be32(data, 8).toInt
-    val y = be32(data, 12).toInt
+    val v = Bytes.view(data)
+    val w = v.u32(0).toInt
+    val h = v.u32(4).toInt
+    val x = v.u32(8).toInt
+    val y = v.u32(12).toInt
     val extCombOp = data(16) & 7
     if (w <= 0 || h <= 0 || w.toLong * h > 64L * 1024 * 1024) return None
-    val flags = ((data(17) & 0xff) << 8) | (data(18) & 0xff)
+    val flags = v.u16(17)
     val sbhuff = (flags & 1) != 0
     val refine = (flags & 2) != 0
     val logStrips = (flags >> 2) & 3
@@ -704,7 +692,7 @@ object Jbig2 {
     if (sbhuff || refine) return None
     var p = 19
     if (data.length < p + 4) return None
-    val numInstances = be32(data, p).toInt
+    val numInstances = v.u32(p).toInt
     p += 4
     if (numInstances < 0 || numInstances > 1000000) return None
     val strips = 1 << logStrips
@@ -807,7 +795,7 @@ object Jbig2 {
     val template = (flags >> 1) & 3
     val hdpw = data(1) & 0xff
     val hdph = data(2) & 0xff
-    val grayMax = be32(data, 3).toInt
+    val grayMax = Bytes.view(data).u32(3).toInt
     if (hdpw <= 0 || hdph <= 0 || grayMax < 0 || grayMax > 10000) return None
     val cw = (grayMax + 1) * hdpw
     if (cw.toLong * hdph > 16L * 1024 * 1024) return None
@@ -837,10 +825,11 @@ object Jbig2 {
   private def decodeHalftoneRegion(data: Array[Byte],
                                    patterns: IndexedSeq[Bitmap]): Option[(Region, Int)] = {
     if (data.length < 38 || patterns.isEmpty) return None
-    val w = be32(data, 0).toInt
-    val h = be32(data, 4).toInt
-    val x = be32(data, 8).toInt
-    val y = be32(data, 12).toInt
+    val v = Bytes.view(data)
+    val w = v.u32(0).toInt
+    val h = v.u32(4).toInt
+    val x = v.u32(8).toInt
+    val y = v.u32(12).toInt
     val extCombOp = data(16) & 7
     val flags = data(17) & 0xff
     val mmr = (flags & 1) != 0
@@ -850,12 +839,12 @@ object Jbig2 {
     val defPixel = (flags >> 7) & 1
     if (mmr || enableSkip) return None
     if (w <= 0 || h <= 0 || w.toLong * h > 64L * 1024 * 1024) return None
-    val hgw = be32(data, 18).toInt
-    val hgh = be32(data, 22).toInt
-    val hgx = be32(data, 26).toInt // signed 32-bit grid origin
-    val hgy = be32(data, 30).toInt
-    val hrx = ((data(34) & 0xff) << 8) | (data(35) & 0xff)
-    val hry = ((data(36) & 0xff) << 8) | (data(37) & 0xff)
+    val hgw = v.u32(18).toInt
+    val hgh = v.u32(22).toInt
+    val hgx = v.u32(26).toInt // signed 32-bit grid origin
+    val hgy = v.u32(30).toInt
+    val hrx = v.u16(34)
+    val hry = v.u16(36)
     if (hgw <= 0 || hgh <= 0 || hgw.toLong * hgh > 16L * 1024 * 1024) return None
     val bitsPerValue = symCodeLen(patterns.length)
     val coded = java.util.Arrays.copyOfRange(data, 38, data.length)
@@ -927,10 +916,13 @@ object Jbig2 {
         }
       case 48 => // page information: width, height (0xFFFFFFFF = striped/unknown)
         if (seg.data.length >= 8) {
-          val w = be32(seg.data, 0)
-          val h = be32(seg.data, 4)
+          val info = Bytes.view(seg.data)
+          val w = info.u32(0)
+          val h = info.u32(4)
           if (w > 0 && w < Int.MaxValue) pageW = w.toInt
           if (h > 0 && h < Int.MaxValue) pageH = h.toInt
+          // an oversized page fails now, before its regions are decoded
+          if (pageW > 0 && pageH > 0 && pageW.toLong * pageH > 64L * 1024 * 1024) return None
         }
       case 0 => // symbol dictionary: inputs are its referred dicts' exports
         val inputs = seg.refs.flatMap(dicts.get).flatten.toIndexedSeq
@@ -957,7 +949,6 @@ object Jbig2 {
       // regions without a page frame are unplaceable
       return if (regions.length == 1) Some(regions.head._1) else None
     }
-    if (pageW.toLong * pageH > 64L * 1024 * 1024) return None
     val page = Bitmap(pageW, pageH, new Array[Byte](pageW * pageH))
     for ((r, op) <- regions) drawOp(page, r.bitmap, r.x, r.y, op)
     Some(Region(0, 0, page))
@@ -965,22 +956,18 @@ object Jbig2 {
 
   // ---- Embedded-stream writer (test corpus) ----------------------------------
 
-  private def be32b(v: Long): Array[Byte] = Array(
-    ((v >>> 24) & 0xff).toByte, ((v >>> 16) & 0xff).toByte,
-    ((v >>> 8) & 0xff).toByte, (v & 0xff).toByte)
-
   def segmentBytes(number: Long, segType: Int, page: Int,
                    payload: Array[Byte],
                    refs: Seq[Long] = Nil): Array[Byte] = {
     require(refs.length <= 4 && number <= 256,
       "writer emits the short referred-segment form only")
     val out = new ArrayBuffer[Byte]()
-    out ++= be32b(number)
+    out ++= be(4)(number)
     out += segType.toByte // flags: short page assoc, not deferred
     out += (refs.length << 5).toByte // short form: count in the top 3 bits
     refs.foreach(r => out += r.toByte) // 1-byte refs (this number <= 256)
     out += page.toByte
-    out ++= be32b(payload.length.toLong)
+    out ++= be(4)(payload.length)
     out ++= payload
     out.toArray
   }
@@ -996,8 +983,8 @@ object Jbig2 {
                      mmr: Boolean = false,
                      template: Int = 0): (Array[Byte], Array[Byte]) = {
     // page information segment: width, height, xres, yres, flags, striping
-    val pageInfo = be32b(bm.width.toLong) ++ be32b(bm.height.toLong) ++
-      be32b(0) ++ be32b(0) ++ Array(0x01.toByte) ++ Array(0x00.toByte, 0x00.toByte)
+    val pageInfo = be(4)(bm.width, bm.height, 0, 0) ++
+      Array(0x01.toByte) ++ Array(0x00.toByte, 0x00.toByte)
     val regionFlags = (if (mmr) 1 else 0) | ((template & 3) << 1) |
       (if (tpgdon && !mmr) 8 else 0)
     val atB =
@@ -1007,8 +994,8 @@ object Jbig2 {
     val coded =
       if (mmr) Ccitt.encode(bm) // T.6, no AT bytes in the header
       else atB ++ encodeGenericRegion(bm, tpgdon, at, template)
-    val regionInfo = be32b(bm.width.toLong) ++ be32b(bm.height.toLong) ++
-      be32b(0) ++ be32b(0) ++ Array(0x00.toByte) ++ // combOp OR
+    val regionInfo = be(4)(bm.width, bm.height, 0, 0) ++
+      Array(0x00.toByte) ++ // combOp OR
       Array(regionFlags.toByte) ++ coded
     (segmentBytes(0, 48, 1, pageInfo), segmentBytes(1, 39, 1, regionInfo))
   }
@@ -1062,9 +1049,7 @@ object Jbig2 {
       if (template == 0) Array(at.a1._1, at.a1._2, at.a2._1, at.a2._2,
         at.a3._1, at.a3._2, at.a4._1, at.a4._2).map(_.toByte)
       else Array(at.a1._1.toByte, at.a1._2.toByte)
-    val payload = Array(((flags >> 8) & 0xff).toByte, (flags & 0xff).toByte) ++
-      atB ++ be32b(symbols.length.toLong) ++ be32b(symbols.length.toLong) ++
-      enc.finish()
+    val payload = be(2)(flags) ++ atB ++ be(4)(symbols.length, symbols.length) ++ enc.finish()
     (payload, perm)
   }
 
@@ -1111,10 +1096,8 @@ object Jbig2 {
     val flags = (refCorner & 3) << 4 // everything else zero: arithmetic,
     // no refinement, LOGSBSTRIPS 0, non-transposed, OR, defpixel 0,
     // DSOFFSET 0, template 0
-    val regionInfo = be32b(w.toLong) ++ be32b(h.toLong) ++ be32b(x.toLong) ++
-      be32b(y.toLong) ++ Array(0x00.toByte) // external combOp OR
-    regionInfo ++ Array(((flags >> 8) & 0xff).toByte, (flags & 0xff).toByte) ++
-      be32b(instances.length.toLong) ++ enc.finish()
+    val regionInfo = be(4)(w, h, x, y) ++ Array(0x00.toByte) // external combOp OR
+    regionInfo ++ be(2)(flags) ++ be(4)(instances.length) ++ enc.finish()
   }
 
   /** Segments for a symbol/text organisation of `bm` — the layout scanned-
@@ -1150,8 +1133,8 @@ object Jbig2 {
     val instances = placed.map { case (x0, id) => (perm(id), x0, tRow) }
     val textPayload = encodeTextRegionPayload(
       bm.width, bm.height, 0, 0, exported.toIndexedSeq, instances, refCorner)
-    val pageInfo = be32b(bm.width.toLong) ++ be32b(bm.height.toLong) ++
-      be32b(0) ++ be32b(0) ++ Array(0x01.toByte) ++ Array(0x00.toByte, 0x00.toByte)
+    val pageInfo = be(4)(bm.width, bm.height, 0, 0) ++
+      Array(0x01.toByte) ++ Array(0x00.toByte, 0x00.toByte)
     (segmentBytes(0, 48, 1, pageInfo),
       segmentBytes(1, 0, 1, dictPayload),
       segmentBytes(2, 7, 1, textPayload, refs = Seq(1L)))
@@ -1179,7 +1162,7 @@ object Jbig2 {
     val coded = encodeGenericRegion(collective, tpgdon = false,
       AtPixels(a1 = (-hdpw, 0)), template)
     Array(((template & 3) << 1).toByte, hdpw.toByte, hdph.toByte) ++
-      be32b((patterns.length - 1).toLong) ++ coded
+      be(4)(patterns.length - 1) ++ coded
   }
 
   /** Encode a halftone region payload: the grid of pattern indices `gi`
@@ -1216,14 +1199,9 @@ object Jbig2 {
       prevPlane = rawBits
       j -= 1
     }
-    val regionInfo = be32b(w.toLong) ++ be32b(h.toLong) ++ be32b(x.toLong) ++
-      be32b(y.toLong) ++ Array(0x00.toByte) // external combOp OR
+    val regionInfo = be(4)(w, h, x, y) ++ Array(0x00.toByte) // external combOp OR
     regionInfo ++ Array(((template & 3) << 1).toByte) ++ // arithmetic, no skip, OR
-      be32b(hgw.toLong) ++ be32b(hgh.toLong) ++
-      be32b(hgx.toLong & 0xffffffffL) ++ be32b(hgy.toLong & 0xffffffffL) ++
-      Array(((hrx >> 8) & 0xff).toByte, (hrx & 0xff).toByte,
-        ((hry >> 8) & 0xff).toByte, (hry & 0xff).toByte) ++
-      enc.finish()
+      be(4)(hgw, hgh, hgx, hgy) ++ be(2)(hrx, hry) ++ enc.finish()
   }
 
   /** Segments for a HALFTONE organisation of `bm`: a two-pattern 1×1
@@ -1241,8 +1219,8 @@ object Jbig2 {
     val htPayload = encodeHalftoneRegionPayload(bm.width, bm.height, 0, 0,
       nPatterns = 2, gi, hgw = bm.width, hgh = bm.height,
       hgx = 0, hgy = 0, hrx = 1, hry = 0, template = template)
-    val pageInfo = be32b(bm.width.toLong) ++ be32b(bm.height.toLong) ++
-      be32b(0) ++ be32b(0) ++ Array(0x01.toByte) ++ Array(0x00.toByte, 0x00.toByte)
+    val pageInfo = be(4)(bm.width, bm.height, 0, 0) ++
+      Array(0x01.toByte) ++ Array(0x00.toByte, 0x00.toByte)
     (segmentBytes(0, 48, 1, pageInfo),
       segmentBytes(1, 16, 1, dictPayload),
       segmentBytes(2, 23, 1, htPayload, refs = Seq(1L)))

@@ -1,6 +1,7 @@
 package graft.sources
 
 import scala.collection.mutable.ArrayBuffer
+import Bytes.be
 
 /** JPEG 2000 Part 1 (ITU-T T.800) — the wavelet codec behind PDF's
   * /JPXDecode (ISO 32000 §7.4.9), consumed by the reference through its
@@ -174,10 +175,12 @@ object Jpx {
       }
     }
 
-    /** Decode a leaf's exact value (zero-bit-plane signalling). */
+    /** Decode a leaf's exact value (zero-bit-plane signalling). A truncated
+      * header reads as 0 bits, which never resolve the value: past 64 (over
+      * any code-block's Mb) the walk stops and returns that bound. */
     def decodeFull(br: BitReader, x: Int, y: Int): Int = {
       var t = 1
-      while (!decode(br, x, y, t)) t += 1
+      while (!decode(br, x, y, t)) { t += 1; if (t > 64) return t }
       value(path(x, y).last)
     }
   }
@@ -644,10 +647,6 @@ object Jpx {
 
   // ---- codestream assembly/parse (Annex A) ----------------------------------
 
-  private def u16b(v: Int) = Array(((v >>> 8) & 0xff).toByte, (v & 0xff).toByte)
-  private def u32b(v: Int) = Array(((v >>> 24) & 0xff).toByte, ((v >>> 16) & 0xff).toByte,
-    ((v >>> 8) & 0xff).toByte, (v & 0xff).toByte)
-
   /** `samples` holds `comps` planes back to back (component 0 first). */
   final case class Decoded(width: Int, height: Int, samples: Array[Int],
                            comps: Int = 1)
@@ -746,16 +745,16 @@ object Jpx {
     def wbytes(b: Array[Byte]): Unit = out.write(b)
     wbytes(Array(0xff.toByte, 0x4f.toByte)) // SOC
     // SIZ: one (Ssiz, XRsiz, YRsiz) triple per component, no subsampling
-    val siz = u16b(0) ++ u32b(width) ++ u32b(height) ++ u32b(0) ++ u32b(0) ++
-      u32b(width) ++ u32b(height) ++ u32b(0) ++ u32b(0) ++ u16b(planes.length) ++
+    val siz = be(2)(0) ++ be(4)(width, height, 0, 0, width, height, 0, 0) ++
+      be(2)(planes.length) ++
       planes.flatMap(_ => Seq((Depth - 1).toByte, 1.toByte, 1.toByte))
-    wbytes(Array(0xff.toByte, 0x51.toByte) ++ u16b(siz.length + 2) ++ siz)
+    wbytes(Array(0xff.toByte, 0x51.toByte) ++ be(2)(siz.length + 2) ++ siz)
     // COD: Scod 0, LRCP(0), layers 1, MCT per rct; SPcod: NL, cb sizes,
     // style 0, 5/3
-    val cod = Array(0.toByte) ++ Array(0.toByte) ++ u16b(1) ++
+    val cod = Array(0.toByte) ++ Array(0.toByte) ++ be(2)(1) ++
       Array((if (rct) 1 else 0).toByte) ++
       Array(levels.toByte, (cbExp - 2).toByte, (cbExp - 2).toByte, 0.toByte, 1.toByte)
-    wbytes(Array(0xff.toByte, 0x52.toByte) ++ u16b(cod.length + 2) ++ cod)
+    wbytes(Array(0xff.toByte, 0x52.toByte) ++ be(2)(cod.length + 2) ++ cod)
     // QCD: style 0 (no quantization), guard bits; one exponent per subband,
     // shared by every component (the RCT bit rides on all of them)
     val nb = 3 * levels + 1
@@ -764,7 +763,7 @@ object Jpx {
     for (r <- 1 to levels; b <- 1 to 3)
       spqcd(1 + (r - 1) * 3 + (b - 1)) = ((Depth + extra + bandGain(b)) << 3).toByte
     val qcd = Array(((Guard << 5) | 0).toByte) ++ spqcd
-    wbytes(Array(0xff.toByte, 0x5c.toByte) ++ u16b(qcd.length + 2) ++ qcd)
+    wbytes(Array(0xff.toByte, 0x5c.toByte) ++ be(2)(qcd.length + 2) ++ qcd)
     // tile: packets LRCP — for each resolution, one packet per component
     val body = new java.io.ByteArrayOutputStream()
     for (r <- 0 to levels; a <- transformed) {
@@ -806,8 +805,8 @@ object Jpx {
       body.write(writePacket(subbandBlocks))
     }
     val bodyBytes = body.toByteArray
-    val sot = u16b(0) ++ u32b(12 + bodyBytes.length) ++ Array(0.toByte, 1.toByte)
-    wbytes(Array(0xff.toByte, 0x90.toByte) ++ u16b(10) ++ sot)
+    val sot = be(2)(0) ++ be(4)(12 + bodyBytes.length) ++ Array(0.toByte, 1.toByte)
+    wbytes(Array(0xff.toByte, 0x90.toByte) ++ be(2)(10) ++ sot)
     wbytes(Array(0xff.toByte, 0x93.toByte)) // SOD
     wbytes(bodyBytes)
     wbytes(Array(0xff.toByte, 0xd9.toByte)) // EOC
@@ -820,93 +819,70 @@ object Jpx {
     try decodeImpl(unbox(data)) catch { case _: Exception => None }
   }
 
-  /** JP2 container: walk the boxes for jp2c; raw codestreams pass through. */
-  private def unbox(data: Array[Byte]): Array[Byte] = {
-    if (data.length >= 2 && (data(0) & 0xff) == 0xff && (data(1) & 0xff) == 0x4f) return data
-    var i = 0
-    while (i + 8 <= data.length) {
-      val len = ((data(i) & 0xffL) << 24) | ((data(i + 1) & 0xffL) << 16) |
-        ((data(i + 2) & 0xffL) << 8) | (data(i + 3) & 0xffL)
-      val typ = new String(data, i + 4, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      val (hdr, boxLen) =
-        if (len == 1) {
-          if (i + 16 > data.length) return Array.emptyByteArray
-          (16, (((data(i + 8) & 0xffL) << 56) | ((data(i + 9) & 0xffL) << 48) |
-            ((data(i + 10) & 0xffL) << 40) | ((data(i + 11) & 0xffL) << 32) |
-            ((data(i + 12) & 0xffL) << 24) | ((data(i + 13) & 0xffL) << 16) |
-            ((data(i + 14) & 0xffL) << 8) | (data(i + 15) & 0xffL)))
-        }
-        else if (len == 0) (8, (data.length - i).toLong)
-        else (8, len)
-      // hostile lengths must not stall the walk: a box shorter than its
-      // header, or one that doesn't advance/overruns, ends the parse
-      if (boxLen < hdr || i + boxLen > data.length) return Array.emptyByteArray
-      if (typ == "jp2c")
-        return java.util.Arrays.copyOfRange(data, i + hdr, (i + boxLen).toInt)
-      i += boxLen.toInt
-    }
-    Array.emptyByteArray
-  }
+  /** JP2 container: the jp2c box's payload; raw codestreams pass through. */
+  private def unbox(data: Array[Byte]): Array[Byte] =
+    if (data.length >= 2 && (data(0) & 0xff) == 0xff && (data(1) & 0xff) == 0x4f) data
+    else Bytes.boxes(Bytes.view(data)).find(_.typ == "jp2c")
+      .fold(Array.emptyByteArray)(_.body.toArray)
 
   private def decodeImpl(cs: Array[Byte]): Option[Decoded] = {
     if (cs.length < 4 || (cs(0) & 0xff) != 0xff || (cs(1) & 0xff) != 0x4f) return None
+    val v = Bytes.view(cs)
     var i = 2
     var width = 0; var height = 0; var levels = -1; var cbExp = -1
     var nComps = 0; var mct = 0
     var guard = Guard
     var exps: Array[Int] = null
     var sodAt = -1
-    def u16(j: Int) = ((cs(j) & 0xff) << 8) | (cs(j + 1) & 0xff)
-    def u32(j: Int) = ((cs(j) & 0xff) << 24) | ((cs(j + 1) & 0xff) << 16) |
-      ((cs(j + 2) & 0xff) << 8) | (cs(j + 3) & 0xff)
     while (i + 2 <= cs.length && sodAt < 0) {
-      if ((cs(i) & 0xff) != 0xff) return None
-      val m = cs(i + 1) & 0xff
+      if (v.u8(i) != 0xff) return None
+      val m = v.u8(i + 1)
       m match {
         case 0x93 => sodAt = i + 2 // SOD
         case 0xd9 => return None   // EOC before SOD
         case _ =>
-          val l = u16(i + 2)
+          val l = v.u16(i + 2)
+          // the marker segment from its length field on: a field past its
+          // length `l` fails closed instead of reading the next marker
+          val seg = v.slice(i + 2, l)
           m match {
             case 0x51 => // SIZ
-              width = u32(i + 4 + 2); height = u32(i + 4 + 6)
-              val xo = u32(i + 4 + 10); val yo = u32(i + 4 + 14)
-              val xt = u32(i + 4 + 18); val yt = u32(i + 4 + 22)
-              val xto = u32(i + 4 + 26); val yto = u32(i + 4 + 30)
-              val nc = u16(i + 4 + 34)
+              width = seg.u32(4).toInt; height = seg.u32(8).toInt
+              val xo = seg.u32(12); val yo = seg.u32(16)
+              val xt = seg.u32(20).toInt; val yt = seg.u32(24).toInt
+              val xto = seg.u32(28); val yto = seg.u32(32)
+              val nc = seg.u16(36)
               if (xo != 0 || yo != 0 || xto != 0 || yto != 0 ||
                   xt < width || yt < height) return None // single whole-image tile only
               if (nc < 1 || nc > 4) return None
               var c = 0
               while (c < nc) { // 8-bit unsigned, no subsampling, per component
-                if ((cs(i + 4 + 36 + 3 * c) & 0xff) != Depth - 1 ||
-                    (cs(i + 4 + 37 + 3 * c) & 0xff) != 1 ||
-                    (cs(i + 4 + 38 + 3 * c) & 0xff) != 1) return None
+                if (seg.u8(38 + 3 * c) != Depth - 1 || seg.u8(39 + 3 * c) != 1 ||
+                    seg.u8(40 + 3 * c) != 1) return None
                 c += 1
               }
               nComps = nc
             case 0x52 => // COD
-              val scod = cs(i + 4) & 0xff
-              val prog = cs(i + 5) & 0xff
-              val layers = u16(i + 6)
-              mct = cs(i + 8) & 0xff
-              levels = cs(i + 9) & 0xff
-              cbExp = (cs(i + 10) & 0x0f) + 2
-              val cbh = (cs(i + 11) & 0x0f) + 2
-              val style = cs(i + 12) & 0xff
-              val transform = cs(i + 13) & 0xff
+              val scod = seg.u8(2)
+              val prog = seg.u8(3)
+              val layers = seg.u16(4)
+              mct = seg.u8(6)
+              levels = seg.u8(7)
+              cbExp = (seg.u8(8) & 0x0f) + 2
+              val cbh = (seg.u8(9) & 0x0f) + 2
+              val style = seg.u8(10)
+              val transform = seg.u8(11)
               if (scod != 0 || prog != 0 || layers != 1 || mct > 1 ||
                   cbh != cbExp || style != 0 || transform != 1) return None
             case 0x5c => // QCD: style 0 (reversible, no quantization) only;
               // Mb per subband = exponent + guard bits - 1 (E.1.1)
-              if ((cs(i + 4) & 0x1f) != 0) return None
-              guard = (cs(i + 4) & 0xff) >> 5
-              exps = (0 until l - 3).map(j => (cs(i + 5 + j) & 0xff) >> 3).toArray
+              if ((seg.u8(2) & 0x1f) != 0) return None
+              guard = seg.u8(2) >> 5
+              exps = (0 until l - 3).map(j => seg.u8(3 + j) >> 3).toArray
             case 0x90 => // SOT: exactly one tile-part of tile 0 — a second
               // tile-part would follow the packets and be consumed as
               // packet data, so TNsot must say 1
-              if (u16(i + 4) != 0 || (cs(i + 10) & 0xff) != 0 ||
-                  (cs(i + 11) & 0xff) != 1) return None
+              if (seg.u16(2) != 0 || seg.u8(8) != 0 || seg.u8(9) != 1) return None
             case _ => () // COM etc: skip
           }
           i += 2 + l
@@ -952,8 +928,8 @@ object Jpx {
             // 28+ magnitude bit-planes cannot arise from 8-bit reversible
             // data and would overflow the Int magnitude accumulator —
             // refuse rather than wrap (1 << p is mod-32 in JVM)
-            if (numbps < 0 || numbps > 28 || pos + len > cs.length) return None
-            val blockBytes = java.util.Arrays.copyOfRange(cs, pos, pos + len)
+            if (numbps < 0 || numbps > 28) return None
+            val blockBytes = v.bytes(pos, len)
             val dec = t1Decode(band, w0, h0, numbps, passes, blockBytes)
             var yy = 0
             while (yy < h0) {

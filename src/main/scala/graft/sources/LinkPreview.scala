@@ -111,7 +111,7 @@ object LinkPreview {
     // ---- _merge_head_data (:276-394): join back, total_score --------------
     val enriched = links
       .join(contextual, Seq("href"), "left")
-      .select(links.columns.map(col) ++ Seq(
+      .select(links.columns.toSeq.map(col) ++ Seq(
         coalesce(col("head_status"), lit("not_requested")).as("head_status"),
         coalesce(col("head"), lit("")).as("head"),
         col("contextual_score"),

@@ -1,6 +1,7 @@
 package graft.sources
 
 import scala.collection.mutable.ArrayBuffer
+import Bytes.{be, box}
 
 /** ISO base media file format (ISO/IEC 14496-12; the MP4/MOV container) —
   * METADATA parsing only, deliberately: the moov box tree carries
@@ -14,8 +15,8 @@ import scala.collection.mutable.ArrayBuffer
   * the parser's corpus is generated forward, same pattern as [[Jbig2]]/
   * [[Jpx]]/[[Flac]].
   *
-  * Box layout (§4.2): size(4) type(4) [largesize(8) when size==1]; size 0 =
-  * to end of file. Parsed boxes: ftyp, moov/mvhd, trak/tkhd,
+  * Box layout (§4.2, walked by [[Bytes.boxes]]): size(4) type(4)
+  * [largesize(8) when size==1]; size 0 = to end of file. Parsed boxes: ftyp, moov/mvhd, trak/tkhd,
   * mdia/{mdhd,hdlr}, minf/stbl/{stsd,stts,stsz}. Unknown boxes skip.
   */
 object Mp4 {
@@ -30,39 +31,8 @@ object Mp4 {
 
   final case class Movie(majorBrand: String, durationMs: Long, tracks: Seq[Track])
 
-  private def u16(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-  private def u32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-      ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-  private def u64(b: Array[Byte], i: Int): Long =
-    (u32(b, i) << 32) | u32(b, i + 4)
-  private def fourcc(b: Array[Byte], i: Int): String =
-    new String(b, i, 4, java.nio.charset.StandardCharsets.US_ASCII)
-
-  /** Child box ranges of [from, to): (type, payloadFrom, payloadTo). */
-  private def boxes(b: Array[Byte], from: Int, to: Int): Seq[(String, Int, Int)] = {
-    val out = new ArrayBuffer[(String, Int, Int)]()
-    var i = from
-    while (i + 8 <= to) {
-      val sz = u32(b, i)
-      val typ = fourcc(b, i + 4)
-      val (hdr, len) =
-        if (sz == 1) {
-          if (i + 16 > to) return out.toSeq
-          (16, u64(b, i + 8))
-        } else if (sz == 0) (8, (to - i).toLong)
-        else (8, sz)
-      // hostile sizes end the walk rather than stall or reverse it
-      if (len < hdr || i + len > to) return out.toSeq
-      out += ((typ, i + hdr, (i + len).toInt))
-      i += len.toInt
-    }
-    out.toSeq
-  }
-
-  private def find(bs: Seq[(String, Int, Int)], typ: String): Option[(Int, Int)] =
-    bs.find(_._1 == typ).map(x => (x._2, x._3))
+  private def find(bs: Seq[Bytes.Box], typ: String): Option[Bytes.View] =
+    bs.find(_.typ == typ).map(_.body)
 
   /** Parse container metadata. None when no moov/mvhd movie structure is
     * present or a box is malformed where structure is required. */
@@ -71,32 +41,28 @@ object Mp4 {
   }
 
   private def parseImpl(data: Array[Byte]): Option[Movie] = {
-    val top = boxes(data, 0, data.length)
+    val top = Bytes.boxes(Bytes.view(data))
     val major = find(top, "ftyp") match {
-      case Some((f, t)) if t - f >= 4 => fourcc(data, f)
+      case Some(f) if f.length >= 4 => f.fourcc(0)
       case _ => ""
     }
-    val (moovF, moovT) = find(top, "moov").getOrElse(return None)
-    val moov = boxes(data, moovF, moovT)
-    val (mvhdF, mvhdT) = find(moov, "mvhd").getOrElse(return None)
-    if (mvhdT - mvhdF < 20) return None
-    val mvVer = data(mvhdF) & 0xff
-    if (mvhdT - mvhdF < fullHeadBytes(mvVer)) return None
-    val (mvTimescale, mvDuration) =
-      if (mvVer == 1) (u32(data, mvhdF + 20), u64(data, mvhdF + 24))
-      else (u32(data, mvhdF + 12), u32(data, mvhdF + 16))
-    if (mvTimescale <= 0) return None
-    val movieMs = toMs(mvDuration, mvTimescale).getOrElse(return None)
-    val tracks = moov.filter(_._1 == "trak").flatMap { case (_, tf, tt) =>
-      trackOf(data, tf, tt)
-    }
+    val moov = Bytes.boxes(find(top, "moov").getOrElse(return None))
+    val (_, movieMs) = timing(find(moov, "mvhd").getOrElse(return None)).getOrElse(return None)
+    val tracks = moov.filter(_.typ == "trak").flatMap(t => trackOf(t.body))
     Some(Movie(major, movieMs, tracks))
   }
 
-  /** Bytes of an `mvhd`/`mdhd` payload up to the end of its duration:
-    * version 0 ends a 32-bit duration at byte 20, version 1 a 64-bit one at
-    * byte 32. */
-  private def fullHeadBytes(version: Int): Int = if (version == 1) 32 else 20
+  /** (timescale, duration in ms) of an `mvhd`/`mdhd` payload: version 0
+    * ends a 32-bit duration at byte 20, version 1 a 64-bit one at byte 32.
+    * None for a short payload or a timescale of 0. */
+  private def timing(h: Bytes.View): Option[(Long, Long)] = {
+    val v1 = h.length >= 20 && h.u8(0) == 1
+    if (h.length < (if (v1) 32 else 20)) return None
+    val (timescale, duration) =
+      if (v1) (h.u32(20), h.u64(24)) else (h.u32(12), h.u32(16))
+    if (timescale <= 0) None
+    else toMs(duration, timescale).map(ms => (timescale, ms))
+  }
 
   /** A duration of `ticks` at `timescale` ticks per second, in ms; None for
     * a 64-bit duration (unsigned on disk, so a negative Long here) whose
@@ -104,44 +70,34 @@ object Mp4 {
   private def toMs(ticks: Long, timescale: Long): Option[Long] =
     if (ticks < 0 || ticks > Long.MaxValue / 1000) None else Some(ticks * 1000 / timescale)
 
-  private def trackOf(data: Array[Byte], from: Int, to: Int): Option[Track] = {
-    val trak = boxes(data, from, to)
-    val (mdiaF, mdiaT) = find(trak, "mdia").getOrElse(return None)
-    val mdia = boxes(data, mdiaF, mdiaT)
-    val (mdhdF, mdhdT) = find(mdia, "mdhd").getOrElse(return None)
-    if (mdhdT - mdhdF < 20) return None
-    val ver = data(mdhdF) & 0xff
-    if (mdhdT - mdhdF < fullHeadBytes(ver)) return None
-    val (timescale, duration) =
-      if (ver == 1) (u32(data, mdhdF + 20), u64(data, mdhdF + 24))
-      else (u32(data, mdhdF + 12), u32(data, mdhdF + 16))
-    if (timescale <= 0) return None
-    val durationMs = toMs(duration, timescale).getOrElse(return None)
+  private def trackOf(trak: Bytes.View): Option[Track] = {
+    val mdia = Bytes.boxes(find(Bytes.boxes(trak), "mdia").getOrElse(return None))
+    val (timescale, durationMs) =
+      timing(find(mdia, "mdhd").getOrElse(return None)).getOrElse(return None)
     val handler = find(mdia, "hdlr") match {
-      case Some((f, t)) if t - f >= 12 => fourcc(data, f + 8)
+      case Some(h) if h.length >= 12 => h.fourcc(8)
       case _ => ""
     }
-    val (minfF, minfT) = find(mdia, "minf").getOrElse(return None)
-    val (stblF, stblT) = find(boxes(data, minfF, minfT), "stbl").getOrElse(return None)
-    val stbl = boxes(data, stblF, stblT)
+    val minf = find(mdia, "minf").getOrElse(return None)
+    val stbl = Bytes.boxes(find(Bytes.boxes(minf), "stbl").getOrElse(return None))
     // stsd: full box header (4), entry_count (4), then sample entries
     var codec = ""
     var width = 0; var height = 0; var channels = 0; var sampleRate = 0
-    find(stbl, "stsd").foreach { case (f, t) =>
-      if (t - f >= 16 && u32(data, f + 4) >= 1) {
-        val e = f + 8 // first SampleEntry: size(4) format(4) then fields
-        if (e + 8 <= t) {
-          codec = fourcc(data, e + 4)
-          if (handler == "vide" && e + 36 <= t) {
+    find(stbl, "stsd").foreach { d =>
+      if (d.length >= 16 && d.u32(4) >= 1) {
+        val e = 8 // first SampleEntry: size(4) format(4) then fields
+        if (e + 8 <= d.length) {
+          codec = d.fourcc(e + 4)
+          if (handler == "vide" && e + 36 <= d.length) {
             // VisualSampleEntry: 8 SampleEntry + 16 pre_defined/reserved,
             // then width(2) height(2)
-            width = u16(data, e + 32)
-            height = u16(data, e + 34)
-          } else if (handler == "soun" && e + 36 <= t) {
+            width = d.u16(e + 32)
+            height = d.u16(e + 34)
+          } else if (handler == "soun" && e + 36 <= d.length) {
             // AudioSampleEntry: 8 SampleEntry + 8 reserved, channelcount(2),
             // samplesize(2), pre_defined(2), reserved(2), samplerate(16.16)
-            channels = u16(data, e + 24)
-            sampleRate = (u32(data, e + 32) >> 16).toInt
+            channels = d.u16(e + 24)
+            sampleRate = (d.u32(e + 32) >> 16).toInt
           }
         }
       }
@@ -149,14 +105,14 @@ object Mp4 {
     // stts: (sample_count, sample_delta) runs → frame count + per-sample ms
     var nSamples = 0
     val deltas = new ArrayBuffer[Int]()
-    find(stbl, "stts").foreach { case (f, t) =>
-      if (t - f >= 8) {
-        val entries = u32(data, f + 4)
+    find(stbl, "stts").foreach { d =>
+      if (d.length >= 8) {
+        val entries = d.u32(4)
         var i = 0
-        var p = f + 8
-        while (i < entries && p + 8 <= t) {
-          val count = u32(data, p)
-          val delta = u32(data, p + 4)
+        var p = 8
+        while (i < entries && p + 8 <= d.length) {
+          val count = d.u32(p)
+          val delta = d.u32(p + 4)
           if (count < 0 || count > 1000000 || nSamples + count > 1000000)
             return None // hostile counts: refuse, don't allocate
           val ms = math.max(1, (delta * 1000 / timescale).toInt)
@@ -170,9 +126,9 @@ object Mp4 {
     }
     // stsz sample_count is the frame count only when stts gave none; the
     // two are not cross-checked
-    find(stbl, "stsz").foreach { case (f, t) =>
-      if (t - f >= 12) {
-        val n = u32(data, f + 8)
+    find(stbl, "stsz").foreach { d =>
+      if (d.length >= 12) {
+        val n = d.u32(8)
         if (nSamples == 0 && n <= 1000000) nSamples = n.toInt
       }
     }
@@ -181,13 +137,6 @@ object Mp4 {
   }
 
   // ---- writer (test corpus; minimal valid one-video-track file) --------------
-
-  private def be16(v: Int) = Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-  private def be32(v: Long) = Array(((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-    ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-
-  private def box(typ: String, body: Array[Byte]): Array[Byte] =
-    be32(8L + body.length) ++ typ.getBytes("US-ASCII") ++ body
 
   /** A minimal valid MP4: ftyp + moov (mvhd, one `vide` trak with a full
     * stbl whose stsd carries `codec` dims) + an mdat of `nSamples` opaque
@@ -198,51 +147,39 @@ object Mp4 {
     require(width > 0 && height > 0 && nSamples > 0 && frameMs > 0)
     val timescale = 1000L
     val duration = nSamples.toLong * frameMs
-    val mvhd = box("mvhd", Array[Byte](0, 0, 0, 0) ++ be32(0) ++ be32(0) ++
-      be32(timescale) ++ be32(duration) ++ be32(0x00010000L) ++ be16(0x0100) ++
-      be16(0) ++ be32(0) ++ be32(0) ++
-      // identity matrix
-      be32(0x00010000L) ++ be32(0) ++ be32(0) ++ be32(0) ++ be32(0x00010000L) ++
-      be32(0) ++ be32(0) ++ be32(0) ++ be32(0x40000000L) ++
-      Array.fill(24)(0.toByte) ++ be32(2)) // pre_defined, next_track_ID
-    val tkhd = box("tkhd", Array[Byte](0, 0, 0, 7) ++ be32(0) ++ be32(0) ++
-      be32(1) ++ be32(0) ++ be32(duration) ++ be32(0) ++ be32(0) ++
-      be16(0) ++ be16(0) ++ be16(0) ++ be16(0) ++
-      be32(0x00010000L) ++ be32(0) ++ be32(0) ++ be32(0) ++ be32(0x00010000L) ++
-      be32(0) ++ be32(0) ++ be32(0) ++ be32(0x40000000L) ++
-      be32(width.toLong << 16) ++ be32(height.toLong << 16))
-    val mdhd = box("mdhd", Array[Byte](0, 0, 0, 0) ++ be32(0) ++ be32(0) ++
-      be32(timescale) ++ be32(duration) ++ be16(0x55c4) ++ be16(0)) // und lang
-    val hdlr = box("hdlr", Array[Byte](0, 0, 0, 0) ++ be32(0) ++
+    val identity = be(4)(0x00010000L, 0, 0, 0, 0x00010000L, 0, 0, 0, 0x40000000L)
+    val mvhd = box("mvhd", Array[Byte](0, 0, 0, 0) ++
+      be(4)(0, 0, timescale, duration, 0x00010000L) ++ be(2)(0x0100, 0) ++ be(4)(0, 0) ++
+      identity ++ Array.fill(24)(0.toByte) ++ be(4)(2)) // pre_defined, next_track_ID
+    val tkhd = box("tkhd", Array[Byte](0, 0, 0, 7) ++ be(4)(0, 0, 1, 0, duration, 0, 0) ++
+      be(2)(0, 0, 0, 0) ++ identity ++ be(4)(width.toLong << 16, height.toLong << 16))
+    val mdhd = box("mdhd", Array[Byte](0, 0, 0, 0) ++ be(4)(0, 0, timescale, duration) ++
+      be(2)(0x55c4, 0)) // und lang
+    val hdlr = box("hdlr", Array[Byte](0, 0, 0, 0) ++ be(4)(0) ++
       "vide".getBytes("US-ASCII") ++ Array.fill(12)(0.toByte) ++
       "graft\u0000".getBytes("ISO-8859-1"))
     // VisualSampleEntry with an empty decoder-config suffix: the samples are
     // opaque by design, so no avcC bytes pretend to be a real config
     val entryBody = codec.getBytes("US-ASCII") ++
-      Array.fill(6)(0.toByte) ++ be16(1) ++ // SampleEntry
+      Array.fill(6)(0.toByte) ++ be(2)(1) ++ // SampleEntry
       Array.fill(16)(0.toByte) ++ // pre_defined / reserved
-      be16(width) ++ be16(height) ++
-      be32(0x00480000L) ++ be32(0x00480000L) ++ be32(0) ++ be16(1) ++
-      Array.fill(32)(0.toByte) ++ be16(0x0018) ++ be16(0xffff)
-    val entry = be32(4L + entryBody.length) ++ entryBody
-    val stsd = box("stsd", Array[Byte](0, 0, 0, 0) ++ be32(1) ++ entry)
-    val stts = box("stts", Array[Byte](0, 0, 0, 0) ++ be32(1) ++
-      be32(nSamples.toLong) ++ be32(frameMs.toLong))
-    val stsc = box("stsc", Array[Byte](0, 0, 0, 0) ++ be32(1) ++
-      be32(1) ++ be32(nSamples.toLong) ++ be32(1))
-    val stsz = box("stsz", Array[Byte](0, 0, 0, 0) ++ be32(sampleLen.toLong) ++
-      be32(nSamples.toLong))
-    val stco = box("stco", Array[Byte](0, 0, 0, 0) ++ be32(1) ++ be32(0)) // patched below
+      be(2)(width, height) ++ be(4)(0x00480000L, 0x00480000L, 0) ++ be(2)(1) ++
+      Array.fill(32)(0.toByte) ++ be(2)(0x0018, 0xffff)
+    val entry = be(4)(4L + entryBody.length) ++ entryBody
+    val stsd = box("stsd", Array[Byte](0, 0, 0, 0) ++ be(4)(1) ++ entry)
+    val stts = box("stts", Array[Byte](0, 0, 0, 0) ++ be(4)(1, nSamples, frameMs))
+    val stsc = box("stsc", Array[Byte](0, 0, 0, 0) ++ be(4)(1, 1, nSamples, 1))
+    val stsz = box("stsz", Array[Byte](0, 0, 0, 0) ++ be(4)(sampleLen, nSamples))
+    val stco = box("stco", Array[Byte](0, 0, 0, 0) ++ be(4)(1, 0)) // patched below
     val stbl = box("stbl", stsd ++ stts ++ stsc ++ stsz ++ stco)
-    val dinf = box("dinf", box("dref", Array[Byte](0, 0, 0, 0) ++ be32(1) ++
+    val dinf = box("dinf", box("dref", Array[Byte](0, 0, 0, 0) ++ be(4)(1) ++
       box("url ", Array[Byte](0, 0, 0, 1))))
-    val vmhd = box("vmhd", Array[Byte](0, 0, 0, 1) ++ be16(0) ++
-      be16(0) ++ be16(0) ++ be16(0))
+    val vmhd = box("vmhd", Array[Byte](0, 0, 0, 1) ++ be(2)(0, 0, 0, 0))
     val minf = box("minf", vmhd ++ dinf ++ stbl)
     val mdia = box("mdia", mdhd ++ hdlr ++ minf)
     val trak = box("trak", tkhd ++ mdia)
     val moov = box("moov", mvhd ++ trak)
-    val ftyp = box("ftyp", "isom".getBytes("US-ASCII") ++ be32(512) ++
+    val ftyp = box("ftyp", "isom".getBytes("US-ASCII") ++ be(4)(512) ++
       "isomiso2mp41".getBytes("US-ASCII"))
     // opaque deterministic sample payloads
     val payload = Array.tabulate(nSamples * sampleLen)(i => (i * 31 + 7).toByte)
@@ -250,19 +187,8 @@ object Mp4 {
     val head = ftyp ++ moov
     // patch the single chunk offset to mdat's payload start
     val out = head ++ mdat
-    val stcoAt = indexOfBox(out, "stco")
-    val off = head.length + 8
-    System.arraycopy(be32(off.toLong), 0, out, stcoAt + 16, 4)
+    val stcoAt = out.indexOfSlice("stco".getBytes("US-ASCII")) - 4
+    System.arraycopy(be(4)(head.length + 8), 0, out, stcoAt + 16, 4)
     out
-  }
-
-  /** Byte offset of the first box with `typ` (header start), linear scan. */
-  private def indexOfBox(b: Array[Byte], typ: String): Int = {
-    var i = 0
-    while (i + 8 <= b.length) {
-      if (fourcc(b, i + 4) == typ) return i
-      i += 1
-    }
-    -1
   }
 }

@@ -180,8 +180,7 @@ object Pdf {
       w("\nendstream\nendobj\n")
       val xrefOff = out.size()
       def row(t: Int, f2: Int, f3: Int): Array[Byte] =
-        Array(t.toByte, ((f2 >> 16) & 0xff).toByte, ((f2 >> 8) & 0xff).toByte,
-          (f2 & 0xff).toByte, f3.toByte)
+        Array(t.toByte) ++ Bytes.be(3)(f2) ++ Array(f3.toByte)
       val size = xrefNum + 1
       val rows = (0 until size).flatMap {
         case 0 => row(0, 0, 0)
@@ -451,15 +450,7 @@ object Pdf {
     val payload =
       if (id % 2 == 1) {
         // minimal JP2 container: signature box, ftyp box, jp2c codestream box
-        def box(typ: String, body: Array[Byte]): Array[Byte] = {
-          val out = new java.io.ByteArrayOutputStream()
-          val len = 8 + body.length
-          out.write(Array(((len >>> 24) & 0xff).toByte, ((len >>> 16) & 0xff).toByte,
-            ((len >>> 8) & 0xff).toByte, (len & 0xff).toByte))
-          out.write(typ.getBytes("US-ASCII"))
-          out.write(body)
-          out.toByteArray
-        }
+        import Bytes.box
         box("jP  ", Array(0x0d, 0x0a, 0x87.toByte, 0x0a).map(_.toByte)) ++
           box("ftyp", "jp2 ".getBytes("US-ASCII") ++ Array.fill(4)(0.toByte) ++
             "jp2 ".getBytes("US-ASCII")) ++

@@ -64,10 +64,6 @@ object PdfCrypt {
     d.digest()
   }
 
-  private def le32(v: Int): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-
   def rc4(key: Array[Byte], data: Array[Byte]): Array[Byte] = {
     val c = Cipher.getInstance("ARCFOUR")
     c.init(Cipher.DECRYPT_MODE, new SecretKeySpec(key, "ARCFOUR"))
@@ -123,7 +119,7 @@ object PdfCrypt {
                      id0: Array[Byte], r: Int, lengthBits: Int,
                      encryptMetadata: Boolean = true): Array[Byte] = {
     val keyLen = lengthBits / 8
-    var h = md5(Seq(padPassword(password), o, le32(p), id0) ++
+    var h = md5(Seq(padPassword(password), o, Bytes.le(4)(p), id0) ++
       (if (r >= 4 && !encryptMetadata) Seq(Array.fill(4)(0xff.toByte)) else Nil): _*)
     if (r >= 3)
       (0 until 50).foreach(_ => h = md5(java.util.Arrays.copyOf(h, keyLen)))
@@ -132,8 +128,7 @@ object PdfCrypt {
 
   /** Algorithm 1: per-object key for R ≤ 4 (V5 uses the file key directly). */
   def objectKey(fileKey: Array[Byte], num: Int, gen: Int, aes: Boolean): Array[Byte] = {
-    val salt = Array((num & 0xff).toByte, ((num >> 8) & 0xff).toByte,
-      ((num >> 16) & 0xff).toByte, (gen & 0xff).toByte, ((gen >> 8) & 0xff).toByte)
+    val salt = Bytes.le(3)(num) ++ Bytes.le(2)(gen)
     val h =
       if (aes) md5(fileKey, salt, Array(0x73, 0x41, 0x6c, 0x54).map(_.toByte))
       else md5(fileKey, salt)

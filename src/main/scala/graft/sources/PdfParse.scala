@@ -247,17 +247,13 @@ object PdfParse {
             val index = dictValue(o.dict, "/Index").map(intsIn)
               .filter(_.nonEmpty).getOrElse(Seq(0L, size.toLong)).map(_.toInt)
             val rowLen = w.sum
+            val rows = Bytes.view(data)
             var pos = 0
             index.grouped(2).foreach {
               case Seq(start, count) =>
                 var e = 0
                 while (e < count && pos + rowLen <= data.length) {
-                  def field(fi: Int): Long = {
-                    val off = pos + w.take(fi).sum
-                    var v = 0L
-                    (0 until w(fi)).foreach(b => v = (v << 8) | (data(off + b) & 0xffL))
-                    v
-                  }
+                  def field(fi: Int): Long = rows.uint(pos + w.take(fi).sum, w(fi))
                   val typ = if (w(0) == 0) 1L else field(0)
                   val num = start + e
                   if (!offsets.contains(num) && !inStreams.contains(num)) typ match {
@@ -358,9 +354,7 @@ object PdfParse {
       var v = 0L
       var j = 0
       while (j < 5) { v = v * 85 + (if (j < n) grp(j) else 84); j += 1 }
-      val bs = Array(((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-                     ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-      out.write(bs, 0, n - 1)
+      out.write(Bytes.be(4)(v), 0, n - 1)
     }
     var done = false
     while (i < data.length && !done) {
@@ -861,9 +855,10 @@ object PdfParse {
     font match {
       case Some(f) if f.twoByte =>
         val sb = new StringBuilder
+        val codes = Bytes.view(bytes)
         var i = 0
         while (i + 1 < bytes.length) {
-          val code = ((bytes(i) & 0xff) << 8) | (bytes(i + 1) & 0xff)
+          val code = codes.u16(i)
           sb ++= f.toUni.flatMap(_.get(code)).getOrElse(
             if (Character.isValidCodePoint(code)) new String(Character.toChars(code))
             else "")

@@ -76,12 +76,9 @@ object Webm {
     Some((v, i + len, unknown))
   }
 
-  private def uint(b: Array[Byte], from: Int, to: Int): Long = {
-    var v = 0L
-    var i = from
-    while (i < to && i - from < 8) { v = (v << 8) | (b(i) & 0xffL); i += 1 }
-    v
-  }
+  /** An unsigned-integer element: its first 8 bytes at most, big-endian. */
+  private def uint(b: Array[Byte], from: Int, to: Int): Long =
+    Bytes.view(b).uint(from, math.min(to - from, 8))
 
   private def float(b: Array[Byte], from: Int, to: Int): Double = (to - from) match {
     case 4 => java.lang.Float.intBitsToFloat(uint(b, from, to).toInt).toDouble
@@ -169,7 +166,7 @@ object Webm {
           // block: track vint, s16 relative timestamp, flags, [lacing], data
           readSize(data, f).foreach { case (trackNo, p, _) =>
             if (p + 3 <= t) {
-              val rel = ((data(p) & 0xff) << 8 | (data(p + 1) & 0xff)).toShort.toLong
+              val rel = Bytes.view(data).u16(p).toShort.toLong
               val flags = data(p + 2) & 0xff
               val lacing = (flags >> 1) & 3
               val nFrames =
@@ -199,18 +196,14 @@ object Webm {
 
   // ---- writer (test corpus; minimal valid one-video-track WebM) --------------
 
-  private def idBytes(id: Long): Array[Byte] = {
-    val n = if (id <= 0xff) 1 else if (id <= 0xffff) 2 else if (id <= 0xffffff) 3 else 4
-    Array.tabulate(n)(k => ((id >> (8 * (n - 1 - k))) & 0xff).toByte)
-  }
+  private def idBytes(id: Long): Array[Byte] =
+    Bytes.be(if (id <= 0xff) 1 else if (id <= 0xffff) 2 else if (id <= 0xffffff) 3 else 4)(id)
 
   /** Size vint in the fewest bytes. */
   private def sizeBytes(v: Long): Array[Byte] = {
     var len = 1
     while (len < 8 && v >= (1L << (7 * len)) - 1) len += 1
-    val out = new Array[Byte](len)
-    var k = 0
-    while (k < len) { out(k) = ((v >> (8 * (len - 1 - k))) & 0xff).toByte; k += 1 }
+    val out = Bytes.be(len)(v)
     out(0) = (out(0) | (0x80 >> (len - 1))).toByte
     out
   }
@@ -221,13 +214,11 @@ object Webm {
   private def uintBody(v: Long): Array[Byte] = {
     var n = 1
     while (n < 8 && (v >> (8 * n)) != 0) n += 1
-    Array.tabulate(n)(k => ((v >> (8 * (n - 1 - k))) & 0xff).toByte)
+    Bytes.be(n)(v)
   }
 
-  private def floatBody(v: Double): Array[Byte] = {
-    val bits = java.lang.Float.floatToIntBits(v.toFloat).toLong & 0xffffffffL
-    Array.tabulate(4)(k => ((bits >> (8 * (3 - k))) & 0xff).toByte)
-  }
+  private def floatBody(v: Double): Array[Byte] =
+    Bytes.be(4)(java.lang.Float.floatToIntBits(v.toFloat))
 
   /** A minimal valid WebM: EBML head + Segment(Info, Tracks, one Cluster of
     * `nFrames` opaque SimpleBlocks every `frameMs`). TimestampScale is the
@@ -258,7 +249,7 @@ object Webm {
       // opaque deterministic payload; no lacing, keyframe flag on frame 0
       val payload = Array.tabulate(12)(i => (i * 17 + k * 3 + 5).toByte)
       val body = sizeBytes(1L) ++ // track number vint
-        Array((((k * frameMs) >> 8) & 0xff).toByte, ((k * frameMs) & 0xff).toByte) ++
+        Bytes.be(2)(k * frameMs) ++
         Array((if (k == 0) 0x80 else 0x00).toByte) ++ payload
       el(SimpleBlock, body)
     }.toArray

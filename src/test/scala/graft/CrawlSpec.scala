@@ -795,6 +795,67 @@ class CrawlSpec extends AnyFunSuite {
     assert(cachedEntries == cachedBefore, "cached tables left by the run")
   }
 
+  test("a failed epoch joins its running jobs and frees its caches; a resume equals an uninterrupted run") {
+    val sc = spark.sparkContext
+    val cacheManager =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    def cachedEntries: Int =
+      cacheManager.getClass.getMethod("numCachedEntries").invoke(cacheManager).asInstanceOf[Int]
+    // the status tracker reads what the listener bus has delivered: drain it
+    // first (`listenerBus` is package-private in Scala, public in bytecode)
+    def activeJobs: Seq[Int] = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      sc.statusTracker.getActiveJobIds.toSeq
+    }
+    val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40)
+    val full = freshDir("failed-full")
+    val fullSummary = Crawl.run(spark, seedsDF, pagesDF, robotsDF, full, cfg)
+    def seenHashes(d: String): Set[Long] =
+      Crawl.seenSet(spark, d).as[Long].collect().toSet
+    def vs(d: String) = Crawl.visits(spark, d).select("epoch", "visit_rank", "url")
+      .orderBy("epoch", "visit_rank").collect().map(r => (r.getInt(0), r.getString(2))).toSeq
+    val visited = Crawl.visits(spark, full).select("epoch", "depth", "url")
+      .as[(Int, Int, String)].collect().toSeq
+    // phase A: one page's html fails to compute once epoch 1 has begun (its
+    // manifest is committed); a page store that is not a local relation keeps
+    // the column from being folded on the driver at planning time
+    val epoch1Url = visited.filter(_._1 == 1).map(_._3).min
+    def failingPages(runDir: String) = {
+      val started = EpochManifest.path(runDir, 1).toString
+      val html = udf { (u: String, h: String) =>
+        if (u == epoch1Url && Files.exists(Paths.get(started)))
+          throw new IllegalStateException(s"page store unavailable for $u")
+        h
+      }
+      spark.createDataFrame(pagesDF.rdd, pagesDF.schema)
+        .withColumn("html", html(col("url"), col("html")))
+    }
+    // phase B: the link scorer fails for a page two links deep, so the failing
+    // epoch is not the first. It scores 0.5 otherwise, as the default does
+    val deepUrl = visited.filter(_._2 >= 2).map(_._3).min
+    val failingScorer: (String, String) => Double = (u, _) =>
+      if (u == deepUrl) throw new IllegalStateException(s"scorer failed on $u") else 0.5
+    for ((phase, run) <- Seq[(String, String => Unit)](
+        "phase A" -> (d => Crawl.run(spark, seedsDF, failingPages(d), robotsDF, d, cfg)),
+        "phase B" -> (d => Crawl.run(spark, seedsDF, pagesDF, robotsDF, d,
+          cfg.copy(linkScorer = Some(failingScorer)))))) {
+      val rddsBefore = sc.getPersistentRDDs.keySet
+      val cachedBefore = cachedEntries
+      val runDir = freshDir("failed-epoch")
+      intercept[org.apache.spark.SparkException](run(runDir))
+      assert(activeJobs.isEmpty, s"$phase: jobs still running after the throw: $activeJobs")
+      val leftover = sc.getPersistentRDDs.filter { case (id, _) => !rddsBefore(id) }
+      assert(leftover.isEmpty, s"$phase: persisted RDDs left: ${leftover.values.mkString(", ")}")
+      assert(cachedEntries == cachedBefore, s"$phase: cached tables left by the failed run")
+      assert(Crawl.lastCommittedEpoch(runDir) >= 1, phase)
+      val resumed = Crawl.run(spark, seedsDF, pagesDF, robotsDF, runDir, cfg)
+      assert(resumed == fullSummary, phase)
+      assert(seenHashes(runDir) == seenHashes(full), phase)
+      assert(vs(runDir) == vs(full), phase)
+    }
+  }
+
   test("domain state: idle hosts carry delay/fail_count forward (no resurrection)") {
     import graft.politeness.DomainState
     val states = Seq(
