@@ -30,6 +30,11 @@ import scala.concurrent.duration.Duration
   *       (broadcast while the maybe-seen estimate is under the threshold:
   *       seen scanned, not exchanged) → left_anti(hits)  [dedup]
   *     → first-wins per url_hash → frontier(t+1)     [snapshot committed]
+  *     → seen-delta filter (t+1)                     [built after the commit]
+  *
+  * The driver launches each write as soon as its plan is built: the visits
+  * write right after the robots gate, so admission runs while the scrape is
+  * planned, and epoch t+1's filter while epoch t+1 plans its admission.
   *
   * Snapshot protocol (Iceberg-style semantics on plain parquet — SURVEY.md
   * §7.3): every epoch writes frontier/seen/docs/visits dirs, then an
@@ -38,10 +43,13 @@ import scala.concurrent.duration.Duration
   * the only commit record: snapshot tables are written without Hadoop's
   * `_SUCCESS` marker, each as a data-sized number of files (one per
   * [[Crawl.RowsPerFile]] queued rows, so a small epoch writes one file per
-  * table), and the lineage is an `Observation` on the docs write. A killed
-  * job resumes from `max(committed epoch)` with an identical URL-seen set:
-  * nothing below a manifest is ever visible to a reader (commit-then-advance,
-  * §7.4.6).
+  * table), and the lineage is an `Observation` on the docs write. The seen
+  * filter file (`bloom_<epoch>.bin` / `cuckoo_<epoch>.bin`) is no part of
+  * the commit: it is a derived cache of the committed snapshots, may land
+  * after the manifest, and is rebuilt on resume when it did not
+  * ([[SeenStore.resume]]). A killed job resumes from `max(committed epoch)`
+  * with an identical URL-seen set: nothing below a manifest is ever visible
+  * to a reader (commit-then-advance, §7.4.6).
   *
   * Ordering spec (deterministic; reference stream-mode completion order is
   * nondeterministic so equality is defined on batch semantics, SURVEY.md
@@ -190,6 +198,47 @@ object Crawl {
       } yield PartitionLineage(pid, ok, slots(i), slots(i + 1))
   }
 
+  // ---- the epoch plan's invariants, built once, not once per epoch ------------
+
+  private val canFetchU = udf((rules: String, u: String) => Robots.canFetch(rules, u))
+  private val validU = udf((u: String) => u != null && Urls.isValidCrawlUrl(u) && !Urls.isNonsense(u))
+  private val hostU = udf((u: String) => Urls.host(u))
+
+  /** The scrape map's rows: (url_hash, url, host, depth, score, path, html,
+    * status_code) in, and the same keys with (fetch_ok, status_code, spans,
+    * links, title, n_words) out. Their encoders are derived once: deriving
+    * them is most of the cost of planning the map. */
+  private type ScrapeIn = (Long, String, String, Int, Double, String, String, Option[Int])
+  private type ScrapeOut =
+    (Long, String, String, Int, Double, String, Boolean, Int, Seq[Span], Seq[LinkOut], String, Int)
+  private lazy val scrapeInEnc: Encoder[ScrapeIn] = Encoders.product[ScrapeIn]
+  private lazy val scrapeOutEnc: Encoder[ScrapeOut] = Encoders.product[ScrapeOut]
+
+  /** The default scrape config (spans of at least one word), as the
+    * sequential oracle's. */
+  private val scrapeCfg = Scrape.Config()
+
+  /** One page through [[scrapeCfg]]; a missing or non-200 page scrapes to
+    * nothing. */
+  private def scrapeRow(in: ScrapeIn): ScrapeOut = {
+    val (h, u, host, d, sc, p, html, status) = in
+    val code = status.getOrElse(404)
+    val ok = html != null && code == 200
+    val doc = if (ok) Scrape.scrape(u, html, scrapeCfg)
+              else ScrapedDoc(u, u, Nil, Nil, "", 0)
+    (h, u, host, d, sc, p, ok, code, doc.spans, doc.links, doc.title, doc.nWords)
+  }
+
+  /** The concurrent jobs of a bootstrap or an epoch. `awaitAll` waits for
+    * every job launched, failed or not, so that a failure propagates only
+    * once no job runs on into the dirs a resumed run rewrites. */
+  private final class Jobs(implicit ec: ExecutionContext) {
+    private val started = ArrayBuffer.empty[Future[_]]
+    def launch[T](body: => T): Future[T] = track(Future(body))
+    def track[T](f: Future[T]): Future[T] = { started += f; f }
+    def awaitAll(): Unit = started.foreach(Await.ready(_, Duration.Inf))
+  }
+
   /** Snapshot table `what` of `epoch` under `schema`, if its dir exists. */
   private def readIfPresent(spark: SparkSession, runDir: String, epoch: Int, what: String,
                             schema: org.apache.spark.sql.types.StructType): Option[DataFrame] =
@@ -236,11 +285,10 @@ object Crawl {
   def seedFrontier(spark: SparkSession, seeds: DataFrame): (Dataset[FrontierEntry], Long) = {
     import spark.implicits._
     val canon = udf((u: String) => Urls.canonicalizeDeep(u, ""))
-    val valid = udf((u: String) => u != null && Urls.isValidCrawlUrl(u) && !Urls.isNonsense(u))
     val srcRank = when(col("source") === "sitemap", 0).otherwise(1)
     val base = seeds
       .withColumn("curl", canon(col("url")))
-      .where(valid(col("curl")))
+      .where(validU(col("curl")))
       .withColumn("url_hash", xxhash64(col("curl")))
       .withColumn("rk", row_number().over(
         Window.partitionBy("url_hash").orderBy(srcRank, col("url"))))
@@ -272,28 +320,38 @@ object Crawl {
   def run(spark: SparkSession, seeds: DataFrame, pages: DataFrame,
           robots: DataFrame, runDir: String, cfg: CrawlConfig = CrawlConfig())
       : CrawlSummary = {
-    import spark.implicits._
     Files.createDirectories(Paths.get(runDir))
     val store = SeenStore.forConfig(cfg.seenFilter)
     val maxParts = spark.sessionState.conf.numShufflePartitions
+    implicit val ec: ExecutionContext = Crawl.epochEc
 
     val start = lastCommittedEpoch(runDir)
     if (start < 0) {
       // one seedFrontier pass, cached: the frontier write, seen/epoch=0 and
-      // its filter read the same cache, sized by the seed count it returns
+      // its filter read the same cache as concurrent jobs, each sized by the
+      // seed count it returns. Whether they succeed or not, all three are
+      // joined and the cache is freed before the manifest or the error.
       val (seeded, seedCount) = seedFrontier(spark, seeds)
       val f0 = seeded.cache()
-      val parts = snapshotParts(seedCount, maxParts)
-      writeSnapshot(f0, parts, dir(runDir, 0, "frontier"))
-      // seen is a DELTA log: seen/epoch=k holds only the hashes first seen at
-      // epoch k (epoch 0 = the seeds — delta AND full set at once). Readers
-      // union deltas from the last compaction point; nothing ever rewrites
-      // history (O(delta) commit I/O per epoch, not O(seen)). No distinct:
-      // url_hash is unique after seedFrontier's first-wins dedup.
-      val s0 = f0.select("url_hash")
-      writeSnapshot(s0, parts, dir(runDir, 0, "seen"))
-      store.save(store.build(spark, s0, "url_hash", seedCount), store.path(runDir, 0))
-      f0.unpersist()
+      val jobs = new Jobs
+      try {
+        val parts = snapshotParts(seedCount, maxParts)
+        // seen is a DELTA log: seen/epoch=k holds only the hashes first seen
+        // at epoch k (epoch 0 = the seeds — delta AND full set at once).
+        // Readers union deltas from the last compaction point; nothing ever
+        // rewrites history (O(delta) commit I/O per epoch, not O(seen)). No
+        // distinct: url_hash is unique after seedFrontier's first-wins dedup.
+        val s0 = f0.select("url_hash")
+        Seq(
+          jobs.launch(writeSnapshot(f0, parts, dir(runDir, 0, "frontier"))),
+          jobs.launch(writeSnapshot(s0, parts, dir(runDir, 0, "seen"))),
+          jobs.launch(store.save(store.build(spark, s0, "url_hash", seedCount),
+            store.path(runDir, 0)))
+        ).foreach(Await.result(_, Duration.Inf))
+      } finally {
+        jobs.awaitAll()
+        f0.unpersist()
+      }
       EpochManifest.commit(runDir, EpochManifest(0, cfg.strategy, seenBase = 0,
         seenTotal = seedCount, frontierQueued = Some(seedCount), kind = Some("bootstrap"),
         frontier = Some(dir(runDir, 0, "frontier"))))
@@ -317,348 +375,367 @@ object Crawl {
     // seen delta, and whatever filter the family adds over the queued head
     // frontier (SeenStore.resume, SeenStore.heal)
     var filters: Vector[SeenDelta] = (seenBase to epoch).toVector.map { e =>
-      store.resume(spark, runDir, e, readIfPresent(spark, runDir, e, "seen", seenSchema))
+      store.resume(spark, runDir, e, readIfPresent(spark, runDir, e, "seen", seenSchema),
+        readIfPresent(spark, runDir, e - 1, "frontier", frontierSchema).map(_.select("url_hash")))
     } ++ store.heal(spark,
       readIfPresent(spark, runDir, epoch, "frontier", frontierSchema)
         .map(_.where(col("status") === CrawlStatus.Queued).select("url_hash")),
       queuedCount)
-    while (!done && epoch < cfg.maxEpochs) {
-      val t0 = System.currentTimeMillis()
-      val frontier = spark.read.schema(frontierSchema).parquet(dir(runDir, epoch, "frontier"))
-      val seen = readSeen(spark, runDir, seenBase, epoch)
-      val domainStatePath = dir(runDir, epoch, "domain_state")
-      val domainState: Option[DataFrame] =
-        if (cfg.dynamicPoliteness && Files.isDirectory(Paths.get(domainStatePath)))
-          Some(spark.read.parquet(domainStatePath))
-        else None
-      val queued = frontier.where(col("status") === CrawlStatus.Queued)
-      if (queuedCount < 0) queuedCount = queued.count()
+    // the vector after the last committed epoch's filter, which builds and
+    // saves after that epoch's commit: the next probe waits for it, and so
+    // does the run before it returns or rethrows
+    var pendingFilters: Option[Future[Vector[SeenDelta]]] = None
+    def awaitFilters(): Vector[SeenDelta] = {
+      pendingFilters.foreach(f => filters = Await.result(f, Duration.Inf))
+      pendingFilters = None
+      filters
+    }
 
-      if (queuedCount == 0 || total(_.fetched) >= cfg.maxPages) { done = true }
-      else {
-        // every snapshot table this epoch writes: one file per RowsPerFile
-        // queued rows
-        val parts = snapshotParts(queuedCount, maxParts)
-        // every future the epoch launches and every cache and probe it holds
-        // (one of each per epoch would otherwise accumulate for the crawl's
-        // lifetime). On success all futures are joined before the commit and
-        // everything held is freed after it. On a failure the epoch still waits
-        // for every future it launched and frees what it holds before the
-        // first error propagates: no sibling write runs on into the dirs a
-        // resumed run rewrites.
-        implicit val ec: ExecutionContext = Crawl.epochEc
-        val jobs = ArrayBuffer.empty[Future[_]]
-        val held = ArrayBuffer.empty[() => Unit]
-        def launch[T](body: => T): Future[T] = { val f = Future(body); jobs += f; f }
-        def hold[T](ds: Dataset[T]): Dataset[T] = { held += (() => ds.unpersist()); ds.cache() }
-        try {
-          // ---- admission: politeness budget + fairness aging + strategy order
-          val aged = queued.withColumn("wait", lit(epoch) - col("enqueue_epoch"))
-            .withColumn("priority",
-              when(col("wait") > FairnessEpochs, -col("wait").cast("double"))
-                .otherwise(col("retry_count").cast("double")))
-          val ord = strategyOrder(cfg.strategy)
-          val ranked = aged.withColumn("host_rank",
-            row_number().over(Window.partitionBy("host").orderBy(ord: _*)))
-          // effective budget: static cap, tightened per host by evolved
-          // politeness state (throttled hosts shrink, aborted hosts go to 0)
-          // cached: the window runs once, and both the admitted and the
-          // deferred rows are filters over it
-          val budgeted = hold(domainState match {
-            case Some(st) =>
-              val perHost = graft.politeness.DomainState
-                .hostBudget(st, cfg.epochSeconds)
-                .withColumnRenamed("budget", "state_budget")
-              ranked.join(broadcast(perHost), Seq("host"), "left")
-                .withColumn("eff_budget",
-                  least(lit(cfg.hostBudget), coalesce(col("state_budget"), lit(cfg.hostBudget))))
-                .drop("state_budget")
-            case None => ranked.withColumn("eff_budget", lit(cfg.hostBudget))
-          })
-          val rankCols = Seq("host_rank", "wait", "eff_budget")
-          val inBudget = budgeted.where(col("host_rank") <= col("eff_budget")).drop(rankCols: _*)
-          // global capacity cut ONLY when `maxPages` binds this epoch: with the
-          // default (uncapped) config every epoch must stay a partitioned plan —
-          // no global TakeOrdered over the admitted set. A remaining capacity
-          // ≥ Int.MaxValue (always so when `maxPages` is unset) cannot bind (no
-          // epoch admits that many rows through per-host budgets), so it is
-          // skipped, never silently clamped.
-          val capacity = cfg.maxPages - total(_.fetched)
-          val capped = capacity < Int.MaxValue
-          val admitted =
-            if (capped) hold(inBudget.orderBy(ord: _*).limit(capacity.toInt)) else inBudget
+    try {
+      while (!done && epoch < cfg.maxEpochs) {
+        val t0 = System.currentTimeMillis()
+        val frontier = spark.read.schema(frontierSchema).parquet(dir(runDir, epoch, "frontier"))
+        val seen = readSeen(spark, runDir, seenBase, epoch)
+        val domainStatePath = dir(runDir, epoch, "domain_state")
+        val domainState: Option[DataFrame] =
+          if (cfg.dynamicPoliteness && Files.isDirectory(Paths.get(domainStatePath)))
+            Some(spark.read.parquet(domainStatePath))
+          else None
+        val queued = frontier.where(col("status") === CrawlStatus.Queued)
+        if (queuedCount < 0) queuedCount = queued.count()
 
-          // deferred = everything queued but not admitted. Uncapped, that is the
-          // over-budget side of the window; a binding cap also cuts in-budget
-          // rows, which only the anti-join against the admitted set recovers
-          // (neither kind may be lost)
-          val deferred =
-            if (capped) budgeted.drop(rankCols: _*)
-              .join(admitted.select("url_hash"), Seq("url_hash"), "left_anti")
-            else budgeted.where(col("host_rank") > col("eff_budget")).drop(rankCols: _*)
+        if (queuedCount == 0 || total(_.fetched) >= cfg.maxPages) { done = true }
+        else {
+          // every snapshot table this epoch writes: one file per RowsPerFile
+          // queued rows
+          val parts = snapshotParts(queuedCount, maxParts)
+          // every future the epoch launches and every cache and probe it holds
+          // (one of each per epoch would otherwise accumulate for the crawl's
+          // lifetime). On success all futures but the seen filter's are joined
+          // before the commit; what the epoch holds is freed after it, and
+          // what the filter build reads is freed when that build ends. On a
+          // failure the epoch still waits for every future it launched and
+          // frees what it holds before the first error propagates: no sibling
+          // write runs on into the dirs a resumed run rewrites.
+          val jobs = new Jobs
+          val held = ArrayBuffer.empty[() => Unit]
+          def hold[T](ds: Dataset[T]): Dataset[T] = { held += (() => ds.unpersist()); ds.cache() }
+          // what the seen filter build reads, the seen probe's broadcast
+          // included (its tasks serialize the probe's plan): freed once, when
+          // the build ends, or with the rest if the epoch fails first
+          val filterHeld = ArrayBuffer.empty[() => Unit]
+          def holdForFilter[T](ds: Dataset[T]): Dataset[T] = {
+            filterHeld += (() => ds.unpersist()); ds.cache()
+          }
+          def freeFilterHeld(): Unit = { filterHeld.foreach(_()); filterHeld.clear() }
+          try {
+            // ---- admission: politeness budget + fairness aging + strategy order
+            val aged = queued.withColumn("wait", lit(epoch) - col("enqueue_epoch"))
+              .withColumn("priority",
+                when(col("wait") > FairnessEpochs, -col("wait").cast("double"))
+                  .otherwise(col("retry_count").cast("double")))
+            val ord = strategyOrder(cfg.strategy)
+            val ranked = aged.withColumn("host_rank",
+              row_number().over(Window.partitionBy("host").orderBy(ord: _*)))
+            // effective budget: static cap, tightened per host by evolved
+            // politeness state (throttled hosts shrink, aborted hosts go to 0)
+            // cached: the window runs once, and both the admitted and the
+            // deferred rows are filters over it (so are the admitted keys the
+            // seen filter build may read)
+            val budgeted = holdForFilter(domainState match {
+              case Some(st) =>
+                val perHost = graft.politeness.DomainState
+                  .hostBudget(st, cfg.epochSeconds)
+                  .withColumnRenamed("budget", "state_budget")
+                ranked.join(broadcast(perHost), Seq("host"), "left")
+                  .withColumn("eff_budget",
+                    least(lit(cfg.hostBudget), coalesce(col("state_budget"), lit(cfg.hostBudget))))
+                  .drop("state_budget")
+              case None => ranked.withColumn("eff_budget", lit(cfg.hostBudget))
+            })
+            val rankCols = Seq("host_rank", "wait", "eff_budget")
+            val inBudget = budgeted.where(col("host_rank") <= col("eff_budget")).drop(rankCols: _*)
+            // global capacity cut ONLY when `maxPages` binds this epoch: with the
+            // default (uncapped) config every epoch must stay a partitioned plan —
+            // no global TakeOrdered over the admitted set. A remaining capacity
+            // ≥ Int.MaxValue (always so when `maxPages` is unset) cannot bind (no
+            // epoch admits that many rows through per-host budgets), so it is
+            // skipped, never silently clamped.
+            val capacity = cfg.maxPages - total(_.fetched)
+            val capped = capacity < Int.MaxValue
+            val admitted =
+              if (capped) holdForFilter(inBudget.orderBy(ord: _*).limit(capacity.toInt))
+              else inBudget
 
-          // ---- robots gate: tiny dimension → broadcast join, fail-open; the
-          // crawler is robots.txt's `*` agent (canFetch's default)
-          val canFetchU = udf((rules: String, u: String) => Robots.canFetch(rules, u))
-          val gated = admitted.join(
-              broadcast(robots.select(col("host"), col("rules"))), Seq("host"), "left")
-            .withColumn("robots_ok", coalesce(canFetchU(col("rules"), col("url")), lit(true)))
-          val allowed = gated.where(col("robots_ok")).drop("rules", "robots_ok")
+            // deferred = everything queued but not admitted. Uncapped, that is the
+            // over-budget side of the window; a binding cap also cuts in-budget
+            // rows, which only the anti-join against the admitted set recovers
+            // (neither kind may be lost)
+            val deferred =
+              if (capped) budgeted.drop(rankCols: _*)
+                .join(admitted.select("url_hash"), Seq("url_hash"), "left_anti")
+              else budgeted.where(col("host_rank") > col("eff_budget")).drop(rankCols: _*)
 
-          // ---- fetch: salted repartition defuses hot-host skew BEFORE the
-          // (CPU-heavy) scrape map; the join key stays url_hash so the page
-          // store join itself is a plain shuffled hash join.
-          val salted = allowed.repartition(
-            maxParts, col("host"), pmod(col("url_hash"), lit(SaltBuckets)))
-          val fetched = salted.join(
-            pages.select(col("url_hash"), col("html"), col("status_code")),
-            Seq("url_hash"), "left")
+            // ---- robots gate: tiny dimension → broadcast join, fail-open; the
+            // crawler is robots.txt's `*` agent (canFetch's default)
+            val gated = admitted.join(
+                broadcast(robots.select(col("host"), col("rules"))), Seq("host"), "left")
+              .withColumn("robots_ok", coalesce(canFetchU(col("rules"), col("url")), lit(true)))
 
-          // the default scrape config (spans of at least one word), as the
-          // sequential oracle's
-          val scrapeCfg = Scrape.Config()
-          val scraped = hold(fetched
-            .select("url_hash", "url", "host", "depth", "score", "path", "html", "status_code")
-            .as[(Long, String, String, Int, Double, String, String, Option[Int])]
-            .map { case (h, u, host, d, sc, p, html, status) =>
-              val code = status.getOrElse(404)
-              val ok = html != null && code == 200
-              val doc = if (ok) Scrape.scrape(u, html, scrapeCfg)
-                        else ScrapedDoc(u, u, Nil, Nil, "", 0)
-              (h, u, host, d, sc, p, ok, code, doc.spans, doc.links, doc.title, doc.nWords)
+            // ---- the visits write launches as soon as the gate is planned: its
+            // job runs the robots broadcast, the admission window's exchange and
+            // the budgeted cache while this thread plans the scrape. Visits
+            // carry the full sort key (priority, score, depth, path) but NO
+            // materialized rank: visit order is fully determined by the key, so
+            // `Crawl.visits` derives ranks at read time — the epoch loop never
+            // runs a partitionless global-order window. The robots-blocked
+            // count is observed on this write.
+            val blockedObs = Observation()
+            val fVisits = jobs.launch {
+              writeSnapshot(gated.observe(blockedObs, count(when(!col("robots_ok"), true)).as("n"))
+                .where(col("robots_ok"))
+                .select(col("url"), col("depth"), col("score"), col("priority"),
+                  col("path"), lit(epoch).as("epoch")),
+                parts, dir(runDir, epoch, "visits"))
+              blockedObs.get("n").asInstanceOf[Long]
             }
-            .toDF("url_hash", "url", "host", "depth", "score", "path",
-              "fetch_ok", "status_code", "spans", "links", "title", "n_words")
-            // the lineage pid: the index of the scrape map's own partition,
-            // fixed in the cache whichever job (a coalesced write included)
-            // computes it
-            .withColumn("pid", spark_partition_id()))
+            val allowed = gated.where(col("robots_ok")).drop("rules", "robots_ok")
 
-          // ---- phase A: ALL consumers of the scraped cache — docs write,
-          // visits write, politeness evolution — launch as CONCURRENT Spark
-          // jobs. The BlockManager's per-partition cache locks make the
-          // concurrent jobs co-materialize the cache (different partitions in
-          // parallel, each computed exactly once); they write disjoint outputs,
-          // so overlapping hides the fixed per-job latency that dominates small
-          // epochs and costs nothing on a real cluster (concurrent jobs share
-          // the scheduler). No count or collect job runs: the lineage is
-          // observed on the docs write (before its fetch_ok filter, so failed
-          // pages count too), fetched/failed are its rows summed, and the
-          // robots-blocked count is observed on the visits write.
-          val lineageObs = Observation()
-          val fDocs = launch {
-            writeSnapshot(scraped.observe(lineageObs, LineageAgg.column.as("slots"))
-              .where(col("fetch_ok"))
-              .select(col("url").as("doc_id"), col("spans"), col("links"),
-                col("title"), col("n_words"), lit(epoch).as("epoch")),
-              parts, dir(runDir, epoch, "docs"))
-            LineageAgg.rows(lineageObs.get("slots").asInstanceOf[scala.collection.Seq[Long]])
-          }
-          // visits carry the full sort key (priority, score, depth, path) but
-          // NO materialized rank: visit order is fully determined by the key,
-          // so `Crawl.visits` derives ranks at read time — the epoch loop never
-          // runs a partitionless global-order window.
-          val blockedObs = Observation()
-          val fVisits = launch {
-            writeSnapshot(gated.observe(blockedObs, count(when(!col("robots_ok"), true)).as("n"))
-              .where(col("robots_ok"))
-              .select(col("url"), col("depth"), col("score"), col("priority"),
-                col("path"), lit(epoch).as("epoch")),
-              parts, dir(runDir, epoch, "visits"))
-            blockedObs.get("n").asInstanceOf[Long]
-          }
-          // politeness state evolution (deterministic backoff per epoch)
-          val fState = if (!cfg.dynamicPoliteness) Future.successful(()) else launch {
-            val st0 = domainState.getOrElse(
-              spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                domainStateSchema))
-            writeSnapshot(graft.politeness.DomainState
-              .evolve(st0.select("host", "current_delay", "fail_count"),
-                scraped.select(col("host"), col("status_code"))),
-              parts, dir(runDir, epoch + 1, "domain_state"))
-          }
+            // ---- fetch: salted repartition defuses hot-host skew BEFORE the
+            // (CPU-heavy) scrape map; the join key stays url_hash so the page
+            // store join itself is a plain shuffled hash join.
+            val salted = allowed.repartition(
+              maxParts, col("host"), pmod(col("url_hash"), lit(SaltBuckets)))
+            val fetched = salted.join(
+              pages.select(col("url_hash"), col("html"), col("status_code")),
+              Seq("url_hash"), "left")
 
-          // ---- link-head enrichment (config-gated; a phase-A consumer of the
-          // scraped cache writing disjoint outputs). All joins inside
-          // LinkPreview.enrich are url-keyed equi-joins; the head store
-          // commit is O(delta) (only stale/missing rows rewrite).
-          val fPreview = cfg.linkPreview match {
-            case None => Future.successful(())
-            case Some(lp0) => launch {
-              val lp = lp0.copy(nowMs = (epoch * cfg.epochSeconds * 1000).toLong)
-              val lrows = scraped.where(col("fetch_ok"))
-                .select(col("url").as("page_url"),
-                  posexplode_outer(col("links")).as(Seq("pos", "link")))
-                .where(col("link").isNotNull)
-                .select(col("page_url"), col("link.href").as("href"),
-                  col("link.linkIndex").as("link_pos"),
-                  col("link.internal").as("is_internal"),
-                  // LinkOut keeps no title/class/rel attrs — intrinsic scores
-                  // from anchor text + href shape, like a bare <a> in the ref
-                  graft.functions.LinkScore.intrinsic(col("link.text"),
-                    col("link.href"), lit(""), lit(""), lit(""),
-                    typedLit(Seq.empty[String]), lit(false)).as("intrinsic_score"))
-              val store0 = readIfPresent(spark, runDir, epoch, "head_store", headStoreSchema)
-                .getOrElse(spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], headStoreSchema))
-              // head "fetch" seam: the crawl's page store, keyed by the same
-              // xxhash64(deep-canonical href) the expansion uses. Head data is
-              // built ONLY for the urls enrich will actually consult the seam
-              // for — the config-filtered request set minus TTL-fresh store
-              // hits; parsing heads for filtered-out or cached links is
-              // O(all extracted links) of discarded work per epoch.
-              val headU = udf((html: String) => graft.scrape.Meta.headPeek(html))
-              val reqs = graft.sources.LinkPreview.requests(lrows, lp)
-              val fetchHeads = reqs
-                .join(graft.sources.LinkPreview.freshHits(reqs, store0, lp),
-                  Seq("url"), "left_anti")
-                .withColumn("url_hash", xxhash64(col("url")))
-                .join(pages.select(col("url_hash"), col("html"), col("status_code")),
-                  Seq("url_hash"), "left")
-                .select(col("url"),
-                  when(col("status_code") === 200 && col("html").isNotNull, "valid")
-                    .otherwise("not_valid").as("status"),
-                  when(col("html").isNotNull, headU(col("html")))
-                    .otherwise(lit("")).as("head"))
-              val (enriched, newStore) =
-                graft.sources.LinkPreview.enrich(lrows, store0, fetchHeads, lp)
-              writeSnapshot(enriched.withColumn("epoch", lit(epoch)), parts,
-                dir(runDir, epoch, "links"))
-              writeSnapshot(newStore, parts, dir(runDir, epoch + 1, "head_store"))
+            val scraped = hold(fetched
+              .select("url_hash", "url", "host", "depth", "score", "path", "html", "status_code")
+              .as(scrapeInEnc)
+              .map(scrapeRow)(scrapeOutEnc)
+              .toDF("url_hash", "url", "host", "depth", "score", "path",
+                "fetch_ok", "status_code", "spans", "links", "title", "n_words")
+              // the lineage pid: the index of the scrape map's own partition,
+              // fixed in the cache whichever job (a coalesced write included)
+              // computes it
+              .withColumn("pid", spark_partition_id()))
+
+            // ---- phase A: ALL consumers of the scraped cache — docs write,
+            // politeness evolution, link enrichment — launch as CONCURRENT Spark
+            // jobs, beside the visits write. The BlockManager's per-partition
+            // cache locks make the concurrent jobs co-materialize the cache
+            // (different partitions in parallel, each computed exactly once);
+            // they write disjoint outputs, so overlapping hides the fixed
+            // per-job latency that dominates small epochs and costs nothing on
+            // a real cluster (concurrent jobs share the scheduler). No count or
+            // collect job runs: the lineage is observed on the docs write
+            // (before its fetch_ok filter, so failed pages count too), and
+            // fetched/failed are its rows summed.
+            val lineageObs = Observation()
+            val fDocs = jobs.launch {
+              writeSnapshot(scraped.observe(lineageObs, LineageAgg.column.as("slots"))
+                .where(col("fetch_ok"))
+                .select(col("url").as("doc_id"), col("spans"), col("links"),
+                  col("title"), col("n_words"), lit(epoch).as("epoch")),
+                parts, dir(runDir, epoch, "docs"))
+              LineageAgg.rows(lineageObs.get("slots").asInstanceOf[scala.collection.Seq[Long]])
             }
-          }
+            // politeness state evolution (deterministic backoff per epoch)
+            val fState = if (!cfg.dynamicPoliteness) Future.successful(()) else jobs.launch {
+              val st0 = domainState.getOrElse(
+                spark.createDataFrame(
+                  spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+                  domainStateSchema))
+              writeSnapshot(graft.politeness.DomainState
+                .evolve(st0.select("host", "current_delay", "fail_count"),
+                  scraped.select(col("host"), col("status_code"))),
+                parts, dir(runDir, epoch + 1, "domain_state"))
+            }
 
-          // ---- expansion: links are already deep-canonical (scrape map)
-          val linkRows = scraped.where(col("fetch_ok"))
-            .select(col("url").as("parent"), col("path").as("parent_path"),
-              col("depth"), posexplode_outer(col("links")).as(Seq("pos", "link")))
-            .where(col("link").isNotNull)
-            .select(col("parent"), col("parent_path"), col("depth"),
-              col("link.href").as("url"), col("link.internal").as("internal"),
-              col("link.linkIndex").as("link_index"),
-              col("link.text").as("anchor_text"))
-          val validU = udf((u: String) => u != null && Urls.isValidCrawlUrl(u) && !Urls.isNonsense(u))
-          val hostU = udf((u: String) => Urls.host(u))
-          val candidates = linkRows
-            .where(validU(col("url")))
-            .where(if (cfg.includeExternal) lit(true) else col("internal"))
-            .where(col("depth") + 1 <= cfg.maxDepth)
-            .withColumn("url_hash", xxhash64(col("url")))
+            // ---- link-head enrichment (config-gated; a phase-A consumer of the
+            // scraped cache writing disjoint outputs). All joins inside
+            // LinkPreview.enrich are url-keyed equi-joins; the head store
+            // commit is O(delta) (only stale/missing rows rewrite).
+            val fPreview = cfg.linkPreview match {
+              case None => Future.successful(())
+              case Some(lp0) => jobs.launch {
+                val lp = lp0.copy(nowMs = (epoch * cfg.epochSeconds * 1000).toLong)
+                val lrows = scraped.where(col("fetch_ok"))
+                  .select(col("url").as("page_url"),
+                    posexplode_outer(col("links")).as(Seq("pos", "link")))
+                  .where(col("link").isNotNull)
+                  .select(col("page_url"), col("link.href").as("href"),
+                    col("link.linkIndex").as("link_pos"),
+                    col("link.internal").as("is_internal"),
+                    // LinkOut keeps no title/class/rel attrs — intrinsic scores
+                    // from anchor text + href shape, like a bare <a> in the ref
+                    graft.functions.LinkScore.intrinsic(col("link.text"),
+                      col("link.href"), lit(""), lit(""), lit(""),
+                      typedLit(Seq.empty[String]), lit(false)).as("intrinsic_score"))
+                val store0 = readIfPresent(spark, runDir, epoch, "head_store", headStoreSchema)
+                  .getOrElse(spark.createDataFrame(
+                    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], headStoreSchema))
+                // head "fetch" seam: the crawl's page store, keyed by the same
+                // xxhash64(deep-canonical href) the expansion uses. Head data is
+                // built ONLY for the urls enrich will actually consult the seam
+                // for — the config-filtered request set minus TTL-fresh store
+                // hits; parsing heads for filtered-out or cached links is
+                // O(all extracted links) of discarded work per epoch.
+                val headU = udf((html: String) => graft.scrape.Meta.headPeek(html))
+                val reqs = graft.sources.LinkPreview.requests(lrows, lp)
+                val fetchHeads = reqs
+                  .join(graft.sources.LinkPreview.freshHits(reqs, store0, lp),
+                    Seq("url"), "left_anti")
+                  .withColumn("url_hash", xxhash64(col("url")))
+                  .join(pages.select(col("url_hash"), col("html"), col("status_code")),
+                    Seq("url_hash"), "left")
+                  .select(col("url"),
+                    when(col("status_code") === 200 && col("html").isNotNull, "valid")
+                      .otherwise("not_valid").as("status"),
+                    when(col("html").isNotNull, headU(col("html")))
+                      .otherwise(lit("")).as("head"))
+                val (enriched, newStore) =
+                  graft.sources.LinkPreview.enrich(lrows, store0, fetchHeads, lp)
+                writeSnapshot(enriched.withColumn("epoch", lit(epoch)), parts,
+                  dir(runDir, epoch, "links"))
+                writeSnapshot(newStore, parts, dir(runDir, epoch + 1, "head_store"))
+              }
+            }
 
-          // dedup: incremental filter vector pre-filter + exact anti-join, then
-          // first-wins per hash (no full-history filter rebuild — the vector
-          // holds one delta-sized filter per epoch since the last compaction)
-          val seenProbe = SeenFilters.probe(spark, candidates, seen, "url_hash", filters)
-          held += (() => seenProbe.release())
-          val firstWins = seenProbe.fresh.withColumn("rk", row_number().over(
-              Window.partitionBy("url_hash")
-                .orderBy(col("parent_path"), col("link_index"))))
-            .where(col("rk") === 1).drop("rk")
+            // ---- expansion: links are already deep-canonical (scrape map)
+            val linkRows = scraped.where(col("fetch_ok"))
+              .select(col("url").as("parent"), col("path").as("parent_path"),
+                col("depth"), posexplode_outer(col("links")).as(Seq("pos", "link")))
+              .where(col("link").isNotNull)
+              .select(col("parent"), col("parent_path"), col("depth"),
+                col("link.href").as("url"), col("link.internal").as("internal"),
+                col("link.linkIndex").as("link_index"),
+                col("link.text").as("anchor_text"))
+            val candidates = linkRows
+              .where(validU(col("url")))
+              .where(if (cfg.includeExternal) lit(true) else col("internal"))
+              .where(col("depth") + 1 <= cfg.maxDepth)
+              .withColumn("url_hash", xxhash64(col("url")))
 
-          // scoring: custom scorer > keyword relevance > neutral 0.5
-          val scoreCol = cfg.linkScorer match {
-            case Some(f) =>
-              val scoreU = udf((u: String, t: String) => f(u, t))
-              scoreU(col("url"), col("anchor_text"))
-            case None if cfg.keywords.nonEmpty =>
-              Scorers.keywordRelevance(col("url"), cfg.keywords)
-            case None => lit(0.5)
-          }
-          // cached: reused by frontier write, seen delta, delta filter
-          val newEntries = hold(firstWins
-            .withColumn("score", scoreCol)
-            .where(col("score") >= cfg.scoreThreshold)
-            .select(
-              col("url_hash"), col("url"), hostU(col("url")).as("host"),
-              (col("depth") + 1).as("depth"), col("score"),
-              lit(0.0).as("priority"), col("parent"),
-              concat(col("parent_path"), format_string("%04x", col("link_index"))).as("path"),
-              lit(epoch + 1).as("enqueue_epoch"), lit(0).as("retry_count"),
-              lit(epoch + 1).as("epoch"), lit(CrawlStatus.Queued).as("status")))
+            // dedup: incremental filter vector pre-filter + exact anti-join, then
+            // first-wins per hash (no full-history filter rebuild — the vector
+            // holds one delta-sized filter per epoch since the last compaction).
+            // The previous epoch's filter, built after its commit, is awaited here.
+            val seenProbe = SeenFilters.probe(spark, candidates, seen, "url_hash", awaitFilters())
+            filterHeld += (() => seenProbe.release())
+            val firstWins = seenProbe.fresh.withColumn("rk", row_number().over(
+                Window.partitionBy("url_hash")
+                  .orderBy(col("parent_path"), col("link_index"))))
+              .where(col("rk") === 1).drop("rk")
 
-          // ---- phase B: the frontier(t+1) write and the seen commit launch
-          // CONCURRENTLY (with phase A still in flight). Both consume the same
-          // cached newEntries plan; the BlockManager's per-partition cache locks
-          // serialize materialization, so the plan is computed once no matter
-          // which job wins — no duplicated expansion work at any scale. The
-          // new-entry count is observed on the seen write. Reference adds to
-          // seen on DISCOVERY, bfs_strategy.py:153.
-          val nextEpoch = epoch + 1
-          val fFrontier = launch {
-            writeSnapshot(deferred
-              .select(newEntries.columns.toSeq.map(col): _*)
-              .withColumn("epoch", lit(nextEpoch))
-              .unionByName(newEntries),
-              parts, dir(runDir, nextEpoch, "frontier"))
-          }
-          // seen commit is a DELTA: only this epoch's first-seen hashes are
-          // written (disjoint from history by construction — exact anti-join
-          // upstream; bloom has no false negatives). O(delta) I/O per epoch.
-          // Every seenCompactEvery epochs the delta run is compacted into one
-          // full set + one right-sized bloom, bounding reader fan-in and the
-          // bloom vector (the ONLY full-set pass, amortized 1/K per epoch).
-          val compacting = nextEpoch - seenBase >= cfg.seenCompactEvery
-          val newObs = Observation()
-          val fNew = launch {
-            val delta = newEntries.select("url_hash").observe(newObs, count(lit(1)).as("n"))
-            val out = if (compacting) seen.unionByName(delta) else delta
-            writeSnapshot(out, parts, dir(runDir, nextEpoch, "seen"))
-            newObs.get("n").asInstanceOf[Long]
-          }
-          // the filter needs the exact delta count for sizing → chains on the
-          // seen write that observes it (and, when compacting, re-reads it)
-          val fSeen: Future[(Int, Vector[SeenDelta])] =
-            fNew.map { nNew =>
+            // scoring: custom scorer > keyword relevance > neutral 0.5
+            val scoreCol = cfg.linkScorer match {
+              case Some(f) =>
+                val scoreU = udf((u: String, t: String) => f(u, t))
+                scoreU(col("url"), col("anchor_text"))
+              case None if cfg.keywords.nonEmpty =>
+                Scorers.keywordRelevance(col("url"), cfg.keywords)
+              case None => lit(0.5)
+            }
+            // cached: reused by frontier write, seen delta, delta filter
+            val newEntries = holdForFilter(firstWins
+              .withColumn("score", scoreCol)
+              .where(col("score") >= cfg.scoreThreshold)
+              .select(
+                col("url_hash"), col("url"), hostU(col("url")).as("host"),
+                (col("depth") + 1).as("depth"), col("score"),
+                lit(0.0).as("priority"), col("parent"),
+                concat(col("parent_path"), format_string("%04x", col("link_index"))).as("path"),
+                lit(epoch + 1).as("enqueue_epoch"), lit(0).as("retry_count"),
+                lit(epoch + 1).as("epoch"), lit(CrawlStatus.Queued).as("status")))
+
+            // ---- phase B: the frontier(t+1) write and the seen commit launch
+            // CONCURRENTLY (with phase A still in flight). Both consume the same
+            // cached newEntries plan; the BlockManager's per-partition cache locks
+            // serialize materialization, so the plan is computed once no matter
+            // which job wins — no duplicated expansion work at any scale. The
+            // new-entry count is observed on the seen write. Reference adds to
+            // seen on DISCOVERY, bfs_strategy.py:153.
+            val nextEpoch = epoch + 1
+            val fFrontier = jobs.launch {
+              writeSnapshot(deferred
+                .select(newEntries.columns.toSeq.map(col): _*)
+                .withColumn("epoch", lit(nextEpoch))
+                .unionByName(newEntries),
+                parts, dir(runDir, nextEpoch, "frontier"))
+            }
+            // seen commit is a DELTA: only this epoch's first-seen hashes are
+            // written (disjoint from history by construction — exact anti-join
+            // upstream; bloom has no false negatives). O(delta) I/O per epoch.
+            // Every seenCompactEvery epochs the delta run is compacted into one
+            // full set + one right-sized bloom, bounding reader fan-in and the
+            // bloom vector (the ONLY full-set pass, amortized 1/K per epoch).
+            val compacting = nextEpoch - seenBase >= cfg.seenCompactEvery
+            val newObs = Observation()
+            val fNew = jobs.launch {
+              val delta = newEntries.select("url_hash").observe(newObs, count(lit(1)).as("n"))
+              val out = if (compacting) seen.unionByName(delta) else delta
+              writeSnapshot(out, parts, dir(runDir, nextEpoch, "seen"))
+              newObs.get("n").asInstanceOf[Long]
+            }
+            // the filter needs the exact delta count for sizing → chains on the
+            // seen write that observes it (and, when compacting, re-reads it).
+            // It is not part of the commit: the manifest below does not wait
+            // for it, and a missing filter file is rebuilt on resume. The
+            // counters and the vector it reads are this epoch's, taken now
+            val (filtersBefore, seenBefore, queuedBefore) = (filters, seenCount, queuedCount)
+            val fFilter = jobs.track(fNew.map { nNew =>
               if (compacting) {
                 val full = spark.read.schema(seenSchema).parquet(dir(runDir, nextEpoch, "seen"))
-                val compactFilter = store.build(spark, full, "url_hash", seenCount + nNew)
+                val compactFilter = store.build(spark, full, "url_hash", seenBefore + nNew)
                 store.save(compactFilter, store.path(runDir, nextEpoch))
-                (nextEpoch, Vector(compactFilter))
+                Vector[SeenDelta](compactFilter)
               } else {
                 // the PARQUET delta stays exactly the first-seen set (ledger
                 // semantics); the store decides what else its filter covers
                 val deltaFilter = store.deltaFilter(spark, newEntries.select("url_hash"),
-                  admitted.select("url_hash"), nNew, queuedCount)
+                  admitted.select("url_hash"), nNew, queuedBefore)
                 store.save(deltaFilter, store.path(runDir, nextEpoch))
-                (seenBase, filters :+ deltaFilter)
+                filtersBefore :+ deltaFilter
               }
-            }
-          jobs += fSeen
+            }.andThen { case _ => freeFilterHeld() })
 
-          // ---- join all concurrent jobs, then the atomic commit
-          val lineageRows = Await.result(fDocs, Duration.Inf)
-          val nNew = Await.result(fNew, Duration.Inf)
-          val nBlocked = Await.result(fVisits, Duration.Inf)
-          val (newSeenBase, newFilters) = Await.result(fSeen, Duration.Inf)
-          Await.result(fState, Duration.Inf)
-          Await.result(fPreview, Duration.Inf)
-          Await.result(fFrontier, Duration.Inf)
-          seenBase = newSeenBase
-          filters = newFilters
-          val nFetched = lineageRows.filter(_.fetchOk).map(_.rows).sum
-          val nFailed = lineageRows.filterNot(_.fetchOk).map(_.rows).sum
-          // derived, no extra jobs: admitted = allowed + blocked; deferred =
-          // queued − admitted; seen grows only by the (disjoint) new entries
-          val admittedCount = nFetched + nFailed + nBlocked
-          val deferredCount = queuedCount - admittedCount
-          seenCount += nNew
-          queuedCount = deferredCount + nNew
-          val m = EpochManifest(nextEpoch, cfg.strategy, seenBase, seenCount, Some(queuedCount),
-            fetched = Some(nFetched), failed = Some(nFailed), skippedRobots = Some(nBlocked),
-            newFrontier = Some(nNew), wallMs = Some(System.currentTimeMillis() - t0),
-            partitions = Some(lineageRows))
-          EpochManifest.commit(runDir, m)
-          manifests :+= m
+            // ---- join the snapshot jobs, then the atomic commit
+            val lineageRows = Await.result(fDocs, Duration.Inf)
+            val nNew = Await.result(fNew, Duration.Inf)
+            val nBlocked = Await.result(fVisits, Duration.Inf)
+            Await.result(fState, Duration.Inf)
+            Await.result(fPreview, Duration.Inf)
+            Await.result(fFrontier, Duration.Inf)
+            val nFetched = lineageRows.filter(_.fetchOk).map(_.rows).sum
+            val nFailed = lineageRows.filterNot(_.fetchOk).map(_.rows).sum
+            // derived, no extra jobs: admitted = allowed + blocked; deferred =
+            // queued − admitted; seen grows only by the (disjoint) new entries
+            val admittedCount = nFetched + nFailed + nBlocked
+            val deferredCount = queuedCount - admittedCount
+            seenCount += nNew
+            queuedCount = deferredCount + nNew
+            if (compacting) seenBase = nextEpoch
+            val m = EpochManifest(nextEpoch, cfg.strategy, seenBase, seenCount, Some(queuedCount),
+              fetched = Some(nFetched), failed = Some(nFailed), skippedRobots = Some(nBlocked),
+              newFrontier = Some(nNew), wallMs = Some(System.currentTimeMillis() - t0),
+              partitions = Some(lineageRows))
+            EpochManifest.commit(runDir, m)
+            manifests :+= m
+            pendingFilters = Some(fFilter)
 
-          if (queuedCount == 0) done = true
-          epoch += 1
-        } catch { case e: Throwable =>
-          jobs.foreach(Await.ready(_, Duration.Inf))
-          throw e
-        } finally held.foreach(_())
+            if (queuedCount == 0) done = true
+            epoch += 1
+          } catch { case e: Throwable =>
+            jobs.awaitAll()
+            freeFilterHeld() // a no-op once the filter build has ended
+            throw e
+          } finally held.foreach(_())
+        }
       }
-    }
+      awaitFilters()
+    } finally pendingFilters.foreach(Await.ready(_, Duration.Inf))
     CrawlSummary(epoch, total(_.fetched), total(_.failed), total(_.skippedRobots), seenCount)
   }
 

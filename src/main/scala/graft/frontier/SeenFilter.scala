@@ -195,7 +195,10 @@ final case class SeenProbe(fresh: DataFrame, filterBc: Broadcast[Array[SeenDelta
   * methods and never branch on the family.
   *
   * Filter files are DERIVED caches of the seen parquet deltas (minus any
-  * cuckoo evictions): a missing file is rebuilt from its delta; a rebuilt
+  * cuckoo evictions), and `Crawl.run` commits an epoch's manifest before its
+  * filter file lands. A missing file is rebuilt from the committed snapshots
+  * to cover what the family's [[deltaFilter]] covered: the seen delta for
+  * bloom, the delta and the keys the epoch could admit for cuckoo. A rebuilt
   * file conservatively loses evictions, which only costs exact-join traffic,
   * never correctness. The crawl's key column is `url_hash`.
   */
@@ -211,16 +214,23 @@ sealed trait SeenStore {
   def load(p: Path): F
 
   /** Epoch `epoch`'s filter for a resumed run: its saved file, else rebuilt
-    * from the epoch's seen `delta` (also how a run resumed under the other
-    * family gets its filters). Only an absent delta means an empty filter:
-    * one over a delta that has rows would let its URLs past the exact probe
-    * as new, so a delta that cannot be read fails the run instead. */
+    * ([[rebuild]]) from the epoch's seen `delta` and the keys of the frontier
+    * the epoch's crawl admitted from, `queuedBefore` (also how a run resumed
+    * under the other family gets its filters). Only an absent delta means an
+    * empty filter: one over a delta that has rows would let its URLs past the
+    * exact probe as new, so a delta that cannot be read fails the run
+    * instead. */
   def resume(spark: SparkSession, runDir: String, epoch: Int,
-             delta: => Option[DataFrame]): F = {
+             delta: => Option[DataFrame], queuedBefore: => Option[DataFrame]): F = {
     val p = path(runDir, epoch)
     if (Files.exists(p)) load(p)
-    else delta.fold(empty())(d => build(spark, d, SeenStore.Key, d.count()))
+    else delta.fold(empty())(rebuild(spark, _, queuedBefore))
   }
+
+  /** A lost filter over at least what [[deltaFilter]] (or a compaction's
+    * [[build]] over the full set) covered when the epoch committed. */
+  protected def rebuild(spark: SparkSession, delta: DataFrame,
+                        queuedBefore: => Option[DataFrame]): F
 
   /** The filter, if the family needs one, that a resumed run appends over
     * the `queued` keys of its head frontier (`queuedCount`, -1 if unknown). */
@@ -267,6 +277,14 @@ final class BloomStore(fpp: Double) extends SeenStore {
   override def deltaFilter(spark: SparkSession, newKeys: DataFrame, admittedKeys: => DataFrame,
                            nNew: Long, queuedCount: Long): BloomDelta =
     if (nNew == 0) empty() else build(spark, newKeys, SeenStore.Key, nNew)
+  // the delta alone, sized by its rows: the bytes `deltaFilter` saved. The
+  // build's aggregate yields no filter over no rows, so an empty delta gets
+  // the empty filter, as it did when the epoch ran
+  override protected def rebuild(spark: SparkSession, delta: DataFrame,
+                                 queuedBefore: => Option[DataFrame]): BloomDelta = {
+    val n = delta.count()
+    if (n == 0) empty() else build(spark, delta, SeenStore.Key, n)
+  }
   // append-only: the stale bits age out at the next compaction
   override def evict(runDir: String, seenBase: Int, expired: Int,
                      expiredKeys: => DataFrame): Unit = ()
@@ -314,6 +332,16 @@ final class CuckooStore extends SeenStore {
                            nNew: Long, queuedCount: Long): ShardedCuckoo =
     build(spark, newKeys.unionByName(admittedKeys), SeenStore.Key,
       nNew + math.max(queuedCount, 0L))
+
+  /** The delta and every key of the frontier the epoch admitted from: every
+    * row of a frontier snapshot is queued, so that covers the admitted keys
+    * [[deltaFilter]] covered, and a refetched requeue stays covered when the
+    * file is lost after an expiry. */
+  override protected def rebuild(spark: SparkSession, delta: DataFrame,
+                                 queuedBefore: => Option[DataFrame]): ShardedCuckoo = {
+    val keys = queuedBefore.fold(delta)(q => delta.unionByName(q.select(SeenStore.Key)))
+    build(spark, keys, SeenStore.Key, keys.count())
+  }
 
   /** Evict the expired keys ([[CuckooSeen.evictSharded]]) from the filter
     * that holds them: the delta's own while it is in the live vector, else

@@ -541,9 +541,16 @@ object Jbig2 {
                  .flatMap(regionOfGenericSegment(_).map(_._1))
     } yield r
 
+  /** Pixels of the largest page or region decoded, and cells of the
+    * largest halftone grid. */
+  private val MaxPixels = 64L * 1024 * 1024
+  private val MaxGridCells = 16L * 1024 * 1024
+
   /** Decode one generic-region segment's bitmap and its external
-    * combination operator (region info byte 16, low 3 bits). */
-  private def regionOfGenericSegment(seg: Segment): Option[(Region, Int)] = {
+    * combination operator (region info byte 16, low 3 bits). A region of
+    * more than `maxPixels` pixels fails before any decoding. */
+  private def regionOfGenericSegment(seg: Segment,
+                                     maxPixels: Long = MaxPixels): Option[(Region, Int)] = {
     val d = seg.data
     if (d.length < 18) return None
     val v = Bytes.view(d)
@@ -556,7 +563,7 @@ object Jbig2 {
     val mmr = (flags & 1) != 0
     val template = (flags >> 1) & 3
     val tpgdon = (flags & 8) != 0
-    if (w <= 0 || h <= 0 || w.toLong * h > 64L * 1024 * 1024) return None
+    if (w <= 0 || h <= 0 || w.toLong * h > maxPixels) return None
     if (mmr) {
       // MMR regions are T.6-coded, full-width, no AT bytes in the
       // header (T.88 §7.4.6.2) and no typical prediction (§6.2.6)
@@ -636,7 +643,7 @@ object Jbig2 {
               if (symWidth <= 0 || symWidth > 4096 ||
                   newSyms.length >= numNew) return None
               area += symWidth.toLong * hcHeight
-              if (area > 64L * 1024 * 1024) return None
+              if (area > MaxPixels) return None
               newSyms += decodeGenericInto(dec, gb, symWidth, hcHeight,
                 tpgdon = false, template, at)
           }
@@ -678,7 +685,7 @@ object Jbig2 {
     val x = v.u32(8).toInt
     val y = v.u32(12).toInt
     val extCombOp = data(16) & 7
-    if (w <= 0 || h <= 0 || w.toLong * h > 64L * 1024 * 1024) return None
+    if (w <= 0 || h <= 0 || w.toLong * h > MaxPixels) return None
     val flags = v.u16(17)
     val sbhuff = (flags & 1) != 0
     val refine = (flags & 2) != 0
@@ -821,9 +828,10 @@ object Jbig2 {
     * gray-coded bitplanes (MSB first, ONE shared decoder + context set),
     * then each grid cell stamps its pattern at the skew-capable grid
     * position. Arithmetic coding only; HENABLESKIP and MMR planes are out
-    * of scope (None). */
-  private def decodeHalftoneRegion(data: Array[Byte],
-                                   patterns: IndexedSeq[Bitmap]): Option[(Region, Int)] = {
+    * of scope (None). A grid of more than `maxCells` cells fails before any
+    * decoding. */
+  private def decodeHalftoneRegion(data: Array[Byte], patterns: IndexedSeq[Bitmap],
+                                   maxCells: Long): Option[(Region, Int)] = {
     if (data.length < 38 || patterns.isEmpty) return None
     val v = Bytes.view(data)
     val w = v.u32(0).toInt
@@ -838,14 +846,14 @@ object Jbig2 {
     val combOp = (flags >> 4) & 7
     val defPixel = (flags >> 7) & 1
     if (mmr || enableSkip) return None
-    if (w <= 0 || h <= 0 || w.toLong * h > 64L * 1024 * 1024) return None
+    if (w <= 0 || h <= 0 || w.toLong * h > MaxPixels) return None
     val hgw = v.u32(18).toInt
     val hgh = v.u32(22).toInt
     val hgx = v.u32(26).toInt // signed 32-bit grid origin
     val hgy = v.u32(30).toInt
     val hrx = v.u16(34)
     val hry = v.u16(36)
-    if (hgw <= 0 || hgh <= 0 || hgw.toLong * hgh > 16L * 1024 * 1024) return None
+    if (hgw <= 0 || hgh <= 0 || hgw.toLong * hgh > maxCells) return None
     val bitsPerValue = symCodeLen(patterns.length)
     val coded = java.util.Arrays.copyOfRange(data, 38, data.length)
     val dec = new MqDecoder(coded)
@@ -901,6 +909,10 @@ object Jbig2 {
     val patDicts = scala.collection.mutable.Map.empty[Long, IndexedSeq[Bitmap]]
     var pageW = -1
     var pageH = -1
+    // once the page size is known, no region nor halftone grid may have more
+    // pixels than the page: its excess could only be clipped away
+    def pagePixels(limit: Long): Long =
+      if (pageW > 0 && pageH > 0) math.min(limit, pageW.toLong * pageH) else limit
     val regions = new ArrayBuffer[(Region, Int)]()
     for (seg <- segs) seg.segType match {
       case 16 => // pattern dictionary
@@ -910,7 +922,7 @@ object Jbig2 {
         }
       case 20 | 22 | 23 => // halftone region
         val pats = seg.refs.flatMap(patDicts.get).flatten.toIndexedSeq
-        decodeHalftoneRegion(seg.data, pats) match {
+        decodeHalftoneRegion(seg.data, pats, pagePixels(MaxGridCells)) match {
           case Some(rc) => regions += rc
           case None => return None
         }
@@ -922,7 +934,7 @@ object Jbig2 {
           if (w > 0 && w < Int.MaxValue) pageW = w.toInt
           if (h > 0 && h < Int.MaxValue) pageH = h.toInt
           // an oversized page fails now, before its regions are decoded
-          if (pageW > 0 && pageH > 0 && pageW.toLong * pageH > 64L * 1024 * 1024) return None
+          if (pageW > 0 && pageH > 0 && pageW.toLong * pageH > MaxPixels) return None
         }
       case 0 => // symbol dictionary: inputs are its referred dicts' exports
         val inputs = seg.refs.flatMap(dicts.get).flatten.toIndexedSeq
@@ -937,7 +949,7 @@ object Jbig2 {
           case None => return None
         }
       case 36 | 38 | 39 => // generic region
-        regionOfGenericSegment(seg) match {
+        regionOfGenericSegment(seg, pagePixels(MaxPixels)) match {
           case Some(rc) => regions += rc
           case None => return None
         }

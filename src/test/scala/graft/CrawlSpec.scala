@@ -384,26 +384,31 @@ class CrawlSpec extends AnyFunSuite {
     assert(vs(bDir) == vs(cDir))
   }
 
-  test("cuckoo TTL expiry stays sound when expired pages link to each other") {
-    // the dangerous shape: /a and /b are both expired AND link to each
-    // other. Eviction removes their hashes from the filter while the exact
-    // ledger keeps them — without the queued-heal filter, the recrawl's
-    // discovery of /b (from /a's links) would ride the definitely-new fast
-    // path PAST the exact anti-join and fetch /b twice.
+  /** A four-page site whose expired pages link to each other: x.com → /a,
+    * /b; /a → /b, /c; /b → /a. */
+  private lazy val miniPages = {
     def page(u: String, links: Seq[String]) = {
       val hrefs = links.map(l => s"""<a href="$l">go to $l now</a>""").mkString(" ")
       (u, s"<html><body><p>content words for page $u body text</p>$hrefs</body></html>")
     }
-    val mini = Seq(
+    Seq(
       // page-store URLs are the CANONICAL forms (deep canonicalizer
       // rstrips '/' including root)
       page("http://x.com", Seq("/a", "/b")),
       page("http://x.com/a", Seq("/b", "/c")),
       page("http://x.com/b", Seq("/a")),
       page("http://x.com/c", Nil))
-    val miniPages = mini.map { case (u, h) => PageRec(u, 0L, "x.com", h, 200, 0) }.toDF()
+      .map { case (u, h) => PageRec(u, 0L, "x.com", h, 200, 0) }.toDF()
       .withColumn("url_hash", xxhash64(col("url")))
-    val miniSeeds = Seq(("http://x.com/", "sitemap")).toDF("url", "source")
+  }
+  private lazy val miniSeeds = Seq(("http://x.com/", "sitemap")).toDF("url", "source")
+
+  test("cuckoo TTL expiry stays sound when expired pages link to each other") {
+    // the dangerous shape: /a and /b are both expired AND link to each
+    // other. Eviction removes their hashes from the filter while the exact
+    // ledger keeps them — without the queued-heal filter, the recrawl's
+    // discovery of /b (from /a's links) would ride the definitely-new fast
+    // path PAST the exact anti-join and fetch /b twice.
     val cfg = CrawlConfig(hostBudget = 10, maxEpochs = 20, seenFilter = "cuckoo")
     val runDir = freshDir("cuckoo-sound")
     Crawl.run(spark, miniSeeds, miniPages, robotsDF.limit(0), runDir, cfg)
@@ -423,6 +428,44 @@ class CrawlSpec extends AnyFunSuite {
     // the exact seen ledger is unchanged and still duplicate-free
     val seenAfter = Crawl.seenSet(spark, runDir).as[Long].collect().sorted.toSeq
     assert(seenAfter == seenBefore)
+  }
+
+  test("a filter lost after an expiry is rebuilt to cover what it covered; nothing is fetched twice") {
+    // hostBudget 1 crawls x.com, /a, /b, /c in epochs 0-3 and compacts the
+    // seen set at epoch 4; the recrawl refetches the expired /a and /b in
+    // epochs 5 and 6. Under cuckoo the expiry evicts them from the compacted
+    // filter, so only epoch 6's filter covers /a (as an admitted key). If that
+    // file is lost, the rebuild must cover /a again, or /b's link to it rides
+    // the definitely-new fast path past the exact anti-join and /a is fetched
+    // once more. Under bloom nothing was evicted, and the lost filter's seen
+    // delta is empty
+    for (family <- Seq("bloom", "cuckoo")) {
+      val cfg = CrawlConfig(hostBudget = 1, maxEpochs = 40, seenFilter = family,
+        seenCompactEvery = 4)
+      def recrawl(loseFilter: Boolean): (Seq[(Int, String)], Seq[Long], Int) = {
+        val runDir = freshDir(s"rebuild-$family-$loseFilter")
+        Crawl.run(spark, miniSeeds, miniPages, robotsDF.limit(0), runDir, cfg)
+        val before = Crawl.lastCommittedEpoch(runDir)
+        assert(before == 4 && manifest(runDir, before).seenBase == 4, family)
+        assert(Crawl.expireEpoch(spark, runDir, 1) == 2)
+        // one epoch of the recrawl: /a is refetched, /b stays queued
+        Crawl.run(spark, miniSeeds, miniPages, robotsDF.limit(0), runDir,
+          cfg.copy(maxEpochs = before + 2))
+        val lost = Paths.get(f"$runDir/${family}_${before + 2}%04d.bin")
+        assert(Files.exists(lost))
+        if (loseFilter) Files.delete(lost)
+        Crawl.run(spark, miniSeeds, miniPages, robotsDF.limit(0), runDir, cfg)
+        val visits = Crawl.visits(spark, runDir).select("epoch", "visit_rank", "url")
+          .orderBy("epoch", "visit_rank").collect().map(r => (r.getInt(0), r.getString(2))).toSeq
+        (visits, Crawl.seenSet(spark, runDir).as[Long].collect().sorted.toSeq, before)
+      }
+      val (kept, keptSeen, before) = recrawl(loseFilter = false)
+      val (rebuilt, rebuiltSeen, _) = recrawl(loseFilter = true)
+      val refetched = rebuilt.filter(_._1 > before).map(_._2)
+      assert(refetched.sorted == Seq("http://x.com/a", "http://x.com/b"), s"$family: $refetched")
+      assert(rebuilt == kept, family)
+      assert(rebuiltSeen == keptSeen && rebuiltSeen.distinct == rebuiltSeen, family)
+    }
   }
 
   test("dynamic politeness: a throttling host shrinks to its backoff budget and aborts") {
@@ -748,6 +791,37 @@ class CrawlSpec extends AnyFunSuite {
     }
   }
 
+  test("when a run returns, every committed epoch's filter file covers its seen delta") {
+    import graft.frontier.{SeenStore, ShardedCuckoo}
+    for (family <- Seq("bloom", "cuckoo")) {
+      val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40,
+        seenFilter = family, seenCompactEvery = 2)
+      val runDir = freshDir(s"filters-$family")
+      Crawl.run(spark, seedsDF, pagesDF, robotsDF, runDir, cfg)
+      val last = Crawl.lastCommittedEpoch(runDir)
+      assert(manifest(runDir, last).seenBase > 0, s"$family: no compaction")
+      val store = SeenStore.forConfig(family)
+      (0 to last).foreach { e =>
+        val saved = store.path(runDir, e)
+        assert(Files.exists(saved), s"$family: no filter file at epoch $e")
+        val delta = spark.read.parquet(f"$runDir/seen/epoch=$e%04d")
+        if (family == "bloom") {
+          // byte-identical to a build over the delta, sized by its rows (the
+          // build yields no filter over no rows: an empty delta's is empty)
+          val expected = Files.createTempFile("bloom-expected", ".bin")
+          val n = delta.count()
+          store.save(if (n == 0) store.empty() else store.build(spark, delta, "url_hash", n),
+            expected)
+          assert(Files.readAllBytes(saved).sameElements(Files.readAllBytes(expected)),
+            s"bloom filter of epoch $e")
+        } else {
+          val filter = store.load(saved).asInstanceOf[ShardedCuckoo]
+          assert(delta.as[Long].collect().forall(filter.mightContain), s"cuckoo filter of epoch $e")
+        }
+      }
+    }
+  }
+
   test("resume fails closed when a missing delta filter cannot be rebuilt") {
     for (family <- Seq("bloom", "cuckoo")) {
       val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40,
@@ -775,13 +849,21 @@ class CrawlSpec extends AnyFunSuite {
     }
   }
 
+  private lazy val sc = spark.sparkContext
+  private lazy val cacheManager =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+  // `numCachedEntries` is package-private in Scala, public in bytecode
+  private def cachedEntries: Int =
+    cacheManager.getClass.getMethod("numCachedEntries").invoke(cacheManager).asInstanceOf[Int]
+  // the status tracker reads what the listener bus has delivered: drain it
+  // first (`listenerBus` is package-private in Scala, public in bytecode)
+  private def activeJobs: Seq[Int] = {
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    sc.statusTracker.getActiveJobIds().toSeq
+  }
+
   test("a finished crawl leaves no cached table or persisted RDD behind") {
-    val sc = spark.sparkContext
-    val cacheManager =
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
-    // `numCachedEntries` is package-private in Scala, public in bytecode
-    def cachedEntries: Int =
-      cacheManager.getClass.getMethod("numCachedEntries").invoke(cacheManager).asInstanceOf[Int]
     val rddsBefore = sc.getPersistentRDDs.keySet
     val cachedBefore = cachedEntries
     // a binding page cap (the admitted set is cached) and a compaction
@@ -796,18 +878,6 @@ class CrawlSpec extends AnyFunSuite {
   }
 
   test("a failed epoch joins its running jobs and frees its caches; a resume equals an uninterrupted run") {
-    val sc = spark.sparkContext
-    val cacheManager =
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
-    def cachedEntries: Int =
-      cacheManager.getClass.getMethod("numCachedEntries").invoke(cacheManager).asInstanceOf[Int]
-    // the status tracker reads what the listener bus has delivered: drain it
-    // first (`listenerBus` is package-private in Scala, public in bytecode)
-    def activeJobs: Seq[Int] = {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      sc.statusTracker.getActiveJobIds.toSeq
-    }
     val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40)
     val full = freshDir("failed-full")
     val fullSummary = Crawl.run(spark, seedsDF, pagesDF, robotsDF, full, cfg)
@@ -853,6 +923,32 @@ class CrawlSpec extends AnyFunSuite {
       assert(resumed == fullSummary, phase)
       assert(seenHashes(runDir) == seenHashes(full), phase)
       assert(vs(runDir) == vs(full), phase)
+    }
+  }
+
+  test("a failed bootstrap joins its running jobs, frees its cache and commits nothing") {
+    // the seeds' url column fails to compute, or the seen(0) write cannot
+    // create its dir while the frontier(0) write and the seed filter run
+    val failingSeeds = seedsDF.withColumn("url", udf { (u: String) =>
+      if (u != null) throw new IllegalStateException(s"seed store unavailable for $u")
+      u
+    }.apply(col("url")))
+    for ((what, run) <- Seq[(String, String => Unit)](
+        "seed column" -> (d => Crawl.run(spark, failingSeeds, pagesDF, robotsDF, d)),
+        "seen(0) write" -> { d =>
+          Files.writeString(Paths.get(d, "seen"), "a file where the seen dirs go")
+          Crawl.run(spark, seedsDF, pagesDF, robotsDF, d)
+        })) {
+      val rddsBefore = sc.getPersistentRDDs.keySet
+      val cachedBefore = cachedEntries
+      val runDir = freshDir("failed-bootstrap")
+      intercept[Exception](run(runDir))
+      assert(activeJobs.isEmpty, s"$what: jobs still running after the throw: $activeJobs")
+      val leftover = sc.getPersistentRDDs.filter { case (id, _) => !rddsBefore(id) }
+      assert(leftover.isEmpty, s"$what: persisted RDDs left: ${leftover.values.mkString(", ")}")
+      assert(cachedEntries == cachedBefore, s"$what: cached tables left by the failed run")
+      assert(Crawl.lastCommittedEpoch(runDir) == -1, what)
+      assert(!Files.exists(EpochManifest.path(runDir, 0)), what)
     }
   }
 

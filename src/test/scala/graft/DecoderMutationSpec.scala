@@ -253,6 +253,32 @@ class DecoderMutationSpec extends AnyFunSuite {
     assert(found.isEmpty, s"${found.length} failures, first ones:\n${found.take(10).mkString("\n")}")
   }
 
+  // ---- JBIG2 regions larger than their page ---------------------------------
+
+  /** `stream` with the big-endian 32-bit field at `off` of its last segment's
+    * data set to `value`. */
+  private def lastSegmentField(stream: Array[Byte], off: Int, value: Long): Array[Byte] = {
+    val out = stream.clone()
+    System.arraycopy(Bytes.be(4)(value), 0, out, jbig2Lengths(stream).last.at + 4 + off, 4)
+    out
+  }
+
+  test("a JBIG2 generic region or halftone grid with more pixels than its page decodes to None") {
+    val rnd = new scala.util.Random(SeedValue)
+    val bm = Jbig2.Bitmap(23, 11, Array.fill(23 * 11)((rnd.nextInt(3) / 2).toByte))
+    val (pageSeg, regionSeg) = Jbig2.encodeSegments(bm)
+    val (hPage, hDict, hRegion) = Jbig2.encodeHalftoneSegments(bm)
+    def decode(stream: Array[Byte]) = Jbig2.decodeEmbedded(Array.emptyByteArray, stream)
+    assert(decode(pageSeg ++ regionSeg).map(_.bitmap.bits.toSeq).contains(bm.bits.toSeq))
+    assert(decode(hPage ++ hDict ++ hRegion).map(_.bitmap.bits.toSeq).contains(bm.bits.toSeq))
+    // region width 23 → 4,194,327 (bit 22 set) on the 23×11 page: 46M pixels,
+    // under the 64M-pixel region cap, but 182,362 times the page
+    assert(decode(lastSegmentField(pageSeg ++ regionSeg, 0, 23L | (1L << 22))).isEmpty)
+    // halftone grid height 11 → 262,155 (bit 18 set): 23×262,155 cells,
+    // under the 16M-cell grid cap, but 23,832 times the page
+    assert(decode(lastSegmentField(hPage ++ hDict ++ hRegion, 22, 11L | (1L << 18))).isEmpty)
+  }
+
   // ---- JPX marker segments shorter than their fields ----------------------
 
   private def marker(code: Int, body: Array[Byte]): Array[Byte] =
