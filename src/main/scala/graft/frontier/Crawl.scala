@@ -5,8 +5,8 @@ import graft.functions.Scorers
 import graft.politeness.Robots
 import graft.scrape.Scrape
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Observation, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable.ArrayBuffer
@@ -25,16 +25,26 @@ import scala.concurrent.duration.Duration
   *     → salted repartition (hot-host skew defused BEFORE the scrape map)
   *     → fetch-join against the page store on url_hash
   *     → scrape map (HTML → spans + links)           [docs written]
-  *     → explode(links) → validity/nonsense filters → score
-  *     → candidates evaluated once → bloom pre-filter → seen ⋉ maybe-seen
+  *     → explode(links) → validity/nonsense filters
+  *     → first-wins per url_hash → bloom pre-filter → seen ⋉ maybe-seen
   *       (broadcast while the maybe-seen estimate is under the threshold:
   *       seen scanned, not exchanged) → left_anti(hits)  [dedup]
-  *     → first-wins per url_hash → frontier(t+1)     [snapshot committed]
+  *     → score → frontier(t+1)                       [snapshot committed]
   *     → seen-delta filter (t+1)                     [built after the commit]
   *
   * The driver launches each write as soon as its plan is built: the visits
   * write right after the robots gate, so admission runs while the scrape is
   * planned, and epoch t+1's filter while epoch t+1 plans its admission.
+  *
+  * Spark keeps compiled generated classes in a bounded cache keyed by the
+  * compiling thread's class loader and the source, so a warm crawl compiles
+  * nothing only if its plans are the same source every epoch and run under
+  * the same loaders. So no per-epoch value is a literal in a plan
+  * ([[Crawl.param]]), and a frame that several jobs read (the admission
+  * window, the scrape, the first-wins rows, the new entries) is evaluated
+  * once ([[Once]]) rather than cached: a `Dataset.cache` plans in a clone of
+  * the session, and when its stages run outside an SQL execution of the
+  * crawl's session, their tasks get the clone's class loader.
   *
   * Snapshot protocol (Iceberg-style semantics on plain parquet — SURVEY.md
   * §7.3): every epoch writes frontier/seen/docs/visits dirs, then an
@@ -43,7 +53,8 @@ import scala.concurrent.duration.Duration
   * the only commit record: snapshot tables are written without Hadoop's
   * `_SUCCESS` marker, each as a data-sized number of files (one per
   * [[Crawl.RowsPerFile]] queued rows, so a small epoch writes one file per
-  * table), and the lineage is an `Observation` on the docs write. The seen
+  * table), and the lineage is taken by the job that evaluates the scraped
+  * rows, the counts by the jobs that evaluate the frames they count. The seen
   * filter file (`bloom_<epoch>.bin` / `cuckoo_<epoch>.bin`) is no part of
   * the commit: it is a derived cache of the committed snapshots, may land
   * after the manifest, and is rebuilt on resume when it did not
@@ -131,7 +142,7 @@ object Crawl {
   private val frontierSchema = org.apache.spark.sql.Encoders.product[FrontierEntry].schema
   private val seenSchema = org.apache.spark.sql.types.StructType.fromDDL("url_hash BIGINT")
   private val domainStateSchema = org.apache.spark.sql.types.StructType
-    .fromDDL("host STRING, current_delay DOUBLE, fail_count INT")
+    .fromDDL("host STRING, current_delay DOUBLE, fail_count INT, aborted BOOLEAN")
   private val headStoreSchema = org.apache.spark.sql.types.StructType
     .fromDDL("url STRING, status STRING, head STRING, fetched_at BIGINT")
 
@@ -164,45 +175,39 @@ object Crawl {
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .parquet(path)
 
-  /** Per-partition lineage as one aggregate an `Observation` can carry, over
-    * (pid, fetch_ok, n_words): partition `pid` owns slots `4 * pid` (rows,
-    * words of fetched pages) and `4 * pid + 2` (rows, words of failed ones). */
-  private object LineageAgg extends Aggregator[(Int, Boolean, Int), Array[Long], Array[Long]] {
-    def zero: Array[Long] = Array.emptyLongArray
-    private def grow(a: Array[Long], n: Int) =
-      if (a.length >= n) a else java.util.Arrays.copyOf(a, n)
-    def reduce(b: Array[Long], in: (Int, Boolean, Int)): Array[Long] = {
-      val (pid, ok, words) = in
-      val a = grow(b, 4 * (pid + 1))
-      val i = 4 * pid + (if (ok) 0 else 2)
-      a(i) += 1; a(i + 1) += words; a
+  /** The lineage of one scrape partition `pid`, from its rows (`ok` and
+    * `words` the ordinals of fetch_ok and n_words): the rows and words of
+    * fetched pages, then of failed ones, empty sides omitted. */
+  private object Lineage {
+    def of(pid: Int, rows: Iterator[InternalRow], ok: Int, words: Int): Seq[PartitionLineage] = {
+      val slots = new Array[Long](4) // rows, words: fetched, then failed
+      rows.foreach { r =>
+        val i = if (r.getBoolean(ok)) 0 else 2
+        slots(i) += 1; slots(i + 1) += r.getInt(words)
+      }
+      Seq(true -> 0, false -> 2).collect {
+        case (fetchOk, i) if slots(i) > 0 => PartitionLineage(pid, fetchOk, slots(i), slots(i + 1))
+      }
     }
-    def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
-      val a = grow(x, y.length)
-      y.indices.foreach(i => a(i) += y(i)); a
-    }
-    def finish(b: Array[Long]): Array[Long] = b
-    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-
-    val column: Column = udaf(this, Encoders.tuple(Encoders.scalaInt, Encoders.scalaBoolean,
-      Encoders.scalaInt))(col("pid"), col("fetch_ok"), col("n_words"))
-
-    /** The observed slots as manifest rows: by pid, fetched before failed,
-      * empty sides omitted. */
-    def rows(slots: scala.collection.Seq[Long]): Seq[PartitionLineage] =
-      for {
-        pid <- 0 until slots.length / 4
-        ok <- Seq(true, false)
-        i = 4 * pid + (if (ok) 0 else 2) if slots(i) > 0
-      } yield PartitionLineage(pid, ok, slots(i), slots(i + 1))
   }
+
+  /** Rows of `once` for which `p` holds, counted by the job that evaluates
+    * it. */
+  private def countRows(once: Once)(p: InternalRow => Boolean): Long =
+    once.evaluate((_, rows) => rows.count(p).toLong)._2.sum
 
   // ---- the epoch plan's invariants, built once, not once per epoch ------------
 
   private val canFetchU = udf((rules: String, u: String) => Robots.canFetch(rules, u))
-  private val validU = udf((u: String) => u != null && Urls.isValidCrawlUrl(u) && !Urls.isNonsense(u))
+  private def validUrl(u: String): Boolean =
+    u != null && Urls.isValidCrawlUrl(u) && !Urls.isNonsense(u)
+  private val validU = udf(validUrl _)
   private val hostU = udf((u: String) => Urls.host(u))
+
+  /** `v` as a column whose generated code does not spell the value out: an
+    * int literal is inlined into the generated source, so every epoch
+    * number would compile its own copy of each stage that carries one. */
+  private def param(v: Int): Column = udf(() => v).apply()
 
   /** The scrape map's rows: (url_hash, url, host, depth, score, path, html,
     * status_code) in, and the same keys with (fetch_ok, status_code, spans,
@@ -281,33 +286,49 @@ object Crawl {
     * the seeder's sequential-union-with-shared-set, async_url_seeder.py:
     * 328-359). Seed path = 4-hex rank in the deduped, url-sorted list.
     * Returns the entries and their count.
+    *
+    * Past reading the seeds, the pass is plain RDD operations (a reduce by
+    * key, a range-partitioned sort), which generate no code: the SQL form
+    * of the same pass (a window, a range sort and its sampling job, the
+    * tuple deserializer) compiled about twenty classes for every crawl.
+    * Strings compare as Spark's do, by their UTF-8 bytes.
     */
   def seedFrontier(spark: SparkSession, seeds: DataFrame): (Dataset[FrontierEntry], Long) = {
     import spark.implicits._
-    val canon = udf((u: String) => Urls.canonicalizeDeep(u, ""))
-    val srcRank = when(col("source") === "sitemap", 0).otherwise(1)
-    val base = seeds
-      .withColumn("curl", canon(col("url")))
-      .where(validU(col("curl")))
-      .withColumn("url_hash", xxhash64(col("curl")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("url_hash").orderBy(srcRank, col("url"))))
-      .where(col("rk") === 1)
+    // (url_hash, (canonical url, source rank, raw url)) of every valid seed
+    val valid = seeds.select(col("url"), col("source")).as[(String, String)].rdd.flatMap {
+      case (url, source) =>
+        val curl = Urls.canonicalizeDeep(url, "")
+        if (!validUrl(curl)) None
+        else Some(Urls.urlHash(curl) -> ((curl, if (source == "sitemap") 0 else 1, url)))
+    }
+    val firstWins = valid.reduceByKey { (a, b) =>
+      val c = Integer.compare(a._2, b._2)
+      if (c < 0 || (c == 0 && Utf8Order.compare(a._3, b._3) <= 0)) a else b
+    }
     // seed ordering: dense url-sorted rank via the two-pass scheme (range
     // partition on the sort key, then per-partition index + partition-offset
     // prefix sum, as `zipWithIndex` over a sorted RDD does) — a global dense
-    // rank with NO single-partition window, deterministic because the sort
-    // key is unique after the first-wins dedup. The size pass also yields the
+    // rank with NO single-partition pass, deterministic because the sort key
+    // is unique after the first-wins dedup. The size pass also yields the
     // seed count.
-    val sorted = base.select(col("url_hash"), col("curl")).orderBy("curl").as[(Long, String)].rdd
+    val sorted = firstWins.map { case (h, (curl, _, _)) => (curl, h) }
+      .sortBy(_._1)(Utf8Order, scala.reflect.classTag[String])
     val offsets = sorted.mapPartitions(it => Iterator(it.size.toLong)).collect().scanLeft(0L)(_ + _)
     val entries = sorted.mapPartitionsWithIndex { (p, it) =>
-      it.zipWithIndex.map { case ((h, u), i) =>
+      it.zipWithIndex.map { case ((u, h), i) =>
         FrontierEntry(h, u, Urls.host(u), 0, 0.5, 0.0, "", f"${offsets(p) + i}%04x",
           0, 0, 0, CrawlStatus.Queued)
       }
     }.toDS()
     (entries, offsets.last)
+  }
+
+  /** Strings in the order Spark SQL sorts them: by their UTF-8 bytes. */
+  private object Utf8Order extends Ordering[String] {
+    def compare(a: String, b: String): Int =
+      org.apache.spark.unsafe.types.UTF8String.fromString(a)
+        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
   }
 
   // ---- the epoch loop -------------------------------------------------------
@@ -332,7 +353,7 @@ object Crawl {
       // seed count it returns. Whether they succeed or not, all three are
       // joined and the cache is freed before the manifest or the error.
       val (seeded, seedCount) = seedFrontier(spark, seeds)
-      val f0 = seeded.cache()
+      val f0 = Once.later(seeded.toDF())
       val jobs = new Jobs
       try {
         val parts = snapshotParts(seedCount, maxParts)
@@ -341,16 +362,19 @@ object Crawl {
         // Readers union deltas from the last compaction point; nothing ever
         // rewrites history (O(delta) commit I/O per epoch, not O(seen)). No
         // distinct: url_hash is unique after seedFrontier's first-wins dedup.
-        val s0 = f0.select("url_hash")
+        val s0 = f0.frame.select("url_hash")
         Seq(
-          jobs.launch(writeSnapshot(f0, parts, dir(runDir, 0, "frontier"))),
+          jobs.launch(writeSnapshot(f0.frame, parts, dir(runDir, 0, "frontier"))),
           jobs.launch(writeSnapshot(s0, parts, dir(runDir, 0, "seen"))),
-          jobs.launch(store.save(store.build(spark, s0, "url_hash", seedCount),
+          // no seed at all gets the family's empty filter (a build over no
+          // rows yields none), as an empty delta does
+          jobs.launch(store.save(
+            if (seedCount == 0) store.empty() else store.build(spark, s0, "url_hash", seedCount),
             store.path(runDir, 0)))
         ).foreach(Await.result(_, Duration.Inf))
       } finally {
         jobs.awaitAll()
-        f0.unpersist()
+        f0.release()
       }
       EpochManifest.commit(runDir, EpochManifest(0, cfg.strategy, seenBase = 0,
         seenTotal = seedCount, frontierQueued = Some(seedCount), kind = Some("bootstrap"),
@@ -396,10 +420,9 @@ object Crawl {
         val t0 = System.currentTimeMillis()
         val frontier = spark.read.schema(frontierSchema).parquet(dir(runDir, epoch, "frontier"))
         val seen = readSeen(spark, runDir, seenBase, epoch)
-        val domainStatePath = dir(runDir, epoch, "domain_state")
         val domainState: Option[DataFrame] =
-          if (cfg.dynamicPoliteness && Files.isDirectory(Paths.get(domainStatePath)))
-            Some(spark.read.parquet(domainStatePath))
+          if (cfg.dynamicPoliteness)
+            readIfPresent(spark, runDir, epoch, "domain_state", domainStateSchema)
           else None
         val queued = frontier.where(col("status") === CrawlStatus.Queued)
         if (queuedCount < 0) queuedCount = queued.count()
@@ -419,30 +442,33 @@ object Crawl {
           // write runs on into the dirs a resumed run rewrites.
           val jobs = new Jobs
           val held = ArrayBuffer.empty[() => Unit]
-          def hold[T](ds: Dataset[T]): Dataset[T] = { held += (() => ds.unpersist()); ds.cache() }
           // what the seen filter build reads, the seen probe's broadcast
           // included (its tasks serialize the probe's plan): freed once, when
           // the build ends, or with the rest if the epoch fails first
           val filterHeld = ArrayBuffer.empty[() => Unit]
-          def holdForFilter[T](ds: Dataset[T]): Dataset[T] = {
-            filterHeld += (() => ds.unpersist()); ds.cache()
+          def hold(df: DataFrame, forFilter: Boolean = false): Once = {
+            val once = Once.later(df)
+            (if (forFilter) filterHeld else held) += (() => once.release())
+            once
           }
           def freeFilterHeld(): Unit = { filterHeld.foreach(_()); filterHeld.clear() }
           try {
             // ---- admission: politeness budget + fairness aging + strategy order
-            val aged = queued.withColumn("wait", lit(epoch) - col("enqueue_epoch"))
+            val epochCol = param(epoch)
+            val nextEpochCol = param(epoch + 1)
+            val aged = queued.withColumn("wait", epochCol - col("enqueue_epoch"))
               .withColumn("priority",
                 when(col("wait") > FairnessEpochs, -col("wait").cast("double"))
                   .otherwise(col("retry_count").cast("double")))
             val ord = strategyOrder(cfg.strategy)
-            val ranked = aged.withColumn("host_rank",
+            // partitioned by hand: AQE may merge the partitions of an
+            // exchange it plans itself, and every table this epoch writes
+            // takes its file count from the partitions of what it reads
+            val ranked = aged.repartition(maxParts, col("host")).withColumn("host_rank",
               row_number().over(Window.partitionBy("host").orderBy(ord: _*)))
             // effective budget: static cap, tightened per host by evolved
             // politeness state (throttled hosts shrink, aborted hosts go to 0)
-            // cached: the window runs once, and both the admitted and the
-            // deferred rows are filters over it (so are the admitted keys the
-            // seen filter build may read)
-            val budgeted = holdForFilter(domainState match {
+            val withBudget = domainState match {
               case Some(st) =>
                 val perHost = graft.politeness.DomainState
                   .hostBudget(st, cfg.epochSeconds)
@@ -452,9 +478,22 @@ object Crawl {
                     least(lit(cfg.hostBudget), coalesce(col("state_budget"), lit(cfg.hostBudget))))
                   .drop("state_budget")
               case None => ranked.withColumn("eff_budget", lit(cfg.hostBudget))
-            })
+            }
+            // ---- robots gate: tiny dimension → broadcast join, fail-open; the
+            // crawler is robots.txt's `*` agent (canFetch's default). Only an
+            // in-budget row is checked; the rest pass and are deferred.
+            // Evaluated once: both the admitted and the deferred rows are
+            // filters over it (so are the admitted keys the seen filter build
+            // may read)
+            val inBudgetCol = col("host_rank") <= col("eff_budget")
+            val budgetedOnce = hold(withBudget
+              .join(broadcast(robots.select(col("host"), col("rules"))), Seq("host"), "left")
+              .withColumn("robots_ok",
+                !inBudgetCol || coalesce(canFetchU(col("rules"), col("url")), lit(true)))
+              .drop("rules"), forFilter = true)
+            val budgeted = budgetedOnce.frame
             val rankCols = Seq("host_rank", "wait", "eff_budget")
-            val inBudget = budgeted.where(col("host_rank") <= col("eff_budget")).drop(rankCols: _*)
+            val inBudget = budgeted.where(inBudgetCol).drop(rankCols: _*)
             // global capacity cut ONLY when `maxPages` binds this epoch: with the
             // default (uncapped) config every epoch must stay a partitioned plan —
             // no global TakeOrdered over the admitted set. A remaining capacity
@@ -463,43 +502,44 @@ object Crawl {
             // skipped, never silently clamped.
             val capacity = cfg.maxPages - total(_.fetched)
             val capped = capacity < Int.MaxValue
-            val admitted =
-              if (capped) holdForFilter(inBudget.orderBy(ord: _*).limit(capacity.toInt))
-              else inBudget
+            val cappedOnce =
+              Option.when(capped)(hold(inBudget.orderBy(ord: _*).limit(capacity.toInt), forFilter = true))
+            val admitted = cappedOnce.fold(inBudget)(_.frame)
 
             // deferred = everything queued but not admitted. Uncapped, that is the
             // over-budget side of the window; a binding cap also cuts in-budget
             // rows, which only the anti-join against the admitted set recovers
             // (neither kind may be lost)
             val deferred =
-              if (capped) budgeted.drop(rankCols: _*)
+              if (capped) budgeted.drop(rankCols :+ "robots_ok": _*)
                 .join(admitted.select("url_hash"), Seq("url_hash"), "left_anti")
-              else budgeted.where(col("host_rank") > col("eff_budget")).drop(rankCols: _*)
-
-            // ---- robots gate: tiny dimension → broadcast join, fail-open; the
-            // crawler is robots.txt's `*` agent (canFetch's default)
-            val gated = admitted.join(
-                broadcast(robots.select(col("host"), col("rules"))), Seq("host"), "left")
-              .withColumn("robots_ok", coalesce(canFetchU(col("rules"), col("url")), lit(true)))
+              else budgeted.where(!inBudgetCol).drop(rankCols :+ "robots_ok": _*)
 
             // ---- the visits write launches as soon as the gate is planned: its
-            // job runs the robots broadcast, the admission window's exchange and
-            // the budgeted cache while this thread plans the scrape. Visits
-            // carry the full sort key (priority, score, depth, path) but NO
-            // materialized rank: visit order is fully determined by the key, so
-            // `Crawl.visits` derives ranks at read time — the epoch loop never
-            // runs a partitionless global-order window. The robots-blocked
-            // count is observed on this write.
-            val blockedObs = Observation()
+            // future evaluates the admission window, the robots broadcast and
+            // the gate while this thread plans the scrape, and counts the
+            // robots-blocked rows there. Visits carry the full sort key
+            // (priority, score, depth, path) but NO materialized rank: visit
+            // order is fully determined by the key, so `Crawl.visits` derives
+            // ranks at read time — the epoch loop never runs a partitionless
+            // global-order window.
             val fVisits = jobs.launch {
-              writeSnapshot(gated.observe(blockedObs, count(when(!col("robots_ok"), true)).as("n"))
-                .where(col("robots_ok"))
+              val blocked = cappedOnce match {
+                case Some(once) =>
+                  val ok = admitted.schema.fieldIndex("robots_ok")
+                  countRows(once)(!_.getBoolean(ok))
+                case None =>
+                  val Seq(rank, budget, ok) =
+                    Seq("host_rank", "eff_budget", "robots_ok").map(budgeted.schema.fieldIndex)
+                  countRows(budgetedOnce)(r => r.getInt(rank) <= r.getInt(budget) && !r.getBoolean(ok))
+              }
+              writeSnapshot(admitted.where(col("robots_ok"))
                 .select(col("url"), col("depth"), col("score"), col("priority"),
-                  col("path"), lit(epoch).as("epoch")),
+                  col("path"), epochCol.as("epoch")),
                 parts, dir(runDir, epoch, "visits"))
-              blockedObs.get("n").asInstanceOf[Long]
+              blocked
             }
-            val allowed = gated.where(col("robots_ok")).drop("rules", "robots_ok")
+            val allowed = admitted.where(col("robots_ok")).drop("robots_ok")
 
             // ---- fetch: salted repartition defuses hot-host skew BEFORE the
             // (CPU-heavy) scrape map; the join key stays url_hash so the page
@@ -510,16 +550,13 @@ object Crawl {
               pages.select(col("url_hash"), col("html"), col("status_code")),
               Seq("url_hash"), "left")
 
-            val scraped = hold(fetched
+            val scrapedOnce = hold(fetched
               .select("url_hash", "url", "host", "depth", "score", "path", "html", "status_code")
               .as(scrapeInEnc)
               .map(scrapeRow)(scrapeOutEnc)
               .toDF("url_hash", "url", "host", "depth", "score", "path",
-                "fetch_ok", "status_code", "spans", "links", "title", "n_words")
-              // the lineage pid: the index of the scrape map's own partition,
-              // fixed in the cache whichever job (a coalesced write included)
-              // computes it
-              .withColumn("pid", spark_partition_id()))
+                "fetch_ok", "status_code", "spans", "links", "title", "n_words"))
+            val scraped = scrapedOnce.frame
 
             // ---- phase A: ALL consumers of the scraped cache — docs write,
             // politeness evolution, link enrichment — launch as CONCURRENT Spark
@@ -528,18 +565,18 @@ object Crawl {
             // (different partitions in parallel, each computed exactly once);
             // they write disjoint outputs, so overlapping hides the fixed
             // per-job latency that dominates small epochs and costs nothing on
-            // a real cluster (concurrent jobs share the scheduler). No count or
-            // collect job runs: the lineage is observed on the docs write
-            // (before its fetch_ok filter, so failed pages count too), and
-            // fetched/failed are its rows summed.
-            val lineageObs = Observation()
+            // a real cluster (concurrent jobs share the scheduler).
+            // The docs write's future takes the lineage as it evaluates the
+            // scraped rows: each scrape partition's rows and words, fetched
+            // and failed.
             val fDocs = jobs.launch {
-              writeSnapshot(scraped.observe(lineageObs, LineageAgg.column.as("slots"))
-                .where(col("fetch_ok"))
+              val Seq(ok, words) = Seq("fetch_ok", "n_words").map(scraped.schema.fieldIndex)
+              val lineage = scrapedOnce.evaluate((pid, rows) => Lineage.of(pid, rows, ok, words))._2
+              writeSnapshot(scraped.where(col("fetch_ok"))
                 .select(col("url").as("doc_id"), col("spans"), col("links"),
-                  col("title"), col("n_words"), lit(epoch).as("epoch")),
+                  col("title"), col("n_words"), epochCol.as("epoch")),
                 parts, dir(runDir, epoch, "docs"))
-              LineageAgg.rows(lineageObs.get("slots").asInstanceOf[scala.collection.Seq[Long]])
+              lineage.flatten
             }
             // politeness state evolution (deterministic backoff per epoch)
             val fState = if (!cfg.dynamicPoliteness) Future.successful(()) else jobs.launch {
@@ -621,12 +658,17 @@ object Crawl {
             // dedup: incremental filter vector pre-filter + exact anti-join, then
             // first-wins per hash (no full-history filter rebuild — the vector
             // holds one delta-sized filter per epoch since the last compaction).
-            // The previous epoch's filter, built after its commit, is awaited here.
-            val seenProbe = SeenFilters.probe(spark, candidates, seen, "url_hash", awaitFilters())
+            // The candidates are evaluated now, as the probe's own rows: it
+            // plans its seen semi-join by their size. The previous epoch's
+            // filter, built after its commit, is awaited here.
+            val (evaluated, _) = hold(candidates, forFilter = true).evaluate((_, _) => ())
+            val seenProbe = SeenFilters.probe(spark, evaluated, seen, "url_hash", awaitFilters())
             filterHeld += (() => seenProbe.release())
-            val firstWins = seenProbe.fresh.withColumn("rk", row_number().over(
-                Window.partitionBy("url_hash")
-                  .orderBy(col("parent_path"), col("link_index"))))
+            // partitioned by hand, as the admission window is, so that the new
+            // entries keep the shuffle partitions a snapshot file count needs
+            val firstWins = seenProbe.fresh.repartition(maxParts, col("url_hash"))
+              .withColumn("rk", row_number().over(
+                Window.partitionBy("url_hash").orderBy(col("parent_path"), col("link_index"))))
               .where(col("rk") === 1).drop("rk")
 
             // scoring: custom scorer > keyword relevance > neutral 0.5
@@ -638,8 +680,9 @@ object Crawl {
                 Scorers.keywordRelevance(col("url"), cfg.keywords)
               case None => lit(0.5)
             }
-            // cached: reused by frontier write, seen delta, delta filter
-            val newEntries = holdForFilter(firstWins
+            // evaluated once: read by the frontier write, the seen delta and
+            // the delta filter
+            val newOnce = hold(firstWins
               .withColumn("score", scoreCol)
               .where(col("score") >= cfg.scoreThreshold)
               .select(
@@ -647,21 +690,22 @@ object Crawl {
                 (col("depth") + 1).as("depth"), col("score"),
                 lit(0.0).as("priority"), col("parent"),
                 concat(col("parent_path"), format_string("%04x", col("link_index"))).as("path"),
-                lit(epoch + 1).as("enqueue_epoch"), lit(0).as("retry_count"),
-                lit(epoch + 1).as("epoch"), lit(CrawlStatus.Queued).as("status")))
+                nextEpochCol.as("enqueue_epoch"), lit(0).as("retry_count"),
+                nextEpochCol.as("epoch"), lit(CrawlStatus.Queued).as("status")), forFilter = true)
+            val newEntries = newOnce.frame
 
             // ---- phase B: the frontier(t+1) write and the seen commit launch
             // CONCURRENTLY (with phase A still in flight). Both consume the same
-            // cached newEntries plan; the BlockManager's per-partition cache locks
-            // serialize materialization, so the plan is computed once no matter
+            // evaluated newEntries; the BlockManager's per-partition block locks
+            // serialize its computation, so the plan is computed once no matter
             // which job wins — no duplicated expansion work at any scale. The
-            // new-entry count is observed on the seen write. Reference adds to
-            // seen on DISCOVERY, bfs_strategy.py:153.
+            // seen commit's future counts the new entries as it evaluates them.
+            // Reference adds to seen on DISCOVERY, bfs_strategy.py:153.
             val nextEpoch = epoch + 1
             val fFrontier = jobs.launch {
               writeSnapshot(deferred
                 .select(newEntries.columns.toSeq.map(col): _*)
-                .withColumn("epoch", lit(nextEpoch))
+                .withColumn("epoch", nextEpochCol)
                 .unionByName(newEntries),
                 parts, dir(runDir, nextEpoch, "frontier"))
             }
@@ -672,15 +716,15 @@ object Crawl {
             // full set + one right-sized bloom, bounding reader fan-in and the
             // bloom vector (the ONLY full-set pass, amortized 1/K per epoch).
             val compacting = nextEpoch - seenBase >= cfg.seenCompactEvery
-            val newObs = Observation()
             val fNew = jobs.launch {
-              val delta = newEntries.select("url_hash").observe(newObs, count(lit(1)).as("n"))
+              val n = countRows(newOnce)(_ => true)
+              val delta = newEntries.select("url_hash")
               val out = if (compacting) seen.unionByName(delta) else delta
               writeSnapshot(out, parts, dir(runDir, nextEpoch, "seen"))
-              newObs.get("n").asInstanceOf[Long]
+              n
             }
             // the filter needs the exact delta count for sizing → chains on the
-            // seen write that observes it (and, when compacting, re-reads it).
+            // seen write that counts it (and, when compacting, re-reads it).
             // It is not part of the commit: the manifest below does not wait
             // for it, and a missing filter file is rebuilt on resume. The
             // counters and the vector it reads are this epoch's, taken now

@@ -2,15 +2,8 @@ package graft.frontier
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession, classic}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Statistics}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.storage.StorageLevel
-import org.apache.spark.unsafe.Platform
 import org.apache.spark.util.sketch.BloomFilter
 import java.io.BufferedInputStream
 import java.nio.file.{Files, Path, Paths}
@@ -86,95 +79,19 @@ object SeenFilters {
     * anti-join against the hits needs no separate definitely-new branch.
     *
     * Both the maybe-seen broadcast and the anti-join's probe side read the
-    * candidates, so their plan is evaluated once per probe: its rows are
-    * persisted on first read and both consumers scan those blocks.
+    * candidates, so their plan is evaluated once per probe ([[Once.now]]):
+    * its rows are persisted on first read and both consumers scan those
+    * blocks. A `Dataset.persist` would pin the rows in the CacheManager
+    * until an explicit unpersist; these blocks also go once the frame is
+    * unreachable.
     */
   def probe(spark: SparkSession, candidates: DataFrame, seen: DataFrame,
             hashCol: String, filters: Seq[SeenDelta]): SeenProbe = {
-    val (once, rows) = evaluatedOnce(candidates)
-    val (_, maybeSeen, bc) = splitTracked(spark, once, hashCol, filters)
+    val once = Once.now(candidates)
+    val (_, maybeSeen, bc) = splitTracked(spark, once.frame, hashCol, filters)
     val hits = seen.join(maybeSeen.select(hashCol), Seq(hashCol), "left_semi")
-    SeenProbe(once.join(hits, Seq(hashCol), "left_anti"), bc, rows)
+    SeenProbe(once.frame.join(hits, Seq(hashCol), "left_anti"), bc, once.pages)
   }
-
-  /** `df` evaluated once, and the persisted rows if that took any. A plan
-    * that optimizes to a local relation was already evaluated on the driver
-    * and is reused as it is. Any other plan is computed on its first read and
-    * persisted as [[RowPages]] (memory, spilling to disk); every later read
-    * scans the pages. The lineage stays, so a lost block is recomputed from
-    * `df`'s plan. The frame carries `df`'s size estimate, read after
-    * `toRdd`: under AQE that call has already materialized `df`'s cached and
-    * shuffled inputs, so the estimate sees their real sizes (in `Crawl.run`,
-    * the scraped cache's). A `Dataset.persist` would pin the rows in the
-    * CacheManager until an explicit unpersist; these blocks also go once the
-    * frame is unreachable.
-    */
-  private def evaluatedOnce(df: DataFrame): (DataFrame, Option[RDD[Array[Byte]]]) = {
-    val qe = df.queryExecution
-    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
-    def over(plan: LogicalPlan) = new classic.Dataset[Row](session, plan, Encoders.row(df.schema))
-    qe.optimizedPlan match {
-      case local: LocalRelation => (over(local), None)
-      case opt =>
-        val schema = df.schema
-        val pages = qe.toRdd.mapPartitions(RowPages.pack(schema))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val rows = pages.mapPartitions(RowPages.unpack(schema.length))
-        val est = Statistics(opt.stats.sizeInBytes, opt.stats.rowCount)
-        (over(LogicalRDD(opt.output, rows)(session, Some(est))), Some(pages))
-    }
-  }
-}
-
-/** A partition's rows as `UnsafeRow` bytes in a few large byte-array pages,
-  * each row an 8-byte length and its bytes. The block manager then stores
-  * one object per page instead of one per row: persisting deserialized rows
-  * costs about as much CPU as recomputing a canonicalize + hash plan, and
-  * pages cost a copy.
-  */
-private object RowPages {
-  private val PageBytes = 32 << 20
-
-  def pack(schema: StructType)(rows: Iterator[InternalRow]): Iterator[Array[Byte]] = {
-    lazy val toUnsafe = UnsafeProjection.create(schema)
-    new Iterator[Array[Byte]] {
-      def hasNext: Boolean = rows.hasNext
-      def next(): Array[Byte] = {
-        var page = new Array[Byte](1 << 16)
-        var used = 0
-        while (rows.hasNext && used < PageBytes) {
-          val row = rows.next() match {
-            case u: UnsafeRow => u
-            case other => toUnsafe(other)
-          }
-          val n = row.getSizeInBytes
-          if (used + 8 + n > page.length)
-            page = java.util.Arrays.copyOf(page, math.max(2 * page.length, used + 8 + n))
-          Platform.putLong(page, Platform.BYTE_ARRAY_OFFSET + used, n)
-          row.writeToMemory(page, Platform.BYTE_ARRAY_OFFSET + used + 8)
-          used += 8 + n
-        }
-        java.util.Arrays.copyOf(page, used)
-      }
-    }
-  }
-
-  /** The rows of `pages`; the returned row is reused from one call of
-    * `next` to the next, as Spark's own scans do. */
-  def unpack(numFields: Int)(pages: Iterator[Array[Byte]]): Iterator[InternalRow] =
-    pages.flatMap { page =>
-      val row = new UnsafeRow(numFields)
-      var off = 0
-      new Iterator[InternalRow] {
-        def hasNext: Boolean = off < page.length
-        def next(): InternalRow = {
-          val n = Platform.getLong(page, Platform.BYTE_ARRAY_OFFSET + off).toInt
-          row.pointTo(page, Platform.BYTE_ARRAY_OFFSET + off + 8, n)
-          off += 8 + n
-          row
-        }
-      }
-    }
 }
 
 /** One seen probe: the candidates not in the seen set, the filter-vector

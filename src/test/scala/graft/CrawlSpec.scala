@@ -952,6 +952,42 @@ class CrawlSpec extends AnyFunSuite {
     }
   }
 
+  test("no valid seed: the bootstrap commits an empty frontier and nothing is fetched") {
+    // every seed is nonsense or has no host: none passes validation
+    val badSeeds = Seq(SeedRec("http://site0.com/robots.txt", "cc"), SeedRec("not a url", "sitemap"))
+      .toDF()
+    for (family <- Seq("bloom", "cuckoo")) {
+      val runDir = freshDir(s"no-seed-$family")
+      val s = Crawl.run(spark, badSeeds, pagesDF, robotsDF, runDir,
+        CrawlConfig(strategy = "bfs", seenFilter = family))
+      assert(s == CrawlSummary(0, 0, 0, 0, 0), family)
+      assert(Crawl.lastCommittedEpoch(runDir) == 0, family)
+      assert(manifest(runDir, 0).frontierQueued.contains(0L), family)
+      assert(Files.exists(Paths.get(f"$runDir/${family}_0000.bin")), family)
+    }
+  }
+
+  test("a warm crawl compiles almost no generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // crawl_deep's shape: 8 hosts, a page store in parquet, bfs, hostBudget
+    // 8, two epochs. A crawl's generated classes must fit Spark's cache of
+    // compiled classes, so the third identical crawl finds them there
+    val deep = Synth.SiteCfg(seed = 1L, nHosts = 8, cats = 3, subs = 2, prods = 5)
+    val store = freshDir("deep-pages")
+    spark.range(Synth.pageCount(deep)).map(i => Synth.pageRecAt(deep, i))
+      .write.mode("overwrite").parquet(store)
+    val deepPages = spark.read.parquet(store)
+    val cfg = CrawlConfig(strategy = "bfs", hostBudget = 8, maxEpochs = 2)
+    val compiles = (1 to 3).map { i =>
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val s = Crawl.run(spark, Synth.seeds(deep).toDF(), deepPages, Synth.robots(deep).toDF(),
+        freshDir(s"warm-$i"), cfg)
+      assert(s.epochs == 2 && s.fetched > 0)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    assert(compiles(2) <= 20, s"compilations per crawl: ${compiles.mkString(", ")}")
+  }
+
   test("domain state: idle hosts carry delay/fail_count forward (no resurrection)") {
     import graft.politeness.DomainState
     val states = Seq(
