@@ -26,10 +26,10 @@ import scala.concurrent.duration.Duration
   *     → fetch-join against the page store on url_hash
   *     → scrape map (HTML → spans + links)           [docs written]
   *     → explode(links) → validity/nonsense filters
-  *     → first-wins per url_hash → bloom pre-filter → seen ⋉ maybe-seen
+  *     → candidates evaluated once → bloom pre-filter → seen ⋉ maybe-seen
   *       (broadcast while the maybe-seen estimate is under the threshold:
   *       seen scanned, not exchanged) → left_anti(hits)  [dedup]
-  *     → score → frontier(t+1)                       [snapshot committed]
+  *     → first-wins per url_hash → score → frontier(t+1) [snapshot committed]
   *     → seen-delta filter (t+1)                     [built after the commit]
   *
   * The driver launches each write as soon as its plan is built: the visits
@@ -41,7 +41,7 @@ import scala.concurrent.duration.Duration
   * nothing only if its plans are the same source every epoch and run under
   * the same loaders. So no per-epoch value is a literal in a plan
   * ([[Crawl.param]]), and a frame that several jobs read (the admission
-  * window, the scrape, the first-wins rows, the new entries) is evaluated
+  * window, the scrape, the candidates, the new entries) is evaluated
   * once ([[Once]]) rather than cached: a `Dataset.cache` plans in a clone of
   * the session, and when its stages run outside an SQL execution of the
   * crawl's session, their tasks get the clone's class loader.
@@ -168,8 +168,8 @@ object Crawl {
 
   /** The one snapshot writer: `parts` files, overwriting `path`, and no
     * `_SUCCESS` marker (the manifest is the commit record; nothing reads the
-    * markers). The coalesce merges the write's tasks only: a cached plan
-    * upstream keeps its own partitioning, whichever job computes it. */
+    * markers). The coalesce merges the write's tasks only: an evaluated
+    * frame upstream keeps its own partitioning, whichever job computes it. */
   private def writeSnapshot(df: Dataset[_], parts: Int, path: String): Unit =
     df.coalesce(parts).write.mode(SaveMode.Overwrite)
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
@@ -348,10 +348,11 @@ object Crawl {
 
     val start = lastCommittedEpoch(runDir)
     if (start < 0) {
-      // one seedFrontier pass, cached: the frontier write, seen/epoch=0 and
-      // its filter read the same cache as concurrent jobs, each sized by the
-      // seed count it returns. Whether they succeed or not, all three are
-      // joined and the cache is freed before the manifest or the error.
+      // one seedFrontier pass, evaluated once: the frontier write,
+      // seen/epoch=0 and its filter read the same rows as concurrent jobs,
+      // each sized by the seed count it returns. Whether they succeed or not,
+      // all three are joined and the rows are freed before the manifest or
+      // the error.
       val (seeded, seedCount) = seedFrontier(spark, seeds)
       val f0 = Once.later(seeded.toDF())
       val jobs = new Jobs
@@ -432,7 +433,7 @@ object Crawl {
           // every snapshot table this epoch writes: one file per RowsPerFile
           // queued rows
           val parts = snapshotParts(queuedCount, maxParts)
-          // every future the epoch launches and every cache and probe it holds
+          // every future the epoch launches and every frame and probe it holds
           // (one of each per epoch would otherwise accumulate for the crawl's
           // lifetime). On success all futures but the seen filter's are joined
           // before the commit; what the epoch holds is freed after it, and
@@ -558,10 +559,10 @@ object Crawl {
                 "fetch_ok", "status_code", "spans", "links", "title", "n_words"))
             val scraped = scrapedOnce.frame
 
-            // ---- phase A: ALL consumers of the scraped cache — docs write,
+            // ---- phase A: ALL consumers of the scraped rows — docs write,
             // politeness evolution, link enrichment — launch as CONCURRENT Spark
             // jobs, beside the visits write. The BlockManager's per-partition
-            // cache locks make the concurrent jobs co-materialize the cache
+            // block locks make the concurrent jobs co-materialize the rows
             // (different partitions in parallel, each computed exactly once);
             // they write disjoint outputs, so overlapping hides the fixed
             // per-job latency that dominates small epochs and costs nothing on
@@ -591,7 +592,7 @@ object Crawl {
             }
 
             // ---- link-head enrichment (config-gated; a phase-A consumer of the
-            // scraped cache writing disjoint outputs). All joins inside
+            // scraped rows writing disjoint outputs). All joins inside
             // LinkPreview.enrich are url-keyed equi-joins; the head store
             // commit is O(delta) (only stale/missing rows rewrite).
             val fPreview = cfg.linkPreview match {

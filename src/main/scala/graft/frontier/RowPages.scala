@@ -52,10 +52,10 @@ private[frontier] object Once {
 
   /** `df` evaluated once, with its query stages run now. A plan that
     * optimizes to a local relation was already evaluated on the driver, and
-    * one that scans an RDD's rows (as an evaluated frame does) is read as it
-    * is. Any other plan runs its AQE input stages in this
-    * call (`toRdd`), so the frame carries a size estimate that sees their
-    * real sizes (a cached input's included). */
+    * one that scans an RDD's rows (as an evaluated frame does) is read as
+    * it is. Any other plan runs its AQE input stages in this call (`toRdd`),
+    * so the frame carries a size estimate that sees their real sizes (a
+    * cached input's included). */
   def now(df: DataFrame): Once = {
     val qe = df.queryExecution
     qe.optimizedPlan match {
