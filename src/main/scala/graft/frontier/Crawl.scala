@@ -4,10 +4,11 @@ import graft.core._
 import graft.functions.Scorers
 import graft.politeness.Robots
 import graft.scrape.Scrape
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -34,7 +35,15 @@ import scala.concurrent.duration.Duration
   *
   * The driver launches each write as soon as its plan is built: the visits
   * write right after the robots gate, so admission runs while the scrape is
-  * planned, and epoch t+1's filter while epoch t+1 plans its admission.
+  * planned, and epoch t's seen filter while epoch t+1 plans its admission.
+  * The loop keeps no counter of its own: the head manifest gives each epoch
+  * its number, queued count, seen total and seen base, and the one other
+  * state is the filter vector the last filter build yields. Everything an
+  * epoch starts (its jobs, its evaluated frames, the filter vector's
+  * broadcast) belongs to one scope. The scope closes when the epoch's filter
+  * build ends, just after the commit, or before a failure propagates;
+  * closing waits for every job first, so no job runs on into the dirs a
+  * resumed run rewrites.
   *
   * Spark keeps compiled generated classes in a bounded cache keyed by the
   * compiling thread's class loader and the source, so a warm crawl compiles
@@ -139,12 +148,12 @@ object Crawl {
 
   // explicit schemas for the snapshot readbacks: skips footer-based schema
   // inference in the planning phase of every epoch
-  private val frontierSchema = org.apache.spark.sql.Encoders.product[FrontierEntry].schema
-  private val seenSchema = org.apache.spark.sql.types.StructType.fromDDL("url_hash BIGINT")
-  private val domainStateSchema = org.apache.spark.sql.types.StructType
-    .fromDDL("host STRING, current_delay DOUBLE, fail_count INT, aborted BOOLEAN")
-  private val headStoreSchema = org.apache.spark.sql.types.StructType
-    .fromDDL("url STRING, status STRING, head STRING, fetched_at BIGINT")
+  private val frontierSchema = Encoders.product[FrontierEntry].schema
+  private val seenSchema = StructType.fromDDL("url_hash BIGINT")
+  private val domainStateSchema =
+    StructType.fromDDL("host STRING, current_delay DOUBLE, fail_count INT, aborted BOOLEAN")
+  private val headStoreSchema =
+    StructType.fromDDL("url STRING, status STRING, head STRING, fetched_at BIGINT")
 
   /** Queued rows per snapshot file. A docs row (spans, links, title) is
     * ~0.1-0.6 KB of snappy parquet on the synthetic sites, so ~10,000 rows
@@ -234,21 +243,35 @@ object Crawl {
     (h, u, host, d, sc, p, ok, code, doc.spans, doc.links, doc.title, doc.nWords)
   }
 
-  /** The concurrent jobs of a bootstrap or an epoch. `awaitAll` waits for
-    * every job launched, failed or not, so that a failure propagates only
-    * once no job runs on into the dirs a resumed run rewrites. */
-  private final class Jobs(implicit ec: ExecutionContext) {
+  /** Everything a bootstrap or an epoch starts: the jobs it launches and
+    * what it holds until they end (evaluated frames, broadcasts). `close()`
+    * waits for every job launched, failed or not, then frees everything
+    * once, so that a failure propagates only once no job runs on into the
+    * dirs a resumed run rewrites, and nothing it holds outlives it. It
+    * may be called from any thread, and more than once. */
+  private final class Scope(implicit ec: ExecutionContext) {
     private val started = ArrayBuffer.empty[Future[_]]
-    def launch[T](body: => T): Future[T] = track(Future(body))
-    def track[T](f: Future[T]): Future[T] = { started += f; f }
-    def awaitAll(): Unit = started.foreach(Await.ready(_, Duration.Inf))
+    private val frees = ArrayBuffer.empty[() => Unit]
+    def launch[T](body: => T): Future[T] = synchronized {
+      val f = Future(body); started += f; f
+    }
+    def once(df: DataFrame): Once = { val o = Once.later(df); onClose(o.release()); o }
+    def onClose(free: => Unit): Unit = synchronized { frees += (() => free) }
+    def close(): Unit = {
+      synchronized(started.toList).foreach(Await.ready(_, Duration.Inf))
+      synchronized { frees.foreach(_()); frees.clear() }
+    }
   }
 
   /** Snapshot table `what` of `epoch` under `schema`, if its dir exists. */
   private def readIfPresent(spark: SparkSession, runDir: String, epoch: Int, what: String,
-                            schema: org.apache.spark.sql.types.StructType): Option[DataFrame] =
+                            schema: StructType): Option[DataFrame] =
     Some(dir(runDir, epoch, what)).filter(d => Files.isDirectory(Paths.get(d)))
       .map(spark.read.schema(schema).parquet(_))
+
+  /** A snapshot table of no rows, for one that is absent. */
+  private def noRows(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** The URL-seen set as the union of the seen deltas `base..upTo`. */
   private def readSeen(spark: SparkSession, runDir: String, base: Int, upTo: Int): DataFrame =
@@ -351,12 +374,12 @@ object Crawl {
       // one seedFrontier pass, evaluated once: the frontier write,
       // seen/epoch=0 and its filter read the same rows as concurrent jobs,
       // each sized by the seed count it returns. Whether they succeed or not,
-      // all three are joined and the rows are freed before the manifest or
+      // the scope joins all three and frees the rows before the manifest or
       // the error.
       val (seeded, seedCount) = seedFrontier(spark, seeds)
-      val f0 = Once.later(seeded.toDF())
-      val jobs = new Jobs
+      val scope = new Scope
       try {
+        val f0 = scope.once(seeded.toDF())
         val parts = snapshotParts(seedCount, maxParts)
         // seen is a DELTA log: seen/epoch=k holds only the hashes first seen
         // at epoch k (epoch 0 = the seeds — delta AND full set at once).
@@ -365,94 +388,74 @@ object Crawl {
         // distinct: url_hash is unique after seedFrontier's first-wins dedup.
         val s0 = f0.frame.select("url_hash")
         Seq(
-          jobs.launch(writeSnapshot(f0.frame, parts, dir(runDir, 0, "frontier"))),
-          jobs.launch(writeSnapshot(s0, parts, dir(runDir, 0, "seen"))),
+          scope.launch(writeSnapshot(f0.frame, parts, dir(runDir, 0, "frontier"))),
+          scope.launch(writeSnapshot(s0, parts, dir(runDir, 0, "seen"))),
           // no seed at all gets the family's empty filter (a build over no
           // rows yields none), as an empty delta does
-          jobs.launch(store.save(
+          scope.launch(store.save(
             if (seedCount == 0) store.empty() else store.build(spark, s0, "url_hash", seedCount),
             store.path(runDir, 0)))
         ).foreach(Await.result(_, Duration.Inf))
-      } finally {
-        jobs.awaitAll()
-        f0.release()
-      }
+      } finally scope.close()
       EpochManifest.commit(runDir, EpochManifest(0, cfg.strategy, seenBase = 0,
         seenTotal = seedCount, frontierQueued = Some(seedCount), kind = Some("bootstrap"),
         frontier = Some(dir(runDir, 0, "frontier"))))
     }
 
     // every committed manifest, oldest first (each epoch appends the one it
-    // commits): the run's totals and the head's counters come from here
+    // commits): the run's totals come from here, and the head's epoch,
+    // queued count, seen total and seen base are the loop's state
     var manifests =
       (0 to lastCommittedEpoch(runDir)).flatMap(EpochManifest.read(runDir, _)).toVector
     def total(count: EpochManifest => Option[Long]): Long = manifests.flatMap(count).sum
-    var epoch = manifests.last.epoch
-    var done = false
-    // incremental counters (avoid a count job per epoch; read from the last
-    // manifest, counted only for a bootstrap manifest without frontier_queued)
-    var queuedCount = manifests.last.frontierQueued.getOrElse(-1L)
-    var seenCount = manifests.last.seenTotal
-    // compaction base: first epoch of the current delta run (deltas base..k
-    // union to the full seen set; their blooms form the pre-filter vector)
-    var seenBase = manifests.last.seenBase
-    // the filter vector: each delta's filter, loaded or rebuilt from its
-    // seen delta, and whatever filter the family adds over the queued head
-    // frontier (SeenStore.resume, SeenStore.heal)
-    var filters: Vector[SeenDelta] = (seenBase to epoch).toVector.map { e =>
-      store.resume(spark, runDir, e, readIfPresent(spark, runDir, e, "seen", seenSchema),
-        readIfPresent(spark, runDir, e - 1, "frontier", frontierSchema).map(_.select("url_hash")))
-    } ++ store.heal(spark,
-      readIfPresent(spark, runDir, epoch, "frontier", frontierSchema)
-        .map(_.where(col("status") === CrawlStatus.Queued).select("url_hash")),
-      queuedCount)
-    // the vector after the last committed epoch's filter, which builds and
-    // saves after that epoch's commit: the next probe waits for it, and so
-    // does the run before it returns or rethrows
-    var pendingFilters: Option[Future[Vector[SeenDelta]]] = None
-    def awaitFilters(): Vector[SeenDelta] = {
-      pendingFilters.foreach(f => filters = Await.result(f, Duration.Inf))
-      pendingFilters = None
-      filters
+    // the filter vector as of the head: each delta's filter, loaded or
+    // rebuilt from its seen delta, and whatever filter the family adds over
+    // the queued head frontier (SeenStore.resume, SeenStore.heal). An epoch's
+    // own filter builds and saves after its commit: the next probe waits for
+    // it, and so does the run before it returns or rethrows
+    var filters: Future[Vector[SeenDelta]] = {
+      val head = manifests.last
+      Future.successful((head.seenBase to head.epoch).toVector.map { e =>
+        store.resume(spark, runDir, e, readIfPresent(spark, runDir, e, "seen", seenSchema),
+          readIfPresent(spark, runDir, e - 1, "frontier", frontierSchema).map(_.select("url_hash")))
+      } ++ store.heal(spark,
+        readIfPresent(spark, runDir, head.epoch, "frontier", frontierSchema)
+          .map(_.where(col("status") === CrawlStatus.Queued).select("url_hash")),
+        head.frontierQueued.getOrElse(-1L)))
     }
 
     try {
-      while (!done && epoch < cfg.maxEpochs) {
+      while (manifests.last.epoch < cfg.maxEpochs && manifests.last.frontierQueued.forall(_ > 0) &&
+             total(_.fetched) < cfg.maxPages) {
+        val head = manifests.last
+        val epoch = head.epoch
         val t0 = System.currentTimeMillis()
         val frontier = spark.read.schema(frontierSchema).parquet(dir(runDir, epoch, "frontier"))
-        val seen = readSeen(spark, runDir, seenBase, epoch)
+        // compaction base: first epoch of the current delta run (deltas
+        // base..k union to the full seen set; their filters form the vector)
+        val seen = readSeen(spark, runDir, head.seenBase, epoch)
         val domainState: Option[DataFrame] =
           if (cfg.dynamicPoliteness)
             readIfPresent(spark, runDir, epoch, "domain_state", domainStateSchema)
           else None
         val queued = frontier.where(col("status") === CrawlStatus.Queued)
-        if (queuedCount < 0) queuedCount = queued.count()
+        // counted only for a bootstrap manifest without frontier_queued
+        val queuedCount = head.frontierQueued.getOrElse(queued.count())
 
-        if (queuedCount == 0 || total(_.fetched) >= cfg.maxPages) { done = true }
+        // such a manifest over no queued row ends the loop once its count is known
+        if (queuedCount == 0) manifests = manifests.init :+ head.copy(frontierQueued = Some(0L))
         else {
           // every snapshot table this epoch writes: one file per RowsPerFile
           // queued rows
           val parts = snapshotParts(queuedCount, maxParts)
-          // every future the epoch launches and every frame and probe it holds
-          // (one of each per epoch would otherwise accumulate for the crawl's
-          // lifetime). On success all futures but the seen filter's are joined
-          // before the commit; what the epoch holds is freed after it, and
-          // what the filter build reads is freed when that build ends. On a
-          // failure the epoch still waits for every future it launched and
-          // frees what it holds before the first error propagates: no sibling
-          // write runs on into the dirs a resumed run rewrites.
-          val jobs = new Jobs
-          val held = ArrayBuffer.empty[() => Unit]
-          // what the seen filter build reads, the seen probe's broadcast
-          // included (its tasks serialize the probe's plan): freed once, when
-          // the build ends, or with the rest if the epoch fails first
-          val filterHeld = ArrayBuffer.empty[() => Unit]
-          def hold(df: DataFrame, forFilter: Boolean = false): Once = {
-            val once = Once.later(df)
-            (if (forFilter) filterHeld else held) += (() => once.release())
-            once
-          }
-          def freeFilterHeld(): Unit = { filterHeld.foreach(_()); filterHeld.clear() }
+          // every future the epoch launches and every frame and broadcast it
+          // holds (one of each per epoch would otherwise accumulate for the
+          // crawl's lifetime). On success all futures but the seen filter's
+          // are joined before the commit, and the scope closes when the
+          // filter build ends. On a failure the scope closes before the first
+          // error propagates: no sibling write runs on into the dirs a resumed
+          // run rewrites.
+          val scope = new Scope
           try {
             // ---- admission: politeness budget + fairness aging + strategy order
             val epochCol = param(epoch)
@@ -487,11 +490,11 @@ object Crawl {
             // filters over it (so are the admitted keys the seen filter build
             // may read)
             val inBudgetCol = col("host_rank") <= col("eff_budget")
-            val budgetedOnce = hold(withBudget
+            val budgetedOnce = scope.once(withBudget
               .join(broadcast(robots.select(col("host"), col("rules"))), Seq("host"), "left")
               .withColumn("robots_ok",
                 !inBudgetCol || coalesce(canFetchU(col("rules"), col("url")), lit(true)))
-              .drop("rules"), forFilter = true)
+              .drop("rules"))
             val budgeted = budgetedOnce.frame
             val rankCols = Seq("host_rank", "wait", "eff_budget")
             val inBudget = budgeted.where(inBudgetCol).drop(rankCols: _*)
@@ -504,7 +507,7 @@ object Crawl {
             val capacity = cfg.maxPages - total(_.fetched)
             val capped = capacity < Int.MaxValue
             val cappedOnce =
-              Option.when(capped)(hold(inBudget.orderBy(ord: _*).limit(capacity.toInt), forFilter = true))
+              Option.when(capped)(scope.once(inBudget.orderBy(ord: _*).limit(capacity.toInt)))
             val admitted = cappedOnce.fold(inBudget)(_.frame)
 
             // deferred = everything queued but not admitted. Uncapped, that is the
@@ -524,7 +527,7 @@ object Crawl {
             // order is fully determined by the key, so `Crawl.visits` derives
             // ranks at read time — the epoch loop never runs a partitionless
             // global-order window.
-            val fVisits = jobs.launch {
+            val fVisits = scope.launch {
               val blocked = cappedOnce match {
                 case Some(once) =>
                   val ok = admitted.schema.fieldIndex("robots_ok")
@@ -551,7 +554,7 @@ object Crawl {
               pages.select(col("url_hash"), col("html"), col("status_code")),
               Seq("url_hash"), "left")
 
-            val scrapedOnce = hold(fetched
+            val scrapedOnce = scope.once(fetched
               .select("url_hash", "url", "host", "depth", "score", "path", "html", "status_code")
               .as(scrapeInEnc)
               .map(scrapeRow)(scrapeOutEnc)
@@ -570,7 +573,7 @@ object Crawl {
             // The docs write's future takes the lineage as it evaluates the
             // scraped rows: each scrape partition's rows and words, fetched
             // and failed.
-            val fDocs = jobs.launch {
+            val fDocs = scope.launch {
               val Seq(ok, words) = Seq("fetch_ok", "n_words").map(scraped.schema.fieldIndex)
               val lineage = scrapedOnce.evaluate((pid, rows) => Lineage.of(pid, rows, ok, words))._2
               writeSnapshot(scraped.where(col("fetch_ok"))
@@ -580,11 +583,8 @@ object Crawl {
               lineage.flatten
             }
             // politeness state evolution (deterministic backoff per epoch)
-            val fState = if (!cfg.dynamicPoliteness) Future.successful(()) else jobs.launch {
-              val st0 = domainState.getOrElse(
-                spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                  domainStateSchema))
+            val fState = if (!cfg.dynamicPoliteness) Future.successful(()) else scope.launch {
+              val st0 = domainState.getOrElse(noRows(spark, domainStateSchema))
               writeSnapshot(graft.politeness.DomainState
                 .evolve(st0.select("host", "current_delay", "fail_count"),
                   scraped.select(col("host"), col("status_code"))),
@@ -597,7 +597,7 @@ object Crawl {
             // commit is O(delta) (only stale/missing rows rewrite).
             val fPreview = cfg.linkPreview match {
               case None => Future.successful(())
-              case Some(lp0) => jobs.launch {
+              case Some(lp0) => scope.launch {
                 val lp = lp0.copy(nowMs = (epoch * cfg.epochSeconds * 1000).toLong)
                 val lrows = scraped.where(col("fetch_ok"))
                   .select(col("url").as("page_url"),
@@ -612,8 +612,7 @@ object Crawl {
                       col("link.href"), lit(""), lit(""), lit(""),
                       typedLit(Seq.empty[String]), lit(false)).as("intrinsic_score"))
                 val store0 = readIfPresent(spark, runDir, epoch, "head_store", headStoreSchema)
-                  .getOrElse(spark.createDataFrame(
-                    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], headStoreSchema))
+                  .getOrElse(noRows(spark, headStoreSchema))
                 // head "fetch" seam: the crawl's page store, keyed by the same
                 // xxhash64(deep-canonical href) the expansion uses. Head data is
                 // built ONLY for the urls enrich will actually consult the seam
@@ -661,13 +660,17 @@ object Crawl {
             // holds one delta-sized filter per epoch since the last compaction).
             // The candidates are evaluated now, as the probe's own rows: it
             // plans its seen semi-join by their size. The previous epoch's
-            // filter, built after its commit, is awaited here.
-            val (evaluated, _) = hold(candidates, forFilter = true).evaluate((_, _) => ())
-            val seenProbe = SeenFilters.probe(spark, evaluated, seen, "url_hash", awaitFilters())
-            filterHeld += (() => seenProbe.release())
+            // filter, built after its commit, is awaited here. The filter
+            // vector's broadcast lives until the filter build ends: its tasks
+            // serialize the probe's plan.
+            val (evaluated, _) = scope.once(candidates).evaluate((_, _) => ())
+            val filterVector = Await.result(filters, Duration.Inf)
+            val (fresh, filterBc) =
+              SeenFilters.antiJoinTracked(spark, evaluated, seen, "url_hash", filterVector)
+            scope.onClose(filterBc.destroy())
             // partitioned by hand, as the admission window is, so that the new
             // entries keep the shuffle partitions a snapshot file count needs
-            val firstWins = seenProbe.fresh.repartition(maxParts, col("url_hash"))
+            val firstWins = fresh.repartition(maxParts, col("url_hash"))
               .withColumn("rk", row_number().over(
                 Window.partitionBy("url_hash").orderBy(col("parent_path"), col("link_index"))))
               .where(col("rk") === 1).drop("rk")
@@ -683,7 +686,7 @@ object Crawl {
             }
             // evaluated once: read by the frontier write, the seen delta and
             // the delta filter
-            val newOnce = hold(firstWins
+            val newOnce = scope.once(firstWins
               .withColumn("score", scoreCol)
               .where(col("score") >= cfg.scoreThreshold)
               .select(
@@ -692,7 +695,7 @@ object Crawl {
                 lit(0.0).as("priority"), col("parent"),
                 concat(col("parent_path"), format_string("%04x", col("link_index"))).as("path"),
                 nextEpochCol.as("enqueue_epoch"), lit(0).as("retry_count"),
-                nextEpochCol.as("epoch"), lit(CrawlStatus.Queued).as("status")), forFilter = true)
+                nextEpochCol.as("epoch"), lit(CrawlStatus.Queued).as("status")))
             val newEntries = newOnce.frame
 
             // ---- phase B: the frontier(t+1) write and the seen commit launch
@@ -703,7 +706,7 @@ object Crawl {
             // seen commit's future counts the new entries as it evaluates them.
             // Reference adds to seen on DISCOVERY, bfs_strategy.py:153.
             val nextEpoch = epoch + 1
-            val fFrontier = jobs.launch {
+            val fFrontier = scope.launch {
               writeSnapshot(deferred
                 .select(newEntries.columns.toSeq.map(col): _*)
                 .withColumn("epoch", nextEpochCol)
@@ -716,8 +719,8 @@ object Crawl {
             // Every seenCompactEvery epochs the delta run is compacted into one
             // full set + one right-sized bloom, bounding reader fan-in and the
             // bloom vector (the ONLY full-set pass, amortized 1/K per epoch).
-            val compacting = nextEpoch - seenBase >= cfg.seenCompactEvery
-            val fNew = jobs.launch {
+            val compacting = nextEpoch - head.seenBase >= cfg.seenCompactEvery
+            val fNew = scope.launch {
               val n = countRows(newOnce)(_ => true)
               val delta = newEntries.select("url_hash")
               val out = if (compacting) seen.unionByName(delta) else delta
@@ -728,23 +731,23 @@ object Crawl {
             // seen write that counts it (and, when compacting, re-reads it).
             // It is not part of the commit: the manifest below does not wait
             // for it, and a missing filter file is rebuilt on resume. The
-            // counters and the vector it reads are this epoch's, taken now
-            val (filtersBefore, seenBefore, queuedBefore) = (filters, seenCount, queuedCount)
-            val fFilter = jobs.track(fNew.map { nNew =>
+            // epoch's scope closes when it ends
+            val fFilter = scope.launch {
+              val nNew = Await.result(fNew, Duration.Inf)
               if (compacting) {
                 val full = spark.read.schema(seenSchema).parquet(dir(runDir, nextEpoch, "seen"))
-                val compactFilter = store.build(spark, full, "url_hash", seenBefore + nNew)
+                val compactFilter = store.build(spark, full, "url_hash", head.seenTotal + nNew)
                 store.save(compactFilter, store.path(runDir, nextEpoch))
                 Vector[SeenDelta](compactFilter)
               } else {
                 // the PARQUET delta stays exactly the first-seen set (ledger
                 // semantics); the store decides what else its filter covers
                 val deltaFilter = store.deltaFilter(spark, newEntries.select("url_hash"),
-                  admitted.select("url_hash"), nNew, queuedBefore)
+                  admitted.select("url_hash"), nNew, queuedCount)
                 store.save(deltaFilter, store.path(runDir, nextEpoch))
-                filtersBefore :+ deltaFilter
+                filterVector :+ deltaFilter
               }
-            }.andThen { case _ => freeFilterHeld() })
+            }.andThen { case _ => scope.close() }
 
             // ---- join the snapshot jobs, then the atomic commit
             val lineageRows = Await.result(fDocs, Duration.Inf)
@@ -757,31 +760,24 @@ object Crawl {
             val nFailed = lineageRows.filterNot(_.fetchOk).map(_.rows).sum
             // derived, no extra jobs: admitted = allowed + blocked; deferred =
             // queued − admitted; seen grows only by the (disjoint) new entries
-            val admittedCount = nFetched + nFailed + nBlocked
-            val deferredCount = queuedCount - admittedCount
-            seenCount += nNew
-            queuedCount = deferredCount + nNew
-            if (compacting) seenBase = nextEpoch
-            val m = EpochManifest(nextEpoch, cfg.strategy, seenBase, seenCount, Some(queuedCount),
+            val deferredCount = queuedCount - (nFetched + nFailed + nBlocked)
+            val m = EpochManifest(nextEpoch, cfg.strategy,
+              seenBase = if (compacting) nextEpoch else head.seenBase,
+              seenTotal = head.seenTotal + nNew, frontierQueued = Some(deferredCount + nNew),
               fetched = Some(nFetched), failed = Some(nFailed), skippedRobots = Some(nBlocked),
               newFrontier = Some(nNew), wallMs = Some(System.currentTimeMillis() - t0),
               partitions = Some(lineageRows))
             EpochManifest.commit(runDir, m)
             manifests :+= m
-            pendingFilters = Some(fFilter)
-
-            if (queuedCount == 0) done = true
-            epoch += 1
-          } catch { case e: Throwable =>
-            jobs.awaitAll()
-            freeFilterHeld() // a no-op once the filter build has ended
-            throw e
-          } finally held.foreach(_())
+            filters = fFilter
+          } catch { case e: Throwable => scope.close(); throw e }
         }
       }
-      awaitFilters()
-    } finally pendingFilters.foreach(Await.ready(_, Duration.Inf))
-    CrawlSummary(epoch, total(_.fetched), total(_.failed), total(_.skippedRobots), seenCount)
+    } finally Await.ready(filters, Duration.Inf)
+    // a failed filter build of the last epoch fails the run
+    Await.result(filters, Duration.Inf)
+    CrawlSummary(manifests.last.epoch, total(_.fetched), total(_.failed), total(_.skippedRobots),
+      manifests.last.seenTotal)
   }
 
   /** TTL-expire epoch `expired`: every URL FIRST ENQUEUED at that epoch is
@@ -825,14 +821,10 @@ object Crawl {
       .withColumn("retry_count", lit(0))
     // merge with whatever is still queued at the head snapshot (normally
     // empty after a completed run); first-wins per url_hash, oldest enqueue
-    val headDir = dir(runDir, last, "frontier")
-    val headQueued =
-      if (Files.isDirectory(Paths.get(headDir)))
-        spark.read.schema(frontierSchema).parquet(headDir)
-          .where(col("status") === CrawlStatus.Queued)
-          .withColumn("epoch", lit(nextEpoch))
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], frontierSchema)
+    val headQueued = readIfPresent(spark, runDir, last, "frontier", frontierSchema)
+      .getOrElse(noRows(spark, frontierSchema))
+      .where(col("status") === CrawlStatus.Queued)
+      .withColumn("epoch", lit(nextEpoch))
     // tiebreak after enqueue_epoch: when a requeued URL is also still queued
     // in the head snapshot at the SAME enqueue_epoch (expiring an epoch of an
     // incomplete run), prefer the requeued copy (retry_count reset to 0) and
@@ -857,7 +849,8 @@ object Crawl {
     writeSnapshot(requeue.limit(0).select("url_hash"), 1, dir(runDir, nextEpoch, "seen"))
     val store = SeenStore.detect(runDir, last)
     store.save(store.empty(), store.path(runDir, nextEpoch))
-    store.evict(runDir, head.seenBase, expired, spark.read.parquet(dir(runDir, expired, "seen")))
+    store.evict(runDir, head.seenBase, expired,
+      spark.read.schema(seenSchema).parquet(dir(runDir, expired, "seen")))
     // strategy, seen_total and seen_base carry over from the head
     EpochManifest.commit(runDir, head.copy(epoch = nextEpoch, frontierQueued = Some(n),
       kind = Some("recrawl"), frontier = None, expiredEpoch = Some(expired),

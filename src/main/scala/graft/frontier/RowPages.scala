@@ -22,7 +22,7 @@ import scala.reflect.ClassTag
   * plans are not matched against it.
   */
 private[frontier] final class Once private (val frame: DataFrame,
-                                            val pages: Option[RDD[Array[Byte]]]) {
+                                            pages: Option[RDD[Array[Byte]]]) {
   def release(): Unit = pages.foreach(_.unpersist(blocking = false))
 
   /** Computes the pages now, unless a job already has, and folds each

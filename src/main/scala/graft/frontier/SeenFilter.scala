@@ -1,7 +1,6 @@
 package graft.frontier
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -54,19 +53,7 @@ object SeenFilters {
   }
 
   /** Filter-accelerated anti-join, equivalent to a plain left_anti on
-    * `hashCol`, plus the broadcast handle for end-of-epoch destroy. The
-    * materialized candidate rows are left to Spark's ContextCleaner; a caller
-    * that can release them sooner uses [[probe]].
-    */
-  def antiJoinTracked(spark: SparkSession, candidates: DataFrame, seen: DataFrame,
-                      hashCol: String, filters: Seq[SeenDelta])
-      : (DataFrame, Broadcast[Array[SeenDelta]]) = {
-    val p = probe(spark, candidates, seen, hashCol, filters)
-    (p.fresh, p.filterBc)
-  }
-
-  /** The probe behind [[antiJoinTracked]], with a handle that releases what
-    * it holds.
+    * `hashCol`, plus the broadcast handle for end-of-epoch destroy.
     *
     * A semi-join reduction: `hits` are the seen rows whose hash is among the
     * maybe-seen keys. The maybe-seen side is the small one, so the planner
@@ -79,30 +66,18 @@ object SeenFilters {
     * anti-join against the hits needs no separate definitely-new branch.
     *
     * Both the maybe-seen broadcast and the anti-join's probe side read the
-    * candidates, so their plan is evaluated once per probe ([[Once.now]]):
-    * its rows are persisted on first read and both consumers scan those
-    * blocks. A `Dataset.persist` would pin the rows in the CacheManager
-    * until an explicit unpersist; these blocks also go once the frame is
-    * unreachable.
+    * candidates, so their plan is evaluated once ([[Once.now]]): its rows are
+    * persisted on first read and both consumers scan those blocks, which are
+    * left to Spark's ContextCleaner. Candidates that are already an
+    * evaluated frame are read as they are.
     */
-  def probe(spark: SparkSession, candidates: DataFrame, seen: DataFrame,
-            hashCol: String, filters: Seq[SeenDelta]): SeenProbe = {
+  def antiJoinTracked(spark: SparkSession, candidates: DataFrame, seen: DataFrame,
+                      hashCol: String, filters: Seq[SeenDelta])
+      : (DataFrame, Broadcast[Array[SeenDelta]]) = {
     val once = Once.now(candidates)
     val (_, maybeSeen, bc) = splitTracked(spark, once.frame, hashCol, filters)
     val hits = seen.join(maybeSeen.select(hashCol), Seq(hashCol), "left_semi")
-    SeenProbe(once.frame.join(hits, Seq(hashCol), "left_anti"), bc, once.pages)
-  }
-}
-
-/** One seen probe: the candidates not in the seen set, the filter-vector
-  * broadcast, and the candidate rows persisted for it. */
-final case class SeenProbe(fresh: DataFrame, filterBc: Broadcast[Array[SeenDelta]],
-                           candidateRows: Option[RDD[Array[Byte]]]) {
-  /** Destroy the broadcast and drop the persisted rows; call once every job
-    * that reads `fresh` has finished. */
-  def release(): Unit = {
-    filterBc.destroy()
-    candidateRows.foreach(_.unpersist(blocking = false))
+    (once.frame.join(hits, Seq(hashCol), "left_anti"), bc)
   }
 }
 

@@ -37,6 +37,15 @@ class CrawlSpec extends AnyFunSuite {
   private def freshDir(tag: String): String =
     Files.createTempDirectory(s"crawl-$tag").toString
 
+  /** The uninterrupted `bfs`, `hostBudget = 3` bloom crawl that the resume
+    * and failure tests compare against: run once, on first use, and only
+    * read after that. */
+  private lazy val reference: (String, CrawlSummary) = {
+    val runDir = freshDir("reference")
+    (runDir, Crawl.run(spark, seedsDF, pagesDF, robotsDF, runDir,
+      CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40)))
+  }
+
   private def manifest(runDir: String, e: Int): EpochManifest =
     EpochManifest.read(runDir, e).getOrElse(fail(s"no manifest $e under $runDir"))
 
@@ -236,8 +245,7 @@ class CrawlSpec extends AnyFunSuite {
 
   test("kill/resume: seen set identical to an uninterrupted run") {
     val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40)
-    val full = freshDir("full")
-    val fullSummary = Crawl.run(spark, seedsDF, pagesDF, robotsDF, full, cfg)
+    val (full, fullSummary) = reference
 
     val partial = freshDir("partial")
     // killed after 2 epochs…
@@ -607,8 +615,7 @@ class CrawlSpec extends AnyFunSuite {
 
   test("resume from a bootstrap manifest without frontier_queued matches an uninterrupted run") {
     val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40)
-    val full = freshDir("oldboot-full")
-    Crawl.run(spark, seedsDF, pagesDF, robotsDF, full, cfg)
+    val (full, _) = reference
 
     val resumed = freshDir("oldboot-resumed")
     Crawl.run(spark, seedsDF, pagesDF, robotsDF, resumed, cfg.copy(maxEpochs = 0))
@@ -729,8 +736,7 @@ class CrawlSpec extends AnyFunSuite {
 
   test("crash consistency: uncommitted partial writes are invisible on resume") {
     val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40)
-    val full = freshDir("crash-full")
-    Crawl.run(spark, seedsDF, pagesDF, robotsDF, full, cfg)
+    val (full, _) = reference
 
     val partial = freshDir("crash-part")
     Crawl.run(spark, seedsDF, pagesDF, robotsDF, partial, cfg.copy(maxEpochs = 3))
@@ -769,8 +775,12 @@ class CrawlSpec extends AnyFunSuite {
     for (family <- Seq("bloom", "cuckoo")) {
       val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40,
         seenFilter = family)
-      val full = freshDir(s"rebuild-full-$family")
-      val fullSummary = Crawl.run(spark, seedsDF, pagesDF, robotsDF, full, cfg)
+      val (full, fullSummary) =
+        if (family == "bloom") reference
+        else {
+          val runDir = freshDir(s"rebuild-full-$family")
+          (runDir, Crawl.run(spark, seedsDF, pagesDF, robotsDF, runDir, cfg))
+        }
 
       val partial = freshDir(s"rebuild-part-$family")
       Crawl.run(spark, seedsDF, pagesDF, robotsDF, partial, cfg.copy(maxEpochs = 2))
@@ -879,8 +889,7 @@ class CrawlSpec extends AnyFunSuite {
 
   test("a failed epoch joins its running jobs and frees its caches; a resume equals an uninterrupted run") {
     val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40)
-    val full = freshDir("failed-full")
-    val fullSummary = Crawl.run(spark, seedsDF, pagesDF, robotsDF, full, cfg)
+    val (full, fullSummary) = reference
     def seenHashes(d: String): Set[Long] =
       Crawl.seenSet(spark, d).as[Long].collect().toSet
     def vs(d: String) = Crawl.visits(spark, d).select("epoch", "visit_rank", "url")
@@ -924,6 +933,39 @@ class CrawlSpec extends AnyFunSuite {
       assert(seenHashes(runDir) == seenHashes(full), phase)
       assert(vs(runDir) == vs(full), phase)
     }
+  }
+
+  test("a filter build that fails after its epoch's commit fails the run; a resume equals an uninterrupted run") {
+    val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40)
+    val (full, fullSummary) = reference
+    val rddsBefore = sc.getPersistentRDDs.keySet
+    val cachedBefore = cachedEntries
+    val runDir = freshDir("failed-filter")
+    // epoch 2's filter builds after manifest_0002 commits, and cannot be saved
+    // over a non-empty dir: the error surfaces at the next epoch's probe
+    val blocker = Paths.get(runDir, "bloom_0002.bin")
+    Files.createDirectories(blocker)
+    Files.writeString(blocker.resolve("not-a-filter"), "")
+    intercept[java.nio.file.FileSystemException] {
+      Crawl.run(spark, seedsDF, pagesDF, robotsDF, runDir, cfg)
+    }
+    assert(activeJobs.isEmpty, s"jobs still running after the throw: $activeJobs")
+    val leftover = sc.getPersistentRDDs.filter { case (id, _) => !rddsBefore(id) }
+    assert(leftover.isEmpty, s"persisted RDDs left: ${leftover.values.mkString(", ")}")
+    assert(cachedEntries == cachedBefore, "cached tables left by the failed run")
+    assert(Files.exists(EpochManifest.path(runDir, 2)))
+    assert(!Files.exists(EpochManifest.path(runDir, 3)))
+
+    ls(blocker).foreach(Files.delete)
+    Files.delete(blocker)
+    val resumed = Crawl.run(spark, seedsDF, pagesDF, robotsDF, runDir, cfg)
+    assert(resumed == fullSummary)
+    def seenHashes(d: String): Set[Long] =
+      Crawl.seenSet(spark, d).as[Long].collect().toSet
+    assert(seenHashes(runDir) == seenHashes(full))
+    def vs(d: String) = Crawl.visits(spark, d).select("epoch", "visit_rank", "url")
+      .orderBy("epoch", "visit_rank").collect().map(r => (r.getInt(0), r.getString(2))).toSeq
+    assert(vs(runDir) == vs(full))
   }
 
   test("a failed bootstrap joins its running jobs, frees its cache and commits nothing") {

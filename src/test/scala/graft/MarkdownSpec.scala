@@ -10,8 +10,7 @@ import graft.scrape.Html2Md
   * including every synthetic site page.
   */
 class MarkdownSpec extends AnyFunSuite {
-
-  final case class Golden(name: String, html: String, base: String, md: String)
+  import MarkdownSpec.Golden
 
   lazy val goldens: Seq[Golden] = {
     val is = getClass.getResourceAsStream("/markdown_goldens.json")
@@ -39,4 +38,8 @@ class MarkdownSpec extends AnyFunSuite {
     assert(failures.isEmpty,
       s"${failures.size}/${goldens.size} golden mismatches:\n${failures.take(5).mkString}")
   }
+}
+
+object MarkdownSpec {
+  final case class Golden(name: String, html: String, base: String, md: String)
 }
