@@ -70,8 +70,8 @@ final class Graft(val spark: SparkSession) {
     graft.sources.Seeder.seedPipeline(sources, headText, query, maxUrls = maxUrls)
 
   /** TTL-expire a committed crawl epoch: its URLs re-queue for refetch on
-    * the next `crawl` over the same runDir (cuckoo-filter runs also evict
-    * the expired hashes from the persisted seen filter, executor-side). */
+    * the next `crawl` over the same runDir. The seen set and every seen
+    * filter file stay as they are. */
   def expireEpoch(runDir: String, epoch: Int): Long =
     Crawl.expireEpoch(spark, runDir, epoch)
 

@@ -99,10 +99,9 @@ final case class CrawlConfig(
       * reader unions and the per-epoch filter vector length. */
     seenCompactEvery: Int = 16,
     /** Pre-filter family for the seen set: "bloom" (append-only, smallest) or
-      * "cuckoo" (deletable — TTL expiry evicts the expired delta's hashes from
-      * the persisted filters instead of leaving them to age out, see
-      * [[Crawl.expireEpoch]]). Either way the exact anti-join gates
-      * correctness; this only chooses the pre-filter. */
+      * "cuckoo" (sharded cuckoo filters). The families differ only in how a
+      * filter is built and stored ([[SeenStore]]); either way the exact
+      * anti-join gates correctness, and this only chooses the pre-filter. */
     seenFilter: String = "bloom",
     /** Optional custom frontier-candidate scorer over (url, anchorText) —
       * e.g. [[graft.ops.AdaptiveEmbedding.linkScorerFor]]'s gap-reduction
@@ -390,11 +389,7 @@ object Crawl {
         Seq(
           scope.launch(writeSnapshot(f0.frame, parts, dir(runDir, 0, "frontier"))),
           scope.launch(writeSnapshot(s0, parts, dir(runDir, 0, "seen"))),
-          // no seed at all gets the family's empty filter (a build over no
-          // rows yields none), as an empty delta does
-          scope.launch(store.save(
-            if (seedCount == 0) store.empty() else store.build(spark, s0, "url_hash", seedCount),
-            store.path(runDir, 0)))
+          scope.launch(store.save(store.over(spark, s0, seedCount), store.path(runDir, 0)))
         ).foreach(Await.result(_, Duration.Inf))
       } finally scope.close()
       EpochManifest.commit(runDir, EpochManifest(0, cfg.strategy, seenBase = 0,
@@ -409,19 +404,14 @@ object Crawl {
       (0 to lastCommittedEpoch(runDir)).flatMap(EpochManifest.read(runDir, _)).toVector
     def total(count: EpochManifest => Option[Long]): Long = manifests.flatMap(count).sum
     // the filter vector as of the head: each delta's filter, loaded or
-    // rebuilt from its seen delta, and whatever filter the family adds over
-    // the queued head frontier (SeenStore.resume, SeenStore.heal). An epoch's
-    // own filter builds and saves after its commit: the next probe waits for
-    // it, and so does the run before it returns or rethrows
+    // rebuilt from its seen delta (SeenStore.resume). An epoch's own filter
+    // builds and saves after its commit: the next probe waits for it, and so
+    // does the run before it returns or rethrows
     var filters: Future[Vector[SeenDelta]] = {
       val head = manifests.last
       Future.successful((head.seenBase to head.epoch).toVector.map { e =>
-        store.resume(spark, runDir, e, readIfPresent(spark, runDir, e, "seen", seenSchema),
-          readIfPresent(spark, runDir, e - 1, "frontier", frontierSchema).map(_.select("url_hash")))
-      } ++ store.heal(spark,
-        readIfPresent(spark, runDir, head.epoch, "frontier", frontierSchema)
-          .map(_.where(col("status") === CrawlStatus.Queued).select("url_hash")),
-        head.frontierQueued.getOrElse(-1L)))
+        store.resume(spark, runDir, e, readIfPresent(spark, runDir, e, "seen", seenSchema))
+      })
     }
 
     try {
@@ -487,8 +477,7 @@ object Crawl {
             // crawler is robots.txt's `*` agent (canFetch's default). Only an
             // in-budget row is checked; the rest pass and are deferred.
             // Evaluated once: both the admitted and the deferred rows are
-            // filters over it (so are the admitted keys the seen filter build
-            // may read)
+            // filters over it
             val inBudgetCol = col("host_rank") <= col("eff_budget")
             val budgetedOnce = scope.once(withBudget
               .join(broadcast(robots.select(col("host"), col("rules"))), Seq("host"), "left")
@@ -734,19 +723,13 @@ object Crawl {
             // epoch's scope closes when it ends
             val fFilter = scope.launch {
               val nNew = Await.result(fNew, Duration.Inf)
-              if (compacting) {
-                val full = spark.read.schema(seenSchema).parquet(dir(runDir, nextEpoch, "seen"))
-                val compactFilter = store.build(spark, full, "url_hash", head.seenTotal + nNew)
-                store.save(compactFilter, store.path(runDir, nextEpoch))
-                Vector[SeenDelta](compactFilter)
-              } else {
-                // the PARQUET delta stays exactly the first-seen set (ledger
-                // semantics); the store decides what else its filter covers
-                val deltaFilter = store.deltaFilter(spark, newEntries.select("url_hash"),
-                  admitted.select("url_hash"), nNew, queuedCount)
-                store.save(deltaFilter, store.path(runDir, nextEpoch))
-                filterVector :+ deltaFilter
-              }
+              val filter =
+                if (compacting) store.over(spark,
+                  spark.read.schema(seenSchema).parquet(dir(runDir, nextEpoch, "seen")),
+                  head.seenTotal + nNew)
+                else store.over(spark, newEntries.select("url_hash"), nNew)
+              store.save(filter, store.path(runDir, nextEpoch))
+              if (compacting) Vector(filter) else filterVector :+ filter
             }.andThen { case _ => scope.close() }
 
             // ---- join the snapshot jobs, then the atomic commit
@@ -794,14 +777,14 @@ object Crawl {
     * exact anti-join is what keeps a re-queued URL rediscovered via links
     * from entering the frontier twice (the reference keeps the same split —
     * the per-crawl visited set is monotone, only the TTL'd result CACHE is
-    * deletable). The seen store evicts ([[SeenStore.evict]]): under
-    * `seenFilter = "cuckoo"` the expired delta's hashes leave the persisted
-    * sharded filter, so the filter tracks the still-cached set, and because
-    * eviction deliberately creates filter false negatives against the
-    * monotone ledger, the store HEALS the fast path when [[Crawl.run]]
-    * resumes and covers admitted hashes in each epoch's delta filter. Under
-    * bloom the filter is append-only and the stale bits simply age out at
-    * the next compaction.
+    * deletable). So expiry touches no filter, under either family: each
+    * still covers the keys it covered, and the pre-filter keeps its one
+    * contract, no false negative against the ledger.
+    *
+    * Only the two snapshot dirs of the new epoch are written before its
+    * manifest commits; its (empty) filter file lands after the commit, as
+    * `Crawl.run`'s do, so a failed expiry leaves no file that a later
+    * commit of that epoch could load.
     *
     * Returns the number of re-queued URLs; `Crawl.run` on the same runDir
     * then resumes from the new snapshot and refetches them.
@@ -847,15 +830,13 @@ object Crawl {
     val n = requeuedObs.get("n").asInstanceOf[Long]
     // empty seen delta for the new epoch (nothing newly seen by expiry)
     writeSnapshot(requeue.limit(0).select("url_hash"), 1, dir(runDir, nextEpoch, "seen"))
-    val store = SeenStore.detect(runDir, last)
-    store.save(store.empty(), store.path(runDir, nextEpoch))
-    store.evict(runDir, head.seenBase, expired,
-      spark.read.schema(seenSchema).parquet(dir(runDir, expired, "seen")))
     // strategy, seen_total and seen_base carry over from the head
     EpochManifest.commit(runDir, head.copy(epoch = nextEpoch, frontierQueued = Some(n),
       kind = Some("recrawl"), frontier = None, expiredEpoch = Some(expired),
       fetched = Some(0), failed = Some(0), skippedRobots = Some(0), newFrontier = Some(0),
       wallMs = None, partitions = None))
+    val store = SeenStore.detect(runDir, last)
+    store.save(store.empty(), store.path(runDir, nextEpoch))
     n
   }
 

@@ -6,9 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Cuckoo filter for the URL-seen set — the DELETABLE alternative to the
   * bloom of [[BloomStore]] (the north-star names "bloom/cuckoo-filter
-  * URL-seen"; the reference's cache layer supports TTL-based invalidation,
-  * utils.py cache semantics + async_url_seeder.py TTL refresh, which a bloom
-  * cannot express without a rebuild).
+  * URL-seen").
   *
   * Standard partial-key cuckoo filter (Fan, Andersen, Kaminsky, Mitzenmacher,
   * "Cuckoo Filter: Practically Better Than Bloom", CoNEXT 2014 — public
@@ -17,11 +15,12 @@ import org.apache.spark.sql.functions._
   * bucket derives the other), bounded evict-and-kick insertion.
   *
   *  - no false negatives for present keys; FP rate ≈ 2·4/2^16 ≈ 1.2e-4
-  *  - `delete` removes one copy of a fingerprint → TTL-expired URLs can be
-  *    EVICTED so the crawler refetches them, with no full-filter rebuild
-  *  - the epoch protocol is the same as the bloom's: one filter per seen
-  *    DELTA, vector consulted at candidate time, compaction merges — plus
-  *    delta-level eviction when a recrawl TTL expires an epoch.
+  *  - `delete` removes one copy of a fingerprint (only a key known to be
+  *    present may be deleted: an absent one can strip a colliding live
+  *    fingerprint)
+  *  - the epoch protocol is the bloom's ([[SeenStore]]): one filter per seen
+  *    DELTA, vector consulted at candidate time, compaction merges. The
+  *    crawl never deletes: a TTL expiry leaves every filter as it is.
   *
   * Capacity: `m` buckets × 4 slots; sized for ~0.95 load factor. At 10^10
   * URLs the filter is partitioned exactly like the seen deltas themselves
@@ -182,8 +181,7 @@ object CuckooFilter {
 
 /** Hash-sharded cuckoo filter: shard s owns keys with floorMod(key, n) == s.
   * The 10^10-scale form — each shard is bounded, built executor-side, and a
-  * lookup touches exactly one shard. Supports the same delete-for-recrawl
-  * path per shard ([[CuckooSeen.evictSharded]]).
+  * lookup touches exactly one shard, and so does a delete.
   */
 final class ShardedCuckoo(val shardArr: Array[CuckooFilter]) extends SeenDelta {
   private def shardOf(key: Long): Int = ShardedCuckoo.shardOf(key, shardArr.length)
@@ -202,8 +200,8 @@ final class ShardedCuckoo(val shardArr: Array[CuckooFilter]) extends SeenDelta {
 }
 
 object ShardedCuckoo {
-  /** The ONE shard-assignment rule (floorMod of the key) — build, lookup,
-    * and evict must agree on it, so they all call here. */
+  /** The ONE shard-assignment rule (floorMod of the key) — build, lookup
+    * and delete must agree on it, so they all call here. */
   private[frontier] def shardOf(key: Long, n: Int): Int =
     ((key % n).toInt + n) % n
 
@@ -220,10 +218,9 @@ object ShardedCuckoo {
   }
 }
 
-/** The sharded cuckoo algorithms behind [[CuckooStore]]: the distributed
-  * build, and eviction ([[evictSharded]]) for TTL-based recrawl. Every
-  * operation here is executor-side over the hash-sharded form: only compact
-  * serialized filters ever cross the driver boundary, never row data.
+/** The sharded cuckoo build behind [[CuckooStore]]: executor-side over the
+  * hash-sharded form, so only compact serialized filters ever cross the
+  * driver boundary, never row data.
   */
 object CuckooSeen {
 
@@ -255,38 +252,5 @@ object CuckooSeen {
     // empty shards (no keys hashed there) get minimal filters
     (0 until shards).foreach(s => if (arr(s) == null) arr(s) = CuckooFilter.create(64))
     new ShardedCuckoo(arr)
-  }
-
-  /** Evict every key of an expired delta (TTL'd epoch) from the sharded
-    * filter, EXECUTOR-SIDE: the expired hashes are grouped by shard, each
-    * shard's filter is shipped once (broadcast), deletes run inside one
-    * `mapGroups` task per touched shard, and only the updated compact filters
-    * return to the driver — O(delta) distributed work, no row collect, no
-    * rebuild of surviving epochs' state. Returns the updated filter (untouched
-    * shards are shared, not copied) and the number of evicted keys.
-    *
-    * Cuckoo caveat honored by the caller ([[CuckooStore.evict]]): only keys
-    * KNOWN to be in this filter may be deleted — deleting an absent key can
-    * strip a colliding fingerprint of a different present key.
-    */
-  def evictSharded(sc: ShardedCuckoo, expired: DataFrame,
-                   colName: String): (ShardedCuckoo, Long) = {
-    val spark = expired.sparkSession
-    import spark.implicits._
-    val n = sc.shardArr.length
-    val bc = spark.sparkContext.broadcast(sc.shardArr.map(_.serialize()))
-    val updated = expired.select(col(colName).cast("long")).distinct().as[Long]
-      .groupByKey(h => ShardedCuckoo.shardOf(h, n))
-      .mapGroups { (shard, keys) =>
-        val cf = CuckooFilter.deserialize(bc.value(shard))
-        var removed = 0L
-        keys.foreach { k => if (cf.delete(k)) removed += 1 }
-        (shard, cf.serialize(), removed)
-      }
-      .collect()
-    bc.destroy()
-    val arr = sc.shardArr.clone()
-    updated.foreach { case (s, bytes, _) => arr(s) = CuckooFilter.deserialize(bytes) }
-    (new ShardedCuckoo(arr), updated.map(_._3).sum)
   }
 }

@@ -10,8 +10,7 @@ import java.nio.file.{Files, Path, Paths}
 /** One probabilistic membership pre-filter over url-hash keys — the thing the
   * crawl loop consults BEFORE the exact anti-join so definitely-new candidates
   * are never looked up in the seen set. Implementations: [[BloomDelta]]
-  * (append-only, smallest) and [[ShardedCuckoo]] (deletable — supports TTL
-  * eviction without rebuild).
+  * (append-only, smallest) and [[ShardedCuckoo]] (deletable).
   * Correctness never depends on the filter: a false positive only routes a row
   * into the exact anti-join; the no-false-negative contract is what makes the
   * definitely-new fast path sound.
@@ -82,17 +81,17 @@ object SeenFilters {
 }
 
 /** Build, persist and resume policy for the per-epoch seen-delta filters:
-  * the `CrawlConfig.seenFilter` seam, and the one place that knows what a
-  * filter family needs. `Crawl.run` and `Crawl.expireEpoch` call these
-  * methods and never branch on the family.
+  * the `CrawlConfig.seenFilter` seam. The two families differ only in how a
+  * filter is built and stored; the protocol ([[over]], [[resume]]) is the
+  * same for both, so `Crawl.run` and `Crawl.expireEpoch` never branch on the
+  * family.
   *
-  * Filter files are DERIVED caches of the seen parquet deltas (minus any
-  * cuckoo evictions), and `Crawl.run` commits an epoch's manifest before its
-  * filter file lands. A missing file is rebuilt from the committed snapshots
-  * to cover what the family's [[deltaFilter]] covered: the seen delta for
-  * bloom, the delta and the keys the epoch could admit for cuckoo. A rebuilt
-  * file conservatively loses evictions, which only costs exact-join traffic,
-  * never correctness. The crawl's key column is `url_hash`.
+  * Filter files are DERIVED caches of the seen parquet deltas: each covers
+  * its epoch's delta (a compaction's, the full set), and no filter ever
+  * loses a key, so the vector has no false negative against the monotone
+  * seen ledger. `Crawl.run` commits an epoch's manifest before its filter
+  * file lands, and a missing file is rebuilt from the epoch's seen delta.
+  * The crawl's key column is `url_hash`.
   */
 sealed trait SeenStore {
   /** The filter this family builds, saves and loads. */
@@ -105,37 +104,24 @@ sealed trait SeenStore {
   def save(f: F, p: Path): Unit
   def load(p: Path): F
 
-  /** Epoch `epoch`'s filter for a resumed run: its saved file, else rebuilt
-    * ([[rebuild]]) from the epoch's seen `delta` and the keys of the frontier
-    * the epoch's crawl admitted from, `queuedBefore` (also how a run resumed
-    * under the other family gets its filters). Only an absent delta means an
-    * empty filter: one over a delta that has rows would let its URLs past the
+  /** The filter over the `n` keys of `keys`: the empty filter when there are
+    * none (the build's aggregate yields no filter over no rows). */
+  def over(spark: SparkSession, keys: DataFrame, n: Long): F =
+    if (n == 0) empty() else build(spark, keys, SeenStore.Key, n)
+
+  /** Epoch `epoch`'s filter for a resumed run: its saved file, else one
+    * [[over]] the epoch's seen `delta` (also how a run resumed under the
+    * other family gets its filters). Only an absent delta means an empty
+    * filter: one over a delta that has rows would let its URLs past the
     * exact probe as new, so a delta that cannot be read fails the run
-    * instead. */
+    * instead. A file from which an earlier version's expiry evicted keys
+    * (it left a `.evicted_<epoch>_<expired>` marker) is treated as lost. */
   def resume(spark: SparkSession, runDir: String, epoch: Int,
-             delta: => Option[DataFrame], queuedBefore: => Option[DataFrame]): F = {
+             delta: => Option[DataFrame]): F = {
     val p = path(runDir, epoch)
-    if (Files.exists(p)) load(p)
-    else delta.fold(empty())(rebuild(spark, _, queuedBefore))
+    if (Files.exists(p) && !SeenStore.evictedFrom(runDir, epoch)) load(p)
+    else delta.fold(empty())(d => over(spark, d, d.count()))
   }
-
-  /** A lost filter over at least what [[deltaFilter]] (or a compaction's
-    * [[build]] over the full set) covered when the epoch committed. */
-  protected def rebuild(spark: SparkSession, delta: DataFrame,
-                        queuedBefore: => Option[DataFrame]): F
-
-  /** The filter, if the family needs one, that a resumed run appends over
-    * the `queued` keys of its head frontier (`queuedCount`, -1 if unknown). */
-  def heal(spark: SparkSession, queued: => Option[DataFrame], queuedCount: Long): Option[F]
-
-  /** One epoch's delta filter over its `nNew` first-seen keys, plus what
-    * else the family covers of the epoch's admitted keys. */
-  def deltaFilter(spark: SparkSession, newKeys: DataFrame, admittedKeys: => DataFrame,
-                  nNew: Long, queuedCount: Long): F
-
-  /** TTL expiry of epoch `expired` in a run whose filter vector starts at
-    * `seenBase`. */
-  def evict(runDir: String, seenBase: Int, expired: Int, expiredKeys: => DataFrame): Unit
 }
 
 /** Bloom pre-filter for the URL-seen set (reference's experimental bloom
@@ -163,28 +149,11 @@ final class BloomStore(fpp: Double) extends SeenStore {
     val is = new BufferedInputStream(Files.newInputStream(p))
     try new BloomDelta(BloomFilter.readFrom(is)) finally is.close()
   }
-  // nothing is evicted from a bloom, so nothing needs healing
-  override def heal(spark: SparkSession, queued: => Option[DataFrame],
-                    queuedCount: Long): Option[BloomDelta] = None
-  override def deltaFilter(spark: SparkSession, newKeys: DataFrame, admittedKeys: => DataFrame,
-                           nNew: Long, queuedCount: Long): BloomDelta =
-    if (nNew == 0) empty() else build(spark, newKeys, SeenStore.Key, nNew)
-  // the delta alone, sized by its rows: the bytes `deltaFilter` saved. The
-  // build's aggregate yields no filter over no rows, so an empty delta gets
-  // the empty filter, as it did when the epoch ran
-  override protected def rebuild(spark: SparkSession, delta: DataFrame,
-                                 queuedBefore: => Option[DataFrame]): BloomDelta = {
-    val n = delta.count()
-    if (n == 0) empty() else build(spark, delta, SeenStore.Key, n)
-  }
-  // append-only: the stale bits age out at the next compaction
-  override def evict(runDir: String, seenBase: Int, expired: Int,
-                     expiredKeys: => DataFrame): Unit = ()
 }
 
-/** Sharded cuckoo filters ([[CuckooSeen]]): deletable, so TTL expiry evicts
-  * the expired delta's keys from the persisted filter instead of leaving
-  * them to age out. */
+/** Sharded cuckoo filters ([[CuckooSeen]]): the deletable structure, kept
+  * as the second family. The crawl never deletes from one: a TTL expiry
+  * requeues URLs without touching any filter. */
 final class CuckooStore extends SeenStore {
   type F = ShardedCuckoo
   override def name = "cuckoo"
@@ -202,56 +171,6 @@ final class CuckooStore extends SeenStore {
   override def empty(): ShardedCuckoo = new ShardedCuckoo(Array(CuckooFilter.create(64)))
   override def save(f: ShardedCuckoo, p: Path): Unit = AtomicFile.write(p)(_.write(f.serialize()))
   override def load(p: Path): ShardedCuckoo = ShardedCuckoo.deserialize(Files.readAllBytes(p))
-
-  /** The HEAL (soundness): expiry evicts keys from the filters while the
-    * exact seen ledger stays monotone, so a REDISCOVERED requeued URL would
-    * ride the definitely-new fast path past the exact anti-join and enter
-    * the frontier twice. The evicted set is exactly the requeued set, so one
-    * filter over the queued frontier restores the no-false-negative
-    * contract (fetched requeues are covered by [[deltaFilter]]). */
-  override def heal(spark: SparkSession, queued: => Option[DataFrame],
-                    queuedCount: Long): Option[ShardedCuckoo] =
-    queued.flatMap { q =>
-      val n = if (queuedCount >= 0) queuedCount else q.count()
-      Option.when(n > 0)(build(spark, q, SeenStore.Key, n))
-    }
-
-  /** Over the new AND the admitted keys, so a refetched (previously
-    * evicted) URL is covered from the next epoch on, even across a resume.
-    * Sound: admitted ⊆ seen; extra membership only costs exact-join
-    * traffic. */
-  override def deltaFilter(spark: SparkSession, newKeys: DataFrame, admittedKeys: => DataFrame,
-                           nNew: Long, queuedCount: Long): ShardedCuckoo =
-    build(spark, newKeys.unionByName(admittedKeys), SeenStore.Key,
-      nNew + math.max(queuedCount, 0L))
-
-  /** The delta and every key of the frontier the epoch admitted from: every
-    * row of a frontier snapshot is queued, so that covers the admitted keys
-    * [[deltaFilter]] covered, and a refetched requeue stays covered when the
-    * file is lost after an expiry. */
-  override protected def rebuild(spark: SparkSession, delta: DataFrame,
-                                 queuedBefore: => Option[DataFrame]): ShardedCuckoo = {
-    val keys = queuedBefore.fold(delta)(q => delta.unionByName(q.select(SeenStore.Key)))
-    build(spark, keys, SeenStore.Key, keys.count())
-  }
-
-  /** Evict the expired keys ([[CuckooSeen.evictSharded]]) from the filter
-    * that holds them: the delta's own while it is in the live vector, else
-    * the compacted one at `seenBase`. They are in it by construction on the
-    * FIRST eviction only, and deleting an absent key can strip a colliding
-    * live fingerprint, so the marker `.evicted_<target>_<expired>` makes
-    * each (filter, expired epoch) pair evict once; a later compaction moves
-    * the target to a fresh filter. */
-  override def evict(runDir: String, seenBase: Int, expired: Int,
-                     expiredKeys: => DataFrame): Unit = {
-    val target = math.max(expired, seenBase)
-    val p = path(runDir, target)
-    val marker = Paths.get(f"$runDir/.evicted_$target%04d_$expired%04d")
-    if (Files.exists(p) && !Files.exists(marker)) {
-      save(CuckooSeen.evictSharded(load(p), expiredKeys, SeenStore.Key)._1, p)
-      Files.createFile(marker)
-    }
-  }
 }
 
 object SeenStore {
@@ -275,5 +194,14 @@ object SeenStore {
   def detect(runDir: String, epoch: Int): SeenStore = {
     val cuckoo = new CuckooStore
     if (Files.exists(cuckoo.path(runDir, epoch))) cuckoo else new BloomStore(BloomFpp)
+  }
+
+  /** Whether an earlier version's `Crawl.expireEpoch` evicted keys from
+    * epoch `epoch`'s filter file: it left a marker
+    * `.evicted_<epoch>_<expired>` for each eviction. */
+  private def evictedFrom(runDir: String, epoch: Int): Boolean = {
+    val marker = f".evicted_$epoch%04d_"
+    val it = Files.list(Paths.get(runDir))
+    try it.anyMatch(_.getFileName.toString.startsWith(marker)) finally it.close()
   }
 }

@@ -46,6 +46,27 @@ class CrawlSpec extends AnyFunSuite {
       CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40)))
   }
 
+  /** The same crawl under `seenFilter = "cuckoo"`, run once on first use. */
+  private lazy val cuckooReference: (String, CrawlSummary) = {
+    val runDir = freshDir("cuckoo-reference")
+    (runDir, Crawl.run(spark, seedsDF, pagesDF, robotsDF, runDir,
+      CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40, seenFilter = "cuckoo")))
+  }
+
+  /** A copy of run dir `src`, for a test that changes a shared run. */
+  private def copyRun(src: String, tag: String): String = {
+    val (from, to) = (Paths.get(src), Paths.get(freshDir(tag)))
+    val walk = Files.walk(from)
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.foreach { p =>
+        val q = to.resolve(from.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(q) else Files.copy(p, q)
+      }
+    } finally walk.close()
+    to.toString
+  }
+
   private def manifest(runDir: String, e: Int): EpochManifest =
     EpochManifest.read(runDir, e).getOrElse(fail(s"no manifest $e under $runDir"))
 
@@ -281,8 +302,7 @@ class CrawlSpec extends AnyFunSuite {
 
   test("TTL recrawl: expiring an epoch refetches exactly its URLs; seen set unchanged") {
     val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40)
-    val runDir = freshDir("recrawl")
-    Crawl.run(spark, seedsDF, pagesDF, robotsDF, runDir, cfg)
+    val runDir = copyRun(reference._1, "recrawl")
     val seenBefore = Crawl.seenSet(spark, runDir).as[Long].collect().toSet
     val epochsBefore = Crawl.lastCommittedEpoch(runDir)
     // the URLs first enqueued at epoch 1 (what a TTL of that epoch expires)
@@ -337,13 +357,13 @@ class CrawlSpec extends AnyFunSuite {
     }
   }
 
-  test("cuckoo seen-filter: crawl + TTL recrawl identical to bloom; expiry evicts from the filter") {
-    import graft.frontier.{SeenStore, ShardedCuckoo}
+  test("cuckoo seen-filter: crawl + TTL recrawl identical to bloom; expiry leaves every filter file unchanged") {
+    import graft.frontier.SeenStore
     val bloomCfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40)
     val cuckooCfg = bloomCfg.copy(seenFilter = "cuckoo")
-    val bDir = freshDir("seen-bloom"); val cDir = freshDir("seen-cuckoo")
-    Crawl.run(spark, seedsDF, pagesDF, robotsDF, bDir, bloomCfg)
-    Crawl.run(spark, seedsDF, pagesDF, robotsDF, cDir, cuckooCfg)
+    // both runs are expired below: copies of the shared reference crawls
+    val bDir = copyRun(reference._1, "seen-bloom")
+    val cDir = copyRun(cuckooReference._1, "seen-cuckoo")
     // the filter family must be invisible to results: identical visit order,
     // seen set, and docs between bloom and cuckoo runs
     def vs(d: String) = Crawl.visits(spark, d).select("epoch", "visit_rank", "url")
@@ -364,18 +384,16 @@ class CrawlSpec extends AnyFunSuite {
     val expiredHashes = spark.read.parquet(f"$cDir/seen/epoch=${1}%04d")
       .as[Long].collect().toSet
     assert(expiredHashes.nonEmpty)
-    // before expiry the epoch-1 delta filter contains all its hashes
-    val preFilter = store.load(store.path(cDir, 1)).asInstanceOf[ShardedCuckoo]
-    assert(expiredHashes.forall(preFilter.contains))
+    // the bytes of every filter file of both runs before either expires
+    def filterBytes(d: String, family: String): Map[Path, Seq[Byte]] =
+      filterFiles(d, family).map(p => p -> Files.readAllBytes(p).toSeq).toMap
+    val filtersBefore = filterBytes(bDir, "bloom") ++ filterBytes(cDir, "cuckoo")
 
     val n = Crawl.expireEpoch(spark, cDir, 1)
     assert(n > 0)
-    // expiry EVICTED the delta's hashes from the persisted filter (the
-    // deletable-seen capability exercised through the TTL path, not test-only)
-    val postFilter = store.load(store.path(cDir, 1)).asInstanceOf[ShardedCuckoo]
-    val stillIn = expiredHashes.count(postFilter.contains)
-    assert(stillIn <= math.max(1, (expiredHashes.size * 1.2e-3).toInt),
-      s"$stillIn of ${expiredHashes.size} expired hashes survived eviction")
+    Crawl.expireEpoch(spark, bDir, 1)
+    // expiry leaves every existing filter file byte-identical, under either family
+    assert(filtersBefore.forall { case (p, bytes) => Files.readAllBytes(p).toSeq == bytes })
 
     Crawl.run(spark, seedsDF, pagesDF, robotsDF, cDir, cuckooCfg)
     // recrawl through the filter: seen-set identity, refetch docs emitted
@@ -387,7 +405,6 @@ class CrawlSpec extends AnyFunSuite {
       .where(col("epoch") > epochsBefore).select("doc_id").as[String].collect().toSet
     assert(freshDocs.nonEmpty && freshDocs.subsetOf(revisited))
     // and the recrawl matches the bloom-path recrawl exactly
-    Crawl.expireEpoch(spark, bDir, 1)
     Crawl.run(spark, seedsDF, pagesDF, robotsDF, bDir, bloomCfg)
     assert(vs(bDir) == vs(cDir))
   }
@@ -413,18 +430,18 @@ class CrawlSpec extends AnyFunSuite {
 
   test("cuckoo TTL expiry stays sound when expired pages link to each other") {
     // the dangerous shape: /a and /b are both expired AND link to each
-    // other. Eviction removes their hashes from the filter while the exact
-    // ledger keeps them — without the queued-heal filter, the recrawl's
-    // discovery of /b (from /a's links) would ride the definitely-new fast
-    // path PAST the exact anti-join and fetch /b twice.
+    // other. The recrawl's discovery of /b (from /a's links) must find /b's
+    // hash in the filter vector, or it rides the definitely-new fast path
+    // PAST the exact anti-join and /b is fetched twice. Expiry leaves every
+    // filter as it is, so the vector still holds both hashes.
     val cfg = CrawlConfig(hostBudget = 10, maxEpochs = 20, seenFilter = "cuckoo")
     val runDir = freshDir("cuckoo-sound")
     Crawl.run(spark, miniSeeds, miniPages, robotsDF.limit(0), runDir, cfg)
     val seenBefore = Crawl.seenSet(spark, runDir).as[Long].collect().sorted.toSeq
     assert(seenBefore.distinct == seenBefore) // ledger duplicate-free
     val epochsBefore = Crawl.lastCommittedEpoch(runDir)
-    // expire epoch 1 (/a, /b) TWICE — the marker must stop the second
-    // eviction (absent-key cuckoo deletes can strip colliding live keys)
+    // expire epoch 1 (/a, /b) TWICE — the second expiry requeues the same
+    // URLs and must not make either one fetched twice
     assert(Crawl.expireEpoch(spark, runDir, 1) == 2)
     Crawl.expireEpoch(spark, runDir, 1)
     Crawl.run(spark, miniSeeds, miniPages, robotsDF.limit(0), runDir, cfg)
@@ -441,12 +458,10 @@ class CrawlSpec extends AnyFunSuite {
   test("a filter lost after an expiry is rebuilt to cover what it covered; nothing is fetched twice") {
     // hostBudget 1 crawls x.com, /a, /b, /c in epochs 0-3 and compacts the
     // seen set at epoch 4; the recrawl refetches the expired /a and /b in
-    // epochs 5 and 6. Under cuckoo the expiry evicts them from the compacted
-    // filter, so only epoch 6's filter covers /a (as an admitted key). If that
-    // file is lost, the rebuild must cover /a again, or /b's link to it rides
-    // the definitely-new fast path past the exact anti-join and /a is fetched
-    // once more. Under bloom nothing was evicted, and the lost filter's seen
-    // delta is empty
+    // epochs 5 and 6. The compacted filter of epoch 4 covers /a under either
+    // family, since expiry leaves it as it is, and epoch 6's seen delta is
+    // empty. So a lost epoch-6 filter is rebuilt empty, and /b's link to /a
+    // still meets the exact anti-join: /a is not fetched once more
     for (family <- Seq("bloom", "cuckoo")) {
       val cfg = CrawlConfig(hostBudget = 1, maxEpochs = 40, seenFilter = family,
         seenCompactEvery = 4)
@@ -473,6 +488,75 @@ class CrawlSpec extends AnyFunSuite {
       assert(refetched.sorted == Seq("http://x.com/a", "http://x.com/b"), s"$family: $refetched")
       assert(rebuilt == kept, family)
       assert(rebuiltSeen == keptSeen && rebuiltSeen.distinct == rebuiltSeen, family)
+    }
+  }
+
+  test("a run dir whose cuckoo filter an expiry evicted from resumes soundly: the marked filter is rebuilt") {
+    import graft.frontier.{CuckooSeen, CuckooStore}
+    // earlier versions' expiry deleted the expired keys from the filter that
+    // held them and left a marker `.evicted_<target>_<expired>`. Such a file
+    // lacks /a and /b, so a resume that loaded it would let the recrawl's
+    // rediscovery of each past the exact anti-join
+    val cfg = CrawlConfig(hostBudget = 10, maxEpochs = 20, seenFilter = "cuckoo")
+    val runDir = freshDir("cuckoo-evicted")
+    Crawl.run(spark, miniSeeds, miniPages, robotsDF.limit(0), runDir, cfg)
+    val seenBefore = Crawl.seenSet(spark, runDir).as[Long].collect().sorted.toSeq
+    val epochsBefore = Crawl.lastCommittedEpoch(runDir)
+    assert(Crawl.expireEpoch(spark, runDir, 1) == 2)
+    // the target: epoch 1's own filter while no compaction has passed it
+    val target = math.max(1, manifest(runDir, epochsBefore).seenBase)
+    def seenDelta(e: Int) = spark.read.parquet(f"$runDir/seen/epoch=$e%04d")
+    val kept = seenDelta(target).join(seenDelta(1), Seq("url_hash"), "left_anti")
+    val store = new CuckooStore
+    store.save(CuckooSeen.buildSharded(kept, "url_hash", kept.count()), store.path(runDir, target))
+    Files.createFile(Paths.get(f"$runDir/.evicted_$target%04d_0001"))
+
+    Crawl.run(spark, miniSeeds, miniPages, robotsDF.limit(0), runDir, cfg)
+    val revisits = Crawl.visits(spark, runDir).where(col("epoch") > epochsBefore)
+      .select("url").as[String].collect().toSeq.sorted
+    assert(revisits == Seq("http://x.com/a", "http://x.com/b"), revisits)
+    assert(Crawl.seenSet(spark, runDir).as[Long].collect().sorted.toSeq == seenBefore)
+  }
+
+  test("a failed expireEpoch changes no file and leaves no filter of its epoch; a retry equals an expiry that never failed") {
+    def files(runDir: String): Map[Path, Seq[Byte]] = {
+      val walk = Files.walk(Paths.get(runDir))
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.filter(Files.isRegularFile(_))
+          .map(p => p -> Files.readAllBytes(p).toSeq).toMap
+      } finally walk.close()
+    }
+    def seenHashes(d: String): Set[Long] =
+      Crawl.seenSet(spark, d).as[Long].collect().toSet
+    def vs(d: String) = Crawl.visits(spark, d).select("epoch", "visit_rank", "url")
+      .orderBy("epoch", "visit_rank").collect().map(r => (r.getInt(0), r.getString(2))).toSeq
+    for ((family, (ref, _)) <- Seq("bloom" -> reference, "cuckoo" -> cuckooReference)) {
+      val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40, seenFilter = family)
+      val next = Crawl.lastCommittedEpoch(ref) + 1
+      val unfailed = copyRun(ref, s"expire-$family")
+      Crawl.expireEpoch(spark, unfailed, 1)
+      Crawl.run(spark, seedsDF, pagesDF, robotsDF, unfailed, cfg)
+
+      // the manifest commit writes a hidden temp file beside the manifest and
+      // renames it into place: a non-empty dir at the temp path fails it
+      val runDir = copyRun(ref, s"expire-failed-$family")
+      val blocker = Paths.get(runDir, f".manifest_$next%04d.json.tmp")
+      Files.createDirectories(blocker)
+      Files.writeString(blocker.resolve("not-a-manifest"), "")
+      val before = files(runDir)
+      intercept[java.nio.file.FileSystemException](Crawl.expireEpoch(spark, runDir, 1))
+      assert(Crawl.lastCommittedEpoch(runDir) == next - 1, family)
+      val changed = before.collect { case (p, bytes) if Files.readAllBytes(p).toSeq != bytes => p }
+      assert(changed.isEmpty, s"$family: the failed expiry changed files")
+      assert(!Files.exists(Paths.get(f"$runDir/${family}_$next%04d.bin")), family)
+
+      ls(blocker).foreach(Files.delete)
+      Files.delete(blocker)
+      Crawl.expireEpoch(spark, runDir, 1)
+      Crawl.run(spark, seedsDF, pagesDF, robotsDF, runDir, cfg)
+      assert(seenHashes(runDir) == seenHashes(unfailed), family)
+      assert(vs(runDir) == vs(unfailed), family)
     }
   }
 
@@ -775,12 +859,7 @@ class CrawlSpec extends AnyFunSuite {
     for (family <- Seq("bloom", "cuckoo")) {
       val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40,
         seenFilter = family)
-      val (full, fullSummary) =
-        if (family == "bloom") reference
-        else {
-          val runDir = freshDir(s"rebuild-full-$family")
-          (runDir, Crawl.run(spark, seedsDF, pagesDF, robotsDF, runDir, cfg))
-        }
+      val (full, fullSummary) = if (family == "bloom") reference else cuckooReference
 
       val partial = freshDir(s"rebuild-part-$family")
       Crawl.run(spark, seedsDF, pagesDF, robotsDF, partial, cfg.copy(maxEpochs = 2))

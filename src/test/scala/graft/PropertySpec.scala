@@ -134,7 +134,7 @@ class PropertySpec extends AnyFunSuite {
     (1 until n by 2).foreach(i => assert(rt.contains(key(i))))
     assert(rt.size == cf.size && rt.numBuckets == cf.numBuckets)
 
-    // ---- seen-set protocol: antiJoin equivalence + TTL eviction ----------
+    // ---- seen-set protocol: antiJoin equivalence ---------------------------
     // deltas are built DISTRIBUTED (per-shard mapGroups tasks; only compact
     // filters reach the driver) — there is no row-collecting build anymore
     import graft.frontier.{SeenDelta, SeenFilters}
@@ -159,21 +159,6 @@ class PropertySpec extends AnyFunSuite {
     val shardedRt = graft.frontier.ShardedCuckoo.deserialize(sharded.serialize())
     (0L until 2000L).foreach(i => assert(shardedRt.contains(key(i))))
     assert(shardedRt.delete(key(7L)) && !(0L until 2000L).forall(i => shardedRt.contains(key(i))))
-
-    // TTL expiry of epoch-1: evict its delta from its filter EXECUTOR-SIDE;
-    // with the expired delta also dropped from the exact seen set, all its
-    // URLs become crawlable again — no rebuild of epoch-2 state
-    val (f1Evicted, removed) = CuckooSeen.evictSharded(f1, d1, "url_hash")
-    assert(removed == 1200)
-    val cand2 = (0L until 1500L).map(key).toDF("url_hash")
-    val afterExpiry = SeenFilters.antiJoinTracked(spark, cand2, d2, "url_hash",
-        Seq(f1Evicted, f2))._1.as[Long].collect().toSet
-    val exactAfter = cand2.join(d2, Seq("url_hash"), "left_anti")
-      .as[Long].collect().toSet
-    assert(afterExpiry == exactAfter)
-    assert((0L until 1200L).map(key).toSet.subsetOf(afterExpiry)) // refetchable
-    // the pre-eviction filter object is untouched (evict returns a new one)
-    assert((0L until 1200L).forall(i => f1.contains(key(i))))
   }
 
   test("seen store save then load: every key still maybe-seen; the file is the filter's own serialization") {
