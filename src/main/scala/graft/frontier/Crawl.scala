@@ -64,12 +64,12 @@ import scala.concurrent.duration.Duration
   * [[Crawl.RowsPerFile]] queued rows, so a small epoch writes one file per
   * table), and the lineage is taken by the job that evaluates the scraped
   * rows, the counts by the jobs that evaluate the frames they count. The seen
-  * filter file (`bloom_<epoch>.bin` / `cuckoo_<epoch>.bin`) is no part of
-  * the commit: it is a derived cache of the committed snapshots, may land
-  * after the manifest, and is rebuilt on resume when it did not
-  * ([[SeenStore.resume]]). A killed job resumes from `max(committed epoch)`
-  * with an identical URL-seen set: nothing below a manifest is ever visible
-  * to a reader (commit-then-advance, §7.4.6).
+  * filter file (`bloom_<epoch>.bin`) is no part of the commit: it is a
+  * derived cache of the committed snapshots, may land after the manifest,
+  * and is rebuilt on resume when it did not ([[BloomStore.resume]]). A
+  * killed job resumes from `max(committed epoch)` with an identical URL-seen
+  * set: nothing below a manifest is ever visible to a reader
+  * (commit-then-advance, §7.4.6).
   *
   * Ordering spec (deterministic; reference stream-mode completion order is
   * nondeterministic so equality is defined on batch semantics, SURVEY.md
@@ -98,11 +98,6 @@ final case class CrawlConfig(
       * are compacted into one full set — bounds the number of delta dirs a
       * reader unions and the per-epoch filter vector length. */
     seenCompactEvery: Int = 16,
-    /** Pre-filter family for the seen set: "bloom" (append-only, smallest) or
-      * "cuckoo" (sharded cuckoo filters). The families differ only in how a
-      * filter is built and stored ([[SeenStore]]); either way the exact
-      * anti-join gates correctness, and this only chooses the pre-filter. */
-    seenFilter: String = "bloom",
     /** Optional custom frontier-candidate scorer over (url, anchorText) —
       * e.g. [[graft.ops.AdaptiveEmbedding.linkScorerFor]]'s gap-reduction
       * kernel. Overrides keyword scoring; runs inside the expansion plan as
@@ -287,16 +282,19 @@ object Crawl {
     case _            => Seq(col("priority"), col("depth"), col("path"))
   }
 
-  /** Highest epoch with a committed manifest, -1 if none. */
+  /** The name of a committed manifest, `manifest_<k>.json`. */
+  private val ManifestName = """manifest_(\d+)\.json""".r
+
+  /** Highest epoch with a committed manifest, -1 if none: a regular file
+    * named [[ManifestName]] (a directory of that name is no commit). */
   def lastCommittedEpoch(runDir: String): Int = {
     val d = Paths.get(runDir)
     if (!Files.isDirectory(d)) return -1
     val it = Files.list(d)
     try {
       import scala.jdk.CollectionConverters._
-      it.iterator().asScala.map(_.getFileName.toString)
-        .collect { case s if s.startsWith("manifest_") && s.endsWith(".json") =>
-          s.stripPrefix("manifest_").stripSuffix(".json").toInt }
+      it.iterator().asScala.filter(Files.isRegularFile(_)).map(_.getFileName.toString)
+        .collect { case ManifestName(k) => k.toInt }
         .foldLeft(-1)(math.max)
     } finally it.close()
   }
@@ -364,7 +362,7 @@ object Crawl {
           robots: DataFrame, runDir: String, cfg: CrawlConfig = CrawlConfig())
       : CrawlSummary = {
     Files.createDirectories(Paths.get(runDir))
-    val store = SeenStore.forConfig(cfg.seenFilter)
+    val store = BloomStore.crawl
     val maxParts = spark.sessionState.conf.numShufflePartitions
     implicit val ec: ExecutionContext = Crawl.epochEc
 
@@ -404,7 +402,7 @@ object Crawl {
       (0 to lastCommittedEpoch(runDir)).flatMap(EpochManifest.read(runDir, _)).toVector
     def total(count: EpochManifest => Option[Long]): Long = manifests.flatMap(count).sum
     // the filter vector as of the head: each delta's filter, loaded or
-    // rebuilt from its seen delta (SeenStore.resume). An epoch's own filter
+    // rebuilt from its seen delta (BloomStore.resume). An epoch's own filter
     // builds and saves after its commit: the next probe waits for it, and so
     // does the run before it returns or rethrows
     var filters: Future[Vector[SeenDelta]] = {
@@ -777,9 +775,9 @@ object Crawl {
     * exact anti-join is what keeps a re-queued URL rediscovered via links
     * from entering the frontier twice (the reference keeps the same split —
     * the per-crawl visited set is monotone, only the TTL'd result CACHE is
-    * deletable). So expiry touches no filter, under either family: each
-    * still covers the keys it covered, and the pre-filter keeps its one
-    * contract, no false negative against the ledger.
+    * deletable). So expiry touches no filter: each still covers the keys it
+    * covered, and the pre-filter keeps its one contract, no false negative
+    * against the ledger.
     *
     * Only the two snapshot dirs of the new epoch are written before its
     * manifest commits; its (empty) filter file lands after the commit, as
@@ -835,7 +833,7 @@ object Crawl {
       kind = Some("recrawl"), frontier = None, expiredEpoch = Some(expired),
       fetched = Some(0), failed = Some(0), skippedRobots = Some(0), newFrontier = Some(0),
       wallMs = None, partitions = None))
-    val store = SeenStore.detect(runDir, last)
+    val store = BloomStore.crawl
     store.save(store.empty(), store.path(runDir, nextEpoch))
     n
   }
@@ -870,7 +868,7 @@ object Crawl {
     val last = lastCommittedEpoch(runDir)
     if (asOf >= last) last
     else {
-      require(Files.exists(EpochManifest.path(runDir, asOf)),
+      require(Files.isRegularFile(EpochManifest.path(runDir, asOf)),
         s"no committed snapshot at epoch $asOf under $runDir")
       asOf
     }

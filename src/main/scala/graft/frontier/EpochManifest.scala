@@ -41,9 +41,10 @@ object EpochManifest {
 
   def path(runDir: String, epoch: Int): Path = Paths.get(f"$runDir/manifest_$epoch%04d.json")
 
-  /** The manifest committed at `epoch`, if any. */
+  /** The manifest committed at `epoch`, if any: a regular file (a directory
+    * at the manifest's path is no commit). */
   def read(runDir: String, epoch: Int): Option[EpochManifest] =
-    Some(path(runDir, epoch)).filter(Files.exists(_)).map(p => decode(Files.readString(p)))
+    Some(path(runDir, epoch)).filter(Files.isRegularFile(_)).map(p => decode(Files.readString(p)))
 
   /** Atomic commit: a reader never sees a partial manifest. */
   def commit(runDir: String, m: EpochManifest): Unit =

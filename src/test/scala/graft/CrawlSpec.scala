@@ -46,13 +46,6 @@ class CrawlSpec extends AnyFunSuite {
       CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40)))
   }
 
-  /** The same crawl under `seenFilter = "cuckoo"`, run once on first use. */
-  private lazy val cuckooReference: (String, CrawlSummary) = {
-    val runDir = freshDir("cuckoo-reference")
-    (runDir, Crawl.run(spark, seedsDF, pagesDF, robotsDF, runDir,
-      CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40, seenFilter = "cuckoo")))
-  }
-
   /** A copy of run dir `src`, for a test that changes a shared run. */
   private def copyRun(src: String, tag: String): String = {
     val (from, to) = (Paths.get(src), Paths.get(freshDir(tag)))
@@ -316,9 +309,14 @@ class CrawlSpec extends AnyFunSuite {
       .select("url").as[String].collect().toSet
     val expectVisit = expired.intersect(originallyVisited)
     assert(expectVisit.nonEmpty && expectVisit != expired) // site has a robots-blocked cat
+    // the bytes of every filter file before the expiry
+    val filtersBefore = filterFiles(runDir).map(p => p -> Files.readAllBytes(p).toSeq).toMap
+    assert(filtersBefore.size == epochsBefore + 1)
 
     val n = Crawl.expireEpoch(spark, runDir, 1)
     assert(n == expired.size)
+    // expiry leaves every existing filter file byte-identical
+    assert(filtersBefore.forall { case (p, bytes) => Files.readAllBytes(p).toSeq == bytes })
     Crawl.run(spark, seedsDF, pagesDF, robotsDF, runDir, cfg)
 
     // seen set identical — refetch, not rediscovery
@@ -357,58 +355,6 @@ class CrawlSpec extends AnyFunSuite {
     }
   }
 
-  test("cuckoo seen-filter: crawl + TTL recrawl identical to bloom; expiry leaves every filter file unchanged") {
-    import graft.frontier.SeenStore
-    val bloomCfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40)
-    val cuckooCfg = bloomCfg.copy(seenFilter = "cuckoo")
-    // both runs are expired below: copies of the shared reference crawls
-    val bDir = copyRun(reference._1, "seen-bloom")
-    val cDir = copyRun(cuckooReference._1, "seen-cuckoo")
-    // the filter family must be invisible to results: identical visit order,
-    // seen set, and docs between bloom and cuckoo runs
-    def vs(d: String) = Crawl.visits(spark, d).select("epoch", "visit_rank", "url")
-      .orderBy("epoch", "visit_rank").collect().map(r => (r.getInt(0), r.getString(2))).toSeq
-    assert(vs(bDir) == vs(cDir))
-    assert(Crawl.seenSet(spark, bDir).as[Long].collect().toSet ==
-      Crawl.seenSet(spark, cDir).as[Long].collect().toSet)
-    assert(Crawl.docs(spark, bDir).count() == Crawl.docs(spark, cDir).count())
-    // cuckoo filter files committed per epoch, bloom files absent
-    val last = Crawl.lastCommittedEpoch(cDir)
-    val store = SeenStore.detect(cDir, last)
-    assert(store.name == "cuckoo")
-    assert(!Files.exists(java.nio.file.Paths.get(f"$cDir/bloom_$last%04d.bin")))
-
-    // ---- TTL recrawl under cuckoo: same e2e contract as the bloom test ----
-    val seenBefore = Crawl.seenSet(spark, cDir).as[Long].collect().toSet
-    val epochsBefore = last
-    val expiredHashes = spark.read.parquet(f"$cDir/seen/epoch=${1}%04d")
-      .as[Long].collect().toSet
-    assert(expiredHashes.nonEmpty)
-    // the bytes of every filter file of both runs before either expires
-    def filterBytes(d: String, family: String): Map[Path, Seq[Byte]] =
-      filterFiles(d, family).map(p => p -> Files.readAllBytes(p).toSeq).toMap
-    val filtersBefore = filterBytes(bDir, "bloom") ++ filterBytes(cDir, "cuckoo")
-
-    val n = Crawl.expireEpoch(spark, cDir, 1)
-    assert(n > 0)
-    Crawl.expireEpoch(spark, bDir, 1)
-    // expiry leaves every existing filter file byte-identical, under either family
-    assert(filtersBefore.forall { case (p, bytes) => Files.readAllBytes(p).toSeq == bytes })
-
-    Crawl.run(spark, seedsDF, pagesDF, robotsDF, cDir, cuckooCfg)
-    // recrawl through the filter: seen-set identity, refetch docs emitted
-    assert(Crawl.seenSet(spark, cDir).as[Long].collect().toSet == seenBefore)
-    val revisited = Crawl.visits(spark, cDir)
-      .where(col("epoch") > epochsBefore).select("url").as[String].collect().toSet
-    assert(revisited.nonEmpty)
-    val freshDocs = Crawl.docs(spark, cDir)
-      .where(col("epoch") > epochsBefore).select("doc_id").as[String].collect().toSet
-    assert(freshDocs.nonEmpty && freshDocs.subsetOf(revisited))
-    // and the recrawl matches the bloom-path recrawl exactly
-    Crawl.run(spark, seedsDF, pagesDF, robotsDF, bDir, bloomCfg)
-    assert(vs(bDir) == vs(cDir))
-  }
-
   /** A four-page site whose expired pages link to each other: x.com → /a,
     * /b; /a → /b, /c; /b → /a. */
   private lazy val miniPages = {
@@ -428,14 +374,14 @@ class CrawlSpec extends AnyFunSuite {
   }
   private lazy val miniSeeds = Seq(("http://x.com/", "sitemap")).toDF("url", "source")
 
-  test("cuckoo TTL expiry stays sound when expired pages link to each other") {
+  test("TTL expiry stays sound when expired pages link to each other") {
     // the dangerous shape: /a and /b are both expired AND link to each
     // other. The recrawl's discovery of /b (from /a's links) must find /b's
     // hash in the filter vector, or it rides the definitely-new fast path
     // PAST the exact anti-join and /b is fetched twice. Expiry leaves every
     // filter as it is, so the vector still holds both hashes.
-    val cfg = CrawlConfig(hostBudget = 10, maxEpochs = 20, seenFilter = "cuckoo")
-    val runDir = freshDir("cuckoo-sound")
+    val cfg = CrawlConfig(hostBudget = 10, maxEpochs = 20)
+    val runDir = freshDir("expiry-sound")
     Crawl.run(spark, miniSeeds, miniPages, robotsDF.limit(0), runDir, cfg)
     val seenBefore = Crawl.seenSet(spark, runDir).as[Long].collect().sorted.toSeq
     assert(seenBefore.distinct == seenBefore) // ledger duplicate-free
@@ -458,64 +404,67 @@ class CrawlSpec extends AnyFunSuite {
   test("a filter lost after an expiry is rebuilt to cover what it covered; nothing is fetched twice") {
     // hostBudget 1 crawls x.com, /a, /b, /c in epochs 0-3 and compacts the
     // seen set at epoch 4; the recrawl refetches the expired /a and /b in
-    // epochs 5 and 6. The compacted filter of epoch 4 covers /a under either
-    // family, since expiry leaves it as it is, and epoch 6's seen delta is
-    // empty. So a lost epoch-6 filter is rebuilt empty, and /b's link to /a
-    // still meets the exact anti-join: /a is not fetched once more
-    for (family <- Seq("bloom", "cuckoo")) {
-      val cfg = CrawlConfig(hostBudget = 1, maxEpochs = 40, seenFilter = family,
-        seenCompactEvery = 4)
-      def recrawl(loseFilter: Boolean): (Seq[(Int, String)], Seq[Long], Int) = {
-        val runDir = freshDir(s"rebuild-$family-$loseFilter")
-        Crawl.run(spark, miniSeeds, miniPages, robotsDF.limit(0), runDir, cfg)
-        val before = Crawl.lastCommittedEpoch(runDir)
-        assert(before == 4 && manifest(runDir, before).seenBase == 4, family)
-        assert(Crawl.expireEpoch(spark, runDir, 1) == 2)
-        // one epoch of the recrawl: /a is refetched, /b stays queued
-        Crawl.run(spark, miniSeeds, miniPages, robotsDF.limit(0), runDir,
-          cfg.copy(maxEpochs = before + 2))
-        val lost = Paths.get(f"$runDir/${family}_${before + 2}%04d.bin")
-        assert(Files.exists(lost))
-        if (loseFilter) Files.delete(lost)
-        Crawl.run(spark, miniSeeds, miniPages, robotsDF.limit(0), runDir, cfg)
-        val visits = Crawl.visits(spark, runDir).select("epoch", "visit_rank", "url")
-          .orderBy("epoch", "visit_rank").collect().map(r => (r.getInt(0), r.getString(2))).toSeq
-        (visits, Crawl.seenSet(spark, runDir).as[Long].collect().sorted.toSeq, before)
-      }
-      val (kept, keptSeen, before) = recrawl(loseFilter = false)
-      val (rebuilt, rebuiltSeen, _) = recrawl(loseFilter = true)
-      val refetched = rebuilt.filter(_._1 > before).map(_._2)
-      assert(refetched.sorted == Seq("http://x.com/a", "http://x.com/b"), s"$family: $refetched")
-      assert(rebuilt == kept, family)
-      assert(rebuiltSeen == keptSeen && rebuiltSeen.distinct == rebuiltSeen, family)
+    // epochs 5 and 6. The compacted filter of epoch 4 covers /a, since expiry
+    // leaves it as it is, and epoch 6's seen delta is empty. So a lost
+    // epoch-6 filter is rebuilt empty, and /b's link to /a still meets the
+    // exact anti-join: /a is not fetched once more
+    val cfg = CrawlConfig(hostBudget = 1, maxEpochs = 40, seenCompactEvery = 4)
+    def recrawl(loseFilter: Boolean): (Seq[(Int, String)], Seq[Long], Int) = {
+      val runDir = freshDir(s"rebuild-$loseFilter")
+      Crawl.run(spark, miniSeeds, miniPages, robotsDF.limit(0), runDir, cfg)
+      val before = Crawl.lastCommittedEpoch(runDir)
+      assert(before == 4 && manifest(runDir, before).seenBase == 4)
+      assert(Crawl.expireEpoch(spark, runDir, 1) == 2)
+      // one epoch of the recrawl: /a is refetched, /b stays queued
+      Crawl.run(spark, miniSeeds, miniPages, robotsDF.limit(0), runDir,
+        cfg.copy(maxEpochs = before + 2))
+      val lost = Paths.get(f"$runDir/bloom_${before + 2}%04d.bin")
+      assert(Files.exists(lost))
+      if (loseFilter) Files.delete(lost)
+      Crawl.run(spark, miniSeeds, miniPages, robotsDF.limit(0), runDir, cfg)
+      val visits = Crawl.visits(spark, runDir).select("epoch", "visit_rank", "url")
+        .orderBy("epoch", "visit_rank").collect().map(r => (r.getInt(0), r.getString(2))).toSeq
+      (visits, Crawl.seenSet(spark, runDir).as[Long].collect().sorted.toSeq, before)
     }
+    val (kept, keptSeen, before) = recrawl(loseFilter = false)
+    val (rebuilt, rebuiltSeen, _) = recrawl(loseFilter = true)
+    val refetched = rebuilt.filter(_._1 > before).map(_._2)
+    assert(refetched.sorted == Seq("http://x.com/a", "http://x.com/b"), refetched)
+    assert(rebuilt == kept)
+    assert(rebuiltSeen == keptSeen && rebuiltSeen.distinct == rebuiltSeen)
   }
 
-  test("a run dir whose cuckoo filter an expiry evicted from resumes soundly: the marked filter is rebuilt") {
-    import graft.frontier.{CuckooSeen, CuckooStore}
-    // earlier versions' expiry deleted the expired keys from the filter that
-    // held them and left a marker `.evicted_<target>_<expired>`. Such a file
-    // lacks /a and /b, so a resume that loaded it would let the recrawl's
-    // rediscovery of each past the exact anti-join
-    val cfg = CrawlConfig(hostBudget = 10, maxEpochs = 20, seenFilter = "cuckoo")
-    val runDir = freshDir("cuckoo-evicted")
-    Crawl.run(spark, miniSeeds, miniPages, robotsDF.limit(0), runDir, cfg)
-    val seenBefore = Crawl.seenSet(spark, runDir).as[Long].collect().sorted.toSeq
-    val epochsBefore = Crawl.lastCommittedEpoch(runDir)
-    assert(Crawl.expireEpoch(spark, runDir, 1) == 2)
-    // the target: epoch 1's own filter while no compaction has passed it
-    val target = math.max(1, manifest(runDir, epochsBefore).seenBase)
-    def seenDelta(e: Int) = spark.read.parquet(f"$runDir/seen/epoch=$e%04d")
-    val kept = seenDelta(target).join(seenDelta(1), Seq("url_hash"), "left_anti")
-    val store = new CuckooStore
-    store.save(CuckooSeen.buildSharded(kept, "url_hash", kept.count()), store.path(runDir, target))
-    Files.createFile(Paths.get(f"$runDir/.evicted_$target%04d_0001"))
+  test("a run dir written by the cuckoo version resumes and expires soundly") {
+    // earlier versions could crawl under a cuckoo pre-filter: such a run dir
+    // holds `cuckoo_<k>.bin` filter files, no bloom file, and perhaps a
+    // marker `.evicted_<target>_<expired>` of an expiry that evicted keys
+    // from a cuckoo filter. Its filters are rebuilt from the seen deltas, so
+    // it expires and resumes as the bloom run it is copied from does
+    val cfg = CrawlConfig(hostBudget = 10, maxEpochs = 20)
+    val bloomDir = freshDir("bloom-run")
+    Crawl.run(spark, miniSeeds, miniPages, robotsDF.limit(0), bloomDir, cfg)
+    val seenBefore = Crawl.seenSet(spark, bloomDir).as[Long].collect().sorted.toSeq
+    val epochsBefore = Crawl.lastCommittedEpoch(bloomDir)
+    val cuckooDir = copyRun(bloomDir, "cuckoo-run")
+    filterFiles(cuckooDir).foreach { p =>
+      Files.delete(p)
+      Files.writeString(p.resolveSibling(p.getFileName.toString.replace("bloom_", "cuckoo_")),
+        "a cuckoo filter of an earlier version")
+    }
+    assert(filterFiles(cuckooDir).isEmpty && filterFiles(cuckooDir, "cuckoo").size == epochsBefore + 1)
+    Files.createFile(Paths.get(s"$cuckooDir/.evicted_0001_0001"))
 
-    Crawl.run(spark, miniSeeds, miniPages, robotsDF.limit(0), runDir, cfg)
-    val revisits = Crawl.visits(spark, runDir).where(col("epoch") > epochsBefore)
-      .select("url").as[String].collect().toSeq.sorted
-    assert(revisits == Seq("http://x.com/a", "http://x.com/b"), revisits)
-    assert(Crawl.seenSet(spark, runDir).as[Long].collect().sorted.toSeq == seenBefore)
+    def vs(d: String) = Crawl.visits(spark, d).select("epoch", "visit_rank", "url")
+      .orderBy("epoch", "visit_rank").collect().map(r => (r.getInt(0), r.getString(2))).toSeq
+    for (runDir <- Seq(bloomDir, cuckooDir)) {
+      assert(Crawl.expireEpoch(spark, runDir, 1) == 2)
+      Crawl.run(spark, miniSeeds, miniPages, robotsDF.limit(0), runDir, cfg)
+      val revisits = Crawl.visits(spark, runDir).where(col("epoch") > epochsBefore)
+        .select("url").as[String].collect().toSeq.sorted
+      assert(revisits == Seq("http://x.com/a", "http://x.com/b"), s"$runDir: $revisits")
+      assert(Crawl.seenSet(spark, runDir).as[Long].collect().sorted.toSeq == seenBefore, runDir)
+    }
+    assert(vs(cuckooDir) == vs(bloomDir))
   }
 
   test("a failed expireEpoch changes no file and leaves no filter of its epoch; a retry equals an expiry that never failed") {
@@ -531,33 +480,51 @@ class CrawlSpec extends AnyFunSuite {
       Crawl.seenSet(spark, d).as[Long].collect().toSet
     def vs(d: String) = Crawl.visits(spark, d).select("epoch", "visit_rank", "url")
       .orderBy("epoch", "visit_rank").collect().map(r => (r.getInt(0), r.getString(2))).toSeq
-    for ((family, (ref, _)) <- Seq("bloom" -> reference, "cuckoo" -> cuckooReference)) {
-      val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40, seenFilter = family)
-      val next = Crawl.lastCommittedEpoch(ref) + 1
-      val unfailed = copyRun(ref, s"expire-$family")
-      Crawl.expireEpoch(spark, unfailed, 1)
-      Crawl.run(spark, seedsDF, pagesDF, robotsDF, unfailed, cfg)
+    val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40)
+    val ref = reference._1
+    val next = Crawl.lastCommittedEpoch(ref) + 1
+    val unfailed = copyRun(ref, "expire")
+    Crawl.expireEpoch(spark, unfailed, 1)
+    Crawl.run(spark, seedsDF, pagesDF, robotsDF, unfailed, cfg)
 
-      // the manifest commit writes a hidden temp file beside the manifest and
-      // renames it into place: a non-empty dir at the temp path fails it
-      val runDir = copyRun(ref, s"expire-failed-$family")
-      val blocker = Paths.get(runDir, f".manifest_$next%04d.json.tmp")
-      Files.createDirectories(blocker)
-      Files.writeString(blocker.resolve("not-a-manifest"), "")
-      val before = files(runDir)
-      intercept[java.nio.file.FileSystemException](Crawl.expireEpoch(spark, runDir, 1))
-      assert(Crawl.lastCommittedEpoch(runDir) == next - 1, family)
-      val changed = before.collect { case (p, bytes) if Files.readAllBytes(p).toSeq != bytes => p }
-      assert(changed.isEmpty, s"$family: the failed expiry changed files")
-      assert(!Files.exists(Paths.get(f"$runDir/${family}_$next%04d.bin")), family)
+    // the manifest commit writes a hidden temp file beside the manifest and
+    // renames it into place: a non-empty dir at the temp path fails it
+    val runDir = copyRun(ref, "expire-failed")
+    val blocker = Paths.get(runDir, f".manifest_$next%04d.json.tmp")
+    Files.createDirectories(blocker)
+    Files.writeString(blocker.resolve("not-a-manifest"), "")
+    val before = files(runDir)
+    intercept[java.nio.file.FileSystemException](Crawl.expireEpoch(spark, runDir, 1))
+    assert(Crawl.lastCommittedEpoch(runDir) == next - 1)
+    val changed = before.collect { case (p, bytes) if Files.readAllBytes(p).toSeq != bytes => p }
+    assert(changed.isEmpty, "the failed expiry changed files")
+    assert(!Files.exists(Paths.get(f"$runDir/bloom_$next%04d.bin")))
 
-      ls(blocker).foreach(Files.delete)
-      Files.delete(blocker)
-      Crawl.expireEpoch(spark, runDir, 1)
-      Crawl.run(spark, seedsDF, pagesDF, robotsDF, runDir, cfg)
-      assert(seenHashes(runDir) == seenHashes(unfailed), family)
-      assert(vs(runDir) == vs(unfailed), family)
-    }
+    ls(blocker).foreach(Files.delete)
+    Files.delete(blocker)
+    Crawl.expireEpoch(spark, runDir, 1)
+    Crawl.run(spark, seedsDF, pagesDF, robotsDF, runDir, cfg)
+    assert(seenHashes(runDir) == seenHashes(unfailed))
+    assert(vs(runDir) == vs(unfailed))
+  }
+
+  test("a directory at a manifest path is no commit: every reader reads the run as before") {
+    val (ref, _) = reference
+    val last = Crawl.lastCommittedEpoch(ref)
+    val runDir = copyRun(ref, "manifest-dir")
+    val stray = EpochManifest.path(runDir, last + 1)
+    Files.createDirectories(stray)
+    Files.writeString(stray.resolve("not-a-manifest"), "")
+    assert(Crawl.lastCommittedEpoch(runDir) == last)
+    def seenHashes(d: String): Set[Long] =
+      Crawl.seenSet(spark, d).as[Long].collect().toSet
+    assert(seenHashes(runDir) == seenHashes(ref))
+    def vs(d: String) = Crawl.visits(spark, d).select("epoch", "visit_rank", "url")
+      .orderBy("epoch", "visit_rank").collect().map(r => (r.getInt(0), r.getString(2))).toSeq
+    assert(vs(runDir) == vs(ref))
+    def docs(d: String) = Crawl.docs(spark, d).select("epoch", "doc_id")
+      .as[(Int, String)].collect().sorted.toSeq
+    assert(docs(runDir) == docs(ref))
   }
 
   test("dynamic politeness: a throttling host shrinks to its backoff budget and aborts") {
@@ -848,94 +815,81 @@ class CrawlSpec extends AnyFunSuite {
     assert(vs(partial) == vs(full))
   }
 
-  /** The delta-filter files (`bloom_*.bin` / `cuckoo_*.bin`) of a run. */
-  private def filterFiles(runDir: String, family: String): Seq[Path] =
+  /** The delta-filter files `<family>_*.bin` of a run: `bloom_*.bin`, or
+    * the `cuckoo_*.bin` an earlier version could write. */
+  private def filterFiles(runDir: String, family: String = "bloom"): Seq[Path] =
     ls(Paths.get(runDir)).filter { p =>
       val n = p.getFileName.toString
       n.startsWith(s"${family}_") && n.endsWith(".bin")
     }
 
   test("resume rebuilds missing delta filters: seen set, visits and summary equal an uninterrupted run") {
-    for (family <- Seq("bloom", "cuckoo")) {
-      val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40,
-        seenFilter = family)
-      val (full, fullSummary) = if (family == "bloom") reference else cuckooReference
+    val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40)
+    val (full, fullSummary) = reference
 
-      val partial = freshDir(s"rebuild-part-$family")
-      Crawl.run(spark, seedsDF, pagesDF, robotsDF, partial, cfg.copy(maxEpochs = 2))
-      // every committed epoch's filter is gone: resume rebuilds each from its
-      // seen delta
-      val removed = filterFiles(partial, family)
-      assert(removed.size == Crawl.lastCommittedEpoch(partial) + 1, s"$family: $removed")
-      removed.foreach(Files.delete)
-      val resumedSummary = Crawl.run(spark, seedsDF, pagesDF, robotsDF, partial, cfg)
-      assert(resumedSummary == fullSummary, family)
+    val partial = freshDir("rebuild-part")
+    Crawl.run(spark, seedsDF, pagesDF, robotsDF, partial, cfg.copy(maxEpochs = 2))
+    // every committed epoch's filter is gone: resume rebuilds each from its
+    // seen delta
+    val removed = filterFiles(partial)
+    assert(removed.size == Crawl.lastCommittedEpoch(partial) + 1, removed)
+    removed.foreach(Files.delete)
+    val resumedSummary = Crawl.run(spark, seedsDF, pagesDF, robotsDF, partial, cfg)
+    assert(resumedSummary == fullSummary)
 
-      def seenHashes(d: String): Set[Long] =
-        Crawl.seenSet(spark, d).as[Long].collect().toSet
-      assert(seenHashes(partial) == seenHashes(full), family)
-      def vs(d: String) = Crawl.visits(spark, d).select("epoch", "visit_rank", "url")
-        .orderBy("epoch", "visit_rank").collect().map(r => (r.getInt(0), r.getString(2))).toSeq
-      assert(vs(partial) == vs(full), family)
-    }
+    def seenHashes(d: String): Set[Long] =
+      Crawl.seenSet(spark, d).as[Long].collect().toSet
+    assert(seenHashes(partial) == seenHashes(full))
+    def vs(d: String) = Crawl.visits(spark, d).select("epoch", "visit_rank", "url")
+      .orderBy("epoch", "visit_rank").collect().map(r => (r.getInt(0), r.getString(2))).toSeq
+    assert(vs(partial) == vs(full))
   }
 
   test("when a run returns, every committed epoch's filter file covers its seen delta") {
-    import graft.frontier.{SeenStore, ShardedCuckoo}
-    for (family <- Seq("bloom", "cuckoo")) {
-      val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40,
-        seenFilter = family, seenCompactEvery = 2)
-      val runDir = freshDir(s"filters-$family")
-      Crawl.run(spark, seedsDF, pagesDF, robotsDF, runDir, cfg)
-      val last = Crawl.lastCommittedEpoch(runDir)
-      assert(manifest(runDir, last).seenBase > 0, s"$family: no compaction")
-      val store = SeenStore.forConfig(family)
-      (0 to last).foreach { e =>
-        val saved = store.path(runDir, e)
-        assert(Files.exists(saved), s"$family: no filter file at epoch $e")
-        val delta = spark.read.parquet(f"$runDir/seen/epoch=$e%04d")
-        if (family == "bloom") {
-          // byte-identical to a build over the delta, sized by its rows (the
-          // build yields no filter over no rows: an empty delta's is empty)
-          val expected = Files.createTempFile("bloom-expected", ".bin")
-          val n = delta.count()
-          store.save(if (n == 0) store.empty() else store.build(spark, delta, "url_hash", n),
-            expected)
-          assert(Files.readAllBytes(saved).sameElements(Files.readAllBytes(expected)),
-            s"bloom filter of epoch $e")
-        } else {
-          val filter = store.load(saved).asInstanceOf[ShardedCuckoo]
-          assert(delta.as[Long].collect().forall(filter.mightContain), s"cuckoo filter of epoch $e")
-        }
-      }
+    import graft.frontier.BloomStore
+    val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40, seenCompactEvery = 2)
+    val runDir = freshDir("filters")
+    Crawl.run(spark, seedsDF, pagesDF, robotsDF, runDir, cfg)
+    val last = Crawl.lastCommittedEpoch(runDir)
+    assert(manifest(runDir, last).seenBase > 0, "no compaction")
+    val store = new BloomStore(0.03)
+    (0 to last).foreach { e =>
+      val saved = store.path(runDir, e)
+      assert(Files.exists(saved), s"no filter file at epoch $e")
+      val delta = spark.read.parquet(f"$runDir/seen/epoch=$e%04d")
+      // byte-identical to a build over the delta, sized by its rows (the
+      // build yields no filter over no rows: an empty delta's is empty)
+      val expected = Files.createTempFile("bloom-expected", ".bin")
+      val n = delta.count()
+      store.save(if (n == 0) store.empty() else store.build(spark, delta, "url_hash", n),
+        expected)
+      assert(Files.readAllBytes(saved).sameElements(Files.readAllBytes(expected)),
+        s"bloom filter of epoch $e")
     }
   }
 
   test("resume fails closed when a missing delta filter cannot be rebuilt") {
-    for (family <- Seq("bloom", "cuckoo")) {
-      val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40,
-        seenFilter = family)
-      val partial = freshDir(s"unreadable-$family")
-      Crawl.run(spark, seedsDF, pagesDF, robotsDF, partial, cfg.copy(maxEpochs = 2))
-      val last = Crawl.lastCommittedEpoch(partial)
-      // epoch 1's filter is gone and its seen delta (which has rows) cannot
-      // be read: an empty filter in its place would let its URLs past the
-      // exact probe as new
-      assert(manifest(partial, 1).seenTotal > manifest(partial, 0).seenTotal)
-      val lost = filterFiles(partial, family).filter(_.getFileName.toString.endsWith("_0001.bin"))
-      assert(lost.size == 1, family)
-      Files.delete(lost.head)
-      val delta = Paths.get(f"$partial/seen/epoch=0001")
-      ls(delta).foreach(Files.delete)
-      Files.writeString(delta.resolve("part-00000.snappy.parquet"), "not parquet")
-      val before = tableDirs(partial)
+    val cfg = CrawlConfig(strategy = "bfs", hostBudget = 3, maxEpochs = 40)
+    val partial = freshDir("unreadable")
+    Crawl.run(spark, seedsDF, pagesDF, robotsDF, partial, cfg.copy(maxEpochs = 2))
+    val last = Crawl.lastCommittedEpoch(partial)
+    // epoch 1's filter is gone and its seen delta (which has rows) cannot
+    // be read: an empty filter in its place would let its URLs past the
+    // exact probe as new
+    assert(manifest(partial, 1).seenTotal > manifest(partial, 0).seenTotal)
+    val lost = filterFiles(partial).filter(_.getFileName.toString.endsWith("_0001.bin"))
+    assert(lost.size == 1)
+    Files.delete(lost.head)
+    val delta = Paths.get(f"$partial/seen/epoch=0001")
+    ls(delta).foreach(Files.delete)
+    Files.writeString(delta.resolve("part-00000.snappy.parquet"), "not parquet")
+    val before = tableDirs(partial)
 
-      intercept[org.apache.spark.SparkException] {
-        Crawl.run(spark, seedsDF, pagesDF, robotsDF, partial, cfg)
-      }
-      assert(Crawl.lastCommittedEpoch(partial) == last, family)
-      assert(tableDirs(partial) == before, s"$family: the failed resume wrote snapshot dirs")
+    intercept[org.apache.spark.SparkException] {
+      Crawl.run(spark, seedsDF, pagesDF, robotsDF, partial, cfg)
     }
+    assert(Crawl.lastCommittedEpoch(partial) == last)
+    assert(tableDirs(partial) == before, "the failed resume wrote snapshot dirs")
   }
 
   private lazy val sc = spark.sparkContext
@@ -1077,15 +1031,12 @@ class CrawlSpec extends AnyFunSuite {
     // every seed is nonsense or has no host: none passes validation
     val badSeeds = Seq(SeedRec("http://site0.com/robots.txt", "cc"), SeedRec("not a url", "sitemap"))
       .toDF()
-    for (family <- Seq("bloom", "cuckoo")) {
-      val runDir = freshDir(s"no-seed-$family")
-      val s = Crawl.run(spark, badSeeds, pagesDF, robotsDF, runDir,
-        CrawlConfig(strategy = "bfs", seenFilter = family))
-      assert(s == CrawlSummary(0, 0, 0, 0, 0), family)
-      assert(Crawl.lastCommittedEpoch(runDir) == 0, family)
-      assert(manifest(runDir, 0).frontierQueued.contains(0L), family)
-      assert(Files.exists(Paths.get(f"$runDir/${family}_0000.bin")), family)
-    }
+    val runDir = freshDir("no-seed")
+    val s = Crawl.run(spark, badSeeds, pagesDF, robotsDF, runDir, CrawlConfig(strategy = "bfs"))
+    assert(s == CrawlSummary(0, 0, 0, 0, 0))
+    assert(Crawl.lastCommittedEpoch(runDir) == 0)
+    assert(manifest(runDir, 0).frontierQueued.contains(0L))
+    assert(Files.exists(Paths.get(f"$runDir/bloom_0000.bin")))
   }
 
   test("a warm crawl compiles almost no generated code") {

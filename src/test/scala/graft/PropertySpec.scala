@@ -110,87 +110,28 @@ class PropertySpec extends AnyFunSuite {
     assert(viaVector == exact)
   }
 
-  test("cuckoo filter: no false negatives, FP bound, delete-driven recrawl eviction") {
-    import SparkTestSession.spark
-    import spark.implicits._
-    import graft.frontier.{CuckooFilter, CuckooSeen}
-    // keys are realistic url-hashes (xxh64 of synthetic urls), not sequential
-    def key(i: Long): Long = Xxh64.hashString(s"http://h${i % 97}.com/p/$i")
-    val n = 50000
-    val cf = CuckooFilter.create(n)
-    (0 until n).foreach { i => assert(cf.insert(key(i)), s"insert failed at $i (load)") }
-    // no false negatives
-    (0 until n).foreach { i => assert(cf.contains(key(i)), s"false negative at $i") }
-    // FP rate on disjoint keys ≈ 2·4/2^16 ≈ 1.2e-4; allow 10x slack
-    val fps = (n until n + 50000).count(i => cf.contains(key(i)))
-    assert(fps <= 50000 * 1.2e-4 * 10, s"fp count $fps")
-    // delete half → deleted keys gone (mod FP), survivors NEVER lost
-    (0 until n by 2).foreach(i => assert(cf.delete(key(i))))
-    val stillThere = (0 until n by 2).count(i => cf.contains(key(i)))
-    assert(stillThere <= n / 2 * 1.2e-4 * 10 + 1, s"deleted-but-present $stillThere")
-    (1 until n by 2).foreach { i => assert(cf.contains(key(i)), s"survivor lost at $i") }
-    // serialization round-trip preserves the table
-    val rt = CuckooFilter.deserialize(cf.serialize())
-    (1 until n by 2).foreach(i => assert(rt.contains(key(i))))
-    assert(rt.size == cf.size && rt.numBuckets == cf.numBuckets)
-
-    // ---- seen-set protocol: antiJoin equivalence ---------------------------
-    // deltas are built DISTRIBUTED (per-shard mapGroups tasks; only compact
-    // filters reach the driver) — there is no row-collecting build anymore
-    import graft.frontier.{SeenDelta, SeenFilters}
-    val d1 = (0L until 1200L).map(key).toDF("url_hash")   // epoch-1 delta
-    val d2 = (1200L until 2000L).map(key).toDF("url_hash") // epoch-2 delta
-    val seen = d1.unionByName(d2)
-    val f1 = CuckooSeen.buildSharded(d1, "url_hash", 1200, shards = 4)
-    val f2 = CuckooSeen.buildSharded(d2, "url_hash", 800, shards = 4)
-    val filters: Seq[SeenDelta] = Seq(f1, f2)
-    val candidates = (1500L until 2500L).map(key).toDF("url_hash")
-    val viaCuckoo = SeenFilters.antiJoinTracked(spark, candidates, seen, "url_hash", filters)
-      ._1.as[Long].collect().toSet
-    val exact = candidates.join(seen, Seq("url_hash"), "left_anti")
-      .as[Long].collect().toSet
-    assert(viaCuckoo == exact)
-    // sharded distributed build over the union: no FN, FP-bounded, roundtrips
-    val sharded = CuckooSeen.buildSharded(seen, "url_hash", 2000, shards = 8)
-    (0L until 2000L).foreach(i => assert(sharded.contains(key(i)), s"sharded FN at $i"))
-    val shardedFps = (5000L until 15000L).count(i => sharded.contains(key(i)))
-    assert(shardedFps <= 10000 * 1.2e-4 * 10, s"sharded fp count $shardedFps")
-    assert(sharded.size == 2000)
-    val shardedRt = graft.frontier.ShardedCuckoo.deserialize(sharded.serialize())
-    (0L until 2000L).foreach(i => assert(shardedRt.contains(key(i))))
-    assert(shardedRt.delete(key(7L)) && !(0L until 2000L).forall(i => shardedRt.contains(key(i))))
-  }
-
   test("seen store save then load: every key still maybe-seen; the file is the filter's own serialization") {
     import SparkTestSession.spark
     import spark.implicits._
-    import graft.frontier.{SeenStore, ShardedCuckoo}
     def key(i: Long): Long = Xxh64.hashString(s"http://h${i % 53}.net/s/$i")
     val keys = (0L until 3000L).map(key)
     val dir = java.nio.file.Files.createTempDirectory("seen-store").toString
-    for (family <- Seq("bloom", "cuckoo")) {
-      val store = SeenStore.forConfig(family)
-      val built = store.build(spark, keys.toDF("url_hash"), "url_hash", keys.size)
-      val p = store.path(dir, 1)
-      store.save(built, p)
-      // the bytes old run dirs resume from
-      val expected = built match {
-        case b: BloomDelta =>
-          val out = new java.io.ByteArrayOutputStream
-          b.bloom.writeTo(out)
-          out.toByteArray
-        case c: ShardedCuckoo => c.serialize()
-      }
-      assert(java.nio.file.Files.readAllBytes(p).sameElements(expected), family)
-      val loaded = store.load(p)
-      keys.foreach(k => assert(loaded.mightContain(k), s"$family: $k not maybe-seen after load"))
-    }
+    val store = new BloomStore(0.03)
+    val built = store.build(spark, keys.toDF("url_hash"), "url_hash", keys.size)
+    val p = store.path(dir, 1)
+    store.save(built, p)
+    // the bytes old run dirs resume from
+    val out = new java.io.ByteArrayOutputStream
+    built.bloom.writeTo(out)
+    assert(java.nio.file.Files.readAllBytes(p).sameElements(out.toByteArray))
+    val loaded = store.load(p)
+    keys.foreach(k => assert(loaded.mightContain(k), s"$k not maybe-seen after load"))
   }
 
   test("seen probe over a parquet seen set above the broadcast threshold: equals left_anti, seen never exchanged") {
     import SparkTestSession.spark
     import spark.implicits._
-    import graft.frontier.{BloomStore, CuckooSeen, SeenDelta, SeenFilters}
+    import graft.frontier.SeenDelta
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -219,14 +160,11 @@ class PropertySpec extends AnyFunSuite {
       assert(seen.queryExecution.optimizedPlan.stats.sizeInBytes > 65536)
       val seenKeys = (0L until 30000L).map(key).toSet
       // keys the filters also admit without being seen: false positives by
-      // construction, for both families (the no-false-negative contract holds)
+      // construction (the no-false-negative contract holds)
       val fpKeys = (40000L until 41000L).map(key)
-      type Family = Seq[Long] => Seq[SeenDelta]
-      val bloom: Family = ks => ks.grouped(16000).map(g =>
+      def filtersOf(ks: Seq[Long]): Seq[SeenDelta] = ks.grouped(16000).map(g =>
         new BloomStore(0.03).build(spark, g.toDF("url_hash"), "url_hash", g.size)
           : SeenDelta).toSeq
-      val cuckoo: Family = ks => ks.grouped(16000).map(g =>
-        CuckooSeen.buildSharded(g.toDF("url_hash"), "url_hash", g.size, shards = 4): SeenDelta).toSeq
       def rows(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
       def candidatesOf(ks: Seq[Long]) = ks.map(k => (k, s"u$k")).toDF("url_hash", "url")
       // counts every evaluation of a candidate row, wherever it runs
@@ -262,43 +200,41 @@ class PropertySpec extends AnyFunSuite {
 
       val newKeys = (30000L until 33000L).map(key)
       val rediscovered = (20000L until 23000L).map(key)
-      for ((family, name) <- Seq(bloom -> "bloom", cuckoo -> "cuckoo")) {
-        val filters = family(seenKeys.toSeq.sorted ++ fpKeys)
-        val cleared = newKeys.filterNot(k => filters.exists(_.mightContain(k)))
-        assert(cleared.nonEmpty, name)
-        // rediscovered + new + false positives, with duplicate hashes
-        val mixed = rediscovered ++ newKeys.take(1000) ++ fpKeys.take(500) ++
-          rediscovered.take(300) ++ newKeys.take(200) ++ fpKeys.take(50)
-        val cases = Seq(
-          ("mixed", seen, mixed, filters),
-          ("mixed, evaluated in tasks", seen, mixed, filters),
-          ("all new", seen, newKeys ++ fpKeys.take(300), filters),
-          ("empty maybe-seen side", seen, cleared, filters),
-          ("empty seen set", emptySeen, newKeys.take(500) ++ fpKeys.take(200), family(fpKeys)))
-        for ((label, seenDf, ks, fs) <- cases) {
-          evals.reset()
-          val counted = label.startsWith("mixed")
-          val candidates =
-            if (counted) countedCandidatesOf(ks, inTasks = label != "mixed") else candidatesOf(ks)
-          val (probed, bc) = SeenFilters.antiJoinTracked(spark, candidates, seenDf, "url_hash", fs)
-          // the maybe-seen broadcast and the anti-join's probe side share one
-          // evaluation of the candidate plan
-          if (counted) {
-            probed.collect()
-            assert(evals.sum == ks.size, s"$name/$label: ${evals.sum} evaluations of ${ks.size} candidate rows")
-          }
-          val exact = candidates.join(seenDf, Seq("url_hash"), "left_anti")
-          assert(probed.columns.toSeq == exact.columns.toSeq, s"$name/$label")
-          assert(rows(probed) == rows(exact), s"$name/$label")
-          // the final adaptive plan (`rows` ran it); with no hits at all,
-          // AQE prunes the probe, so the plan is checked where hits exist
-          if (label == "mixed") {
-            val plan = probed.queryExecution.executedPlan
-            assert(Plans.seenExchanges(plan).isEmpty, s"$name/$label: seen rows exchanged\n$plan")
-            assert(Plans.probesSeenMapSide(plan), s"$name/$label: no map-side probe\n$plan")
-          }
-          bc.destroy()
+      val filters = filtersOf(seenKeys.toSeq.sorted ++ fpKeys)
+      val cleared = newKeys.filterNot(k => filters.exists(_.mightContain(k)))
+      assert(cleared.nonEmpty)
+      // rediscovered + new + false positives, with duplicate hashes
+      val mixed = rediscovered ++ newKeys.take(1000) ++ fpKeys.take(500) ++
+        rediscovered.take(300) ++ newKeys.take(200) ++ fpKeys.take(50)
+      val cases = Seq(
+        ("mixed", seen, mixed, filters),
+        ("mixed, evaluated in tasks", seen, mixed, filters),
+        ("all new", seen, newKeys ++ fpKeys.take(300), filters),
+        ("empty maybe-seen side", seen, cleared, filters),
+        ("empty seen set", emptySeen, newKeys.take(500) ++ fpKeys.take(200), filtersOf(fpKeys)))
+      for ((label, seenDf, ks, fs) <- cases) {
+        evals.reset()
+        val counted = label.startsWith("mixed")
+        val candidates =
+          if (counted) countedCandidatesOf(ks, inTasks = label != "mixed") else candidatesOf(ks)
+        val (probed, bc) = SeenFilters.antiJoinTracked(spark, candidates, seenDf, "url_hash", fs)
+        // the maybe-seen broadcast and the anti-join's probe side share one
+        // evaluation of the candidate plan
+        if (counted) {
+          probed.collect()
+          assert(evals.sum == ks.size, s"$label: ${evals.sum} evaluations of ${ks.size} candidate rows")
         }
+        val exact = candidates.join(seenDf, Seq("url_hash"), "left_anti")
+        assert(probed.columns.toSeq == exact.columns.toSeq, label)
+        assert(rows(probed) == rows(exact), label)
+        // the final adaptive plan (`rows` ran it); with no hits at all,
+        // AQE prunes the probe, so the plan is checked where hits exist
+        if (label == "mixed") {
+          val plan = probed.queryExecution.executedPlan
+          assert(Plans.seenExchanges(plan).isEmpty, s"$label: seen rows exchanged\n$plan")
+          assert(Plans.probesSeenMapSide(plan), s"$label: no map-side probe\n$plan")
+        }
+        bc.destroy()
       }
     } finally {
       prevThreshold match {
